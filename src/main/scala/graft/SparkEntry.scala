@@ -35,11 +35,11 @@ object SparkEntry {
     * former two-branch join-back plan scanned the extract twice and shuffled
     * the ×5-exploded tile side. */
   def flagshipEntry(spark: SparkSession, dir: String): DataFrame = {
-    // native kernel PIP (PointInMultiPolygonExpr): the literal pipCol tree,
+    // kernel PIP (Kernels.pointInMultiPolygon): the literal pipCol tree,
     // pushed below the derived-point projection, exploded into a ~40 KB
     // un-JIT-able predicate (r06 measurement: 5.0 s → kernel call)
     val p = pts(spark, dir)
-      .filter(graft.functions.PointInMultiPolygonExpr.column(
+      .filter(graft.functions.Kernels.pointInMultiPolygon(
         MultiPolygon(Seq(Fixtures.requestPolygon)), col("lon"), col("lat")))
     val assigned = SpatialJoin.assignRegionsKeep(spark, p, keep = Seq("lon", "lat"))
     SpatialJoin.tileAssign(assigned, 2, 6)
@@ -80,11 +80,11 @@ object SparkEntry {
   }
 
   /** F1/F2 custom-polygon extract (ST_Intersects/ST_Within on points).
-    * Native kernel PIP — same arithmetic as pipCol/pipSql (EngineSpec parity)
+    * Kernel PIP — same arithmetic as pipCol/pipSql (KernelParitySpec)
     * via one JIT'd call instead of an un-JIT-able inlined predicate. */
   private def geoPip(s: SparkSession, dir: String): DataFrame =
     pts(s, dir)
-      .filter(graft.functions.PointInMultiPolygonExpr.column(
+      .filter(graft.functions.Kernels.pointInMultiPolygon(
         MultiPolygon(Seq(Fixtures.requestPolygon)), col("lon"), col("lat")))
       .select(col("pid"))
 

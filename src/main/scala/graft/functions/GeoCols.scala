@@ -116,12 +116,12 @@ object GeoCols {
         shiftleft(shiftright(y, i).bitwiseAND(lit(1L)), 2 * i + 1)
     }.reduce(_ + _)
 
-  /** Full cell id: (morton(x,y) << 5) | res — the native kernel expression
-    * since r06 ([[CellIdExpr]] → Cell.cellAt; EngineSpec pins parity with
+  /** Full cell id: (morton(x,y) << 5) | res — one kernel call
+    * ([[Kernels.cellId]] → Cell.cellAt; KernelParitySpec pins parity with
     * the unrolled Column tree, which [[mortonCol]]/[[cellXCol]]/[[cellYCol]]
     * still spell out for reference and for the SQL twins). */
   def cellCol(res: Int, lon: Column, lat: Column): Column =
-    CellIdExpr.column(res, lon, lat)
+    Kernels.cellId(res, lon, lat)
 
   def cellXSql(res: Int, lonE: String): String = {
     val n = 1L << res
@@ -329,17 +329,19 @@ object GeoCols {
   def derivedFeatures(spark: SparkSession, sfDir: String, cellRes: Int = 7): DataFrame = {
     val p = derivedPoints(spark, sfDir)
     val kind = kindPidCol(col("pid"))
-    // rings via the native kernel generator (PidRingsExpr — r06): the HOF
-    // Column tree cost ~0.3 s of planning per query and evaluated its
-    // lambdas interpreted; the kernel is one JIT'd call with identical
-    // arithmetic (the SQL twin featuresSql is the unchanged oracle). roles
-    // stays the (small) Column tree from featureGeomCols.
+    // rings via the kernel generator (Kernels.pidRings): the HOF Column
+    // tree cost ~0.3 s of planning per query and evaluated its lambdas
+    // interpreted; the kernel is one JIT'd call with identical arithmetic
+    // (the SQL twin featuresSql is the unchanged oracle). Null inputs give
+    // no rings, keeping the column non-null. roles stays the (small)
+    // Column tree from featureGeomCols.
     val geomCols = featureGeomCols(kind, col("lon"), col("lat"),
       uPidCol(col("pid")), mPidCol(col("pid")))
     val roles = geomCols.collectFirst { case ("roles", c) => c }.get
     val withG = p.withColumn("kind", kind)
-      .withColumn("rings",
-        PidRingsExpr.column(col("pid"), col("lon"), col("lat")))
+      .withColumn("rings", coalesce(
+        Kernels.pidRings(col("pid"), col("lon"), col("lat")),
+        array().cast("array<array<double>>")))
       .withColumn("roles", roles)
     withG
       .withColumn("tags", map(lit("parity"), (col("pid") % 7).cast("string")))

@@ -28,13 +28,13 @@ object Similarity {
 
   val Dims = 64
 
-  /** Left-associated dot product of two array<float> columns — a native
-    * kernel expression since r06 ([[graft.functions.DotProductExpr]]): the
-    * former 64-term unrolled Column tree was bit-identical but dominated
-    * janino compile and stage eval; the kernel loop accumulates in the same
-    * order (first term seeds the accumulator), so results are unchanged. */
+  /** Left-associated dot product of two array<float> columns — one kernel
+    * call ([[graft.functions.Kernels.dot]]): the former 64-term unrolled
+    * Column tree was bit-identical but dominated janino compile and stage
+    * eval; the kernel loop accumulates in the same order (first term seeds
+    * the accumulator), so results are unchanged. */
   def dotCol(a: Column, b: Column): Column =
-    graft.functions.DotProductExpr.column(Dims, a, b)
+    graft.functions.Kernels.dot(Dims, a, b)
 
   def dotSql(aE: String, bE: String): String =
     (0 until Dims).map(i =>
@@ -100,11 +100,13 @@ object Similarity {
     Seq.fill(planes)(Array.fill(ProjDims)(rng.nextDouble() * 2 - 1))
   }
 
-  /** Native kernel since r06 ([[graft.functions.SignBucketExpr]]) — same
+  /** One kernel call ([[graft.functions.Kernels.signBucket]]) — same
     * per-plane left-associated projection and sign test as the former
-    * planes×ProjDims Column tree, one JIT'd call per row. */
+    * planes×ProjDims Column tree; a null vector lands in bucket 0, as every
+    * term of the tree did. */
   def bucketCol(e: Column, planes: Int = Planes): Column =
-    graft.functions.SignBucketExpr.column(hyperplanes(planes).toArray, e)
+    coalesce(graft.functions.Kernels.signBucket(hyperplanes(planes).toArray, e),
+      lit(0L))
 
   def bucketSql(eE: String, planes: Int = Planes): String = {
     val hp = hyperplanes(planes)

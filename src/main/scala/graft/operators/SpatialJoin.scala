@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.geo.{Cell, Fixtures, Polygon}
-import graft.functions.GeoCols
+import graft.geo.{Cell, Fixtures}
+import graft.functions.{GeoCols, Kernels}
 
 /** Cell-bucketed broadcast spatial join: assign each point the sorted id list
   * of the region polygons containing it.
@@ -21,8 +21,8 @@ import graft.functions.GeoCols
   *    hash join, NO shuffle on the fact side — at 10^12 rows the only shuffle
   *    left is the final per-point aggregation, which map-side-combines to
   *    ≤1 row per point;
-  *  - the exact refine is a codegen'd CASE chain of pure-Column raycasts
-  *    ([[GeoCols.pipCol]]), not a UDF — the whole join stage is one
+  *  - the exact refine is one kernel call per candidate row
+  *    ([[Kernels.regionRefine]]), not a UDF — the whole join stage is one
   *    WholeStageCodegen span over the scan;
   *  - skew: a dense cell only multiplies a fact row by the number of regions
   *    covering that cell (bounded by the catalog, not the data), so the
@@ -32,40 +32,26 @@ import graft.functions.GeoCols
   */
 object SpatialJoin {
 
-  /** Build the broadcastable cover table: one row per (cell, cid, refine). */
-  def coverRows(regions: Seq[Fixtures.Region], res: Int): Seq[(Long, Int, Boolean)] =
-    regions.flatMap { r =>
+  /** Build the broadcastable cover table: one row per (cell, cid, pos,
+    * refine), `pos` being the region's position in `regions`. */
+  def coverRows(regions: Seq[Fixtures.Region], res: Int): Seq[(Long, Int, Int, Boolean)] =
+    regions.zipWithIndex.flatMap { case (r, pos) =>
       val (full, part) = Cell.cover(r.poly, res)
-      full.toSeq.map(c => (c, r.cid, false)) ++ part.toSeq.map(c => (c, r.cid, true))
+      full.toSeq.map(c => (c, r.cid, pos, false)) ++
+        part.toSeq.map(c => (c, r.cid, pos, true))
     }
 
-  /** Exact-refine predicate. A literal CASE-chain of 16 raycasts blows the
-    * janino 64KB method limit → whole-stage-codegen fallback + per-task
-    * recompile storms (measured: local[32] 4× slower than local[8]). A
-    * compact UDF over the broadcast region catalog keeps the generated code
-    * tiny (one call) and runs the same compiled kernel raycast
-    * (graft.geo.Geo.pointInPolygon — identical arithmetic to the SQL oracle,
-    * verified in EngineSpec). */
-  def pipRefineUdf(regions: Seq[Fixtures.Region]): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val catalog: Map[Int, Polygon] = regions.map(r => r.cid -> r.poly).toMap
-    udf((cid: Int, lon: Double, lat: Double) =>
-      graft.geo.Geo.pointInPolygon(lon, lat, catalog(cid)))
+  private def coverDf(spark: SparkSession, regions: Seq[Fixtures.Region],
+      res: Int): DataFrame = {
+    import spark.implicits._
+    coverRows(regions, res).toDF("cell", "cid", "region_pos", "refine")
   }
 
-  /** Refine predicate as a native expression when the catalog is densely
-    * array-indexable by cid (r06: the UDF boundary boxed three primitives
-    * and hash-looked-up the polygon per joined row; RegionRefineExpr is one
-    * generated call into the same kernel). Falls back to the UDF for
-    * sparse/negative id domains. */
-  private def refineCol(regions: Seq[Fixtures.Region])(
-      cid: Column, lon: Column, lat: Column): Column = {
-    val maxCid = regions.map(_.cid).max
-    if (regions.forall(_.cid >= 0) && maxCid <= (1 << 20)) {
-      val arr = new Array[Polygon](maxCid + 1)
-      regions.foreach(r => arr(r.cid) = r.poly)
-      graft.functions.RegionRefineExpr.column(arr, cid, lon, lat)
-    } else pipRefineUdf(regions)(cid, lon, lat)
-  }
+  /** Exact-refine predicate: one kernel call per candidate row, indexed by
+    * catalog position, so any cid domain (empty, sparse, negative) works. */
+  private def refineCol(regions: Seq[Fixtures.Region]): Column =
+    Kernels.regionRefine(regions.map(_.poly), col("region_pos"), col("lon"),
+      col("lat"))
 
   /** points: (pid: Long, lon: Double, lat: Double) → (pid, cids: String)
     * where cids = comma-joined ascending region ids, "0" when none
@@ -88,8 +74,7 @@ object SpatialJoin {
       regions: Seq[Fixtures.Region] = Fixtures.regions,
       res: Int = 7,
       keep: Seq[String] = Nil): DataFrame = {
-    import spark.implicits._
-    val cover = coverRows(regions, res).toDF("cell", "cid", "refine")
+    val cover = coverDf(spark, regions, res)
     // reuse a materialized bucket column when the caller carries one at the
     // join resolution (ingest-time derivation — no per-row recompute)
     val withCell =
@@ -97,8 +82,7 @@ object SpatialJoin {
         points
       else points.withColumn("cell", GeoCols.cellCol(res, col("lon"), col("lat")))
     val joined = withCell.join(broadcast(cover), Seq("cell"), "left")
-    val matched = !col("refine") ||
-      refineCol(regions)(col("cid"), col("lon"), col("lat"))
+    val matched = !col("refine") || refineCol(regions)
     val withOk = joined
       .withColumn("cid_ok", when(col("cid").isNotNull && matched, col("cid")))
     // r06 (guide §2.3 — narrower agg state): when every catalog cid fits in
@@ -181,7 +165,6 @@ object SpatialJoin {
       res: Int = 7,
       saltFactor: Int = 8,
       hotThreshold: Long = 50000L): DataFrame = {
-    import spark.implicits._
     val withCell =
       if (points.columns.contains("cell") && res == graft.sources.ImageTable.BucketRes)
         points
@@ -196,7 +179,7 @@ object SpatialJoin {
     val hotBc = spark.sparkContext.broadcast(hotCells)
     val saltOf = udf((cell: Long) => if (hotBc.value.contains(cell)) saltFactor else 1)
 
-    val cover = coverRows(regions, res).toDF("cell", "cid", "refine")
+    val cover = coverDf(spark, regions, res)
       .withColumn("s", saltOf(col("cell")))
       .withColumn("salt", explode(transform(sequence(lit(0), col("s") - 1), i => i)))
       .drop("s")
@@ -204,8 +187,7 @@ object SpatialJoin {
       pmod(xxhash64(col("pid")), saltOf(col("cell"))).cast("int"))
 
     val joined = fact.join(cover, Seq("cell", "salt"), "left")
-    val matched = !col("refine") ||
-      refineCol(regions)(col("cid"), col("lon"), col("lat"))
+    val matched = !col("refine") || refineCol(regions)
     joined
       .withColumn("cid_ok", when(col("cid").isNotNull && matched, col("cid")))
       .groupBy(col("pid"))

@@ -79,7 +79,7 @@ object PlanBuilder {
 
   /** Geometry filter: coarse cover prefilter && exact kind-aware refine
     * (F1/F2/F8/F9). Points use PIP; lines/polygons the full segment/region
-    * intersection (Geo.featureIntersectsRings via the native Catalyst expression — the reference's real
+    * intersection (Geo.featureIntersectsRings via one kernel call — the reference's real
     * ST_Intersects over arbitrary linestring/polygon features, raw.lua:128-180).
     * For points ST_Within ≡ ST_Intersects (the useStWithin flag is kept for
     * parity, builder.py:237 vs :102).
@@ -104,13 +104,12 @@ object PlanBuilder {
     val fullCells = covers.flatMap(_._1).toSet
     val allCells = covers.flatMap(c => c._1 ++ c._2).toSet
     val expanded = allCells ++ allCells.flatMap(c => Cell.ring(c, 1))
-    // exact refine = native Catalyst expression over the JIT-compiled
-    // kernel (zero-copy ArrayData views, one generated call inside
+    // exact refine = one kernel call (zero-copy ArrayData views, inside
     // whole-stage codegen — neither the UDF boundary's per-row rings
     // conversion nor a janino-sized Column tree, BENCH.md finding #2).
     // The coarse prefilter stays a pushable Column so scan pruning is
     // untouched.
-    val exact = graft.functions.FeatureIntersectsRingsExpr.column(
+    val exact = graft.functions.Kernels.featureIntersects(
       geom, kind, lon, lat, rings)
     cellIn(cell, expanded) && (cellIn(cell, fullCells) || exact)
   }

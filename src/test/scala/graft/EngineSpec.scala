@@ -58,18 +58,39 @@ class EngineSpec extends SparkSpec {
     }
   }
 
-  test("assignRegions matches plain-Scala PIP oracle (incl. empty→0 default)") {
-    val got = SpatialJoin.assignRegions(spark, GeoCols.derivedPoints(spark, sfDir))
+  /** assignRegions over `regions` vs the plain-Scala PIP oracle, per point. */
+  private def assignedMatchesOracle(regions: Seq[Fixtures.Region]): Map[Long, String] = {
+    val got = SpatialJoin.assignRegions(spark, GeoCols.derivedPoints(spark, sfDir),
+        regions)
       .collect().map(r => (r.getLong(0), r.getString(1))).toMap
+    assert(got.size == points.size)
     points.foreach { case (pid, lon, lat) =>
-      val cids = Fixtures.regions
+      val cids = regions
         .filter(r => Geo.pointInPolygon(lon, lat, r.poly)).map(_.cid).sorted
       val expect = if (cids.isEmpty) "0" else cids.mkString(",")
       assert(got(pid) == expect, s"pid=$pid ($lon,$lat)")
     }
+    got
+  }
+
+  test("assignRegions matches plain-Scala PIP oracle (incl. empty→0 default)") {
+    val got = assignedMatchesOracle(Fixtures.regions)
     // fixture sanity: multi-membership and no-membership both occur
     assert(got.values.exists(_.contains(",")), "no overlapping regions exercised")
     assert(got.values.exists(_ == "0"), "no empty-default exercised")
+  }
+
+  test("assignRegions over an empty catalog gives every point cids = 0") {
+    val got = assignedMatchesOracle(Nil)
+    assert(got.values.forall(_ == "0"))
+  }
+
+  test("assignRegions over sparse and negative cids matches the PIP oracle") {
+    val ids = Seq(-3, 5, 900, 2000000)
+    val regions = Fixtures.regions.take(ids.size).zip(ids)
+      .map { case (r, id) => r.copy(cid = id) }
+    val got = assignedMatchesOracle(regions)
+    assert(got.values.exists(_ != "0"), "no region membership exercised")
   }
 
   test("shuffle-salted assignment equals the broadcast variant") {

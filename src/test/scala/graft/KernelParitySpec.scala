@@ -1,66 +1,123 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{CellIdExpr, DotProductExpr, GeoCols, PidRingsExpr,
-  PointInMultiPolygonExpr, SignBucketExpr}
+import graft.functions.{GeoCols, Kernels}
 import graft.geo.{Fixtures, MultiPolygon}
 import graft.operators.{Dedup, Similarity}
 
-/** r06 optimization round: every hot-path Column tree that was replaced by a
-  * native kernel expression must produce EXACTLY the values of the tree it
-  * replaced (null-safe equality, bit-exact doubles). The trees stay in the
-  * codebase (GeoCols.mortonCol/pipCol/featureGeomCols, Dedup.minhashCol,
-  * Similarity.dotSql's shape) precisely so this spec can hold the kernels to
-  * them; the DuckDB oracle gates then prove the same end to end. */
+/** Every hot-path kernel call must produce EXACTLY the values of the Column
+  * tree or UDF it replaced (null-safe equality, bit-exact doubles), and each
+  * test pins what the call gives on null input. The trees stay in the codebase
+  * (GeoCols.mortonCol/pipCol/featureGeomCols/featureIntersectsRingsUdf,
+  * Dedup.minhashCol, Similarity.dotSql's shape) precisely so this spec can
+  * hold the kernels to them; the DuckDB oracle gates then prove the same end
+  * to end. Test names keep the names of the round-6 expression classes the
+  * calls replaced. */
 class KernelParitySpec extends SparkSpec {
+  import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def mismatches(df: org.apache.spark.sql.DataFrame,
-      a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): Long =
+  private def mismatches(df: DataFrame, a: Column, b: Column): Long =
     df.filter(not(a <=> b)).count()
 
+  /** Rows with a null pid, lon or lat (pids 46/48 are a line and a polygon). */
+  private lazy val nullPoints: DataFrame =
+    Seq[(Option[Long], Option[Double], Option[Double])](
+      (None, Some(10.0), Some(20.0)),
+      (Some(48L), None, Some(20.0)),
+      (Some(46L), Some(10.0), None),
+      (None, None, None)).toDF("pid", "lon", "lat")
+
+  /** `kernel` ≡ `tree` on the derived points, and on [[nullPoints]] null
+    * exactly where lon or lat is: the point trees' CASE terms and
+    * greatest/least clamps turn a null coordinate into false or cell 0,
+    * where the kernel calls propagate null (a filter drops the row either
+    * way). */
+  private def assertPointParity(tree: Column, kernel: Column, clue: String = ""): Unit = {
+    assert(mismatches(GeoCols.derivedPoints(spark, sfDir), tree, kernel) == 0, clue)
+    assert(nullPoints.filter(kernel.isNull =!=
+      (col("lon").isNull || col("lat").isNull)).count() == 0, clue)
+  }
+
+  /** The embeddings plus a null vector and a vector with a null element. */
+  private def embeddings: DataFrame = {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val one = emb.filter(col("vec_id") === 0)
+    emb.union(one.select(lit(-1L).as("vec_id"),
+        lit(null).cast(emb.schema("embedding").dataType).as("embedding")))
+      .union(one.select(lit(-2L).as("vec_id"), transform(col("embedding"),
+        (x, i) => when(i === 3, lit(null)).otherwise(x)).as("embedding")))
+  }
+
   test("PidRingsExpr ≡ featureGeomCols pid-provider rings tree") {
-    val p = GeoCols.derivedPoints(spark, sfDir)
     val kind = GeoCols.kindPidCol(col("pid"))
     val treeRings = GeoCols.featureGeomCols(kind, col("lon"), col("lat"),
       GeoCols.uPidCol(col("pid")), GeoCols.mPidCol(col("pid")))
       .collectFirst { case ("rings", c) => c }.get
-    val df = p.withColumn("kind", kind)
-    assert(mismatches(df, treeRings,
-      PidRingsExpr.column(col("pid"), col("lon"), col("lat"))) == 0)
+    val kernel = Kernels.pidRings(col("pid"), col("lon"), col("lat"))
+    val df = GeoCols.derivedPoints(spark, sfDir).withColumn("kind", kind)
+    assert(mismatches(df, treeRings, kernel) == 0)
+    // the tree yields rings of null coordinates on null input; the kernel
+    // yields null, and derivedFeatures keeps its rings column non-null
+    assert(nullPoints.filter(kernel.isNotNull).count() == 0)
+    assert(!GeoCols.derivedFeatures(spark, sfDir).schema("rings").nullable)
   }
 
   test("CellIdExpr ≡ unrolled morton cell tree (res 4 and 7)") {
-    val p = GeoCols.derivedPoints(spark, sfDir)
     for (res <- Seq(4, 7)) {
       val tree = shiftleft(GeoCols.mortonCol(res,
         GeoCols.cellXCol(res, col("lon")), GeoCols.cellYCol(res, col("lat"))),
         5) + lit(res.toLong)
-      assert(mismatches(p, tree,
-        CellIdExpr.column(res, col("lon"), col("lat"))) == 0, s"res $res")
+      assertPointParity(tree, Kernels.cellId(res, col("lon"), col("lat")),
+        s"res $res")
     }
   }
 
   test("PointInMultiPolygonExpr ≡ pipCol ray-cast tree") {
-    val p = GeoCols.derivedPoints(spark, sfDir)
     val geom = MultiPolygon(Seq(Fixtures.requestPolygon))
     val tree = geom.polys.map(GeoCols.pipCol(_, col("lon"), col("lat")))
       .reduce(_ || _)
-    assert(mismatches(p, tree,
-      PointInMultiPolygonExpr.column(geom, col("lon"), col("lat"))) == 0)
+    assertPointParity(tree,
+      Kernels.pointInMultiPolygon(geom, col("lon"), col("lat")))
+  }
+
+  test("region refine ≡ pipCol per catalog region") {
+    val polys = Fixtures.regions.map(_.poly)
+    polys.zipWithIndex.foreach { case (poly, pos) =>
+      assertPointParity(GeoCols.pipCol(poly, col("lon"), col("lat")),
+        Kernels.regionRefine(polys, lit(pos), col("lon"), col("lat")),
+        s"region at position $pos")
+    }
+  }
+
+  test("feature intersect ≡ featureIntersectsRingsUdf") {
+    val geom = MultiPolygon(Seq(Fixtures.requestPolygon))
+    val f = GeoCols.derivedFeatures(spark, sfDir)
+      .select(col("kind"), col("lon"), col("lat"), col("rings"))
+    val some = f.limit(20)
+    val df = f
+      .union(some.withColumn("lon", lit(null).cast("double")))
+      .union(some.withColumn("lat", lit(null).cast("double")))
+    val cols = Seq(col("kind"), col("lon"), col("lat"), col("rings"))
+    val udfCol = GeoCols.featureIntersectsRingsUdf(geom)(
+      cols(0), cols(1), cols(2), cols(3))
+    val kernel = Kernels.featureIntersects(geom, cols(0), cols(1), cols(2), cols(3))
+    assert(mismatches(df, udfCol, kernel) == 0)
+    assert(df.filter(kernel).count() > 0, "no intersecting feature exercised")
   }
 
   test("DotProductExpr ≡ unrolled 64-term dot tree") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = embeddings
     val tree = (0 until Similarity.Dims).map(i =>
       element_at(col("embedding"), i + 1).cast("double") *
         element_at(col("embedding"), i + 1).cast("double")).reduce(_ + _)
     assert(mismatches(emb, tree,
       Similarity.dotCol(col("embedding"), col("embedding"))) == 0)
     // cross product against a shifted copy (a ≠ b case)
-    val pair = emb.select(col("vec_id"), col("embedding"))
-      .withColumn("e2", reverse(col("embedding")))
+    val pair = emb.withColumn("e2", reverse(col("embedding")))
     val treeAB = (0 until Similarity.Dims).map(i =>
       element_at(col("embedding"), i + 1).cast("double") *
         element_at(col("e2"), i + 1).cast("double")).reduce(_ + _)
@@ -69,7 +126,6 @@ class KernelParitySpec extends SparkSpec {
   }
 
   test("SignBucketExpr ≡ unrolled hyperplane-sign tree") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val hp = Similarity.hyperplanes(Similarity.Planes)
     val tree = (0 until Similarity.Planes).map { j =>
       val proj = (0 until Similarity.ProjDims).map(i =>
@@ -77,8 +133,18 @@ class KernelParitySpec extends SparkSpec {
         .reduce(_ + _)
       when(proj > 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
-    assert(mismatches(emb, tree,
-      SignBucketExpr.column(hp.toArray, col("embedding"))) == 0)
+    assert(mismatches(embeddings, tree,
+      Similarity.bucketCol(col("embedding"))) == 0)
+  }
+
+  test("array<double> vectors are cast to array<float>, never read as float storage") {
+    // the declared array<float> input type makes the analyzer cast; float →
+    // double → float round-trips exactly, so results must be bit-identical
+    val emb = embeddings.withColumn("d", transform(col("embedding"), _.cast("double")))
+    assert(mismatches(emb, Similarity.dotCol(col("embedding"), col("embedding")),
+      Similarity.dotCol(col("d"), col("d"))) == 0)
+    assert(mismatches(emb, Similarity.bucketCol(col("embedding")),
+      Similarity.bucketCol(col("d"))) == 0)
   }
 
   test("kernel minhash signature ≡ per-i array_min transform columns") {

@@ -1,6 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
+import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec,
+  SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 import graft.geo.{Fixtures, MultiPolygon}
 import graft.model.{GeomType, SnapshotRequest}
@@ -215,5 +220,41 @@ class PlanQualitySpec extends SparkSpec {
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"))
+  }
+
+  test("kernel calls run inside whole-stage codegen; no ScalaUDF on the hot path") {
+    // a small lineitem key table is all derivedPoints/derivedFeatures read
+    val sfDir = Files.createTempDirectory("pq_lineitem").toString
+    spark.range(0, 4000).select(col("id").as("l_orderkey"),
+        (col("id") % 7 + 1).cast("int").as("l_linenumber"))
+      .write.parquet(s"$sfDir/lineitem.parquet")
+    // every physical node, paired with whether a WholeStageCodegen span holds it
+    def nodes(p: SparkPlan, inWsc: Boolean): Seq[(SparkPlan, Boolean)] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan, inWsc)
+      case q: QueryStageExec => nodes(q.plan, inWsc = false)
+      case w: WholeStageCodegenExec => nodes(w.child, inWsc = true)
+      case i: InputAdapter => i.children.flatMap(nodes(_, inWsc = false))
+      case o => (o, inWsc) +: o.children.flatMap(nodes(_, inWsc))
+    }
+    val extract = graft.functions.GeoCols.derivedFeatures(spark, sfDir)
+      .filter(PlanBuilder.geometryFilter(MultiPolygon(Seq(Fixtures.requestPolygon)),
+        col("kind"), col("lon"), col("lat"), col("cell"), col("rings")))
+    for ((name, df) <- Seq("flagshipEntry" -> SparkEntry.flagshipEntry(spark, sfDir),
+        "geometryFilter over derivedFeatures" -> extract)) {
+      df.collect() // AQE: inspect the final executed plan
+      val all = nodes(df.queryExecution.executedPlan, inWsc = false)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!all.exists(_._1.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))),
+        s"$name: ScalaUDF in the plan:\n$plan")
+      val kernelNodes = all.filter { case (n, _) =>
+        (n.isInstanceOf[FilterExec] || n.isInstanceOf[ProjectExec]) &&
+          n.expressions.exists(_.exists(e =>
+            e.isInstanceOf[Invoke] || e.isInstanceOf[StaticInvoke]))
+      }
+      assert(kernelNodes.nonEmpty, s"$name: no kernel call found:\n$plan")
+      kernelNodes.foreach { case (n, inWsc) =>
+        assert(inWsc, s"$name: ${n.nodeName} runs outside whole-stage codegen:\n$plan")
+      }
+    }
   }
 }
