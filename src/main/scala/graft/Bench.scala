@@ -228,6 +228,22 @@ object Bench {
     best.get.copy(attempts = attempts, effAttempts = effs.toSeq)
   }
 
+  /** Outcome of a query sweep: wall seconds of each query that ran, and the
+    * error class of each query that threw (those get no time). */
+  final case class Sweep(seconds: Seq[(String, Double)], failed: Seq[(String, String)])
+
+  /** Times each query to a full `count()`, in order, on one session. */
+  def sweep(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)]): Sweep = {
+    val runs = queries.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      name -> (try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => Left(e.getClass.getName) })
+    }
+    Sweep(runs.collect { case (n, Right(sec)) => n -> sec },
+      runs.collect { case (n, Left(cls)) => n -> cls })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -304,19 +320,17 @@ object Bench {
     val queryList =
       if (sys.env.contains("SPARK_GRAFT_PAIR_ONLY")) Seq.empty
       else SparkEntry.queries.toSeq.sortBy(_._1)
-    val results = queryList.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val results = sweep(spark, sfDir, queryList)
+    def obj(kv: Seq[(String, Any)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = obj(results.seconds)
+    val failed = obj(results.failed.map { case (k, c) => k -> ("\"" + c + "\"") })
     // a pair-only artifact must be distinguishable from an official run
     val pairOnlyField =
       if (sys.env.contains("SPARK_GRAFT_PAIR_ONLY")) "\"pair_only\":true," else ""
-    val total = results.map(_._2).sum
+    val total = results.seconds.map(_._2).sum
     println(
-      s"""{"metric":"spatial_join_tile_assign_images_per_sec",$pairOnlyField"value":${"%.1f".format(peakThr)},"unit":"images/sec","queries":$qs,"sf":"$sfDir","total_query_sec":${"%.3f".format(total)},"flagship":{"images":$totalImages,"rows_out":$n32,"peak_cpus":16,"peak_sec":${"%.3f".format(peakSec)},"images_per_sec_peak16":${"%.1f".format(peakThr)},"n_cpus":$LoCpus,"n4_cpus":$HiCpus,"sec_localN":${"%.3f".format(t8)},"sec_local4N":${"%.3f".format(t32)},"images_per_sec_localN":${"%.1f".format(thr8)},"images_per_sec_local4N":${"%.1f".format(thr32)},"scaling_efficiency_N_to_4N":${"%.3f".format(eff)},"eff_attempts":${sc.effAttempts.map("%.3f".format(_)).mkString("[", ",", "]")},"eff_median":${"%.3f".format(median(sc.effAttempts))},"host_steal_pct_localN":${"%.1f".format(steal8 * 100)},"host_steal_pct_local4N":${"%.1f".format(steal32 * 100)},"attempts":${sc.attempts},"cal_gate":$CalGate,"pair_4_16":$supp,"host_calibration":{"spin_1t_ms":${"%.0f".format(cal1)},"spin_${HiCpus}t_ms":${"%.0f".format(calN)},"effective_parallelism_of_$HiCpus":${"%.1f".format(calPar)}}}}""")
+      s"""{"metric":"spatial_join_tile_assign_images_per_sec",$pairOnlyField"value":${"%.1f".format(peakThr)},"unit":"images/sec","queries":$qs,"failed":$failed,"sf":"$sfDir","total_query_sec":${"%.3f".format(total)},"flagship":{"images":$totalImages,"rows_out":$n32,"peak_cpus":16,"peak_sec":${"%.3f".format(peakSec)},"images_per_sec_peak16":${"%.1f".format(peakThr)},"n_cpus":$LoCpus,"n4_cpus":$HiCpus,"sec_localN":${"%.3f".format(t8)},"sec_local4N":${"%.3f".format(t32)},"images_per_sec_localN":${"%.1f".format(thr8)},"images_per_sec_local4N":${"%.1f".format(thr32)},"scaling_efficiency_N_to_4N":${"%.3f".format(eff)},"eff_attempts":${sc.effAttempts.map("%.3f".format(_)).mkString("[", ",", "]")},"eff_median":${"%.3f".format(median(sc.effAttempts))},"host_steal_pct_localN":${"%.1f".format(steal8 * 100)},"host_steal_pct_local4N":${"%.1f".format(steal32 * 100)},"attempts":${sc.attempts},"cal_gate":$CalGate,"pair_4_16":$supp,"host_calibration":{"spin_1t_ms":${"%.0f".format(cal1)},"spin_${HiCpus}t_ms":${"%.0f".format(calN)},"effective_parallelism_of_$HiCpus":${"%.1f".format(calPar)}}}}""")
     spark.stop()
   }
 }

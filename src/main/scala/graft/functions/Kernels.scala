@@ -30,6 +30,8 @@ import graft.geo.{Cell, Geo, MultiPolygon, Polygon}
   *    [[featureIntersects]]: null (a filter drops the row, as for false);
   *  - [[dot]]: null, and also null when an array is shorter than `dims` or
   *    holds a null element (element_at's null through the Column sum);
+  *  - [[regionCids]]: null; `SpatialJoin` passes a non-null array, and a
+  *    null word inside it sets no bit;
   *  - [[pidRings]]: null; `GeoCols.derivedFeatures` coalesces to no rings;
   *  - [[signBucket]]: null; `Similarity.bucketCol` coalesces to 0, which
   *    the kernel also returns for a short array or a null element.
@@ -71,6 +73,13 @@ object Kernels {
       lat: Column): Column =
     invoke(new RegionRefine(catalog.toArray), "contains", BooleanType,
       Seq(pos, lon, lat), Seq(IntegerType, DoubleType, DoubleType))
+
+  /** Comma-joined ascending distinct cids of the positions set in `words`,
+    * "0" when none is: bit b of word w is catalog position 64w + b, and
+    * `cids` lists the catalog's cids by position, ascending. */
+  def regionCids(cids: Seq[Int], words: Column): Column =
+    invoke(new RegionCids(cids.toArray), "decode", StringType, Seq(words),
+      Seq(ArrayType(LongType)))
 
   /** Kind-aware feature × request-geometry intersect over the rings model
     * ([[Geo.featureIntersectsRings]]). */
@@ -114,6 +123,27 @@ object Kernels {
     def contains(pos: Int, lonV: Double, latV: Double): Boolean =
       Geo.pointInPolygon(lonV, latV, catalog(pos))
     override def toString: String = s"RegionRefine(${catalog.length} regions)"
+  }
+
+  final class RegionCids(cids: Array[Int]) extends Serializable {
+    def decode(words: ArrayData): UTF8String = {
+      val sb = new java.lang.StringBuilder
+      var last = 0
+      var w = 0
+      while (w < words.numElements()) {
+        var bits = if (words.isNullAt(w)) 0L else words.getLong(w)
+        while (bits != 0L) { // set bits, lowest position first
+          val cid = cids(64 * w + java.lang.Long.numberOfTrailingZeros(bits))
+          if (sb.length == 0) sb.append(cid)
+          else if (cid != last) sb.append(',').append(cid) // repeats are adjacent
+          last = cid
+          bits &= bits - 1
+        }
+        w += 1
+      }
+      UTF8String.fromString(if (sb.length == 0) "0" else sb.toString)
+    }
+    override def toString: String = s"RegionCids(${cids.length} regions)"
   }
 
   final class FeatureIntersects(geom: MultiPolygon) extends Serializable {

@@ -15,8 +15,8 @@ import graft.functions.GeoCols
   *  - u1/u2: two independent uniform [0,1) draws from xxhash64(image_id)
   *    (codegen'd built-in, no UDF);
   *  - lon/lat: cubed-uniform transform — deliberately SKEWED toward (0,0)
-  *    so dense-cell handling (salting/AQE) is exercised, the way the
-  *    reference's planet data piles up in cities;
+  *    so dense cells are exercised, the way the reference's planet data
+  *    piles up in cities;
   *  - tags: k=v tokens of the caption as a map (reference tags jsonb,
   *    builder.py:148);
   *  - kind: point/line/polygon routing class (the reference routes features

@@ -58,6 +58,14 @@ class EngineSpec extends SparkSpec {
     }
   }
 
+  /** Plain-Scala oracle: ascending distinct cids of the regions holding the
+    * point, "0" when none. */
+  private def oracleCids(regions: Seq[Fixtures.Region], lon: Double, lat: Double): String = {
+    val cids = regions.filter(r => Geo.pointInPolygon(lon, lat, r.poly)).map(_.cid)
+      .distinct.sorted
+    if (cids.isEmpty) "0" else cids.mkString(",")
+  }
+
   /** assignRegions over `regions` vs the plain-Scala PIP oracle, per point. */
   private def assignedMatchesOracle(regions: Seq[Fixtures.Region]): Map[Long, String] = {
     val got = SpatialJoin.assignRegions(spark, GeoCols.derivedPoints(spark, sfDir),
@@ -65,10 +73,7 @@ class EngineSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1))).toMap
     assert(got.size == points.size)
     points.foreach { case (pid, lon, lat) =>
-      val cids = regions
-        .filter(r => Geo.pointInPolygon(lon, lat, r.poly)).map(_.cid).sorted
-      val expect = if (cids.isEmpty) "0" else cids.mkString(",")
-      assert(got(pid) == expect, s"pid=$pid ($lon,$lat)")
+      assert(got(pid) == oracleCids(regions, lon, lat), s"pid=$pid ($lon,$lat)")
     }
     got
   }
@@ -93,16 +98,51 @@ class EngineSpec extends SparkSpec {
     assert(got.values.exists(_ != "0"), "no region membership exercised")
   }
 
-  test("shuffle-salted assignment equals the broadcast variant") {
-    val pts = GeoCols.derivedPoints(spark, sfDir)
-    val broadcastRes = SpatialJoin.assignRegions(spark, pts)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    // force salting on every occupied cell (hotThreshold 0) to exercise the
-    // replicate-and-join path end to end
-    val salted = SpatialJoin.assignRegionsShuffleSalted(
-        spark, pts, saltFactor = 4, hotThreshold = 0L)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(salted == broadcastRes)
+  // one bitmask word holds 64 catalog positions: 63/64/65 regions straddle
+  // the first word boundary, 254 regions use four words
+  for (n <- Seq(1, 63, 64, 65, 254)) {
+    test(s"assignRegions over a $n-region catalog matches the PIP oracle") {
+      val got = assignedMatchesOracle(TestCatalogs.regions254.take(n))
+      assert(got.values.exists(_.split(",").contains(n.toString)),
+        s"the last position (cid $n) is never assigned")
+    }
+  }
+
+  test("assignRegions over a catalog with a repeated cid lists it once") {
+    // of two overlapping regions, the first's polygon again under the
+    // second's cid: a point in both matches two positions with one cid
+    def inBoth(a: Fixtures.Region, b: Fixtures.Region) = points.exists {
+      case (_, lon, lat) =>
+        Geo.pointInPolygon(lon, lat, a.poly) && Geo.pointInPolygon(lon, lat, b.poly)
+    }
+    val Seq(r1, r2) = Fixtures.regions.combinations(2).find(p => inBoth(p(0), p(1))).get
+    assignedMatchesOracle(Fixtures.regions :+ r1.copy(cid = r2.cid))
+  }
+
+  test("60,000 points in one res-7 cell: broadcast join, one pid exchange, oracle-exact") {
+    // a cell the first region covers only partly, so every point reaches the
+    // exact refine
+    val cell = Cell.cover(Fixtures.regions.head.poly, 7)._2.min
+    val (x, y) = Cell.xyOf(cell)
+    val (w, h) = (360.0 / 128, 180.0 / 128)
+    val rng = new Fixtures.Lcg(77L)
+    val dense = (0L until 60000L).map { pid =>
+      (pid, -180.0 + w * (x + 0.001 + 0.998 * rng.nextDouble()),
+        -90.0 + h * (y + 0.001 + 0.998 * rng.nextDouble()))
+    }
+    assert(dense.forall { case (_, lon, lat) => Cell.cellAt(7, lon, lat) == cell })
+    val assigned = SpatialJoin.assignRegions(spark, dense.toDF("pid", "lon", "lat"))
+    val plan = assigned.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin"), s"cover join must broadcast:\n$plan")
+    val exchanges = plan.linesIterator.filter(_.contains(" Exchange ")).toSeq
+    assert(exchanges.size == 1 && exchanges.head.contains("hashpartitioning(pid"),
+      s"expected one exchange keyed on pid:\n$plan")
+    val got = assigned.collect().map(r => (r.getLong(0), r.getString(1))).toMap
+    assert(got.size == dense.size)
+    dense.foreach { case (pid, lon, lat) =>
+      assert(got(pid) == oracleCids(Fixtures.regions, lon, lat), s"pid=$pid ($lon,$lat)")
+    }
+    assert(got.values.toSet.size > 1, "the refine never split the cell")
   }
 
   test("knn with a 100-query TABLE equals the brute oracle (mixed round retirement)") {

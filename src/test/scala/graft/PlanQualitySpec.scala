@@ -69,7 +69,7 @@ class PlanQualitySpec extends SparkSpec {
       col("lon"), col("lat"), col("cell"))
     val plan = SpatialJoin.assignRegions(spark, pts)
       .queryExecution.executedPlan.toString
-    // ObjectHashAggregate(partial) ... Exchange ... ObjectHashAggregate(final)
+    // HashAggregate(partial_bit_or) ... Exchange ... HashAggregate(bit_or)
     val lines = plan.linesIterator.toSeq
     val partialIdx = lines.indexWhere(l =>
       l.contains("Aggregate") && l.contains("partial"))
@@ -136,44 +136,29 @@ class PlanQualitySpec extends SparkSpec {
       s"knn leaked ${after - before} persisted RDDs (round slices must be unpersisted)")
   }
 
-  test("reference-sized catalog: 254 regions stay broadcast, one exchange, salted variant agrees") {
-    // the reference's countries table holds 254 rows (backend/sql/
-    // countries.sql:5-12); synthesize a 254-region catalog at that scale and
-    // assert the join shape that must hold at 10^12 fact rows
-    import graft.geo.{Polygon, Pt, Ring}
-    import graft.geo.Fixtures.{Lcg, Region}
-    val rng = new Lcg(2026L)
-    val regions254 = (1 to 254).map { cid =>
-      val gx = (cid - 1) % 16; val gy = (cid - 1) / 16
-      val cx = -168.0 + 21.0 * gx + (rng.nextDouble() - 0.5) * 6
-      val cy = -70.0 + 8.8 * gy + (rng.nextDouble() - 0.5) * 4
-      val n = 8 + cid % 5
-      val base = 3.0 + 4.0 * rng.nextDouble()
-      val pts = Array.tabulate(n) { i =>
-        val ang = 2 * math.Pi * i / n
-        val r = base * (0.7 + 0.3 * rng.nextDouble())
-        Pt(math.max(-179.9, math.min(179.9, cx + r * math.cos(ang))),
-          math.max(-84.9, math.min(84.9, cy + r * math.sin(ang) * 0.6)))
-      }
-      Region(cid, s"country$cid", f"C$cid%03d", Polygon(Ring(pts)))
-    }
-    // cover stays dim-table-sized: 16 B/row in flight, comfortably under the
+  test("254 regions: broadcast cover, one exchange, bit_or words") {
+    // the reference's countries table holds 254 rows; assert the join shape
+    // that must hold at 10^12 fact rows
+    val regions254 = TestCatalogs.regions254
+    // cover stays dim-table-sized: 13 B/row in flight, comfortably under the
     // 10 MB broadcast budget even at the full catalog scale
     val coverRows = SpatialJoin.coverRows(regions254, 7)
     assert(coverRows.size < 300000, s"cover blew up: ${coverRows.size} rows")
     val pts = extractPlan.select(col("image_id").as("pid"), col("lon"), col("lat"))
-    val assigned = SpatialJoin.assignRegions(spark, pts, regions254)
-    val plan = assigned.queryExecution.executedPlan.toString
+    val plan = SpatialJoin.assignRegions(spark, pts, regions254)
+      .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), "254-region cover must broadcast")
     assert(!plan.contains("SortMergeJoin"), "fact side must not shuffle")
     val exchanges = plan.linesIterator.count(l =>
       l.contains("Exchange hashpartitioning") || l.contains("Exchange rangepartitioning"))
     assert(exchanges == 1, s"expected 1 shuffle, found $exchanges")
-    // the explicit-salt shuffle variant must produce identical assignments
-    val a = assigned.orderBy("pid").collect()
-    val b = SpatialJoin.assignRegionsShuffleSalted(spark, pts, regions254)
-      .orderBy("pid").collect()
-    assert(a.sameElements(b), "salted shuffle variant diverged from broadcast")
+    // four declarative bit_or words, not an object aggregate
+    val partial = plan.linesIterator.find(_.contains("partial_bit_or")).getOrElse("")
+    assert(partial.contains("HashAggregate") &&
+      "partial_bit_or".r.findAllIn(partial).size == 4,
+      s"expected four bit_or words in a HashAggregate:\n${plan.take(3000)}")
+    assert(!plan.contains("ObjectHashAggregate") && !plan.contains("SortAggregate"),
+      s"object/sort aggregate in the assignment:\n${plan.take(3000)}")
   }
 
   test("fused flagship entry(): one exchange, no join-back of the tile explode") {
