@@ -28,28 +28,19 @@ object Bench {
   val FixtureN: Long = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "8000000").toLong
   val FixtureDir = "/root/repo/data/bench_images"
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+  private def session(cpus: Int): SparkSession =
+    LocalSpark.session(cpus, s"graft-bench-$cpus",
+      "spark.sql.adaptive.enabled" -> "true",
       // fine input splits: the cell-clustered layout makes per-task decode
       // cost spatially skewed (tasks inside the extract polygon decode every
       // row, tasks outside none) — 16 MB splits give the scheduler enough
       // tasks to pack the heavy region evenly across cores
-      .config("spark.sql.files.maxPartitionBytes", (16 * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (1024 * 1024).toString)
+      "spark.sql.files.maxPartitionBytes" -> (16 * 1024 * 1024).toString,
+      "spark.sql.files.openCostInBytes" -> (1024 * 1024).toString,
       // AQE's 64MB advisory size coalesced the post-shuffle agg to 4 tasks —
       // an underparallelized tail at 16 cores; 8MB keeps reducers ≈ cores
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
         (8 * 1024 * 1024).toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   /** The flagship pipeline (entry()-shaped, north-star semantics): polygon
     * extract over the images table → DECODE each extracted image + verify its

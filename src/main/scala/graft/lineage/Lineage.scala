@@ -1,9 +1,10 @@
 package graft.lineage
 
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import scala.jdk.CollectionConverters._
 
 /** Resumable export with per-partition lineage + metrics (BASELINE.json
@@ -18,7 +19,11 @@ import scala.jdk.CollectionConverters._
   *    last-wins rename makes the per-partition commit idempotent;
   *  - resume lists committed partition ids and re-runs ONLY the missing ones
   *    (the anti-join of partitions against the lineage table);
-  *  - `finish` compacts the .done rows into a lineage parquet table.
+  *  - `assemble` is every file sink's driver-side finish: it compacts the
+  *    .done rows into a lineage parquet table, takes the row count and
+  *    envelope from them, has the format write header + parts + footer (or
+  *    its b-tree / triple) at a temp path, renames it into place and drops
+  *    `parts/`. A sink supplies only its row encoder and that writer.
   *
   * On a real cluster `parts/` is object storage and the rename is a
   * PUT-if-absent; the protocol is unchanged.
@@ -44,7 +49,7 @@ object Lineage {
   def runFingerprint(df: DataFrame): String = {
     // df.rdd finalizes the plan (under AQE this materializes intermediate
     // query stages); callers pass the SAME Dataset instance they export, so
-    // foreachPartition reuses this lazy rdd and its shuffle outputs — the
+    // the commit loop reuses this lazy rdd and its shuffle outputs — the
     // fingerprint does not cost a second execution
     val n = df.rdd.getNumPartitions
     val h = java.security.MessageDigest.getInstance("MD5")
@@ -98,71 +103,46 @@ object Lineage {
   }
 
   /** Export `lines` (single string column) to outDir, committing per
-    * partition; skips partitions already committed by a previous (killed)
-    * run. `failAtPartition` injects a fault for the kill-and-resume test. */
+    * partition as `parts/p<id>.jsonl`, one line per row; skips partitions
+    * already committed by a previous (killed) run. `failAtPartition`
+    * injects a fault for the kill-and-resume test. */
   def exportResumable(
       lines: DataFrame,
       outDir: String,
       failAtPartition: Int = -1): Unit = {
     require(lines.schema.fields.length == 1, "expected a single string column")
-    val frame = lines.toDF("line")
-    val done = prepareRun(frame, outDir)
-    val doneBc = lines.sparkSession.sparkContext.broadcast(done)
-    frame.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
+    exportResumableBytes(lines, outDir,
+      r => (r.getString(0) + "\n").getBytes(StandardCharsets.UTF_8),
+      ext = "jsonl", failAtPartition = failAtPartition)
+  }
+
+  /** The one commit loop: each task encodes its rows with the
+    * (serializable) `encode` closure and streams the bytes to
+    * `parts/p<id>.<ext>` under the write-ahead + atomic-rename + manifest
+    * protocol above. `coords` accumulates the partition's envelope in the
+    * same pass, so sinks that need a global envelope never re-scan. */
+  def exportResumableBytes(
+      df: DataFrame,
+      outDir: String,
+      encode: Row => Array[Byte],
+      ext: String = "bin",
+      failAtPartition: Int = -1,
+      coords: Option[Row => Iterable[(Double, Double)]] = None): Unit = {
+    val done = prepareRun(df, outDir)
+    val doneBc = df.sparkSession.sparkContext.broadcast(done)
+    df.foreachPartition { (it: Iterator[Row]) =>
+      val pid = TaskContext.getPartitionId()
       if (!doneBc.value.contains(pid)) {
         if (pid == failAtPartition) injectFault(outDir, pid)
         val t0 = System.currentTimeMillis()
         // tmp is attempt-keyed: concurrent attempts of one partition
         // (speculation, zombie task) each stream to their own file; the
         // atomic rename stays last-wins
-        val attempt = org.apache.spark.TaskContext.get.taskAttemptId()
-        val tmp = Paths.get(outDir, "parts", s"p$pid.a$attempt.tmp")
-        val fin = Paths.get(outDir, "parts", s"p$pid.jsonl")
-        val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
-        var n = 0L
-        try it.foreach { r => w.write(r.getString(0)); w.write('\n'); n += 1 }
-        finally w.close()
-        val sz = Files.size(tmp)
-        Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-        val meta = s"""{"partitionId":$pid,"rowCount":$n,"bytes":$sz,""" +
-          s""""status":"committed","wallMillis":${System.currentTimeMillis() - t0}}"""
-        val mTmp = Paths.get(outDir, "parts", s"p$pid.done.tmp")
-        Files.write(mTmp, meta.getBytes(StandardCharsets.UTF_8))
-        Files.move(mTmp, Paths.get(outDir, "parts", s"p$pid.done"),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-        ()
-      }
-    }
-  }
-
-  /** Binary sibling of [[exportResumable]]: each task encodes its rows with
-    * the (serializable) `encode` closure and streams the bytes to
-    * `parts/p<id>.<ext>`, with the same write-ahead + atomic-rename +
-    * manifest commit protocol. Lets single-file binary formats (FlatGeobuf)
-    * serialize map-side with only header+concat left on the driver. */
-  def exportResumableBytes(
-      df: DataFrame,
-      outDir: String,
-      encode: org.apache.spark.sql.Row => Array[Byte],
-      ext: String = "bin",
-      failAtPartition: Int = -1,
-      coords: Option[org.apache.spark.sql.Row => Iterable[(Double, Double)]] = None): Unit = {
-    val done = prepareRun(df, outDir)
-    val doneBc = df.sparkSession.sparkContext.broadcast(done)
-    df.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      if (!doneBc.value.contains(pid)) {
-        if (pid == failAtPartition) injectFault(outDir, pid)
-        val t0 = System.currentTimeMillis()
-        val attempt = org.apache.spark.TaskContext.get.taskAttemptId()
+        val attempt = TaskContext.get().taskAttemptId()
         val tmp = Paths.get(outDir, "parts", s"p$pid.a$attempt.tmp")
         val fin = Paths.get(outDir, "parts", s"p$pid.$ext")
-        val w = new java.io.BufferedOutputStream(Files.newOutputStream(tmp))
+        val w = new BufferedOutputStream(Files.newOutputStream(tmp))
         var n = 0L
-        // per-partition bounds accumulate DURING the single export pass, so
-        // callers needing a global envelope never re-scan the table
         var minX = Double.MaxValue; var minY = Double.MaxValue
         var maxX = Double.MinValue; var maxY = Double.MinValue
         try it.foreach { r =>
@@ -177,8 +157,7 @@ object Lineage {
         Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE,
           StandardCopyOption.REPLACE_EXISTING)
         val envField =
-          if (coords.isDefined && n > 0 && minX != Double.MaxValue)
-            s""","env":[$minX,$minY,$maxX,$maxY]"""
+          if (minX != Double.MaxValue) s""","env":[$minX,$minY,$maxX,$maxY]"""
           else ""
         val meta = s"""{"partitionId":$pid,"rowCount":$n,"bytes":$sz,""" +
           s""""status":"committed","wallMillis":${System.currentTimeMillis() - t0}$envField}"""
@@ -205,22 +184,22 @@ object Lineage {
       .sortBy(_.getFileName.toString.stripPrefix("p").stripSuffix(s".$ext").toInt)
   }
 
-  /** Merge the per-partition `env` bounds recorded by
-    * [[exportResumableBytes]]; None when no partition recorded any. */
-  def partEnvelope(outDir: String): Option[Array[Double]] = {
-    val envs = listDir(Paths.get(outDir, "parts"))
+  private val ManifestField = """"(\w+)":(\[[^\]]*\]|"[^"]*"|[^,}]+)""".r
+
+  /** The one parse of the `.done` rows: each manifest's metrics plus the
+    * envelope its partition recorded, if any, in partition order. */
+  private def manifests(outDir: String): Seq[(PartMeta, Option[Array[Double]])] =
+    listDir(Paths.get(outDir, "parts"))
       .filter(_.getFileName.toString.endsWith(".done"))
-      .flatMap { p =>
-        val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        val i = s.indexOf("\"env\":[")
-        if (i < 0) None
-        else Some(s.substring(i + 7, s.indexOf(']', i))
-          .split(',').map(_.toDouble))
+      .map { p =>
+        val f = ManifestField
+          .findAllMatchIn(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+          .map(m => m.group(1) -> m.group(2)).toMap
+        (PartMeta(f("partitionId").toInt, f("rowCount").toLong, f("bytes").toLong,
+          f("status").stripPrefix("\"").stripSuffix("\""), f("wallMillis").toLong),
+          f.get("env").map(_.stripPrefix("[").stripSuffix("]").split(',').map(_.toDouble)))
       }
-    if (envs.isEmpty) None
-    else Some(Array(envs.map(_(0)).min, envs.map(_(1)).min,
-      envs.map(_(2)).max, envs.map(_(3)).max))
-  }
+      .sortBy(_._1.partitionId)
 
   /** Remove the part payloads + manifests after the final artifact is
     * assembled — a SUCCEEDED export must not leave .done files that would
@@ -237,21 +216,82 @@ object Lineage {
 
   /** Compact per-partition manifests into the lineage parquet table; returns
     * the lineage DataFrame. */
-  def finish(spark: SparkSession, outDir: String): DataFrame = {
+  def finish(spark: SparkSession, outDir: String): DataFrame =
+    compact(spark, outDir, manifests(outDir).map(_._1))
+
+  private def compact(spark: SparkSession, outDir: String,
+      metas: Seq[PartMeta]): DataFrame = {
     import spark.implicits._
-    val rows = listDir(Paths.get(outDir, "parts"))
-      .filter(_.getFileName.toString.endsWith(".done"))
-      .map { p =>
-        val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        def f(k: String): String =
-          s.split("\"" + k + "\":")(1).split("[,}]")(0).replaceAll("\"", "")
-        PartMeta(f("partitionId").toInt, f("rowCount").toLong, f("bytes").toLong,
-          f("status"), f("wallMillis").toLong)
-      }.toSeq
-    val df = rows.toDF()
+    val df = metas.toDF()
     df.write.mode("overwrite").parquet(s"$outDir/lineage")
     df
   }
+
+  /** What an export committed: the row count and the merged envelope
+    * (min x, min y, max x, max y) from its manifests, and its part payloads
+    * in partition order. */
+  final case class Committed(rows: Long, envelope: Option[Array[Double]],
+      parts: Seq[Path])
+
+  /** The one driver-side finish of every file sink: compact the manifests
+    * into the `lineage` table, let the format `write` its final file at a
+    * temp path from the committed parts, rename it atomically to `out`,
+    * then drop `parts/`. Returns the committed row count — no Spark job
+    * beyond the lineage write. */
+  def assemble(spark: SparkSession, outDir: String, ext: String, out: Path)(
+      write: (Path, Committed) => Unit): Long = {
+    val ms = manifests(outDir)
+    compact(spark, outDir, ms.map(_._1))
+    val envs = ms.flatMap(_._2)
+    val committed = Committed(ms.map(_._1.rowCount).sum,
+      if (envs.isEmpty) None
+      else Some(Array(envs.map(_(0)).min, envs.map(_(1)).min,
+        envs.map(_(2)).max, envs.map(_(3)).max)),
+      committedPartFiles(outDir, ext))
+    Option(out.getParent).foreach(Files.createDirectories(_))
+    val tmp = Paths.get(s"$out.tmp")
+    write(tmp, committed)
+    Files.move(tmp, out, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+    cleanParts(outDir)
+    committed.rows
+  }
+
+  /** [[assemble]] for formats that are `header ++ parts ++ footer`. */
+  def assembleConcat(spark: SparkSession, outDir: String, ext: String, out: Path)(
+      header: Committed => Array[Byte], footer: Array[Byte]): Long =
+    assemble(spark, outDir, ext, out) { (tmp, c) =>
+      val w = new BufferedOutputStream(Files.newOutputStream(tmp))
+      try {
+        w.write(header(c))
+        c.parts.foreach { p => Files.copy(p, w); () }
+        w.write(footer)
+      } finally w.close()
+    }
+
+  /** One length-prefixed record (4-byte big-endian length, then the bytes):
+    * the framing of parts whose records the driver must split again. */
+  def frame(rec: Array[Byte]): Array[Byte] =
+    java.nio.ByteBuffer.allocate(4 + rec.length).putInt(rec.length).put(rec).array()
+
+  /** The records of [[frame]]d parts, in order; each part is open only
+    * while its records are read. */
+  def frames(parts: Seq[Path]): Iterator[Array[Byte]] =
+    parts.iterator.flatMap { p =>
+      val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(p)))
+      new Iterator[Array[Byte]] {
+        private var nextLen = readLen()
+        private def readLen(): Int =
+          try in.readInt() catch { case _: EOFException => in.close(); -1 }
+        def hasNext: Boolean = nextLen >= 0
+        def next(): Array[Byte] = {
+          val b = new Array[Byte](nextLen)
+          in.readFully(b)
+          nextLen = readLen()
+          b
+        }
+      }
+    }
 
   /** Read back all committed lines (the export's logical output). */
   def readExport(spark: SparkSession, outDir: String): DataFrame =

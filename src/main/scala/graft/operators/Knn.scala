@@ -133,8 +133,15 @@ object Knn {
       qcur.unpersist()
       ()
     }
+    if (remaining) {
+      // qs carries the radius of the round that would come next
+      val left = qs.select(col("qid").cast("long"), col("radius")).collect()
+      qs.unpersist()
+      retired.foreach(_.unpersist())
+      throw new KnnNotConvergedException(left.map(_.getLong(0)).sorted.toSeq,
+        left.map(_.getInt(1)).max / 2, iter)
+    }
     qs.unpersist()
-    require(!remaining, s"kNN did not converge in $maxRounds rounds")
     // materialize the (result-sized) union once while the round slices are
     // still cached, then release every per-round cache — a long-lived session
     // calling knn() repeatedly must not accumulate slice blocks. The returned
@@ -173,3 +180,11 @@ object Knn {
        |SELECT qid, rank, pid, ROUND(dist_m, 3) AS dist_m FROM r WHERE rank <= $k""".stripMargin
   }
 }
+
+/** A kNN search that still had unsatisfied queries after `rounds`
+  * expansion rounds; `radius` is the last cell-disk radius searched. Every
+  * per-round cache is released before it is thrown. */
+final class KnnNotConvergedException(val qids: Seq[Long], val radius: Int,
+    val rounds: Int) extends RuntimeException(
+  s"kNN did not converge in $rounds rounds: qids ${qids.mkString(", ")} " +
+    s"still unsatisfied at cell radius $radius")

@@ -263,17 +263,9 @@ object FlatGeobuf {
     Lineage.exportResumableBytes(df, partsDir, encode,
       ext = "fgbpart", failAtPartition = failAtPartition,
       coords = geomOf.map(g => (r: Row) => g(r).allPts))
-    val manifest = Lineage.finish(df.sparkSession, partsDir)
-    val n = {
-      import org.apache.spark.sql.functions._
-      val r = manifest.agg(coalesce(sum("rowCount"), lit(0L))).collect().head
-      r.getLong(0)
-    }
-    val env = Lineage.partEnvelope(partsDir).getOrElse(Array.empty[Double])
-    val parts = Lineage.committedPartFiles(partsDir, "fgbpart")
-    Option(Paths.get(path).getParent).foreach(Files.createDirectories(_))
-    writeFinal(path, name, env, cols, n, parts)
-    Lineage.cleanParts(partsDir)
-    n
+    Lineage.assembleConcat(df.sparkSession, partsDir, "fgbpart", Paths.get(path))(
+      c => Magic ++ headerBytes(name, c.envelope.getOrElse(Array.empty[Double]),
+        GtUnknown, cols, c.rows),
+      Array.emptyByteArray)
   }
 }

@@ -4,6 +4,7 @@ import java.nio.ByteBuffer
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.lineage.Lineage
 
 /** From-scratch GeoPackage (.gpkg) sink — the reference's GPKG export path
   * (src/app.py:586-588, option table :482; e2e tests/test_API.py
@@ -133,46 +134,19 @@ object Gpkg {
       .filterNot(f => FeatureModel.geomCols(f.name)).toSeq
     val attrIdxs = attrFields.map(f => idx(f.name))
     val geomOf = FeatureModel.geomReader(df.columns.toIndexedSeq)
-    val encodeRec = rowRecord(attrIdxs, geomOf) _
-    val encode = (r: Row) => {
-      val rec = encodeRec(r)
-      ByteBuffer.allocate(4).putInt(rec.length).array() ++ rec
-    }
+    val encode = rowRecord(attrIdxs, geomOf) _
     val stateDir = s"$path.state"
-    graft.lineage.Lineage.exportResumableBytes(df, stateDir, encode,
+    Lineage.exportResumableBytes(df, stateDir, r => Lineage.frame(encode(r)),
       ext = "rec", failAtPartition = failAtPartition,
       coords = geomOf.map(g => (r: Row) => g(r).allPts))
-
-    Option(Paths.get(path).getParent).foreach(Files.createDirectories(_))
-    val db = new Sqlite(path)
-    var n = 0L
-    val rows: Iterator[(Long, Array[Byte])] =
-      graft.lineage.Lineage.committedPartFiles(stateDir, "rec").iterator
-        .flatMap { p =>
-          val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-            Files.newInputStream(p)))
-          new Iterator[Array[Byte]] {
-            private var nextLen = readLen()
-            private def readLen(): Int =
-              try in.readInt() catch { case _: java.io.EOFException => in.close(); -1 }
-            def hasNext: Boolean = nextLen >= 0
-            def next(): Array[Byte] = {
-              val b = new Array[Byte](nextLen)
-              in.readFully(b)
-              nextLen = readLen()
-              b
-            }
-          }
-        }
-        .map { rec => n += 1; (n, rec) }
-    db.writeTableEncoded(layer, createLayerSql(attrFields, layer), rows)
-    val env = graft.lineage.Lineage.partEnvelope(stateDir)
-      .filter(_ => n > 0).map(e => Array(e(0), e(1), e(2), e(3)))
-    metadataTables(db, layer, n, env)
-    db.finish(applicationId = 0x47504B47)
-    graft.lineage.Lineage.finish(df.sparkSession, stateDir)
-    graft.lineage.Lineage.cleanParts(stateDir)
-    n
+    Lineage.assemble(df.sparkSession, stateDir, "rec", Paths.get(path)) { (tmp, c) =>
+      val db = new Sqlite(tmp.toString)
+      val rows = Lineage.frames(c.parts).zipWithIndex
+        .map { case (rec, i) => (i + 1L, rec) }
+      db.writeTableEncoded(layer, createLayerSql(attrFields, layer), rows)
+      metadataTables(db, layer, c.rows, c.envelope)
+      db.finish(applicationId = 0x47504B47)
+    }
   }
 
   /** The gpkg_* metadata tables + autoindexes shared by both writers. */

@@ -18,13 +18,6 @@ import org.apache.spark.sql.functions._
   * flip the MBTiles spec requires. */
 object MbTiles {
 
-  private def gzip(bytes: Array[Byte]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(bos)
-    gz.write(bytes); gz.close()
-    bos.toByteArray
-  }
-
   /** The reference-parity sink: feature DataFrame → gzip MVT payloads
     * ([[Mvt]]) → MBTiles with `format=pbf` and the spec-required `json`
     * metadata row describing the vector layer — what tippecanoe's mbtiles
@@ -63,7 +56,7 @@ object MbTiles {
   def write(tiled: DataFrame, path: String, name: String = "export"): Long = {
     // payload assembly + gzip run map-side (PmTiles parity) — the driver
     // streams ready-made bytes into the container
-    val gzipU = udf((fc: String) => gzip(
+    val gzipU = udf((fc: String) => Zip.gzip(
       ("""{"type":"FeatureCollection","features":[""" + fc + "]}")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     val perTile = tiled

@@ -272,13 +272,6 @@ object Mvt {
     (math.round((wx - tx) * extent), math.round((wy - ty) * extent))
   }
 
-  private def gzip(b: Array[Byte]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val g = new java.util.zip.GZIPOutputStream(bos)
-    g.write(b); g.close()
-    bos.toByteArray
-  }
-
   // ---- the distributed tile-payload pipeline -------------------------------
 
   /** Feature DataFrame (kind, lon, lat, rings, roles + attribute columns) →
@@ -381,7 +374,7 @@ object Mvt {
       // feature (measured 3-4x tile-encode regression on multi-ring data)
       }
       val ordered = sortFeatures(feats)
-      (z, tx, ty, gzip(encodeTile(layerName, extent, ordered)))
+      (z, tx, ty, Zip.gzip(encodeTile(layerName, extent, ordered)))
     }(enc).toDF("z", "tx", "ty", "payload")
   }
 }

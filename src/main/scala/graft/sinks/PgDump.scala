@@ -137,26 +137,8 @@ object PgDump {
     val partsDir = path + ".export"
     Lineage.exportResumableBytes(p.df, partsDir, p.encode,
       ext = "copypart", failAtPartition = failAtPartition)
-    val manifest = Lineage.finish(p.df.sparkSession, partsDir)
-    val n = {
-      import org.apache.spark.sql.functions._
-      manifest.agg(coalesce(sum("rowCount"), lit(0L))).collect().head.getLong(0)
-    }
-    Option(Paths.get(path).getParent).foreach(Files.createDirectories(_))
-    val tmp = Paths.get(path + ".tmp")
-    val w = new java.io.BufferedOutputStream(
-      Files.newOutputStream(tmp))
-    try {
-      w.write(p.header.getBytes(StandardCharsets.UTF_8))
-      Lineage.committedPartFiles(partsDir, "copypart")
-        .foreach { q => Files.copy(q, w); () }
-      w.write("\\.\n".getBytes(StandardCharsets.UTF_8))
-    } finally w.close()
-    Files.move(tmp, Paths.get(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // a succeeded export must not leave resumable state behind
-    Lineage.cleanParts(partsDir)
-    n
+    Lineage.assembleConcat(p.df.sparkSession, partsDir, "copypart", Paths.get(path))(
+      _ => p.header.getBytes(StandardCharsets.UTF_8),
+      "\\.\n".getBytes(StandardCharsets.UTF_8))
   }
 }

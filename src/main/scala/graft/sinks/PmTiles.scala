@@ -4,7 +4,6 @@ import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import java.util.zip.GZIPOutputStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -85,13 +84,6 @@ object PmTiles {
     out.toByteArray
   }
 
-  private def gzip(b: Array[Byte]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val g = new GZIPOutputStream(bos)
-    g.write(b); g.close()
-    bos.toByteArray
-  }
-
   /** 127-byte v3 header. `tileType`: 1 = MVT, 0 = unspecified payloads. */
   private def header(rootOff: Long, rootLen: Long, metaOff: Long, metaLen: Long,
       leafOff: Long, leafLen: Long,
@@ -132,7 +124,7 @@ object PmTiles {
     // per-tile payload ASSEMBLY AND GZIP run in the executors (map step after
     // the per-tile agg); the driver only streams ready-made bytes — tile
     // compression is the dominant cost and must live where the data lives
-    val gzipU = udf((fc: String) => gzip(
+    val gzipU = udf((fc: String) => Zip.gzip(
       ("""{"type":"FeatureCollection","features":[""" + fc + "]}")
         .getBytes(StandardCharsets.UTF_8)))
     val perTile = tiled
@@ -208,7 +200,7 @@ object PmTiles {
     var dataLen = 0L
     var minZ = 127; var maxZ = 0
     def flushLeaf(): Unit = if (entries.nonEmpty) {
-      val enc = gzip(encodeDirectory(entries.toSeq))
+      val enc = Zip.gzip(encodeDirectory(entries.toSeq))
       // runLength 0 marks a leaf pointer; offset is within the leaf section
       rootEntries += Entry(entries.head.tileId, leafLen, enc.length, runLength = 0)
       leafOut.write(enc)
@@ -253,9 +245,9 @@ object PmTiles {
       leafOut.close()
       dataOut.close()
     }
-    val root = gzip(encodeDirectory(
+    val root = Zip.gzip(encodeDirectory(
       if (leafMode) rootEntries.toSeq else entries.toSeq))
-    val meta = gzip("""{"name":"graft tile export"}""".getBytes(StandardCharsets.UTF_8))
+    val meta = Zip.gzip("""{"name":"graft tile export"}""".getBytes(StandardCharsets.UTF_8))
     val rootOff = 127L
     val metaOff = rootOff + root.length
     val leafOff = metaOff + meta.length

@@ -5,6 +5,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row}
+import graft.lineage.Lineage
 
 /** From-scratch ESRI Shapefile writer (.shp + .shx + .dbf), the reference's
   * second-most-requested format (dedicated path src/app.py:483-547; ogr2ogr
@@ -195,12 +196,14 @@ object Shapefile {
   /** Driver half of the distributed writer: stream pre-encoded
     * (shape, dbfRecord) frames into the triple — record numbering, shx
     * framing and header patches only; the envelope comes from the parts'
-    * lineage manifests. Byte-identical to [[writeTriple]] given the same
-    * records in the same order. */
-  private def assembleTriple(base: String, st: Int, fieldNames: Seq[String],
-      frames: Iterator[(Array[Byte], Array[Byte])],
-      env: Option[Array[Double]]): Int = {
-    val shp = new Patchable(s"$base.shp")
+    * lineage manifests. The .shp goes to `shpPath` (the assembly's temp
+    * file, renamed last, so a triple whose .shp exists is whole).
+    * Byte-identical to [[writeTriple]] given the same records in the same
+    * order. */
+  private def assembleTriple(shpPath: String, base: String, st: Int,
+      fieldNames: Seq[String], frames: Iterator[(Array[Byte], Array[Byte])],
+      env: Option[Array[Double]]): Unit = {
+    val shp = new Patchable(shpPath)
     val shx = new Patchable(s"$base.shx")
     val dbf = new DbfWriter(s"$base.dbf", fieldNames)
     shp.writeBytes(header(st))
@@ -224,7 +227,7 @@ object Shapefile {
     dbf.close()
     Files.write(Paths.get(s"$base.prj"),
       Wgs84Wkt.getBytes(StandardCharsets.US_ASCII))
-    recNo
+    ()
   }
 
   /** Export a feature DataFrame (kind, lon, lat, rings, roles, + attribute
@@ -275,10 +278,10 @@ object Shapefile {
 
   /** Distributed sibling of [[write]]: each task encodes its partition's
     * shape records and fixed-width dBASE records map-side into committed,
-    * resumable byte parts (4-byte shape-length framing; per-part envelope
-    * in the lineage manifests); the driver streams the pre-encoded frames
-    * into the .shp/.shx/.dbf triple — record numbering and header patches
-    * only. Byte-identical to [[write]]; parts clean up after success. */
+    * resumable byte parts (one [[Lineage.frame]] per shape ++ dbf record;
+    * per-part envelope in the lineage manifests); the driver streams the
+    * pre-encoded frames into the .shp/.shx/.dbf triple — record numbering
+    * and header patches only. Byte-identical to [[write]]; parts clean up after success. */
   def writeDistributed(df0: DataFrame, dir: String, prefix: String = "",
       failAtPartition: Int = -1): Map[String, Int] = {
     Files.createDirectories(Paths.get(dir))
@@ -299,40 +302,22 @@ object Shapefile {
         val dbfRec = dbfRecord(
           attrIdxs.map(i => Option(r.get(i)).map(_.toString).orNull),
           nFields, dbfWidth)
-        ByteBuffer.allocate(4).putInt(shape.length).array() ++ shape ++ dbfRec
+        Lineage.frame(shape ++ dbfRec)
       }
       val stateDir = s"$dir/.$prefix$kind.state"
       val part = df.filter(df.col("kind") === kind)
-      graft.lineage.Lineage.exportResumableBytes(part, stateDir, encode,
+      Lineage.exportResumableBytes(part, stateDir, encode,
         ext = "shpart", failAtPartition = failAtPartition,
         coords = Some((r: Row) => geometry(r).flatten))
       val dbfRecSize = 1 + nFields * dbfWidth
-      val frames: Iterator[(Array[Byte], Array[Byte])] =
-        graft.lineage.Lineage.committedPartFiles(stateDir, "shpart").iterator
-          .flatMap { p =>
-            val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-              Files.newInputStream(p)))
-            new Iterator[(Array[Byte], Array[Byte])] {
-              private var nextLen = readLen()
-              private def readLen(): Int =
-                try in.readInt()
-                catch { case _: java.io.EOFException => in.close(); -1 }
-              def hasNext: Boolean = nextLen >= 0
-              def next(): (Array[Byte], Array[Byte]) = {
-                val shape = new Array[Byte](nextLen)
-                in.readFully(shape)
-                val dbfRec = new Array[Byte](dbfRecSize)
-                in.readFully(dbfRec)
-                nextLen = readLen()
-                (shape, dbfRec)
-              }
-            }
-          }
-      val env = graft.lineage.Lineage.partEnvelope(stateDir)
-      val n = assembleTriple(s"$dir/$prefix$kind", st, attrCols, frames, env)
-      graft.lineage.Lineage.finish(df.sparkSession, stateDir)
-      graft.lineage.Lineage.cleanParts(stateDir)
-      kind -> n
+      val base = s"$dir/$prefix$kind"
+      val n = Lineage.assemble(df.sparkSession, stateDir, "shpart",
+        Paths.get(s"$base.shp")) { (tmp, c) =>
+        assembleTriple(tmp.toString, base, st, attrCols,
+          Lineage.frames(c.parts).map(rec => rec.splitAt(rec.length - dbfRecSize)),
+          c.envelope)
+      }
+      kind -> n.toInt
     }.toMap
   }
 }

@@ -1,6 +1,8 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.plan.PlanBuilder
 import graft.lineage.Lineage
@@ -24,40 +26,31 @@ object Sinks {
     * app.py:618-646). The distributed write stays resumable (lineage parts);
     * only the final concat is a driver-side sequential stream — exactly the
     * reference's boundary. Returns the assembled file path. */
-  def featureCollection(extract: DataFrame, outDir: String): java.nio.file.Path = {
-    import java.nio.charset.StandardCharsets
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+  def featureCollection(extract: DataFrame, outDir: String): Path = {
     geojson(extract, outDir)
-    val sorted = Lineage.committedPartFiles(outDir, "jsonl")
-    val tmp = Paths.get(outDir, "export.geojson.tmp")
-    val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
-    var first = true
-    try {
-      w.write("""{"type":"FeatureCollection","features":[""")
-      sorted.foreach { p =>
-        val r = Files.newBufferedReader(p, StandardCharsets.UTF_8)
-        try {
-          var line = r.readLine()
-          while (line != null) {
-            if (line.nonEmpty) {
-              if (!first) w.write(",")
-              w.write(line)
-              first = false
-            }
-            line = r.readLine()
-          }
-        } finally r.close()
-      }
-      w.write("]}")
-    } finally w.close()
     val out = Paths.get(outDir, "export.geojson")
-    Files.move(tmp, out, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    // compact the manifests into the lineage parquet (it survives the part
-    // cleanup for accounting), then drop parts/ — a succeeded export must
-    // not keep the dataset duplicated on disk or leave resumable state
-    Lineage.finish(extract.sparkSession, outDir)
-    Lineage.cleanParts(outDir)
+    Lineage.assemble(extract.sparkSession, outDir, "jsonl", out) { (tmp, c) =>
+      val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
+      var first = true
+      try {
+        w.write("""{"type":"FeatureCollection","features":[""")
+        c.parts.foreach { p =>
+          val r = Files.newBufferedReader(p, StandardCharsets.UTF_8)
+          try {
+            var line = r.readLine()
+            while (line != null) {
+              if (line.nonEmpty) {
+                if (!first) w.write(",")
+                w.write(line)
+                first = false
+              }
+              line = r.readLine()
+            }
+          } finally r.close()
+        }
+        w.write("]}")
+      } finally w.close()
+    }
     out
   }
 
@@ -65,16 +58,9 @@ object Sinks {
     * instead of geometry, builder.py:152-155). Caller passes the csv-shaped
     * extract (PlanBuilder.build(..., csv = true)); map columns are
     * json-encoded since CSV has no nested types. */
-  def csv(extract: DataFrame, outDir: String): Unit = {
-    val flat = extract.schema.fields.foldLeft(extract) { (df, f) =>
-      f.dataType match {
-        case _: org.apache.spark.sql.types.MapType =>
-          df.withColumn(f.name, to_json(col(f.name)))
-        case _ => df
-      }
-    }
-    flat.write.mode(SaveMode.Overwrite).option("header", "true").csv(outDir)
-  }
+  def csv(extract: DataFrame, outDir: String): Unit =
+    FeatureModel.jsonifyMaps(extract).write.mode(SaveMode.Overwrite)
+      .option("header", "true").csv(outDir)
 
   /** Minimal RFC-4180 field quoting for the driver-written header (data
     * rows are quoted by `to_csv` in the plan). */
@@ -89,35 +75,17 @@ object Sinks {
     * values containing newlines survive exactly (a line-oriented protocol
     * would mangle them). Driver writes header + parts. Returns row count. */
   def csvSingle(extract: DataFrame, outDir: String): Long = {
-    import java.nio.charset.StandardCharsets
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val flat = extract.schema.fields.foldLeft(extract) { (df, f) =>
-      f.dataType match {
-        case _: org.apache.spark.sql.types.MapType =>
-          df.withColumn(f.name, to_json(col(f.name)))
-        case _ => df
-      }
-    }
+    val flat = FeatureModel.jsonifyMaps(extract)
     val lines = flat.select(
       to_csv(struct(flat.columns.map(col).toIndexedSeq: _*)).as("line"))
     Lineage.exportResumableBytes(lines, outDir,
       r => (r.getString(0) + "\n").getBytes(StandardCharsets.UTF_8),
       ext = "csvpart")
-    val n = Lineage.finish(extract.sparkSession, outDir)
-      .agg(coalesce(sum("rowCount"), lit(0L))).collect().head.getLong(0)
-    val tmp = Paths.get(outDir, "export.csv.tmp")
-    val w = new java.io.BufferedOutputStream(Files.newOutputStream(tmp))
-    try {
-      w.write((flat.columns.map(csvQuote).mkString(",") + "\n")
-        .getBytes(StandardCharsets.UTF_8))
-      Lineage.committedPartFiles(outDir, "csvpart").foreach { p =>
-        Files.copy(p, w); ()
-      }
-    } finally w.close()
-    Files.move(tmp, Paths.get(outDir, "export.csv"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    Lineage.cleanParts(outDir)
-    n
+    Lineage.assembleConcat(extract.sparkSession, outDir, "csvpart",
+      Paths.get(outDir, "export.csv"))(
+      _ => (flat.columns.map(csvQuote).mkString(",") + "\n")
+        .getBytes(StandardCharsets.UTF_8),
+      Array.emptyByteArray)
   }
 
   /** S5 — JSON lines (the FlatGeobuf/KML structural stand-in: one nested
@@ -136,8 +104,6 @@ object Sinks {
     * Driver-side stream (single-XML-document boundary, like the shapefile
     * and FeatureCollection sinks). */
   def kml(extract: DataFrame, path: String): Long = {
-    import java.nio.charset.StandardCharsets
-    import java.nio.file.{Files, Paths}
     val prepared = FeatureModel.withKind(extract)
     val idx = prepared.columns.zipWithIndex.toMap
     val geomOf = FeatureModel.geomReader(prepared.columns.toIndexedSeq)
@@ -235,31 +201,18 @@ object Sinks {
     * driver wraps header + parts + footer — the featureCollection boundary.
     * Returns the placemark count. */
   def kmlDistributed(extract: DataFrame, outDir: String): Long = {
-    import java.nio.charset.StandardCharsets
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val lines = extract.select(kmlPlacemarkCol(extract).as("line"))
     // BYTE parts + raw concat: placemarks need no separators, and any
     // newline inside a <name> survives byte-exactly (a line protocol would
     // silently delete it)
     Lineage.exportResumableBytes(lines, outDir,
       r => r.getString(0).getBytes(StandardCharsets.UTF_8), ext = "kmlpart")
-    val n = Lineage.finish(extract.sparkSession, outDir)
-      .agg(coalesce(sum("rowCount"), lit(0L))).collect().head.getLong(0)
-    val tmp = Paths.get(outDir, "export.kml.tmp")
-    val w = new java.io.BufferedOutputStream(Files.newOutputStream(tmp))
-    try {
-      w.write(("""<?xml version="1.0" encoding="UTF-8"?>""" +
+    Lineage.assembleConcat(extract.sparkSession, outDir, "kmlpart",
+      Paths.get(outDir, "export.kml"))(
+      _ => ("""<?xml version="1.0" encoding="UTF-8"?>""" +
         """<kml xmlns="http://www.opengis.net/kml/2.2"><Document>""")
-        .getBytes(StandardCharsets.UTF_8))
-      Lineage.committedPartFiles(outDir, "kmlpart").foreach { p =>
-        Files.copy(p, w); ()
-      }
-      w.write("</Document></kml>".getBytes(StandardCharsets.UTF_8))
-    } finally w.close()
-    Files.move(tmp, Paths.get(outDir, "export.kml"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    Lineage.cleanParts(outDir)
-    n
+        .getBytes(StandardCharsets.UTF_8),
+      "</Document></kml>".getBytes(StandardCharsets.UTF_8))
   }
 
   /** S7 — tile tree: one directory per (z, tx, ty), the pmtiles layout

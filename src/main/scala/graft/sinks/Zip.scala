@@ -19,6 +19,15 @@ object Zip {
   // the JVM default zone — same export, different bytes per host)
   private val FixedTime = java.time.LocalDateTime.of(2024, 1, 1, 0, 0, 0)
 
+  /** One gzip member of `b` — the tile-payload and PMTiles-directory
+    * compression shared by the MVT, PMTiles and MBTiles sinks. */
+  private[sinks] def gzip(b: Array[Byte]): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val g = new java.util.zip.GZIPOutputStream(bos)
+    g.write(b); g.close()
+    bos.toByteArray
+  }
+
   /** Zip `dir`'s file tree into `out` (paths relative to `dir`); skips
     * `_SUCCESS`/`.crc`/lineage bookkeeping like the reference's uploader —
     * the archive ships format outputs, not pipeline-internal accounting.

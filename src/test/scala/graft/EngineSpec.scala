@@ -173,6 +173,22 @@ class EngineSpec extends SparkSpec {
     assert(out.map(_.getLong(2)).toSet == few.map(_._1).toSet)
   }
 
+  test("knn that does not converge names its qids and releases every cache") {
+    val df = Seq((1L, 0.0, 0.0)).toDF("pid", "lon", "lat")
+    // qid 1 sits next to the point and retires in round 1; qid 2 has no
+    // candidate in its radius-1 disk and is left unsatisfied
+    val qs = Seq((1, 0.01, 0.01), (2, 120.0, 60.0)).toDF("qid", "qlon", "qlat")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[graft.operators.KnnNotConvergedException] {
+      Knn.knn(df, qs, k = 1, maxRounds = 1)
+    }
+    assert(e.qids == Seq(2L))
+    assert(e.radius == 1 && e.rounds == 1)
+    assert(e.getMessage.contains("qids 2 "))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "per-round caches must be released before the throw")
+  }
+
   test("knn equals brute-force linear-scan oracle") {
     val k = 8
     val got = Knn.knn(spark, GeoCols.derivedPoints(spark, sfDir),
