@@ -248,13 +248,24 @@ object Lineage {
       else Some(Array(envs.map(_(0)).min, envs.map(_(1)).min,
         envs.map(_(2)).max, envs.map(_(3)).max)),
       committedPartFiles(outDir, ext))
-    Option(out.getParent).foreach(Files.createDirectories(_))
-    val tmp = Paths.get(s"$out.tmp")
-    write(tmp, committed)
-    Files.move(tmp, out, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    replaceAtomically(out)(write(_, committed))
     cleanParts(outDir)
     committed.rows
+  }
+
+  /** The temp-and-rename step of every single-file output: `write` builds
+    * the file at `<out>.tmp`, which is renamed atomically over `out` only
+    * once it is whole. A failed write removes the temp file and leaves any
+    * earlier `out` untouched. */
+  def replaceAtomically[A](out: Path)(write: Path => A): A = {
+    Option(out.getParent).foreach(Files.createDirectories(_))
+    val tmp = Paths.get(s"$out.tmp")
+    val result =
+      try write(tmp)
+      catch { case e: Throwable => Files.deleteIfExists(tmp); throw e }
+    Files.move(tmp, out, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+    result
   }
 
   /** [[assemble]] for formats that are `header ++ parts ++ footer`. */

@@ -62,9 +62,10 @@ object CustomExport {
 
   /** The full format matrix (the reference's ogr2ogr/DuckDB format table,
     * app.py:549-616): writes `df` as `fmt` under `dir`. Returns the row count
-    * when the sink itself reports one (the driver-streamed single-file
-    * formats do); distributed writers return None and the caller reuses
-    * already-written metadata instead of re-counting. */
+    * when the sink itself reports one (the single-file formats take it from
+    * their commit manifests); the geojson, parquet and json writers return
+    * None and the caller reuses already-written metadata instead of
+    * re-counting. */
   def writeFormat(df: DataFrame, fmt: String, dir: String,
       table: String, pmTilesZooms: (Int, Int) = (2, 6)): Option[Long] = fmt match {
     case "geojson" =>
@@ -72,24 +73,22 @@ object CustomExport {
     case "parquet" =>
       graft.sinks.Sinks.parquetZstd(df, s"$dir/parquet"); None
     case "csv" =>
-      Some(graft.sinks.Sinks.csvSingle(df, s"$dir/csv"))
+      Some(graft.sinks.Sinks.csv(df, s"$dir/csv"))
     case "json" =>
       graft.sinks.Sinks.json(df, s"$dir/json"); None
     case "shp" =>
-      Some(graft.sinks.Shapefile.writeDistributed(df, s"$dir/shp",
+      Some(graft.sinks.Shapefile.write(df, s"$dir/shp",
         prefix = s"${table}_").values.map(_.toLong).sum)
     case "kml" =>
       // namespaced like every other format: resumable state + output live
       // under $dir/kml, never in the shared category root
-      Some(graft.sinks.Sinks.kmlDistributed(df, s"$dir/kml"))
-    // the distributed resumable writers ARE the default matrix paths (spec
-    // proves byte-identity with the driver-streamed variants)
+      Some(graft.sinks.Sinks.kml(df, s"$dir/kml"))
     case "fgb" =>
-      Some(graft.sinks.FlatGeobuf.writeDistributed(df, s"$dir/export.fgb", table))
+      Some(graft.sinks.FlatGeobuf.write(df, s"$dir/export.fgb", table))
     case "sql" =>
-      Some(graft.sinks.PgDump.writeDistributed(df, s"$dir/export.sql", table))
+      Some(graft.sinks.PgDump.write(df, s"$dir/export.sql", table))
     case "gpkg" =>
-      Some(graft.sinks.Gpkg.writeDistributed(df, s"$dir/export.gpkg", table))
+      Some(graft.sinks.Gpkg.write(df, s"$dir/export.gpkg", table))
     // tile payloads are gzip MVT (tippecanoe output parity): PMTiles
     // tile_type 1, MBTiles format=pbf + vector_layers metadata
     case "pmtiles" =>
@@ -151,11 +150,10 @@ object CustomExport {
             val payloads = graft.sinks.Mvt.tilePayloads(df, (2, 6), c.name).persist()
             try {
               val pm = graft.sinks.PmTiles.writePayloads(
-                payloads, s"$catDir/export.pmtiles", tileType = 1)._1
+                payloads, s"$catDir/export.pmtiles")._1
               val mb = graft.sinks.MbTiles.writePayloads(
-                payloads, s"$catDir/export.mbtiles", c.name, format = "pbf",
-                extraMeta = Seq("json" ->
-                  graft.sinks.MbTiles.vectorLayersJson(df, (2, 6), c.name)))
+                payloads, s"$catDir/export.mbtiles", c.name,
+                graft.sinks.MbTiles.vectorLayersJson(df, (2, 6), c.name))
               Seq("pmtiles" -> Some(pm), "mbtiles" -> Some(mb))
             } finally { payloads.unpersist(); () }
           }

@@ -1,11 +1,11 @@
 package graft.sinks
 
-import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 import com.google.flatbuffers.FlatBufferBuilder
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.lineage.Lineage
 
 /** From-scratch FlatGeobuf (.fgb) writer — the reference's bulk vector
   * interchange format (`FLATGEOBUF = "fgb"` src/validation/models.py:63,
@@ -28,10 +28,10 @@ import org.apache.spark.sql.types._
   * slots straight from the published header.fbs / feature.fbs field order) —
   * no generated bindings, no schema compiler.
   *
-  * Features stream to a sidecar file while the envelope and count accumulate,
-  * then the final file is header + sidecar — one pass over the data, constant
-  * memory, same pattern as the PMTiles writer. Driver-side stream over
-  * `toLocalIterator` (single-file boundary, like the reference's ogr2ogr).
+  * Features serialize map-side into committed, resumable lineage parts while
+  * each partition's envelope and count accumulate; the driver writes header +
+  * parts — one pass over the data, constant driver memory, the single-file
+  * boundary of the reference's ogr2ogr.
   */
 object FlatGeobuf {
 
@@ -177,9 +177,8 @@ object FlatGeobuf {
   }
 
   /** Per-row Feature serializer — a pure, serializable closure over column
-    * positions only ([[FeatureModel.geomReader]]), so it runs identically
-    * driver-side (toLocalIterator in [[write]]) and map-side in executors
-    * ([[writeDistributed]]). Frames without anchor columns (csv/centroid
+    * positions only ([[FeatureModel.geomReader]]), run map-side in the
+    * executors by [[write]]. Frames without anchor columns (csv/centroid
     * projections) serialize attribute-only features. */
   def rowEncoder(columns: Seq[String],
       attrs: Seq[(Int, Int)]): Row => Array[Byte] = {
@@ -187,62 +186,11 @@ object FlatGeobuf {
     (r: Row) => featureBytes(geomOf.map(_(r)), propBytes(r, attrs))
   }
 
-  private def prep(df0: DataFrame): (DataFrame, Seq[(String, Int)], Seq[(Int, Int)]) = {
-    val df = FeatureModel.prepare(df0)
-    val idx = df.columns.zipWithIndex.toMap
-    val attrFields = df.schema.fields.filterNot(f => FeatureModel.geomCols(f.name))
-    val cols = attrFields.map(f => (f.name, columnType(f.dataType))).toSeq
-    val attrs = attrFields.map(f => (idx(f.name), columnType(f.dataType))).toSeq
-    (df, cols, attrs)
-  }
-
-  private def writeFinal(path: String, name: String, env: Array[Double],
-      cols: Seq[(String, Int)], n: Long, parts: Seq[java.nio.file.Path]): Unit = {
-    val tmp = Paths.get(path + ".tmp")
-    val w = new BufferedOutputStream(new FileOutputStream(tmp.toFile))
-    try {
-      w.write(Magic)
-      w.write(headerBytes(name, env, GtUnknown, cols, n))
-      parts.foreach { p => Files.copy(p, w); () }
-    } finally w.close()
-    Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** Write the extract as one .fgb file; returns the feature count. Mixed
     * per-row kinds → header geometry_type Unknown(0) with per-feature types,
-    * exactly how ogr2ogr writes mixed-geometry layers. Driver-side stream
-    * (single-writer boundary); see [[writeDistributed]] for the resumable
-    * executor-side path. */
-  def write(df0: DataFrame, path: String, name: String = "export"): Long = {
-    val (df, cols, attrs) = prep(df0)
-    val encode = rowEncoder(df.columns.toIndexedSeq, attrs)
-    val geomOf = FeatureModel.geomReader(df.columns.toIndexedSeq)
-    Option(Paths.get(path).getParent).foreach(Files.createDirectories(_))
-    val sidecar = Paths.get(path + ".features.tmp")
-    val out = new BufferedOutputStream(new FileOutputStream(sidecar.toFile))
-    var n = 0L
-    var minX = Double.MaxValue; var minY = Double.MaxValue
-    var maxX = Double.MinValue; var maxY = Double.MinValue
-    try {
-      val it = df.toLocalIterator()
-      while (it.hasNext) {
-        val r = it.next()
-        out.write(encode(r)); n += 1
-        geomOf.foreach(_(r).allPts.foreach { case (x, y) =>
-          if (x < minX) minX = x; if (x > maxX) maxX = x
-          if (y < minY) minY = y; if (y > maxY) maxY = y
-        })
-      }
-    } finally out.close()
-    val env = if (n == 0 || minX == Double.MaxValue) Array.empty[Double]
-      else Array(minX, minY, maxX, maxY)
-    writeFinal(path, name, env, cols, n, Seq(sidecar))
-    Files.delete(sidecar)
-    n
-  }
-
-  /** Distributed + RESUMABLE write: every executor serializes its
+    * exactly how ogr2ogr writes mixed-geometry layers.
+    *
+    * Distributed + RESUMABLE: every executor serializes its
     * partition's Feature flatbuffers into a committed binary lineage part
     * (write-ahead + atomic rename, [[graft.lineage.Lineage]] protocol — a
     * killed export resumes by re-running only uncommitted partitions), the
@@ -252,11 +200,14 @@ object FlatGeobuf {
     * single-file FeatureCollection sink. This is the 100 TB shape: feature
     * serialization cost lives where the data lives. Part payloads are
     * removed once the final file is assembled, so a succeeded export can
-    * never be mistaken for a resumable one. Returns the count. */
-  def writeDistributed(df0: DataFrame, path: String, name: String = "export",
+    * never be mistaken for a resumable one. */
+  def write(df0: DataFrame, path: String, name: String = "export",
       failAtPartition: Int = -1): Long = {
-    import graft.lineage.Lineage
-    val (df, cols, attrs) = prep(df0)
+    val df = FeatureModel.prepare(df0)
+    val idx = df.columns.zipWithIndex.toMap
+    val attrFields = df.schema.fields.filterNot(f => FeatureModel.geomCols(f.name))
+    val cols = attrFields.map(f => (f.name, columnType(f.dataType))).toSeq
+    val attrs = attrFields.map(f => (idx(f.name), columnType(f.dataType))).toSeq
     val encode = rowEncoder(df.columns.toIndexedSeq, attrs)
     val geomOf = FeatureModel.geomReader(df.columns.toIndexedSeq)
     val partsDir = path + ".export"

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import java.nio.ByteBuffer
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import graft.lineage.Lineage
@@ -70,8 +70,8 @@ object Gpkg {
   }
 
   /** One row → SQLite record bytes: NULL fid slot (ipk = rowid), typed
-    * attributes, GPB geometry blob. Serializable — runs map-side in the
-    * distributed writer and on the driver in [[write]], byte-identically. */
+    * attributes, GPB geometry blob. Serializable — runs map-side in
+    * [[write]]. */
   private def rowRecord(attrIdxs: Seq[Int],
       geomOf: Option[Row => FeatureModel.Geom])(r: Row): Array[Byte] = {
     val blob: Any = geomOf match {
@@ -83,50 +83,13 @@ object Gpkg {
 
   /** Write the extract as a single-layer GeoPackage; returns the row count.
     * Extracts without anchor columns (csv/centroid projections) store NULL
-    * geometry — legal in GPKG feature tables. */
-  def write(df0: DataFrame, path: String, layer: String = "export"): Long = {
-    val df = FeatureModel.prepare(df0)
-    val idx = df.columns.zipWithIndex.toMap
-    val attrFields = df.schema.fields
-      .filterNot(f => FeatureModel.geomCols(f.name)).toSeq
-    val attrIdxs = attrFields.map(f => idx(f.name))
-    val geomOf = FeatureModel.geomReader(df.columns.toIndexedSeq)
-    val encode = rowRecord(attrIdxs, geomOf) _
-
-    Option(Paths.get(path).getParent).foreach(Files.createDirectories(_))
-    val db = new Sqlite(path)
-    var n = 0L
-    var minX = Double.MaxValue; var minY = Double.MaxValue
-    var maxX = Double.MinValue; var maxY = Double.MinValue
-
-    val it = df.toLocalIterator()
-    val rows = new Iterator[(Long, Array[Byte])] {
-      def hasNext: Boolean = it.hasNext
-      def next(): (Long, Array[Byte]) = {
-        val r = it.next()
-        n += 1
-        geomOf.foreach(g => g(r).allPts.foreach { case (x, y) =>
-          if (x < minX) minX = x; if (x > maxX) maxX = x
-          if (y < minY) minY = y; if (y > maxY) maxY = y
-        })
-        (n, encode(r))
-      }
-    }
-    db.writeTableEncoded(layer, createLayerSql(attrFields, layer), rows)
-    val env = if (n == 0 || minX == Double.MaxValue) None
-      else Some(Array(minX, minY, maxX, maxY))
-    metadataTables(db, layer, n, env)
-    db.finish(applicationId = 0x47504B47) // "GPKG"
-    n
-  }
-
-  /** Distributed sibling of [[write]]: each task encodes its partition's
-    * SQLite records map-side into committed, resumable byte parts
-    * (length-prefixed framing; per-part envelope in the lineage manifests);
-    * the driver then streams the pre-encoded records into b-tree pages —
-    * O(page) memory, no per-row serialization on the driver. Byte-identical
-    * to [[write]] output; parts clean up after success. */
-  def writeDistributed(df0: DataFrame, path: String, layer: String = "export",
+    * geometry — legal in GPKG feature tables. Each task encodes its
+    * partition's SQLite records map-side into committed, resumable byte
+    * parts (length-prefixed framing; per-part envelope in the lineage
+    * manifests); the driver then streams the pre-encoded records into b-tree
+    * pages — O(page) memory, no per-row serialization on the driver. Parts
+    * clean up after success. */
+  def write(df0: DataFrame, path: String, layer: String = "export",
       failAtPartition: Int = -1): Long = {
     val df = FeatureModel.prepare(df0)
     val idx = df.columns.zipWithIndex.toMap
@@ -141,15 +104,17 @@ object Gpkg {
       coords = geomOf.map(g => (r: Row) => g(r).allPts))
     Lineage.assemble(df.sparkSession, stateDir, "rec", Paths.get(path)) { (tmp, c) =>
       val db = new Sqlite(tmp.toString)
-      val rows = Lineage.frames(c.parts).zipWithIndex
-        .map { case (rec, i) => (i + 1L, rec) }
-      db.writeTableEncoded(layer, createLayerSql(attrFields, layer), rows)
-      metadataTables(db, layer, c.rows, c.envelope)
-      db.finish(applicationId = 0x47504B47)
+      try {
+        val rows = Lineage.frames(c.parts).zipWithIndex
+          .map { case (rec, i) => (i + 1L, rec) }
+        db.writeTableEncoded(layer, createLayerSql(attrFields, layer), rows)
+        metadataTables(db, layer, c.rows, c.envelope)
+        db.finish(applicationId = 0x47504B47) // "GPKG"
+      } finally db.close()
     }
   }
 
-  /** The gpkg_* metadata tables + autoindexes shared by both writers. */
+  /** The gpkg_* metadata tables + autoindexes. */
   private def metadataTables(db: Sqlite, layer: String, n: Long,
       env: Option[Array[Double]]): Unit = {
     // AUTOINCREMENT contract: SQLite keeps the high-water mark per table in

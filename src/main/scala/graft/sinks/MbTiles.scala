@@ -1,8 +1,9 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.lineage.Lineage
 
 /** From-scratch MBTiles sink — the reference's ENABLE_TILES export branch
   * (src/app.py:592-603). An MBTiles archive is a SQLite database (written by
@@ -13,9 +14,10 @@ import org.apache.spark.sql.functions._
   *
   * Rows arrive from the same distributed tile pipeline as the PMTiles sink —
   * tileAssign explode + per-tile feature aggregation is the only shuffle —
-  * and stream to the container in (z, x, y) order. Tile payloads are gzipped
-  * GeoJSON FeatureCollections (PMTiles sink parity); tile_row uses the TMS
-  * flip the MBTiles spec requires. */
+  * and stream to the container in (z, x, y) order. Tile payloads are gzip
+  * MVT ([[Mvt]], `format=pbf`); tile_row uses the TMS flip the MBTiles spec
+  * requires. The container is built at `<path>.tmp` and renamed into place,
+  * so a failed job never clobbers or half-writes `path`. */
 object MbTiles {
 
   /** The reference-parity sink: feature DataFrame → gzip MVT payloads
@@ -25,8 +27,7 @@ object MbTiles {
   def writeMvt(features: DataFrame, path: String, zooms: (Int, Int),
       name: String): Long =
     writePayloads(Mvt.tilePayloads(features, zooms, name), path, name,
-      format = "pbf",
-      extraMeta = Seq("json" -> vectorLayersJson(features, zooms, name)))
+      vectorLayersJson(features, zooms, name))
 
   /** MBTiles 1.3 `json` metadata (required when format=pbf): the vector
     * layer inventory tile readers use for styling. Field types follow the
@@ -50,62 +51,52 @@ object MbTiles {
     s"""{"vector_layers":[{"id":"${esc(name)}","minzoom":${zooms._1},"maxzoom":${zooms._2},"fields":{$fields}}]}"""
   }
 
-  /** Legacy GeoJSON-payload variant (kept for the payload-agnostic container
-    * tests; `format=json` is OUTSIDE the MBTiles 1.3 allowed set — a
-    * stand-in, documented in COVERAGE.md; [[writeMvt]] is the matrix path). */
-  def write(tiled: DataFrame, path: String, name: String = "export"): Long = {
-    // payload assembly + gzip run map-side (PmTiles parity) — the driver
-    // streams ready-made bytes into the container
-    val gzipU = udf((fc: String) => Zip.gzip(
-      ("""{"type":"FeatureCollection","features":[""" + fc + "]}")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    val perTile = tiled
-      .groupBy(col("z"), col("tx"), col("ty"))
-      .agg(concat_ws(",", sort_array(collect_list(col("feature")))).as("fc"))
-      .select(col("z"), col("tx"), col("ty"), gzipU(col("fc")).as("payload"))
-    writePayloads(perTile, path, name, format = "json", extraMeta = Nil)
-  }
-
-  /** Shared container assembly over ready-made (z, tx, ty, payload) rows. */
+  /** Container assembly over ready-made (z, tx, ty, gzip MVT payload) rows;
+    * `vectorLayers` is the `json` metadata row ([[vectorLayersJson]]).
+    * Returns the tile count. */
   def writePayloads(perTile0: DataFrame, path: String, name: String,
-      format: String, extraMeta: Seq[(String, String)]): Long = {
+      vectorLayers: String): Long = {
     val perTile = perTile0.orderBy(col("z"), col("tx"), col("ty"))
-    Option(Paths.get(path).getParent).foreach(Files.createDirectories(_))
-    val db = new Sqlite(path)
-    var minZ = Int.MaxValue; var maxZ = 0
-    var n = 0L
-    val it = perTile.toLocalIterator()
-    val rows = new Iterator[(Long, Seq[Any])] {
-      def hasNext: Boolean = it.hasNext
-      def next(): (Long, Seq[Any]) = {
-        val r = it.next()
-        val z = r.getInt(0); val tx = r.getLong(1); val ty = r.getLong(2)
-        if (z < minZ) minZ = z
-        if (z > maxZ) maxZ = z
-        n += 1
-        val payload = r.getAs[Array[Byte]](3)
-        // TMS row flip (MBTiles spec: row 0 is the southern edge)
-        val tmsRow = (1L << z) - 1L - ty
-        (n, Seq[Any](z.toLong, tx, tmsRow, payload))
-      }
+    Lineage.replaceAtomically(Paths.get(path)) { tmp =>
+      val db = new Sqlite(tmp.toString)
+      try {
+        var minZ = Int.MaxValue; var maxZ = 0
+        var n = 0L
+        val it = perTile.toLocalIterator()
+        val rows = new Iterator[(Long, Seq[Any])] {
+          def hasNext: Boolean = it.hasNext
+          def next(): (Long, Seq[Any]) = {
+            val r = it.next()
+            val z = r.getInt(0); val tx = r.getLong(1); val ty = r.getLong(2)
+            if (z < minZ) minZ = z
+            if (z > maxZ) maxZ = z
+            n += 1
+            val payload = r.getAs[Array[Byte]](3)
+            // TMS row flip (MBTiles spec: row 0 is the southern edge)
+            val tmsRow = (1L << z) - 1L - ty
+            (n, Seq[Any](z.toLong, tx, tmsRow, payload))
+          }
+        }
+        db.writeTable("tiles",
+          "CREATE TABLE tiles (zoom_level INTEGER, tile_column INTEGER, tile_row INTEGER, tile_data BLOB)",
+          rows)
+        val meta = Seq(
+          "name" -> name,
+          "format" -> "pbf",
+          "minzoom" -> (if (n == 0) "0" else minZ.toString),
+          "maxzoom" -> (if (n == 0) "0" else maxZ.toString),
+          "bounds" -> "-180.0,-85.0,180.0,85.0",
+          "type" -> "overlay",
+          "version" -> "1",
+          "json" -> vectorLayers)
+        db.writeTable("metadata",
+          "CREATE TABLE metadata (name TEXT, value TEXT)",
+          meta.zipWithIndex.iterator.map { case ((k, v), i) =>
+            ((i + 1).toLong, Seq[Any](k, v))
+          })
+        db.finish()
+        n
+      } finally db.close()
     }
-    db.writeTable("tiles",
-      "CREATE TABLE tiles (zoom_level INTEGER, tile_column INTEGER, tile_row INTEGER, tile_data BLOB)",
-      rows)
-    val meta = Seq(
-      "name" -> name,
-      "format" -> format,
-      "minzoom" -> (if (n == 0) "0" else minZ.toString),
-      "maxzoom" -> (if (n == 0) "0" else maxZ.toString),
-      "bounds" -> "-180.0,-85.0,180.0,85.0",
-      "type" -> "overlay",
-      "version" -> "1") ++ extraMeta
-    db.writeTable("metadata",
-      "CREATE TABLE metadata (name TEXT, value TEXT)",
-      meta.zipWithIndex.iterator.map { case ((k, v), i) =>
-        ((i + 1).toLong, Seq[Any](k, v))
-      })
-    db.finish()
-    n
   }
 }

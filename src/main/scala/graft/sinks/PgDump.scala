@@ -1,9 +1,10 @@
 package graft.sinks
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import graft.lineage.Lineage
 
 /** From-scratch PGDump (.sql) sink — the reference's `-f PGDump` export
   * (src/app.py:573-575: `PG_USE_COPY YES`, `-lco SRID=4326`; e2e
@@ -18,9 +19,10 @@ import org.apache.spark.sql.types._
   * 3-vertex polyline, the closed quad ring); extracts without vertex columns
   * fall back to Point like the KML/shapefile sinks.
   *
-  * Driver-side stream over `toLocalIterator` — a .sql script is a single
+  * COPY lines encode map-side into committed, resumable lineage parts; the
+  * driver writes header + parts + terminator — a .sql script is a single
   * sequential file, the same single-writer boundary as the reference's
-  * ogr2ogr subprocess; the distributed work happened in the plan.
+  * ogr2ogr subprocess.
   */
 object PgDump {
 
@@ -70,13 +72,15 @@ object PgDump {
 
   // ---- writer ----------------------------------------------------------------
 
-  /** Write the extract as a psql-replayable PGDump script. Returns the row
-    * count. Geometry columns (lon/lat/kind/rings/roles/cell) collapse into one
-    * `geom geometry(Geometry,4326)` column; everything else keeps its type. */
-  private final case class Prep(df: DataFrame, header: String,
-      encode: Row => Array[Byte])
-
-  private def prep(df0: DataFrame, table: String): Prep = {
+  /** Write the extract as a psql-replayable PGDump script; returns the row
+    * count. Geometry columns (lon/lat/kind/rings/roles/cell) collapse into
+    * one `geom geometry(Geometry,4326)` column; everything else keeps its
+    * type. Distributed + RESUMABLE: COPY lines are encoded map-side into
+    * committed binary lineage parts ([[graft.lineage.Lineage]] write-ahead +
+    * atomic-rename protocol; a killed export re-runs only uncommitted
+    * partitions), the driver writes header + concatenated parts + terminator. */
+  def write(df0: DataFrame, path: String, table: String = "export",
+      failAtPartition: Int = -1): Long = {
     val df = FeatureModel.prepare(df0)
     val idx = df.columns.zipWithIndex.toMap
     // attribute columns = everything but the geometry model columns; the
@@ -95,8 +99,8 @@ object PgDump {
       s"""CREATE TABLE "$table" (${colDefs.mkString(", ")});\n""" +
       s"""COPY "$table" ($copyCols) FROM stdin;\n"""
 
-    // per-row COPY line as a serializable closure over column positions —
-    // usable driver-side and map-side alike
+    // per-row COPY line as a serializable closure over column positions,
+    // run map-side
     val encode: Row => Array[Byte] = { r =>
       def geomHex: String = ewkbHex(geomOf.get(r))
       val attrVals = attrNames.map { c =>
@@ -105,40 +109,11 @@ object PgDump {
       val vals = attrVals ++ (if (hasGeom) Seq(geomHex) else Nil)
       (vals.mkString("\t") + "\n").getBytes(StandardCharsets.UTF_8)
     }
-    Prep(df, header, encode)
-  }
-
-  def write(df0: DataFrame, path: String, table: String = "export"): Long = {
-    val p = prep(df0, table)
-    Option(Paths.get(path).getParent).foreach(Files.createDirectories(_))
-    val w = Files.newBufferedWriter(Paths.get(path), StandardCharsets.UTF_8)
-    var n = 0L
-    try {
-      w.write(p.header)
-      val it = p.df.toLocalIterator()
-      while (it.hasNext) {
-        w.write(new String(p.encode(it.next()), StandardCharsets.UTF_8))
-        n += 1
-      }
-      w.write("\\.\n")
-    } finally w.close()
-    n
-  }
-
-  /** Distributed + RESUMABLE variant: COPY lines are encoded map-side into
-    * committed binary lineage parts ([[graft.lineage.Lineage]] write-ahead +
-    * atomic-rename protocol; a killed export re-runs only uncommitted
-    * partitions), the driver writes header + concatenated parts + terminator.
-    * Returns the row count. */
-  def writeDistributed(df0: DataFrame, path: String, table: String = "export",
-      failAtPartition: Int = -1): Long = {
-    import graft.lineage.Lineage
-    val p = prep(df0, table)
     val partsDir = path + ".export"
-    Lineage.exportResumableBytes(p.df, partsDir, p.encode,
+    Lineage.exportResumableBytes(df, partsDir, encode,
       ext = "copypart", failAtPartition = failAtPartition)
-    Lineage.assembleConcat(p.df.sparkSession, partsDir, "copypart", Paths.get(path))(
-      _ => p.header.getBytes(StandardCharsets.UTF_8),
+    Lineage.assembleConcat(df.sparkSession, partsDir, "copypart", Paths.get(path))(
+      _ => header.getBytes(StandardCharsets.UTF_8),
       "\\.\n".getBytes(StandardCharsets.UTF_8))
   }
 }

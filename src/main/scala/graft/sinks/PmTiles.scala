@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.lineage.Lineage
 
 /** Minimal from-scratch PMTiles v3 archive writer — the reference's actual
   * tile sink output (`tippecanoe ... -o out.pmtiles`, src/app.py:690-698).
@@ -17,15 +18,14 @@ import org.apache.spark.sql.functions._
   * bounded window — tile_contents < addressed_tiles, as tippecanoe writes
   * planet archives).
   *
-  * Tile payloads on the default export-matrix path are gzip MVT
-  * (tile_type 0x01 via [[writeMvt]] — tippecanoe output parity). The
-  * payload-agnostic [[write]] entry keeps gzip GeoJSON FeatureCollections
-  * (tile_type 0x00 = unspecified, allowed by the spec) for the
-  * archive-layout tests.
+  * Tile payloads are gzip MVT (tile_type 0x01 via [[writeMvt]] —
+  * tippecanoe output parity).
   *
   * The heavy work (tile assignment, per-tile feature grouping) is the
   * distributed plan; this writer streams the per-tile groups on the driver —
-  * the same single-archive boundary as tippecanoe itself.
+  * the same single-archive boundary as tippecanoe itself. The archive is
+  * built at `<path>.tmp` and renamed into place, so a failed job never
+  * clobbers or half-writes `path`.
   */
 object PmTiles {
 
@@ -84,11 +84,11 @@ object PmTiles {
     out.toByteArray
   }
 
-  /** 127-byte v3 header. `tileType`: 1 = MVT, 0 = unspecified payloads. */
+  /** 127-byte v3 header. */
   private def header(rootOff: Long, rootLen: Long, metaOff: Long, metaLen: Long,
       leafOff: Long, leafLen: Long,
       dataOff: Long, dataLen: Long, nAddressed: Long, nEntries: Long,
-      nContents: Long, minZ: Int, maxZ: Int, tileType: Byte): Array[Byte] = {
+      nContents: Long, minZ: Int, maxZ: Int): Array[Byte] = {
     val b = ByteBuffer.allocate(127).order(ByteOrder.LITTLE_ENDIAN)
     b.put("PMTiles".getBytes(StandardCharsets.US_ASCII)).put(3.toByte)
     b.putLong(rootOff).putLong(rootLen)
@@ -100,7 +100,7 @@ object PmTiles {
     b.putLong(nContents) // tile contents = distinct payload blobs
     b.put(1.toByte) // clustered: tile ids written ascending
     b.put(2.toByte).put(2.toByte) // internal compression gzip, tile compression gzip
-    b.put(tileType)
+    b.put(1.toByte) // tile type: MVT
     b.put(minZ.toByte).put(maxZ.toByte)
     // bounds E7: world
     b.putInt(-1800000000).putInt(-850000000).putInt(1800000000).putInt(850000000)
@@ -114,25 +114,7 @@ object PmTiles {
     * (src/app.py:690-698). Returns (tiles written, archive bytes). */
   def writeMvt(features: DataFrame, path: String, zooms: (Int, Int),
       layerName: String): (Long, Long) =
-    writePayloads(Mvt.tilePayloads(features, zooms, layerName), path,
-      tileType = 1)
-
-  /** Legacy GeoJSON-payload variant (tile_type 0; kept for the payload-
-    * agnostic archive tests): tiled (z, tx, ty, feature:string) rows, one
-    * gzip FeatureCollection per tile. */
-  def write(tiled: DataFrame, path: String): (Long, Long) = {
-    // per-tile payload ASSEMBLY AND GZIP run in the executors (map step after
-    // the per-tile agg); the driver only streams ready-made bytes — tile
-    // compression is the dominant cost and must live where the data lives
-    val gzipU = udf((fc: String) => Zip.gzip(
-      ("""{"type":"FeatureCollection","features":[""" + fc + "]}")
-        .getBytes(StandardCharsets.UTF_8)))
-    val perTile = tiled
-      .groupBy(col("z"), col("tx"), col("ty"))
-      .agg(concat_ws(",", sort_array(collect_list(col("feature")))).as("fc"))
-      .select(col("z"), col("tx"), col("ty"), gzipU(col("fc")).as("payload"))
-    writePayloads(perTile, path, tileType = 0)
-  }
+    writePayloads(Mvt.tilePayloads(features, zooms, layerName), path)
 
   /** Entries per leaf directory. The v3 spec caps the root directory (it
     * must be fetchable in one ~16 KB read); archives beyond `LeafSize`
@@ -142,11 +124,12 @@ object PmTiles {
     * tiles, not 16 B × every tile (a planet pyramid has ~10^8 tiles). */
   val LeafSize: Int = 16384
 
-  /** Shared archive assembly over ready-made (z, tx, ty, payload) rows:
+  /** Archive assembly over ready-made (z, tx, ty, gzip MVT payload) rows:
     * group-per-tile already done, payloads already compressed — the driver
     * streams bytes in Hilbert order; directory entries chunk into leaf
-    * directories once the archive outgrows a single root. */
-  def writePayloads(perTile0: DataFrame, path: String, tileType: Byte,
+    * directories once the archive outgrows a single root. Returns (tiles
+    * written, archive bytes). */
+  def writePayloads(perTile0: DataFrame, path: String,
       leafSize: Int = LeafSize): (Long, Long) = {
     val perTile = perTile0
       .withColumn("tile_id", udf(tileId _).apply(col("z"), col("tx"), col("ty")))
@@ -157,7 +140,8 @@ object PmTiles {
     // tile payloads stream to a sidecar file; leaf directories to a second
     val dataTmp = Files.createTempFile(out.getParent, "pmtiles-data", ".tmp")
     val leafTmp = Files.createTempFile(out.getParent, "pmtiles-leaf", ".tmp")
-    try writePayloadsTo(perTile, out, dataTmp, leafTmp, tileType, leafSize)
+    try Lineage.replaceAtomically(out)(
+      writePayloadsTo(perTile, _, dataTmp, leafTmp, leafSize))
     finally {
       // a failed job (stage kill, OOM in toLocalIterator) must not orphan
       // the sidecars — the data one can be archive-sized
@@ -176,7 +160,7 @@ object PmTiles {
 
   private def writePayloadsTo(perTile: DataFrame, out: java.nio.file.Path,
       dataTmp: java.nio.file.Path, leafTmp: java.nio.file.Path,
-      tileType: Byte, leafSize: Int): (Long, Long) = {
+      leafSize: Int): (Long, Long) = {
     val dataOut = new java.io.BufferedOutputStream(Files.newOutputStream(dataTmp))
     val leafOut = new java.io.BufferedOutputStream(Files.newOutputStream(leafTmp))
     val it = perTile.toLocalIterator()
@@ -255,8 +239,7 @@ object PmTiles {
     val hdr = header(rootOff, root.length, metaOff, meta.length,
       if (leafMode) leafOff else 0L, if (leafMode) leafLen else 0L,
       dataOff, dataLen, nAddressed, nEntries, nContents,
-      if (nAddressed == 0) 0 else minZ, if (nAddressed == 0) 0 else maxZ,
-      tileType)
+      if (nAddressed == 0) 0 else minZ, if (nAddressed == 0) 0 else maxZ)
     val os = Files.newOutputStream(out)
     try {
       os.write(hdr); os.write(root); os.write(meta)

@@ -19,11 +19,11 @@ import graft.lineage.Lineage
   * multi-ring/multi-part polygon records (outer rings rewound clockwise,
   * holes counter-clockwise, as the spec requires).
   *
-  * Writing is a driver-side stream over `toLocalIterator` — a shapefile is a
-  * single file with a global header (bbox + total length patched at the end
-  * via RandomAccessFile), the same single-writer boundary as the reference's
-  * ogr2ogr subprocess. The distributed part of the export (filter, project,
-  * join) has already happened in the plan that produced `df`.
+  * Shape and dBASE records encode map-side into committed, resumable lineage
+  * parts; the driver streams them into the triple — a shapefile is a single
+  * file with a global header (bbox + total length patched at the end via
+  * RandomAccessFile), the same single-writer boundary as the reference's
+  * ogr2ogr subprocess.
   */
 object Shapefile {
 
@@ -90,7 +90,7 @@ object Shapefile {
   }
 
   /** One fixed-width dBASE record (leading space = not-deleted marker) —
-    * pure, so the distributed writer encodes it map-side byte-identically. */
+    * pure, so [[write]] encodes it map-side. */
   private[sinks] def dbfRecord(vals: Seq[String], nFields: Int, width: Int): Array[Byte] = {
     val rec = new Array[Byte](1 + nFields * width)
     java.util.Arrays.fill(rec, ' '.toByte)
@@ -101,9 +101,9 @@ object Shapefile {
     rec
   }
 
-  /** dBASE III attribute table writer, streamed record by record (every
-    * column as a fixed-width character field — the reference's shp exports
-    * stringify jsonb attributes too). */
+  /** dBASE III attribute table writer over pre-encoded [[dbfRecord]]s
+    * (every column as a fixed-width character field — the reference's shp
+    * exports stringify jsonb attributes too). */
   private final class DbfWriter(path: String, fieldNames: Seq[String], width: Int = 64) {
     private val names = fieldNames.map(_.replaceAll("[^A-Za-z0-9_]", "_").take(10))
     private val out = new Patchable(path)
@@ -126,8 +126,6 @@ object Shapefile {
       }
       out.writeBytes(Array(0x0D.toByte))
     }
-    def write(vals: Seq[String]): Unit =
-      writeRecord(dbfRecord(vals, names.size, width))
     def writeRecord(rec: Array[Byte]): Unit = {
       out.writeBytes(rec)
       n += 1
@@ -155,51 +153,11 @@ object Shapefile {
     case _ => 5
   }
 
-  /** Write one shape type's triple; rows are (geometryParts, attributes).
-    * Returns the record count. */
-  private def writeTriple(base: String, kind: String,
-      fieldNames: Seq[String],
-      rows: Iterator[(Seq[IndexedSeq[(Double, Double)]], Seq[String])]): Int = {
-    val st = kindShapeType(kind)
-    val shp = new Patchable(s"$base.shp")
-    val shx = new Patchable(s"$base.shx")
-    val dbf = new DbfWriter(s"$base.dbf", fieldNames)
-    shp.writeBytes(header(st))
-    shx.writeBytes(header(st))
-    val ext = Extent()
-    var recNo = 0
-    // one streaming pass feeds all three files — nothing is buffered beyond
-    // the current record
-    rows.foreach { case (parts, attrs) =>
-      recNo += 1
-      val shape = if (st == 1) pointShape(parts.head.head._1, parts.head.head._2)
-        else polyShape(st, parts)
-      parts.foreach(_.foreach { case (x, y) => ext.add(x, y) })
-      shx.writeBytes(be((shp.written / 2).toInt) ++ be(shape.length / 2))
-      shp.writeBytes(be(recNo) ++ be(shape.length / 2) ++ shape)
-      dbf.write(attrs)
-    }
-    shp.flush(); shx.flush()
-    shp.patch(24, be((shp.written / 2).toInt))
-    shx.patch(24, be((shx.written / 2).toInt))
-    if (recNo > 0) {
-      shp.patch(36, ext.bytes)
-      shx.patch(36, ext.bytes)
-    }
-    shp.close(); shx.close()
-    dbf.close()
-    Files.write(Paths.get(s"$base.prj"),
-      Wgs84Wkt.getBytes(StandardCharsets.US_ASCII))
-    recNo
-  }
-
-  /** Driver half of the distributed writer: stream pre-encoded
-    * (shape, dbfRecord) frames into the triple — record numbering, shx
-    * framing and header patches only; the envelope comes from the parts'
-    * lineage manifests. The .shp goes to `shpPath` (the assembly's temp
-    * file, renamed last, so a triple whose .shp exists is whole).
-    * Byte-identical to [[writeTriple]] given the same records in the same
-    * order. */
+  /** Driver half of [[write]]: stream pre-encoded (shape, dbfRecord)
+    * frames into the triple — record numbering, shx framing and header
+    * patches only; the envelope comes from the parts' lineage manifests. The
+    * .shp goes to `shpPath` (the assembly's temp file, renamed last, so a
+    * triple whose .shp exists is whole). */
   private def assembleTriple(shpPath: String, base: String, st: Int,
       fieldNames: Seq[String], frames: Iterator[(Array[Byte], Array[Byte])],
       env: Option[Array[Double]]): Unit = {
@@ -230,40 +188,11 @@ object Shapefile {
     ()
   }
 
-  /** Export a feature DataFrame (kind, lon, lat, rings, roles, + attribute
-    * columns) as per-kind shapefile triples under `dir`. Attribute columns =
-    * everything except the geometry columns, stringified. `prefix` gives the
-    * reference's GIS-convention names (`{name}_point.shp` etc.,
-    * src/app.py:483-547). Returns kind → record count. */
-  def write(df0: DataFrame, dir: String, prefix: String = ""): Map[String, Int] = {
-    Files.createDirectories(Paths.get(dir))
-    val df = FeatureModel.withKind(df0)
-    val attrCols = df.columns.filterNot(FeatureModel.geomCols).toSeq
-    val idx = df.columns.zipWithIndex.toMap
-    // centroid/csv-shaped extracts drop the vertex columns — the shared
-    // reader falls back to point geometry instead of an opaque lookup error
-    val haveVerts = df.columns.contains("rings")
-    val geometry = geometryClosure(df.columns.toIndexedSeq)
-    Seq("point", "line", "polygon").map { kind =>
-      val it = df.filter(df.col("kind") === kind).toLocalIterator()
-      val rows = new Iterator[(Seq[IndexedSeq[(Double, Double)]], Seq[String])] {
-        def hasNext: Boolean = it.hasNext
-        def next(): (Seq[IndexedSeq[(Double, Double)]], Seq[String]) = {
-          val r = it.next()
-          (geometry(r),
-            attrCols.map(c => Option(r.get(idx(c))).map(_.toString).orNull))
-        }
-      }
-      kind -> writeTriple(s"$dir/$prefix$kind", if (haveVerts) kind else "point",
-        attrCols, rows)
-    }.toMap
-  }
-
-  /** The shapefile-spec geometry parts per row; serializable, shared by the
-    * driver and distributed writers. Polygons: every ring of every part in
-    * one record, REVERSED — the shared model winds shells CCW / holes CW,
-    * the shapefile spec wants outer CW / holes CCW, and reversing a closed
-    * ring keeps it closed. Lines: one part per polyline. */
+  /** The shapefile-spec geometry parts per row; serializable, run map-side.
+    * Polygons: every ring of every part in one record, REVERSED — the shared
+    * model winds shells CCW / holes CW, the shapefile spec wants outer CW /
+    * holes CCW, and reversing a closed ring keeps it closed. Lines: one part
+    * per polyline. */
   private def geometryClosure(columns: IndexedSeq[String]): Row => Seq[IndexedSeq[(Double, Double)]] = {
     val g = FeatureModel.geomReader(columns).getOrElse(throw new IllegalArgumentException(
       s"shapefile export needs lon/lat anchor columns; got ${columns.mkString(",")}"))
@@ -276,13 +205,17 @@ object Shapefile {
     }
   }
 
-  /** Distributed sibling of [[write]]: each task encodes its partition's
-    * shape records and fixed-width dBASE records map-side into committed,
-    * resumable byte parts (one [[Lineage.frame]] per shape ++ dbf record;
-    * per-part envelope in the lineage manifests); the driver streams the
-    * pre-encoded frames into the .shp/.shx/.dbf triple — record numbering
-    * and header patches only. Byte-identical to [[write]]; parts clean up after success. */
-  def writeDistributed(df0: DataFrame, dir: String, prefix: String = "",
+  /** Export a feature DataFrame (kind, lon, lat, rings, roles, + attribute
+    * columns) as per-kind shapefile triples under `dir`. Attribute columns =
+    * everything except the geometry columns, stringified. `prefix` gives the
+    * reference's GIS-convention names (`{name}_point.shp` etc.,
+    * src/app.py:483-547). Each task encodes its partition's shape records
+    * and fixed-width dBASE records map-side into committed, resumable byte
+    * parts (one [[Lineage.frame]] per shape ++ dbf record; per-part envelope
+    * in the lineage manifests); the driver streams the pre-encoded frames
+    * into the .shp/.shx/.dbf triple — record numbering and header patches
+    * only. Parts clean up after success. Returns kind → record count. */
+  def write(df0: DataFrame, dir: String, prefix: String = "",
       failAtPartition: Int = -1): Map[String, Int] = {
     Files.createDirectories(Paths.get(dir))
     val df = FeatureModel.withKind(df0)

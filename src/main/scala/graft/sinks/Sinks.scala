@@ -54,14 +54,6 @@ object Sinks {
     out
   }
 
-  /** S5 — CSV with the reference's csv projection (lon/lat/geom_type columns
-    * instead of geometry, builder.py:152-155). Caller passes the csv-shaped
-    * extract (PlanBuilder.build(..., csv = true)); map columns are
-    * json-encoded since CSV has no nested types. */
-  def csv(extract: DataFrame, outDir: String): Unit =
-    FeatureModel.jsonifyMaps(extract).write.mode(SaveMode.Overwrite)
-      .option("header", "true").csv(outDir)
-
   /** Minimal RFC-4180 field quoting for the driver-written header (data
     * rows are quoted by `to_csv` in the plan). */
   private def csvQuote(s: String): String =
@@ -69,12 +61,16 @@ object Sinks {
       "\"" + s.replace("\"", "\"\"") + "\""
     else s
 
-  /** S5 — ONE CSV file (the reference's csv export is a single file):
-    * rows serialize in the PLAN via `to_csv` (codegen'd quoting/escaping)
-    * into committed BYTE parts — raw byte concat on reassembly, so quoted
-    * values containing newlines survive exactly (a line-oriented protocol
-    * would mangle them). Driver writes header + parts. Returns row count. */
-  def csvSingle(extract: DataFrame, outDir: String): Long = {
+  /** S5 — CSV as ONE file `export.csv` (the reference's csv export is a
+    * single file). Pass `PlanBuilder.build(..., csv = true)` for the
+    * reference's csv projection (lon/lat/geom_type columns instead of
+    * geometry, builder.py:152-155); map columns are json-encoded since CSV
+    * has no nested types. Rows serialize in the PLAN via `to_csv` (codegen'd
+    * quoting/escaping) into committed BYTE parts — raw byte concat on
+    * reassembly, so quoted values containing newlines survive exactly (a
+    * line-oriented protocol would mangle them). Driver writes header +
+    * parts. Returns row count. */
+  def csv(extract: DataFrame, outDir: String): Long = {
     val flat = FeatureModel.jsonifyMaps(extract)
     val lines = flat.select(
       to_csv(struct(flat.columns.map(col).toIndexedSeq: _*)).as("line"))
@@ -99,40 +95,9 @@ object Sinks {
     extract.write.mode(SaveMode.Overwrite)
       .option("compression", "zstd").parquet(outDir)
 
-  /** S5 — KML document (the reference's ogr2ogr -f KML, app.py:565-602):
-    * one Placemark per feature with real Point/LineString/Polygon geometry.
-    * Driver-side stream (single-XML-document boundary, like the shapefile
-    * and FeatureCollection sinks). */
-  def kml(extract: DataFrame, path: String): Long = {
-    val prepared = FeatureModel.withKind(extract)
-    val idx = prepared.columns.zipWithIndex.toMap
-    val geomOf = FeatureModel.geomReader(prepared.columns.toIndexedSeq)
-    val w = Files.newBufferedWriter(Paths.get(path), StandardCharsets.UTF_8)
-    var n = 0L
-    try {
-      w.write("""<?xml version="1.0" encoding="UTF-8"?>""")
-      w.write("""<kml xmlns="http://www.opengis.net/kml/2.2"><Document>""")
-      val it = prepared.toLocalIterator()
-      while (it.hasNext) {
-        val r = it.next()
-        // honest name: the id column when present, empty otherwise (never a
-        // silent substitute column)
-        val name = idx.get("image_id")
-          .flatMap(i => Option(r.get(i))).map(_.toString).getOrElse("")
-        val geom = geomOf.map(g => kmlGeom(g(r))).getOrElse("")
-        val esc = name.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-        w.write(s"<Placemark><name>$esc</name>$geom</Placemark>")
-        n += 1
-      }
-      w.write("</Document></kml>")
-    } finally w.close()
-    n
-  }
-
   /** KML geometry per [[FeatureModel.Geom]] — Point / LineString / Polygon
     * with innerBoundaryIs holes / MultiGeometry for multi-part shapes. Pure
-    * and serializable (shared by the driver loop and the executor-side
-    * placemark UDF). */
+    * and serializable (the body of the executor-side placemark UDF). */
   def kmlGeom(g: FeatureModel.Geom): String = {
     def coords(pts: Seq[(Double, Double)]): String =
       pts.map { case (x, y) => s"$x,$y" }.mkString(" ")
@@ -177,8 +142,8 @@ object Sinks {
     val geom = kindCol match {
       case Some(k) if have("rings") =>
         // variable-arity geometry serializes through the executor-side
-        // kernel UDF (same serializer as the driver loop); the XML envelope
-        // around it stays pure-Column
+        // kernel UDF ([[kmlGeom]]); the XML envelope around it stays
+        // pure-Column
         kmlGeomUdf(k, col("lon"), col("lat"), col("rings"),
           if (have("roles")) col("roles") else array().cast("array<int>"))
       case _ => concat(lit("<Point><coordinates>"),
@@ -189,18 +154,20 @@ object Sinks {
   }
 
   /** Executor-side KML geometry UDF over the rings model — routes through
-    * [[kmlGeom]] and [[FeatureModel.groupParts]] so the distributed path is
-    * byte-identical to the driver loop. */
+    * [[kmlGeom]] and [[FeatureModel.groupParts]], the feature model every
+    * other sink reads. */
   private val kmlGeomUdf = udf((kind: String, lon: Double, lat: Double,
       rings: scala.collection.Seq[scala.collection.Seq[Double]],
       roles: scala.collection.Seq[Int]) =>
     kmlGeom(FeatureModel.fromRings(kind, lon, lat, rings, roles)))
 
-  /** Distributed + resumable KML: placemarks serialize in the PLAN
-    * (executor-side, [[kmlPlacemarkCol]]) into committed lineage parts; the
-    * driver wraps header + parts + footer — the featureCollection boundary.
-    * Returns the placemark count. */
-  def kmlDistributed(extract: DataFrame, outDir: String): Long = {
+  /** S5 — KML document `export.kml` (the reference's ogr2ogr -f KML,
+    * app.py:565-602): one Placemark per feature with real Point /
+    * LineString / Polygon geometry. Placemarks serialize in the PLAN
+    * (executor-side, [[kmlPlacemarkCol]]) into committed, resumable lineage
+    * parts; the driver wraps header + parts + footer — the
+    * featureCollection boundary. Returns the placemark count. */
+  def kml(extract: DataFrame, outDir: String): Long = {
     val lines = extract.select(kmlPlacemarkCol(extract).as("line"))
     // BYTE parts + raw concat: placemarks need no separators, and any
     // newline inside a <name> survives byte-exactly (a line protocol would

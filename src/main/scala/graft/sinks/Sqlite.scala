@@ -397,4 +397,8 @@ final class Sqlite(path: String, pageSize: Int = 4096) {
     raf.setLength((nextPage - 1).toLong * pageSize)
     raf.close()
   }
+
+  /** Release the file without finishing it (a write that failed part-way);
+    * a no-op after [[finish]]. */
+  def close(): Unit = raf.close()
 }

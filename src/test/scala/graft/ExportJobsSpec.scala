@@ -40,10 +40,10 @@ class ExportJobsSpec extends SparkSpec {
       .toDF("image_id", "kind", "lon", "lat")
     val dir = Files.createTempDirectory("jobs")
     val jobs = Map(
-      "csv" -> jobsOf(assert(Sinks.csvSingle(df, s"$dir/csv") == 3)),
-      "kml" -> jobsOf(assert(Sinks.kmlDistributed(df, s"$dir/kml") == 3)),
-      "fgb" -> jobsOf(assert(FlatGeobuf.writeDistributed(df, s"$dir/e.fgb") == 3)),
-      "sql" -> jobsOf(assert(PgDump.writeDistributed(df, s"$dir/e.sql") == 3)))
+      "csv" -> jobsOf(assert(Sinks.csv(df, s"$dir/csv") == 3)),
+      "kml" -> jobsOf(assert(Sinks.kml(df, s"$dir/kml") == 3)),
+      "fgb" -> jobsOf(assert(FlatGeobuf.write(df, s"$dir/e.fgb") == 3)),
+      "sql" -> jobsOf(assert(PgDump.write(df, s"$dir/e.sql") == 3)))
     assert(jobs == Map("csv" -> 2, "kml" -> 2, "fgb" -> 2, "sql" -> 2),
       "the encode pass and the lineage write only")
   }

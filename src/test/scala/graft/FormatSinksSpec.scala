@@ -95,27 +95,27 @@ class FormatSinksSpec extends SparkSpec {
   test("distributed fgb: committed parts survive a kill, resume completes, file parses") {
     val dir = Files.createTempDirectory("fgbd")
     val path = dir.resolve("dist.fgb").toString
-    val repart = feats.repartition(4)
+    val repart = fixedParts(feats, 4)
     // inject a task fault: the job dies with some partitions already committed
     intercept[org.apache.spark.SparkException] {
-      FlatGeobuf.writeDistributed(repart, path, failAtPartition = 2)
+      FlatGeobuf.write(repart, path, failAtPartition = 2)
     }
     assert(!Files.exists(Paths.get(path)), "no final file on failure")
     val committed = graft.lineage.Lineage.committedParts(path + ".export")
     assert(committed.nonEmpty && committed.size < 4,
       s"expected partial commit, got $committed")
     // resume re-runs ONLY the uncommitted partitions and assembles the file
-    val n = FlatGeobuf.writeDistributed(repart, path)
+    val n = FlatGeobuf.write(repart, path)
     val rows = feats.collect()
     assert(n == rows.length)
+    // count, envelope and every feature against the source rows
     checkFgb(path, rows)
-    // byte-identical to the driver-streamed writer on the same partitioning
-    // (toLocalIterator walks partitions in order, parts concatenate in order)
+    // byte-identical to a clean run on the same partitioning
     val refPath = dir.resolve("ref.fgb").toString
-    FlatGeobuf.write(repart, refPath)
+    assert(FlatGeobuf.write(repart, refPath) == n)
     assert(java.util.Arrays.equals(
       Files.readAllBytes(Paths.get(path)), Files.readAllBytes(Paths.get(refPath))),
-      "distributed and driver-streamed fgb must serialize identically")
+      "a resumed fgb must serialize identically to a clean run")
   }
 
   /** Independent re-derivation of the (closed-ring) geometry parts from the
@@ -313,16 +313,16 @@ class FormatSinksSpec extends SparkSpec {
     val path = dir.resolve("dist.sql").toString
     val repart = feats.repartition(4)
     intercept[org.apache.spark.SparkException] {
-      PgDump.writeDistributed(repart, path, failAtPartition = 1)
+      PgDump.write(repart, path, failAtPartition = 1)
     }
     assert(!Files.exists(Paths.get(path)))
-    val n = PgDump.writeDistributed(repart, path)
+    val n = PgDump.write(repart, path)
     assert(n == feats.count())
     val lines = Files.readAllLines(Paths.get(path))
     assert(lines.get(lines.size - 1) == "\\.")
     val dataLines = lines.subList(3, lines.size - 1)
     assert(dataLines.size.toLong == n)
-    // same COPY-line multiset as the driver-streamed writer
+    // same COPY-line multiset as a clean run over the unrepartitioned rows
     val refPath = dir.resolve("ref.sql").toString
     PgDump.write(feats, refPath)
     val refLines = Files.readAllLines(Paths.get(refPath))
@@ -337,12 +337,12 @@ class FormatSinksSpec extends SparkSpec {
     val path = dir.resolve("re.fgb").toString
     val dfA = Seq(("a1", 1.0, 2.0)).toDF("image_id", "lon", "lat")
     val dfB = Seq(("b1", 3.0, 4.0), ("b2", 5.0, 6.0)).toDF("image_id", "lon", "lat")
-    assert(FlatGeobuf.writeDistributed(dfA, path) == 1)
+    assert(FlatGeobuf.write(dfA, path) == 1)
     assert(!Files.exists(Paths.get(path + ".export/parts")),
       "part payloads must be cleaned after success")
     // the same path written again with DIFFERENT data must contain dfB, not
     // a silently-reused dfA (the stale-commit trap)
-    assert(FlatGeobuf.writeDistributed(dfB, path) == 2)
+    assert(FlatGeobuf.write(dfB, path) == 2)
     val bb = ByteBuffer.wrap(Files.readAllBytes(Paths.get(path)))
       .order(ByteOrder.LITTLE_ENDIAN)
     val (hdr, _) = sizePrefixed(bb, 8)

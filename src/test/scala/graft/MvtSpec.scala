@@ -339,12 +339,19 @@ class MvtSpec extends SparkSpec {
   test("PMTiles MVT archive: tile_type 1, directory-addressed payloads decode") {
     val dir = Files.createTempDirectory("pmt_mvt").toString
     val path = s"$dir/export.pmtiles"
-    val (nTiles, _) = PmTiles.writeMvt(feats, path, (2, 3), "export")
-    assert(nTiles > 0)
+    val (nTiles, totalBytes) = PmTiles.writeMvt(feats, path, (2, 3), "export")
+    val tileAssigned = graft.operators.SpatialJoin
+      .tileAssign(feats.select(col("lon"), col("lat"), col("image_id")), 2, 3)
+    assert(nTiles == tileAssigned.select("z", "tx", "ty").distinct().count())
     val bytes = Files.readAllBytes(Paths.get(path))
+    assert(bytes.length.toLong == totalBytes)
     val bb = java.nio.ByteBuffer.wrap(bytes)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    assert(new String(bytes, 0, 7, "US-ASCII") == "PMTiles" && bytes(7) == 3,
+      "v3 magic")
+    assert(bytes(96) == 1, "clustered flag")
     assert(bytes(99) == 1, "header tile_type must be 1 (MVT)")
+    assert(bytes(100) == 2 && bytes(101) == 3, "min/max zoom")
     val rootLen = bb.getLong(16).toInt
     val dataOff = bb.getLong(56)
     // decode the varint-delta root directory (independent walk)
@@ -354,15 +361,26 @@ class MvtSpec extends SparkSpec {
     assert(n.toLong == nTiles)
     val ids = (0 until n).map(_ => root.varint()).scanLeft(0L)(_ + _).tail
     assert(ids == ids.sorted, "clustered archive: ascending tile ids")
-    (0 until n).foreach(_ => root.varint()) // run lengths
+    val runs = (0 until n).map(_ => root.varint())
+    assert(runs.forall(_ >= 1L), "root entries address tiles, not leaves")
     val lens = (0 until n).map(_ => root.varint().toInt)
-    val off0 = root.varint() // first entry offset (1-based encoding)
-    assert(off0 == 1L, "first tile payload at data offset 0")
-    // first payload gunzips to a decodable MVT with features
-    val payload = java.util.Arrays.copyOfRange(
-      bytes, dataOff.toInt, dataOff.toInt + lens.head)
-    val layers = decodeTile(gunzip(payload))
-    assert(layers.head.features.nonEmpty)
-    assert(layers.head.version == 2)
+    var prevEnd = 0L
+    val offs = lens.map { len =>
+      val v = root.varint() // 0 = previous entry's end, else offset + 1
+      val o = if (v == 0) prevEnd else v - 1
+      prevEnd = o + len
+      o
+    }
+    assert(offs.head == 0L, "first tile payload at data offset 0")
+    // every payload gunzips to one decodable MVT layer; together the tiles
+    // hold every tile-assigned feature
+    val features = lens.indices.map { i =>
+      val off = (dataOff + offs(i)).toInt
+      val layers = decodeTile(gunzip(
+        java.util.Arrays.copyOfRange(bytes, off, off + lens(i))))
+      assert(layers.size == 1 && layers.head.version == 2)
+      layers.head.features.size.toLong * runs(i)
+    }.sum
+    assert(features == tileAssigned.count())
   }
 }

@@ -3,14 +3,11 @@ package graft
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPInputStream
-import org.apache.spark.sql.functions._
-import graft.functions.GeoCols
-import graft.operators.SpatialJoin
 import graft.sinks.PmTiles
 
-/** PMTiles v3 archive round-trip against an independent minimal reader
-  * (header fields, gzip varint directory, payload slicing) plus Hilbert
-  * tile-id properties. */
+/** PMTiles v3 archive layout against an independent minimal reader (gzip
+  * varint directory, leaf directories, payload slicing and dedup) plus
+  * Hilbert tile-id properties; the MVT archive round-trip is in MvtSpec. */
 class PmTilesSpec extends SparkSpec {
 
   test("hilbert tile ids are bijective per zoom and globally unique") {
@@ -77,42 +74,6 @@ class PmTilesSpec extends SparkSpec {
     out.toByteArray
   }
 
-  test("archive round-trips: header, directory, per-tile gzip FeatureCollections") {
-    val pts = GeoCols.derivedPoints(spark, "/root/testdata/sf0.001")
-      .limit(300)
-      .withColumn("feature",
-        concat(lit("""{"type":"Feature","pid":"""), col("pid"), lit("}")))
-    val tiled = SpatialJoin.tileAssign(pts, 2, 3)
-      .select(col("z"), col("tx"), col("ty"), col("feature"))
-    val expectTiles = tiled.select("z", "tx", "ty").distinct().count()
-    val expectRows = tiled.count()
-    val dir = Files.createTempDirectory("pmt").toString
-    val (nTiles, totalBytes) = PmTiles.write(tiled, s"$dir/out.pmtiles")
-    assert(nTiles == expectTiles)
-    val bytes = Files.readAllBytes(Paths.get(s"$dir/out.pmtiles"))
-    assert(bytes.length.toLong == totalBytes)
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    assert(new String(bytes, 0, 7, "US-ASCII") == "PMTiles" && bytes(7) == 3)
-    val rootOff = bb.getLong(8); val rootLen = bb.getLong(16)
-    val dataOff = bb.getLong(56)
-    assert(bytes(96) == 1, "clustered flag")
-    assert(bytes(100) == 2 && bytes(101) == 3, "min/max zoom")
-    val (ids, lens, offs) = decodeDir(gunzip(
-      java.util.Arrays.copyOfRange(bytes, rootOff.toInt, (rootOff + rootLen).toInt)))
-    assert(ids.size == expectTiles)
-    assert(ids == ids.sorted, "hilbert-clustered directory")
-    // every payload is a valid gzip FeatureCollection; total features match
-    var featureCount = 0L
-    ids.indices.foreach { i =>
-      val off = dataOff.toInt + offs(i).toInt
-      val fc = new String(gunzip(
-        java.util.Arrays.copyOfRange(bytes, off, off + lens(i))), "UTF-8")
-      assert(fc.startsWith("""{"type":"FeatureCollection","features":["""))
-      featureCount += fc.split("""\{"type":"Feature"""", -1).length - 1
-    }
-    assert(featureCount == expectRows)
-  }
-
   test("archives beyond leafSize entries spill into leaf directories") {
     import spark.implicits._
     // 40 distinct z6 tiles, leafSize 16 → 3 leaf directories (16/16/8)
@@ -121,8 +82,7 @@ class PmTilesSpec extends SparkSpec {
     val perTile = rows.toDF("z", "tx", "ty", "payload")
     val dir = Files.createTempDirectory("pmtleaf").toString
     val path = s"$dir/leaf.pmtiles"
-    val (n, total) = PmTiles.writePayloads(perTile, path, tileType = 0,
-      leafSize = 16)
+    val (n, total) = PmTiles.writePayloads(perTile, path, leafSize = 16)
     assert(n == 40)
     val bytes = Files.readAllBytes(Paths.get(path))
     assert(bytes.length.toLong == total)
@@ -172,7 +132,7 @@ class PmTilesSpec extends SparkSpec {
     val perTile = rows.toDF("z", "tx", "ty", "payload")
     val dir = Files.createTempDirectory("pmtdedup").toString
     val path = s"$dir/d.pmtiles"
-    val (n, total) = PmTiles.writePayloads(perTile, path, tileType = 0)
+    val (n, total) = PmTiles.writePayloads(perTile, path)
     assert(n == 6, "addressed tiles")
     val bytes = Files.readAllBytes(Paths.get(path))
     assert(bytes.length.toLong == total)

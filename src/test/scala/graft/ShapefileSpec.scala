@@ -137,12 +137,17 @@ class ShapefileSpec extends SparkSpec {
     }
   }
 
-  test("distributed shapefile is byte-identical to the driver-streamed writer") {
-    val d1 = Files.createTempDirectory("shp_drv").toString
-    val d2 = Files.createTempDirectory("shp_dist").toString
-    val c1 = Shapefile.write(feats, d1)
-    val c2 = Shapefile.writeDistributed(feats, d2)
-    assert(c1 == c2)
+  test("distributed shapefile: kill mid-export, resume completes identically") {
+    val d1 = Files.createTempDirectory("shp_k1").toString
+    val d2 = Files.createTempDirectory("shp_k2").toString
+    val parts = fixedParts(feats, 6)
+    intercept[Exception] {
+      Shapefile.write(parts, d2, failAtPartition = 3)
+    }
+    assert(graft.lineage.Lineage.committedParts(s"$d2/.point.state").nonEmpty)
+    val counts = Shapefile.write(parts, d2)
+    // a resumed run is byte-identical to a clean run on the same partitioning
+    assert(Shapefile.write(parts, d1) == counts)
     for (kind <- Seq("point", "line", "polygon"); ext <- Seq("shp", "shx", "dbf", "prj")) {
       assert(java.util.Arrays.equals(
         Files.readAllBytes(Paths.get(s"$d1/$kind.$ext")),
@@ -151,25 +156,18 @@ class ShapefileSpec extends SparkSpec {
     }
     // resumable state cleaned after success (compacted lineage remains)
     assert(!Files.exists(Paths.get(s"$d2/.point.state/parts")))
-  }
-
-  test("distributed shapefile: kill mid-export, resume completes identically") {
-    val d1 = Files.createTempDirectory("shp_k1").toString
-    val d2 = Files.createTempDirectory("shp_k2").toString
-    Shapefile.write(feats, d1)
-    intercept[Exception] {
-      Shapefile.writeDistributed(feats.repartition(6), d2, failAtPartition = 3)
-    }
-    assert(graft.lineage.Lineage.committedParts(s"$d2/.point.state").nonEmpty)
-    val counts = Shapefile.writeDistributed(feats.repartition(6), d2)
-    assert(counts.values.sum == feats.count())
-    // same multiset of shape records as the driver writer (order differs
-    // with the changed partitioning, so compare parsed record sets)
+    // count and bbox against the source rows, through the independent parser
+    val byKind = feats.collect().groupBy(_.getString(1))
     for (kind <- Seq("point", "line", "polygon")) {
-      val (_, _, _, r1) = parseShp(s"$d1/$kind.shp")
-      val (_, _, _, r2) = parseShp(s"$d2/$kind.shp")
-      assert(r1.map(_.map(_.toVector).toVector).toSet ==
-        r2.map(_.map(_.toVector).toVector).toSet, s"$kind records differ")
+      val (_, _, bbox, recs) = parseShp(s"$d2/$kind.shp")
+      assert(counts(kind) == byKind(kind).length && recs.length == counts(kind))
+      assert(parseDbfCount(s"$d2/$kind.dbf") == counts(kind))
+      val pts = byKind(kind).toSeq.flatMap(expectedParts).flatten
+      assert(bbox == ((pts.map(_._1).min, pts.map(_._2).min,
+        pts.map(_._1).max, pts.map(_._2).max)), s"$kind bbox")
+      assert(recs.map(_.map(_.toVector).toVector).toSet ==
+        byKind(kind).map(r => expectedParts(r).map(_.toVector).toVector).toSet,
+        s"$kind records")
     }
   }
 
@@ -184,10 +182,10 @@ class ShapefileSpec extends SparkSpec {
     val dir = Files.createTempDirectory("shp_built").toString
     val counts = Shapefile.write(built, dir)
     assert(counts.values.sum == built.count())
-    val kmlN = Sinks.kml(built, s"$dir/out.kml")
+    val kmlN = Sinks.kml(built, s"$dir/kml")
     assert(kmlN == built.count())
     val doc = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-      .newDocumentBuilder().parse(new java.io.File(s"$dir/out.kml"))
+      .newDocumentBuilder().parse(new java.io.File(s"$dir/kml/export.kml"))
     // real geometry flows through the projection: all three KML shapes appear
     assert(doc.getElementsByTagName("LineString").getLength > 0)
     assert(doc.getElementsByTagName("Polygon").getLength > 0)
@@ -196,10 +194,10 @@ class ShapefileSpec extends SparkSpec {
 
   test("kml document is well-formed XML with one Placemark per feature") {
     val dir = Files.createTempDirectory("kml").toString
-    val n = Sinks.kml(feats, s"$dir/out.kml")
+    val n = Sinks.kml(feats, dir)
     assert(n == feats.count())
     val doc = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-      .newDocumentBuilder().parse(new java.io.File(s"$dir/out.kml"))
+      .newDocumentBuilder().parse(new java.io.File(s"$dir/export.kml"))
     assert(doc.getElementsByTagName("Placemark").getLength == n)
     // each placemark has exactly ONE top-level geometry element (Point /
     // LineString / Polygon / MultiGeometry); MultiGeometry children push the
@@ -216,31 +214,63 @@ class ShapefileSpec extends SparkSpec {
       "multi-part shapes must occur")
   }
 
-  test("distributed kml (placemarks serialized in the plan) matches the driver writer") {
-    val dir = Files.createTempDirectory("kmld").toString
-    val n = Sinks.kmlDistributed(feats, dir)
-    assert(n == feats.count())
-    def parse(p: String) = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-      .newDocumentBuilder().parse(new java.io.File(p))
-    val doc = parse(s"$dir/export.kml")
-    assert(doc.getElementsByTagName("Placemark").getLength.toLong == n)
-    // structural equality with the driver-streamed writer: same multiset of
-    // (name, geometry element) pairs
-    val refDir = Files.createTempDirectory("kmlr").toString
-    Sinks.kml(feats, s"$refDir/ref.kml")
-    def placemarkSet(p: String): Set[(String, String)] = {
-      val d = parse(p)
-      val pms = d.getElementsByTagName("Placemark")
-      (0 until pms.getLength).map { i =>
-        val e = pms.item(i).asInstanceOf[org.w3c.dom.Element]
-        val name = e.getElementsByTagName("name").item(0).getTextContent
-        val geomKind = Seq("MultiGeometry", "Point", "LineString", "Polygon")
-          .find(k => e.getElementsByTagName(k).getLength > 0).get
-        (name, geomKind)
-      }.toSet
+  test("kml: a resumed run is byte-identical and placemarks match the source rows") {
+    val d1 = Files.createTempDirectory("kml_k1").toString
+    val d2 = Files.createTempDirectory("kml_k2").toString
+    // kml has no fault hook of its own: partition 3 throws while `armed`
+    // exists, once a sibling partition has committed — a killed run of the
+    // same plan the disarmed rerun resumes
+    val armed = Files.createTempFile("kml_armed", "").toString
+    val guard = udf { (pid: Int) =>
+      if (pid == 3 && Files.exists(Paths.get(armed))) {
+        val deadline = System.currentTimeMillis() + 10000
+        while (graft.lineage.Lineage.committedParts(d2).isEmpty &&
+            System.currentTimeMillis() < deadline) Thread.sleep(50)
+        throw new RuntimeException(s"injected fault at partition $pid")
+      }
+      true
     }
-    assert(placemarkSet(s"$dir/export.kml") == placemarkSet(s"$refDir/ref.kml"))
-    // serialization happened in the plan: no parts left, codegen-able concat
-    assert(!Files.exists(java.nio.file.Paths.get(dir, "parts")))
+    val parts = fixedParts(feats, 6).filter(guard(spark_partition_id()))
+    intercept[Exception](Sinks.kml(parts, d2))
+    assert(graft.lineage.Lineage.committedParts(d2).nonEmpty)
+    Files.delete(Paths.get(armed))
+    val n = Sinks.kml(parts, d2)
+    assert(Sinks.kml(parts, d1) == n)
+    assert(java.util.Arrays.equals(
+      Files.readAllBytes(Paths.get(s"$d1/export.kml")),
+      Files.readAllBytes(Paths.get(s"$d2/export.kml"))),
+      "resumed kml must be byte-identical to a clean run")
+    // serialization happened in the plan: no parts left after assembly
+    assert(!Files.exists(Paths.get(d2, "parts")))
+    // (name, top-level geometry element) per placemark = the independent
+    // derivation from the source rows
+    val doc = javax.xml.parsers.DocumentBuilderFactory.newInstance()
+      .newDocumentBuilder().parse(new java.io.File(s"$d2/export.kml"))
+    val pms = doc.getElementsByTagName("Placemark")
+    assert(pms.getLength.toLong == n && n == feats.count())
+    val got = (0 until pms.getLength).map { i =>
+      val e = pms.item(i).asInstanceOf[org.w3c.dom.Element]
+      val kids = e.getChildNodes
+      val geom = (0 until kids.getLength).map(k => kids.item(k).getNodeName)
+        .filter(Set("Point", "LineString", "Polygon", "MultiGeometry"))
+      (e.getElementsByTagName("name").item(0).getTextContent, geom)
+    }
+    val want = feats.collect().toSeq.map { r =>
+      val rings = if (!r.isNullAt(4)) r.getSeq[scala.collection.Seq[Double]](4) else Nil
+      val roles = if (!r.isNullAt(5)) r.getSeq[Int](5) else Nil
+      val nParts = r.getString(1) match {
+        case "line" => rings.length
+        case "polygon" => rings.indices.count(k => k == 0 || roles(k) != 1)
+        case _ => 0
+      }
+      val geom = (r.getString(1), nParts) match {
+        case (_, p) if p > 1 => "MultiGeometry"
+        case ("line", 1) => "LineString"
+        case ("polygon", 1) => "Polygon"
+        case _ => "Point"
+      }
+      (r.getString(0), Seq(geom))
+    }
+    assert(got.sortBy(_._1) == want.sortBy(_._1))
   }
 }

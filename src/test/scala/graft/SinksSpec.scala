@@ -31,11 +31,11 @@ class SinksSpec extends SparkSpec {
 
   test("csv sink: header + csv projection shape") {
     val dir = Files.createTempDirectory("csv").toString
-    Sinks.csv(PlanBuilder.build(images, req, csv = true), dir)
-    val back = spark.read.option("header", "true").csv(dir)
+    val n = Sinks.csv(PlanBuilder.build(images, req, csv = true), dir)
+    val back = spark.read.option("header", "true").csv(s"$dir/export.csv")
     assert(back.columns.toSeq ==
       Seq("image_id", "osm_type", "name", "longitude", "latitude", "geom_type"))
-    assert(back.count() > 0)
+    assert(n > 0 && back.count() == n)
   }
 
   test("single-file csv: plan-side to_csv rows + header, re-readable, quoting intact") {
@@ -46,7 +46,7 @@ class SinksSpec extends SparkSpec {
       ("a3", "with \"quote\"", 3.5))
       .toDF("id", "note", "v")
     val dir = java.nio.file.Files.createTempDirectory("csv1").toString
-    val n = Sinks.csvSingle(df, dir)
+    val n = Sinks.csv(df, dir)
     assert(n == 3)
     val f = s"$dir/export.csv"
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(f)))
@@ -65,7 +65,7 @@ class SinksSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq(("a1", "two\n\nblank lines"), ("a2", "plain")).toDF("id", "note")
     val dir = java.nio.file.Files.createTempDirectory("csvnl").toString
-    assert(Sinks.csvSingle(df, dir) == 2)
+    assert(Sinks.csv(df, dir) == 2)
     val back = spark.read.option("header", "true").option("multiLine", "true")
       .csv(s"$dir/export.csv")
     assert(back.count() == 2)

@@ -4,7 +4,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
-import graft.sinks.{Gpkg, MbTiles, Sqlite}
+import scala.jdk.CollectionConverters._
+import graft.sinks.{Gpkg, MbTiles, Mvt, PmTiles, Sqlite}
 import graft.sources.{ImageFixture, ImageTable}
 
 /** Independent minimal SQLite reader (pure file-format walk: header, catalog
@@ -291,36 +292,41 @@ class SqliteSinksSpec extends SparkSpec {
     }
   }
 
-  test("distributed gpkg is byte-identical to the driver-streamed writer") {
-    val dir = Files.createTempDirectory("gpkgd")
-    val p1 = dir.resolve("driver.gpkg").toString
-    val p2 = dir.resolve("dist.gpkg").toString
-    val n1 = Gpkg.write(feats, p1)
-    val n2 = Gpkg.writeDistributed(feats, p2)
-    assert(n1 == n2)
-    assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(p1)),
-      Files.readAllBytes(Paths.get(p2))),
-      "map-side record encoding must reproduce the driver writer exactly")
-    // resumable state cleaned after success
-    assert(!Files.exists(Paths.get(s"$p2.state/parts")))
-  }
-
   test("distributed gpkg: kill mid-export, resume completes, file valid") {
     val dir = Files.createTempDirectory("gpkgk")
     val path = dir.resolve("k.gpkg").toString
+    val parts = fixedParts(feats, 6)
     intercept[Exception] {
-      Gpkg.writeDistributed(feats.repartition(6), path, failAtPartition = 3)
+      Gpkg.write(parts, path, failAtPartition = 3)
     }
     assert(graft.lineage.Lineage.committedParts(s"$path.state").nonEmpty)
-    val n = Gpkg.writeDistributed(feats.repartition(6), path)
+    val n = Gpkg.write(parts, path)
     assert(n == feats.count())
+    // byte-identical to a clean run on the same partitioning
+    val ref = dir.resolve("ref.gpkg").toString
+    assert(Gpkg.write(parts, ref) == n)
+    assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(path)),
+      Files.readAllBytes(Paths.get(ref))),
+      "a resumed gpkg must be byte-identical to a clean run")
+    // resumable state cleaned after success
+    assert(!Files.exists(Paths.get(s"$path.state/parts")))
     val db = new Db(path)
     val stored = db.readTable(db.catalog("export")._1)
     assert(stored.size.toLong == n)
     assert(stored.map(_._1) == (1L to n).toSeq, "fid rowids dense ascending")
+    val rows = feats.collect()
     val ids = stored.map(_._2(1).asInstanceOf[String]).toSet
-    assert(ids == feats.collect().map(_.getString(0)).toSet,
+    assert(ids == rows.map(_.getString(0)).toSet,
       "resumed container holds exactly the source rows")
+    // gpkg_contents envelope = min/max over the source vertices
+    val pts = rows.toSeq.flatMap { r =>
+      val rings = if (!r.isNullAt(4)) r.getSeq[scala.collection.Seq[Double]](4) else Nil
+      if (r.getString(1) == "point" || rings.isEmpty) Seq((r.getDouble(2), r.getDouble(3)))
+      else rings.flatMap(fl => (0 until fl.length / 2).map(i => (fl(2 * i), fl(2 * i + 1))))
+    }
+    val contents = db.readTable(db.catalog("gpkg_contents")._1).head._2
+    assert(contents.slice(5, 9) == Seq(pts.map(_._1).min, pts.map(_._2).min,
+      pts.map(_._1).max, pts.map(_._2).max), "layer envelope")
   }
 
   test("sqlite_master outgrowing page 1 becomes a b-tree rooted there (no zero-cell root)") {
@@ -376,45 +382,72 @@ class SqliteSinksSpec extends SparkSpec {
     assert(meta("format") == "pbf", "MBTiles 1.3: vector tiles declare pbf")
     assert(meta("json").contains(""""vector_layers""""))
     assert(meta("json").contains(""""id":"export""""))
+    assert(db.catalog.keySet == Set("tiles", "metadata"))
+    assert(meta("minzoom") == "2" && meta("maxzoom") == "3" && meta.contains("bounds"))
     val tiles = db.readTable(db.catalog("tiles")._1)
     assert(tiles.size.toLong == nTiles)
-    tiles.foreach { case (_, vals) =>
+    val expect = graft.operators.SpatialJoin
+      .tileAssign(feats.select(col("lon"), col("lat"), col("image_id")), 2, 3)
+      .groupBy("z", "tx", "ty").count().collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap
+    val got = tiles.map { case (_, vals) =>
+      val z = vals(0).asInstanceOf[Long].toInt
+      val tx = vals(1).asInstanceOf[Long]
+      val ty = (1L << z) - 1L - vals(2).asInstanceOf[Long] // undo the TMS flip
+      // every payload is gzip MVT holding the tile's features
       val layers = MvtDecode.decodeTile(
         MvtDecode.gunzip(vals(3).asInstanceOf[Array[Byte]]))
       assert(layers.size == 1 && layers.head.name == "export")
-      assert(layers.head.version == 2 && layers.head.features.nonEmpty)
-    }
+      assert(layers.head.version == 2)
+      (z, tx, ty) -> layers.head.features.size.toLong
+    }.toMap
+    assert(got == expect, "tiles (TMS rows flipped back) and their feature counts")
   }
 
-  test("mbtiles container: tiles + metadata, TMS row flip, gzip payloads") {
-    val tiled = graft.operators.SpatialJoin.tileAssign(
-      feats.select(col("lon"), col("lat"),
-        graft.plan.PlanBuilder.geoJsonFeatureCol(
-          feats.select("image_id", "lon", "lat")).as("feature")),
-      2, 4)
-    val path = Files.createTempDirectory("mbt").resolve("export.mbtiles").toString
-    val nTiles = MbTiles.write(tiled, path)
-    assert(nTiles > 0)
-    val db = new Db(path)
-    assert(db.catalog.keySet == Set("tiles", "metadata"))
-    val meta = db.readTable(db.catalog("metadata")._1)
-      .map(r => r._2.head.asInstanceOf[String] -> r._2(1).asInstanceOf[String]).toMap
-    assert(meta("format") == "json" && meta.contains("minzoom") && meta.contains("bounds"))
-    val tiles = db.readTable(db.catalog("tiles")._1)
-    assert(tiles.size.toLong == nTiles)
-    val expect = tiled.groupBy("z", "tx", "ty").count().collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap
-    tiles.foreach { case (_, vals) =>
-      val z = vals(0).asInstanceOf[Long].toInt
-      val tx = vals(1).asInstanceOf[Long]
-      val tmsRow = vals(2).asInstanceOf[Long]
-      val ty = (1L << z) - 1L - tmsRow // undo the TMS flip
-      assert(expect.contains((z, tx, ty)), s"unexpected tile $z/$tx/$tmsRow")
-      val gz = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(vals(3).asInstanceOf[Array[Byte]]))
-      val json = new String(gz.readAllBytes(), StandardCharsets.UTF_8)
-      assert(json.startsWith("""{"type":"FeatureCollection""""))
-      assert(json.endsWith("]}"))
-    }
+  test("tile archives: a failed rewrite keeps the earlier file and leaves no .tmp") {
+    val dir = Files.createTempDirectory("tilefail")
+    val mb = dir.resolve("export.mbtiles").toString
+    val pm = dir.resolve("export.pmtiles").toString
+    val nTiles = MbTiles.writeMvt(feats, mb, (2, 3), "export")
+    PmTiles.writeMvt(feats, pm, (2, 3), "export")
+    val pmBytes = Files.readAllBytes(Paths.get(pm))
+    // the same payload frame, except that one tile throws when it is built
+    val payloads = Mvt.tilePayloads(feats, (2, 3), "export")
+    val last = payloads.select("z", "tx", "ty")
+      .orderBy(desc("z"), desc("tx"), desc("ty")).head()
+    val bad = payloads.withColumn("payload",
+      when(col("z") === last.getInt(0) && col("tx") === last.getLong(1) &&
+        col("ty") === last.getLong(2), raise_error(lit("injected tile fault")))
+        .otherwise(col("payload")))
+    intercept[Exception](MbTiles.writePayloads(bad, mb, "export", "{}"))
+    intercept[Exception](PmTiles.writePayloads(bad, pm))
+    val db = new Db(mb)
+    assert(db.readTable(db.catalog("tiles")._1).size.toLong == nTiles,
+      "the earlier mbtiles archive must survive a failed rewrite")
+    assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(pm)), pmBytes),
+      "the earlier pmtiles archive must survive a failed rewrite")
+    val left = Files.list(dir)
+    try assert(left.iterator().asScala.map(_.getFileName.toString).toSet ==
+      Set("export.mbtiles", "export.pmtiles"), "no temp or sidecar file remains")
+    finally left.close()
+  }
+
+  test("real sqlite accepts the gpkg and mbtiles containers (tools/sqlite_check.py)") {
+    val dir = Files.createTempDirectory("sqlcheck")
+    val gpkg = dir.resolve("export.gpkg").toString
+    val mb = dir.resolve("export.mbtiles").toString
+    Gpkg.write(feats, gpkg)
+    MbTiles.writeMvt(feats, mb, (2, 3), "export")
+    val script = Paths.get("tools", "sqlite_check.py")
+    assert(Files.exists(script), s"${script.toAbsolutePath} is missing")
+    val out = new StringBuilder
+    val log = scala.sys.process.ProcessLogger(
+      l => out.append(l).append('\n'), l => out.append(l).append('\n'))
+    // no python3 is a failure, never a skip: this is the only check that a
+    // real SQLite build opens, verifies and writes the containers
+    val code =
+      try scala.sys.process.Process(Seq("python3", script.toString, gpkg, mb)).!(log)
+      catch { case e: java.io.IOException => fail(s"python3 is required: $e") }
+    assert(code == 0, s"sqlite_check.py failed:\n$out")
   }
 }
