@@ -22,12 +22,17 @@ import graft.geo.{Cell, Geo, MultiPolygon, Polygon}
   * and no log said so. A kernel call keeps the generated code one virtual
   * call per row wherever the optimizer moves it. Per-query state (request
   * geometry, region catalog, hyperplanes) rides in as an object literal.
+  * The cover-membership call ([[cellIn]]) replaces `In` lists of thousands
+  * of literals (7,990 + 7,159 for the country-sized `Bench.benchPolygon`)
+  * that query planning rebuilt, validated and printed on every request.
   *
   * Null convention: every call propagates null — a null argument gives null
   * and the kernel is not called. Where a result must stay non-null the
   * default is a `coalesce` at the call site:
   *  - [[cellId]], [[pointInMultiPolygon]], [[regionRefine]],
   *    [[featureIntersects]]: null (a filter drops the row, as for false);
+  *  - [[cellIn]]: null, as `Column.isin` gives; an empty set is a plain
+  *    `false` for every row, null cell included, as `isin()` gives;
   *  - [[dot]]: null, and also null when an array is shorter than `dims` or
   *    holds a null element (element_at's null through the Column sum);
   *  - [[regionCids]]: null; `SpatialJoin` passes a non-null array, and a
@@ -62,6 +67,15 @@ object Kernels {
   def cellId(res: Int, lon: Column, lat: Column): Column =
     static(Cell.getClass, "cellAt", LongType, returnNullable = true,
       Seq(lit(res), lon, lat), Seq(IntegerType, DoubleType, DoubleType))
+
+  /** `cell` is one of `cells`: a binary search over the sorted ids, so a
+    * cover of thousands of cells is one plan node, not one `Literal` per
+    * cell. Not pushed to the scan; `PlanBuilder.cellIn` pairs it with a
+    * pushable range. */
+  def cellIn(cells: Iterable[Long], cell: Column): Column =
+    if (cells.isEmpty) lit(false)
+    else invoke(new CellSet(cells.toArray.sorted), "contains",
+      BooleanType, Seq(cell), Seq(LongType))
 
   /** Point inside any polygon of `geom` (even-odd, holes excluded). */
   def pointInMultiPolygon(geom: MultiPolygon, lon: Column, lat: Column): Column =
@@ -105,6 +119,12 @@ object Kernels {
     invoke(new SignBucket(planes), "bucket", LongType, Seq(e), Seq(FloatArray))
 
   // ---- per-query kernels (object literals; short toString keeps plans small)
+
+  final class CellSet(sorted: Array[Long]) extends Serializable {
+    def contains(c: Long): Boolean =
+      java.util.Arrays.binarySearch(sorted, c) >= 0
+    override def toString: String = s"CellSet(${sorted.length} cells)"
+  }
 
   final class Pip(geom: MultiPolygon) extends Serializable {
     def contains(lonV: Double, latV: Double): Boolean = {

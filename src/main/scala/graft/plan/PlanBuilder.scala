@@ -3,7 +3,7 @@ package graft.plan
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.geo.{Cell, MultiPolygon}
-import graft.functions.GeoCols
+import graft.functions.{GeoCols, Kernels}
 import graft.model._
 import graft.sources.ImageTable
 
@@ -12,9 +12,10 @@ import graft.sources.ImageTable
   * generator `raw_currentdata_extraction_query` (builder.py:493-730).
   *
   * Shape of the produced plan, mirroring the reference stage by stage:
-  *  - coarse cell prefilter (`cell IN cover`) && exact PIP refine — the
-  *    reference's grid-index AND ST_Intersects pattern (builder.py:459-470);
-  *    cells fully inside the polygon skip the refine;
+  *  - coarse cell prefilter (`cell IN cover`, or its min/max range and a
+  *    kernel membership call for a large cover) && exact intersect refine —
+  *    the reference's grid-index AND ST_Intersects pattern
+  *    (builder.py:459-470); cells fully inside the polygon skip the refine;
   *  - per-geometry-type branches with per-type tag filters and attribute
   *    projections, `all_geometry` overriding per-type filters
   *    (builder.py:615-629);
@@ -64,18 +65,34 @@ object PlanBuilder {
     case WhereExpr.Not(x) => !compileWhere(x)
   }
 
-  /** Coarse cell membership with a blowup guard: a small set compiles to a
-    * pushable `In`; a large one to a pushed min/max range (row-group pruning
-    * on the cell-clustered layout survives) AND an `In` that the optimizer
-    * rewrites to a hashed `InSet` — never a 16k-literal codegen method (the
-    * janino 64KB failure mode, BENCH.md finding #2). */
+  /** Pushed coarse cell membership. Up to [[PushedInMax]] cells it is a
+    * `cell IN (...)`: Parquet's dictionary filter uses the list to skip row
+    * groups (export_mix's polygons over 6 seeds read 25,382 rows (city) and
+    * 15,903 (regional) with the `In`, 40,970 with the min/max range alone).
+    * A larger set is the pushed range AND one [[Kernels.cellIn]] call: a
+    * country-sized cover (`Bench.benchPolygon`, 7,990 cells) skips no row
+    * group of the 64,000-image perfbench table anyway, and its literal
+    * lists cost 0.28-0.33 s of planning per ~2.0 s bulk_extract repetition
+    * on 4 vCPUs (building, validating and printing the plan) while the
+    * executors waited. */
   private[graft] def cellIn(cell: Column, cells: Set[Long]): Column =
     if (cells.isEmpty) lit(false)
     else {
       val s = cells.toSeq.sorted
-      if (s.size <= 1000) cell.isin(s: _*)
-      else cell.between(lit(s.head), lit(s.last)) && cell.isin(s: _*)
+      if (s.size <= PushedInMax) cell.isin(s: _*)
+      else cell.between(lit(s.head), lit(s.last)) && Kernels.cellIn(s, cell)
     }
+
+  private val PushedInMax = 1000
+
+  /** The res-[[CoverRes]] cells fully inside `geom`, and the cells of its
+    * cover expanded by one cell ring (see [[geometryFilter]]). */
+  private[graft] def coverCells(geom: MultiPolygon): (Set[Long], Set[Long]) = {
+    val covers = geom.polys.map(p => Cell.cover(p, CoverRes))
+    val fullCells = covers.flatMap(_._1).toSet
+    val allCells = covers.flatMap(c => c._1 ++ c._2).toSet
+    (fullCells, allCells ++ allCells.flatMap(c => Cell.ring(c, 1)))
+  }
 
   /** Geometry filter: coarse cover prefilter && exact kind-aware refine
     * (F1/F2/F8/F9). Points use PIP; lines/polygons the full segment/region
@@ -97,36 +114,17 @@ object PlanBuilder {
     * `cell` should be the materialized bucket column when the table has one
     * (ImageTable.BucketRes == CoverRes): the prefilter then pushes into the
     * parquet scan and prunes row groups on the cell-clustered layout — the
-    * reference's `grid = ...` index clause (builder.py:464-470). */
+    * reference's `grid = ...` index clause (builder.py:464-470). The
+    * full-cell test is never pushed, so it is always one kernel call. */
   def geometryFilter(geom: MultiPolygon, kind: Column, lon: Column, lat: Column,
       cell: Column, rings: Column): Column = {
-    val covers = geom.polys.map(p => Cell.cover(p, CoverRes))
-    val fullCells = covers.flatMap(_._1).toSet
-    val allCells = covers.flatMap(c => c._1 ++ c._2).toSet
-    val expanded = allCells ++ allCells.flatMap(c => Cell.ring(c, 1))
+    val (fullCells, expanded) = coverCells(geom)
     // exact refine = one kernel call (zero-copy ArrayData views, inside
     // whole-stage codegen — neither the UDF boundary's per-row rings
-    // conversion nor a janino-sized Column tree, BENCH.md finding #2).
-    // The coarse prefilter stays a pushable Column so scan pruning is
-    // untouched.
-    val exact = graft.functions.Kernels.featureIntersects(
-      geom, kind, lon, lat, rings)
-    cellIn(cell, expanded) && (cellIn(cell, fullCells) || exact)
+    // conversion nor a janino-sized Column tree, BENCH.md finding #2)
+    val exact = Kernels.featureIntersects(geom, kind, lon, lat, rings)
+    cellIn(cell, expanded) && (Kernels.cellIn(fullCells, cell) || exact)
   }
-
-  /** Point-only variant (tables without vertex columns). */
-  def geometryFilter(geom: MultiPolygon, lon: Column, lat: Column,
-      cell: Column): Column = {
-    val covers = geom.polys.map(p => Cell.cover(p, CoverRes))
-    val fullCells = covers.flatMap(_._1).toSet
-    val allCells = covers.flatMap(c => c._1 ++ c._2).toSet
-    val pip = geom.polys.map(p => GeoCols.pipCol(p, lon, lat))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    cellIn(cell, allCells) && (cellIn(cell, fullCells) || pip)
-  }
-
-  def geometryFilter(geom: MultiPolygon, lon: Column, lat: Column): Column =
-    geometryFilter(geom, lon, lat, GeoCols.cellCol(CoverRes, lon, lat))
 
   // ---- projection -----------------------------------------------------------
 

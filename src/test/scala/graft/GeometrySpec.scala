@@ -143,20 +143,26 @@ class GeometrySpec extends SparkSpec {
 
   test("expanded cover prefilter is a superset of the exact intersect set") {
     val feats = GeoCols.derivedFeatures(spark, sfDir)
-    val exact = feats.filter(GeoCols.featureIntersectsRingsUdf(
-      MultiPolygon(Seq(poly)))(col("kind"), col("lon"), col("lat"), col("rings")))
-    val planned = feats.filter(PlanBuilder.geometryFilter(
-      MultiPolygon(Seq(poly)), col("kind"), col("lon"), col("lat"), col("cell"),
-      col("rings")))
-    assert(exact.count() == planned.count(), "plan filter must equal exact semantics")
-    // and the coarse part alone (without refine) admits every exact hit
-    val coarseOnly = feats.filter(
-      PlanBuilder.cellIn(col("cell"), {
-        val (f, p) = graft.geo.Cell.cover(poly, PlanBuilder.CoverRes)
-        val all = f ++ p
-        all ++ all.flatMap(c => graft.geo.Cell.ring(c, 1))
-      }))
-    assert(exact.join(coarseOnly, Seq("image_id"), "left_anti").count() == 0)
+    // the fixture polygon's small cover is a pushed `In`; the country-sized
+    // bench polygon's (> 1,000 cells, expanded and full) are kernel calls
+    val (benchFull, benchExpanded) =
+      PlanBuilder.coverCells(MultiPolygon(Seq(Bench.benchPolygon)))
+    assert(benchFull.size > 1000 && benchExpanded.size > 1000)
+    for ((name, p) <- Seq("requestPolygon" -> poly,
+        "benchPolygon" -> Bench.benchPolygon)) {
+      val geom = MultiPolygon(Seq(p))
+      val exact = feats.filter(GeoCols.featureIntersectsRingsUdf(geom)(
+        col("kind"), col("lon"), col("lat"), col("rings")))
+      val planned = feats.filter(PlanBuilder.geometryFilter(
+        geom, col("kind"), col("lon"), col("lat"), col("cell"), col("rings")))
+      assert(exact.count() == planned.count(),
+        s"$name: plan filter must equal exact semantics")
+      // and the coarse part alone (without refine) admits every exact hit
+      val (_, expanded) = PlanBuilder.coverCells(geom)
+      val coarseOnly = feats.filter(PlanBuilder.cellIn(col("cell"), expanded))
+      assert(exact.join(coarseOnly, Seq("image_id"), "left_anti").count() == 0,
+        s"$name: coarse prefilter drops an exact hit")
+    }
   }
 
   test("centroid=true routes through build and differs from anchors on polygons") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{GeoCols, Kernels}
 import graft.geo.{Fixtures, MultiPolygon}
 import graft.operators.{Dedup, Similarity}
+import graft.plan.PlanBuilder
 
 /** Every hot-path kernel call must produce EXACTLY the values of the Column
   * tree or UDF it replaced (null-safe equality, bit-exact doubles), and each
@@ -107,6 +108,26 @@ class KernelParitySpec extends SparkSpec {
     val kernel = Kernels.featureIntersects(geom, cols(0), cols(1), cols(2), cols(3))
     assert(mismatches(df, udfCol, kernel) == 0)
     assert(df.filter(kernel).count() > 0, "no intersecting feature exercised")
+  }
+
+  test("cell membership ≡ Column.isin over one set of cells") {
+    val cells = PlanBuilder.coverCells(MultiPolygon(Seq(Fixtures.requestPolygon)))
+      ._2.toSeq.sorted
+    val gaps = cells.sliding(2).collect { case Seq(a, b) if b - a > 1 => a + 1 }
+      .take(20).toSeq
+    assert(gaps.nonEmpty, "no absent id between the cover's cells")
+    val probes = Seq(Long.MinValue, cells.head - 1, cells.head, cells.last,
+      cells.last + 1, Long.MaxValue) ++ gaps
+    val df = GeoCols.derivedPoints(spark, sfDir)
+      .select(Kernels.cellId(PlanBuilder.CoverRes, col("lon"), col("lat")).as("cell"))
+      .union((probes.map(Option(_)) :+ None).toDF("cell"))
+    for (set <- Seq(cells, Seq.empty[Long]))
+      assert(mismatches(df, col("cell").isin(set: _*),
+        Kernels.cellIn(set, col("cell"))) == 0, s"${set.size} cells")
+    assert(df.filter(Kernels.cellIn(cells, col("cell"))).count() > 0,
+      "no member cell exercised")
+    assert(df.filter(col("cell").isNull &&
+      Kernels.cellIn(cells, col("cell")).isNull).count() == 1)
   }
 
   test("DotProductExpr ≡ unrolled 64-term dot tree") {

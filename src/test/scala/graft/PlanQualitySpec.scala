@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Expression, In, InSet, ScalaUDF}
 import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec,
   SparkPlan, WholeStageCodegenExec}
@@ -35,12 +36,45 @@ class PlanQualitySpec extends SparkSpec {
       col("rings")))
   }
 
+  private def pushedFilters(df: DataFrame): String =
+    df.queryExecution.executedPlan.toString.linesIterator
+      .find(_.contains("PushedFilters")).getOrElse("")
+
   test("cell prefilter is pushed into the parquet scan") {
-    val plan = extractPlan.queryExecution.executedPlan.toString
-    val pushed = plan.linesIterator.find(_.contains("PushedFilters")).getOrElse("")
-    assert(pushed.contains("In(cell") ||
-      (pushed.contains("GreaterThanOrEqual(cell") && pushed.contains("LessThanOrEqual(cell")),
-      s"cell IN cover should reach the scan: $pushed")
+    // a cover this small must stay a pushed `In`: Parquet's dictionary
+    // filter prunes row groups with it, and the min/max range alone does not
+    val (_, expanded) =
+      PlanBuilder.coverCells(MultiPolygon(Seq(Fixtures.requestPolygon)))
+    assert(expanded.size <= 1000, s"fixture cover has ${expanded.size} cells")
+    val pushed = pushedFilters(extractPlan)
+    assert(pushed.contains("In(cell"), s"cell IN cover should reach the scan: $pushed")
+  }
+
+  test("country-sized cover: no cell list over 1,000 values, the cell range is pushed") {
+    val geom = MultiPolygon(Seq(Bench.benchPolygon))
+    val (full, expanded) = PlanBuilder.coverCells(geom)
+    assert(full.size > 1000 && expanded.size > 1000)
+    val df = ImageFixture.read(spark, tableDir).filter(PlanBuilder.geometryFilter(
+      geom, col("kind"), col("lon"), col("lat"), col("cell"), col("rings")))
+    df.collect() // AQE: inspect the final executed plan
+    def physical(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => physical(a.executedPlan)
+      case q: QueryStageExec => physical(q.plan)
+      case o => o +: o.children.flatMap(physical)
+    }
+    def listSizes(exprs: Seq[Expression]): Seq[Int] = exprs.flatMap(_.collect {
+      case In(_, list) => list.size
+      case InSet(_, hset) => hset.size
+    })
+    val qe = df.queryExecution
+    val optimized = listSizes(qe.optimizedPlan.flatMap(_.expressions))
+    val executed = listSizes(physical(qe.executedPlan).flatMap(_.expressions))
+    assert((optimized ++ executed).forall(_ <= 1000),
+      s"cell lists of ${(optimized ++ executed).filter(_ > 1000)} values:\n" +
+        qe.executedPlan.toString.take(3000))
+    val pushed = pushedFilters(df)
+    assert(pushed.contains("GreaterThanOrEqual(cell") &&
+      pushed.contains("LessThanOrEqual(cell"), s"cell range should reach the scan: $pushed")
   }
 
   test("scan reads only referenced columns (column pruning)") {
