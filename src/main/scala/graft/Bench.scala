@@ -2,12 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.geo.Fixtures
-import graft.functions.GeoCols
 import graft.operators.SpatialJoin
 import graft.plan.PlanBuilder
 import graft.model.{SnapshotRequest, GeomType}
-import graft.sources.{ImageFixture, ImageTable}
+import graft.sources.ImageFixture
 
 /** Benchmark main (driver contract): one JSON line on stdout.
   *

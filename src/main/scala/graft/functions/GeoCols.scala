@@ -138,9 +138,6 @@ object GeoCols {
       s"((($xE >> $i) & 1) << ${2 * i}) + ((($yE >> $i) & 1) << ${2 * i + 1})"
     }.mkString("(", " + ", ")")
 
-  def cellSql(res: Int, lonE: String, latE: String): String =
-    s"((${mortonSql(res, "cx", "cy")} << 5) + $res)" // expects cx, cy bound in an enclosing CTE
-
   // ---- Web-Mercator tile (z/x/y) -------------------------------------------
   // The tippecanoe analogue (app.py:690-698): assign each point to its tile
   // per zoom. y uses the standard mercator formula.

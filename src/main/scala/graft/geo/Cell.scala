@@ -71,13 +71,6 @@ object Cell {
     ((cell >>> 5) >>> 2) << 5 | (r - 1).toLong
   }
 
-  /** Ancestor at resolution r' <= res(cell). */
-  def parentAt(cell: Long, r2: Int): Long = {
-    val r = resOf(cell)
-    require(r2 <= r)
-    ((cell >>> 5) >>> (2 * (r - r2))) << 5 | r2.toLong
-  }
-
   def children(cell: Long): Array[Long] = {
     val r = resOf(cell)
     require(r < MaxRes)
@@ -197,11 +190,5 @@ object Cell {
     recurse(fromXY(0, 0, 0))
     val f = full.result(); val p = part.result()
     (f, p)
-  }
-
-  /** Flat cover (union of full + boundary). */
-  def coverAll(poly: Polygon, res: Int): Set[Long] = {
-    val (f, p) = cover(poly, res)
-    f ++ p
   }
 }

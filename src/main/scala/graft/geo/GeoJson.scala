@@ -52,9 +52,6 @@ object GeoJson {
   private def num(d: Double): String =
     if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString else d.toString
 
-  def pointJson(lon: Double, lat: Double): String =
-    s"""{"type":"Point","coordinates":[${num(lon)},${num(lat)}]}"""
-
   def polygonJson(poly: Polygon): String = {
     def ring(r: Ring): String =
       (r.pts :+ r.pts.head)
@@ -62,9 +59,4 @@ object GeoJson {
     val rings = (poly.shell +: poly.holes.toIndexedSeq).map(ring).mkString("[", ",", "]")
     s"""{"type":"Polygon","coordinates":$rings}"""
   }
-
-  def multiPolygonJson(mp: MultiPolygon): String =
-    if (mp.polys.size == 1) polygonJson(mp.polys.head)
-    else mp.polys.map(p => polygonJson(p).replaceFirst("""\{"type":"Polygon","coordinates":""", "").dropRight(1))
-      .mkString("""{"type":"MultiPolygon","coordinates":[""", ",", "]}")
 }

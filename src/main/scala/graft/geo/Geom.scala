@@ -94,22 +94,9 @@ object Geo {
     2 * EarthRadiusM * math.asin(math.min(1.0, math.sqrt(a)))
   }
 
-  /** Planar shoelace area of a ring in deg^2 (sign = orientation). */
-  def ringAreaDeg2(ring: Ring): Double = {
-    val pts = ring.pts
-    var s = 0.0
-    var j = pts.length - 1
-    var i = 0
-    while (i < pts.length) {
-      s += (pts(j).lon + pts(i).lon) * (pts(j).lat - pts(i).lat)
-      j = i; i += 1
-    }
-    s / 2.0
-  }
-
   /** Geodesic (spherical-excess style, l'Huilier-lite) polygon area in km².
-    * Matches the reference's geodesic area guard role
-    * (API/raw_data.py:421-432 uses the `area` python lib). */
+    * The plain path's area guard (`CustomExport.plainSnapshot`); the
+    * reference's guards use the `area` python lib (API/raw_data.py:483-493). */
   def geodesicAreaKm2(poly: Polygon): Double = {
     def ringArea(ring: Ring): Double = {
       val pts = ring.pts
@@ -147,10 +134,6 @@ object Geo {
     } else Pt(cx / (3 * a), cy / (3 * a))
   }
 
-  /** Quantize a coordinate to a grid (reference's ST_SnapToGrid(geom, 1e-5)
-    * exact-country probe, builder.py:73-82). */
-  def snap(v: Double, grid: Double = 1e-5): Double = math.rint(v / grid) * grid
-
   // ---- segment / non-point intersection kernel ------------------------------
   // The reference routes real linestrings/polygons (backend/raw.lua:128-180)
   // and extracts them with ST_Intersects; this is our exact planar kernel,
@@ -184,23 +167,6 @@ object Geo {
       false
     }
     ringCross(poly.shell) || poly.holes.exists(ringCross)
-  }
-
-  /** Open polyline × polygon-with-holes intersection: a vertex inside, or an
-    * edge properly crossing the boundary. */
-  def lineIntersectsPolygon(line: Array[Pt], poly: Polygon): Boolean =
-    line.exists(p => pointInPolygon(p.lon, p.lat, poly)) ||
-      line.indices.dropRight(1).exists(i =>
-        segmentCrossesBoundary(line(i), line(i + 1), poly))
-
-  /** Region×region intersection for a simple (hole-free) feature ring vs a
-    * polygon-with-holes: any feature vertex inside, any edge crossing, or the
-    * polygon's first shell vertex inside the feature (feature swallows it). */
-  def polygonIntersectsPolygon(feature: Ring, poly: Polygon): Boolean = {
-    val pts = feature.pts
-    val closed = pts :+ pts.head
-    lineIntersectsPolygon(closed, poly) ||
-      pointInRing(poly.shell.pts.head.lon, poly.shell.pts.head.lat, feature)
   }
 
   // ---- arbitrary-vertex feature kernel (rings/roles model) -----------------
@@ -388,23 +354,5 @@ object Geo {
         }
         (sx / n, sy / n)
       } else (cx / (3 * a), cy / (3 * a))
-  }
-
-  /** Length-weighted centroid of an open polyline (planar, the ST_Centroid
-    * linestring rule); degenerate zero-length lines fall back to the first
-    * vertex. */
-  def lineCentroid(line: Array[Pt]): Pt = {
-    var sx = 0.0; var sy = 0.0; var sl = 0.0
-    var i = 0
-    while (i < line.length - 1) {
-      val a = line(i); val b = line(i + 1)
-      val l = math.sqrt((b.lon - a.lon) * (b.lon - a.lon) +
-        (b.lat - a.lat) * (b.lat - a.lat))
-      sx += (a.lon + b.lon) / 2 * l
-      sy += (a.lat + b.lat) / 2 * l
-      sl += l
-      i += 1
-    }
-    if (sl == 0.0) line.head else Pt(sx / sl, sy / sl)
   }
 }

@@ -50,10 +50,6 @@ object Dedup {
         concat_ws(" ", element_at(t, i), element_at(t, i + 1), element_at(t, i + 2)))))
       .otherwise(array_distinct(t))
 
-  /** Single-expression variant (identical values; the two-step bound form is
-    * the hot path). */
-  def shinglesCol(text: Column): Column = shinglesOfToks(split(lower(text), " "))
-
   /** (doc_id, sh) with the token array bound as its own projection. */
   private def shingled(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), split(lower(col("text")), " ").as("_toks"))

@@ -3,12 +3,12 @@ package graft.operators
 import java.awt.image.BufferedImage
 import java.io.ByteArrayInputStream
 import javax.imageio.ImageIO
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.ImageFixture
 
 /** Multimodal column operators: the image payload (`bytes` binary + typed
-  * metadata w/h/fmt) is decoded, feature-extracted and verified on the
+  * metadata w/h/fmt) is decoded and its stored phash verified on the
   * executors. Decode is real (javax.imageio handles png/jpeg/bmp in-JDK);
   * the Spark-side plumbing — schema, batch shape, partition-local reader
   * reuse — is the part that matters at 10^12 rows: decode is a narrow
@@ -59,33 +59,6 @@ object Multimodal {
     }
   }
 
-  /** Grayscale 8×8 mean-block feature vector — the "embedding extract" step. */
-  def gray8x8(img: BufferedImage): Array[Double] = {
-    val out = new Array[Double](64)
-    val (w, h) = (img.getWidth, img.getHeight)
-    var i = 0
-    while (i < 64) {
-      val bx = i % 8; val by = i / 8
-      var sum = 0.0; var n = 0
-      var y = by * h / 8
-      val yEnd = math.max(y + 1, (by + 1) * h / 8)
-      while (y < yEnd) {
-        var x = bx * w / 8
-        val xEnd = math.max(x + 1, (bx + 1) * w / 8)
-        while (x < xEnd) {
-          val rgb = img.getRGB(x, y)
-          sum += 0.299 * ((rgb >> 16) & 0xFF) + 0.587 * ((rgb >> 8) & 0xFF) +
-            0.114 * (rgb & 0xFF)
-          n += 1; x += 1
-        }
-        y += 1
-      }
-      out(i) = sum / n
-      i += 1
-    }
-    out
-  }
-
   /** PSNR between two images of equal dims (dB; infinity-capped at 99.0).
     * Per-row invariant: decoded payload vs regenerated source pixels must
     * reach ≥40 dB for lossy fmts, exact for PNG (BASELINE.json input_hint). */
@@ -115,11 +88,6 @@ object Multimodal {
 
   // ---- DataFrame-level plumbing ------------------------------------------------
 
-  private val decodeDimsUdf = udf((bytes: Array[Byte]) => {
-    val img = decode(bytes)
-    (img.getWidth, img.getHeight)
-  })
-
   /** (w, h, phash) of a payload: PNG takes the allocation-free lumaHash fast
     * path; JPEG decodes via the cached reader. */
   def payloadInfo(bytes: Array[Byte]): (Int, Int, Long) =
@@ -139,62 +107,6 @@ object Multimodal {
 
   private val phashUdf = udf((bytes: Array[Byte]) => payloadInfo(bytes)._3)
 
-  private val featUdf = udf((bytes: Array[Byte]) => gray8x8(decode(bytes)).map(_.toFloat))
-
-  /** Verify stored metadata/phash against the actual payload; flag mismatches.
-    * Output: (image_id, fmt, w_ok, h_ok, phash_ok). */
-  def verifyPayload(images: DataFrame): DataFrame =
-    images
-      .withColumn("dims", decodeDimsUdf(col("bytes")))
-      .withColumn("phash2", phashUdf(col("bytes")))
-      .select(col("image_id"), col("fmt"),
-        (col("dims._1") === col("w")).as("w_ok"),
-        (col("dims._2") === col("h")).as("h_ok"),
-        // jpeg is lossy → phash may drift by a few bits; count them instead
-        bit_count(col("phash").bitwiseXOR(col("phash2"))).as("phash_hamming"))
-
-  /** Area-average resize to (tw × th) — the thumbnail/sample step of the
-    * multimodal pipeline (real pixels, not a stub). */
-  def resize(img: BufferedImage, tw: Int, th: Int): BufferedImage = {
-    val out = new BufferedImage(tw, th, BufferedImage.TYPE_INT_RGB)
-    val (w, h) = (img.getWidth, img.getHeight)
-    var ty = 0
-    while (ty < th) {
-      var tx = 0
-      while (tx < tw) {
-        val x0 = tx * w / tw; val x1 = math.max(x0 + 1, (tx + 1) * w / tw)
-        val y0 = ty * h / th; val y1 = math.max(y0 + 1, (ty + 1) * h / th)
-        var r = 0L; var g = 0L; var b = 0L; var n = 0
-        var y = y0
-        while (y < y1) {
-          var x = x0
-          while (x < x1) {
-            val p = img.getRGB(x, y)
-            r += (p >> 16) & 0xFF; g += (p >> 8) & 0xFF; b += p & 0xFF
-            n += 1; x += 1
-          }
-          y += 1
-        }
-        out.setRGB(tx, ty,
-          (((r / n).toInt) << 16) | (((g / n).toInt) << 8) | (b / n).toInt)
-        tx += 1
-      }
-      ty += 1
-    }
-    out
-  }
-
-  private val thumbUdf = udf((bytes: Array[Byte], tw: Int, th: Int) =>
-    ImageFixture.encode(resize(decode(bytes), tw, th), "png"))
-
-  /** Thumbnail column op: decode → area-average resize → re-encode PNG.
-    * Narrow per-partition map; the batch shape (binary in, binary out, typed
-    * dims) is the pattern a frame-sampler or feature-extractor plugs into. */
-  def thumbnails(images: DataFrame, tw: Int = 8, th: Int = 8): DataFrame =
-    images.select(col("image_id"),
-      thumbUdf(col("bytes"), lit(tw), lit(th)).as("thumb"),
-      lit(tw).as("tw"), lit(th).as("th"))
-
   /** Decode + phash-verify only (the flagship ingest-verify step): replaces
     * the `bytes` column with `phash_hamming`. Narrow map, no shuffle. */
   def verifyPayloadLite(images: DataFrame): DataFrame =
@@ -202,9 +114,4 @@ object Multimodal {
       .withColumn("phash_hamming",
         bit_count(col("phash").bitwiseXOR(phashUdf(col("bytes")))))
       .drop("bytes")
-
-  /** Feature extraction: image bytes → 64-dim float vector (feeds the
-    * Similarity operators). Narrow map, no shuffle. */
-  def extractFeatures(images: DataFrame): DataFrame =
-    images.select(col("image_id"), featUdf(col("bytes")).as("embedding"))
 }

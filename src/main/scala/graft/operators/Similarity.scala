@@ -40,9 +40,6 @@ object Similarity {
     (0 until Dims).map(i =>
       s"$aE[${i + 1}]::DOUBLE * $bE[${i + 1}]::DOUBLE").mkString("(", " + ", ")")
 
-  def cosineCol(a: Column, b: Column): Column =
-    dotCol(a, b) / (sqrt(dotCol(a, a)) * sqrt(dotCol(b, b)))
-
   def cosineSql(aE: String, bE: String): String =
     s"(${dotSql(aE, bE)} / (SQRT(${dotSql(aE, aE)}) * SQRT(${dotSql(bE, bE)})))"
 

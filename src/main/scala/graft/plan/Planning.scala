@@ -1,80 +1,14 @@
 package graft.plan
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.geo.{Cell, Fixtures, Geo, MultiPolygon, Polygon}
 
-/** Driver-side planning steps mirroring the reference's request-time probes
-  * (src/app.py:648-688 `get_grid_id` + builder helpers). These run once per
-  * request against the in-memory region catalog — never per row.
+/** Country-export mode of the reference's request planning
+  * (src/app.py:648-688). The reference's other request-time probes — the
+  * area cap (F12), the exact-region probe (F11) and the largest-overlap
+  * ordering (F13) — run on no engine path; COVERAGE.md lists them as gaps.
   */
 object Planning {
-
-  /** F12 — area guard: geodesic request area must stay under the export cap
-    * (EXPORT_MAX_AREA_SQKM=100000, src/config.py:70-72; enforced at
-    * API/raw_data.py:421-432). */
-  val MaxAreaKm2: Double = 100000.0
-
-  def checkArea(geom: MultiPolygon, maxKm2: Double = MaxAreaKm2): Double = {
-    val area = geom.polys.map(Geo.geodesicAreaKm2).sum
-    require(area <= maxKm2,
-      f"request area $area%.1f km² exceeds the $maxKm2%.0f km² export cap")
-    area
-  }
-
-  /** F11 — exact-region probe: is the request polygon (snap-quantized, the
-    * ST_SnapToGrid(1e-5) trick of builder.py:73-82) identical to a catalog
-    * region? If so the engine switches to country-export mode. */
-  def exactRegionMatch(
-      geom: MultiPolygon,
-      regions: Seq[Fixtures.Region] = Fixtures.regions,
-      tol: Double = 1e-5): Option[Int] = {
-    if (geom.polys.size != 1) return None
-    val q = geom.polys.head.shell.pts
-    def matches(r: Polygon): Boolean = {
-      val v = r.shell.pts
-      if (v.length != q.length) return false
-      // rotation-invariant tolerance compare (quantized equality flips at
-      // grid boundaries — the reference's SnapToGrid probe has the same
-      // failure mode; tolerance compare is the robust equivalent)
-      (0 until v.length).exists { rot =>
-        (0 until v.length).forall { i =>
-          val a = q(i); val b = v((i + rot) % v.length)
-          math.abs(a.lon - b.lon) <= tol && math.abs(a.lat - b.lat) <= tol
-        }
-      }
-    }
-    regions.find(r => matches(r.poly)).map(_.cid)
-  }
-
-  /** F13 — largest-overlap ordering: regions ordered by descending
-    * intersection area with the request (builder.py:59-70 ST_Area(
-    * ST_Intersection...)). Computed on the fine-cell cover: full cells count
-    * their geodesic area, boundary cells half — deterministic, catalog-sized
-    * work. */
-  def regionsByOverlap(
-      geom: MultiPolygon,
-      regions: Seq[Fixtures.Region] = Fixtures.regions,
-      res: Int = 9): Seq[(Int, Double)] = {
-    val reqCovers = geom.polys.map(p => Cell.cover(p, res))
-    val reqFull = reqCovers.flatMap(_._1).toSet
-    val reqPart = reqCovers.flatMap(_._2).toSet
-    def cellAreaKm2(c: Long): Double = {
-      val b = Cell.bounds(c)
-      Geo.geodesicAreaKm2(Polygon(graft.geo.Ring(Array(
-        graft.geo.Pt(b.minLon, b.minLat), graft.geo.Pt(b.maxLon, b.minLat),
-        graft.geo.Pt(b.maxLon, b.maxLat), graft.geo.Pt(b.minLon, b.maxLat)))))
-    }
-    regions.map { r =>
-      val (rf, rp) = Cell.cover(r.poly, res)
-      val overlap =
-        (rf ++ rp).toSeq.collect {
-          case c if reqFull.contains(c) && rf.contains(c) => cellAreaKm2(c)
-          case c if reqFull.contains(c) || reqPart.contains(c) => cellAreaKm2(c) / 2
-        }.sum
-      (r.cid, overlap)
-    }.filter(_._2 > 0).sortBy { case (cid, a) => (-a, cid) }
-  }
 
   /** F10 — country-export prefilter: in country-export mode the geometry
     * predicate is REPLACED by a containment test on the precomputed

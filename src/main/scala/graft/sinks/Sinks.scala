@@ -181,10 +181,4 @@ object Sinks {
         .getBytes(StandardCharsets.UTF_8),
       "</Document></kml>".getBytes(StandardCharsets.UTF_8))
   }
-
-  /** S7 — tile tree: one directory per (z, tx, ty), the pmtiles layout
-    * analogue; partition pruning makes single-tile reads O(tile). */
-  def tileTree(tiled: DataFrame, outDir: String): Unit =
-    tiled.write.mode(SaveMode.Overwrite)
-      .partitionBy("z", "tx", "ty").parquet(outDir)
 }

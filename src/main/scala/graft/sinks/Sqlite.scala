@@ -37,14 +37,13 @@ object Sqlite {
       while (i >= 0) { out(i) = (0x80 | (x & 0x7f)).toByte; x >>>= 7; i -= 1 }
       return out
     }
-    var v = v0
-    if (v >= 0 && v <= 0x7f) Array(v.toByte)
+    if (v0 <= 0x7f) Array(v0.toByte)
     else {
       // up to 9 bytes, big-endian 7-bit groups, high bit = continuation
       val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
       var i = 0
       val groups = scala.collection.mutable.ArrayBuffer.empty[Byte]
-      var x = v
+      var x = v0
       while (i < 9 && (x != 0 || groups.isEmpty)) {
         groups += (x & 0x7f).toByte
         x >>>= 7

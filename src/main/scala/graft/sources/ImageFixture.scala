@@ -175,8 +175,8 @@ object ImageFixture {
 
   /** Write as the engine's Iceberg-emulated table: data clustered by cell
     * (range-partitioned on the space-filling curve = CLUSTER analogue), plus
-    * a manifest sidecar with per-file cell min/max for pruning and a
-    * snapshot log (SURVEY.md §1.3, §7.1). Snapshot 1. */
+    * a manifest sidecar with per-file cell min/max and a snapshot log
+    * (SURVEY.md §1.3, §7.1). Snapshot 1. */
   def write(spark: SparkSession, n: Long, baseDir: String, partitions: Int = 32): Unit = {
     import spark.implicits._
     val df = ImageTable.derive(generate(spark, n, partitions))
@@ -190,7 +190,7 @@ object ImageFixture {
       .option("compression", "uncompressed")
       .parquet(s"$baseDir/data")
     // manifest: per-file cell range + owning snapshot (what Iceberg keeps in
-    // manifest files; snapshot_id makes time travel a manifest filter)
+    // manifest files; `append` reads its file list to find the new files)
     val manifest = spark.read.parquet(s"$baseDir/data")
       .groupBy(input_file_name().as("file"))
       .agg(min("cell").as("cell_min"), max("cell").as("cell_max"),
@@ -202,13 +202,13 @@ object ImageFixture {
       .write.mode(SaveMode.Overwrite).parquet(s"$baseDir/snapshot")
   }
 
+  private def uriPath(s: String): String =
+    try new java.net.URI(s).getPath catch { case _: Exception => s }
+
   /** Append-commit (Iceberg snapshot semantics): new data files land in the
     * data directory, the manifest gains rows tagged with the NEW snapshot id
     * (an append commit never rewrites existing manifest rows or data files),
     * and the snapshot log grows by one. Returns the new snapshot id. */
-  private def uriPath(s: String): String =
-    try new java.net.URI(s).getPath catch { case _: Exception => s }
-
   def append(spark: SparkSession, rows: DataFrame, baseDir: String,
       partitions: Int = 4): Long = {
     import spark.implicits._
@@ -243,47 +243,4 @@ object ImageFixture {
   /** Current-snapshot read (all committed files). */
   def read(spark: SparkSession, baseDir: String): DataFrame =
     spark.read.parquet(s"$baseDir/data")
-
-  /** Manifest-pruned scan planning (the Iceberg read path): select only the
-    * data files whose [cell_min, cell_max] range intersects the requested
-    * cell range, BEFORE any parquet footer is opened. At 10^12 rows the
-    * manifest is the only thing the planner reads for a country-sized
-    * extract — file-level pruning ahead of row-group pruning; the returned
-    * frame still carries the cell filter so row groups inside surviving
-    * files prune too. */
-  def readPrunedByCell(spark: SparkSession, baseDir: String,
-      cellMin: Long, cellMax: Long): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.parquet(s"$baseDir/manifest")
-      .filter(col("cell_max") >= cellMin && col("cell_min") <= cellMax)
-      .select("file").as[String].collect()
-    if (files.isEmpty) spark.read.parquet(s"$baseDir/data").limit(0)
-    else spark.read.parquet(files.toIndexedSeq: _*)
-      .filter(col("cell") >= cellMin && col("cell") <= cellMax)
-  }
-
-  /** Time travel: read the table AS OF `snapshotId` — a manifest filter
-    * selecting only files committed at or before that snapshot, exactly how
-    * Iceberg resolves a historical read (no data rewrite, no tombstones). */
-  def readSnapshot(spark: SparkSession, baseDir: String, snapshotId: Long): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.parquet(s"$baseDir/manifest")
-      .filter(col("snapshot_id") <= snapshotId)
-      .select("file").as[String].collect()
-    require(files.nonEmpty, s"no files at snapshot $snapshotId")
-    spark.read.parquet(files.toIndexedSeq: _*)
-  }
-
-  /** Incremental read: rows added by snapshots in (fromExclusive, to] — the
-    * replication-diff source for the R1 upsert stream, again purely a
-    * manifest filter. */
-  def readIncremental(spark: SparkSession, baseDir: String,
-      fromExclusive: Long, to: Long = Long.MaxValue): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.parquet(s"$baseDir/manifest")
-      .filter(col("snapshot_id") > fromExclusive && col("snapshot_id") <= to)
-      .select("file").as[String].collect()
-    if (files.isEmpty) spark.read.parquet(s"$baseDir/data").limit(0)
-    else spark.read.parquet(files.toIndexedSeq: _*)
-  }
 }

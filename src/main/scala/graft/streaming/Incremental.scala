@@ -1,16 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.operators.SpatialJoin
 
 /** Incremental maintenance, mirroring the reference's replication pipeline:
   *  - R1: minutely batch upsert of changed features (backend/replication,
   *    osm2pgsql apply) → MERGE-style latest-wins upsert;
-  *  - R2: timestamp-windowed re-assignment of precomputed spatial columns
-  *    (backend/field_update:241-310) → re-run the assignment join over the
-  *    window only, idempotent overwrite;
   *  - R3: freshness watermark (planet_osm_replication_status.importdate,
   *    builder.py:733-735) → max committed timestamp.
   */
@@ -30,72 +26,7 @@ object Incremental {
       .drop("__rn", "__src")
   }
 
-  /** R2 — windowed re-assignment: recompute region assignment for points
-    * whose `ts` falls in [start, end); untouched rows pass through. */
-  def reassignWindow(
-      spark: SparkSession,
-      assigned: DataFrame, // (pid, lon, lat, ts, cids)
-      start: java.sql.Timestamp,
-      end: java.sql.Timestamp): DataFrame = {
-    val inWin = col("ts") >= lit(start) && col("ts") < lit(end)
-    val stale = assigned.filter(inWin).drop("cids")
-    val fresh = SpatialJoin.assignRegionsKeep(
-      spark, stale, keep = Seq("lon", "lat", "ts"))
-    assigned.filter(!inWin).unionByName(fresh.select(assigned.columns.map(col).toIndexedSeq: _*))
-  }
-
   /** R3 — freshness watermark of a lineage/snapshot table. */
   def watermark(snapshot: DataFrame, tsCol: String = "committed_at"): Long =
     snapshot.agg(max(col(tsCol))).collect().head.getLong(0)
-
-  // ---- Structured Streaming replication apply --------------------------------
-
-  final case class FeatureUpdate(id: Long, version: Long, payload: String)
-  final case class VersionState(maxVersion: Long)
-
-  /** R1 as a STREAM: the reference's minutely replication apply
-    * (backend/replication — osmium diffs → osm2pgsql upsert) expressed as
-    * custom keyed state over flatMapGroupsWithState: per feature id the state
-    * holds the highest applied version; a micro-batch emits only strictly
-    * newer versions (stale/duplicate diffs are suppressed exactly once,
-    * regardless of arrival order across batches). State size is O(1) per
-    * live key and partitioned by id — scales with executors. */
-  def latestWinsStream(updates: org.apache.spark.sql.Dataset[FeatureUpdate]):
-      org.apache.spark.sql.Dataset[FeatureUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import updates.sparkSession.implicits._
-    updates.groupByKey(_.id)
-      .flatMapGroupsWithState[VersionState, FeatureUpdate](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[FeatureUpdate], state: GroupState[VersionState]) =>
-          val cur = state.getOption.map(_.maxVersion).getOrElse(Long.MinValue)
-          val best = rows.maxBy(_.version)
-          if (best.version > cur) {
-            state.update(VersionState(best.version))
-            Iterator.single(best)
-          } else Iterator.empty
-      }
-  }
-
-  /** Streaming GeoJSON export: every micro-batch's features append to the
-    * SAME resumable parts directory via the lineage commit protocol —
-    * `foreachBatch` + per-batch subdirectories keyed by batch id, so a
-    * restarted query (checkpointed batch ids) never double-writes a batch
-    * and the export directory is always the union of committed batches.
-    * Returns the started query; caller owns its lifecycle. */
-  def streamGeojsonExport(
-      features: DataFrame, // streaming frame with feature-model columns
-      outDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    features.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.lineage.Lineage.exportResumable(
-          graft.plan.PlanBuilder.toGeoJsonFeature(batch),
-          s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
 }

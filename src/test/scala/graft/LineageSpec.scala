@@ -7,7 +7,6 @@ import graft.lineage.Lineage
 /** Kill-and-resume: a failed export must resume from per-partition lineage
   * and produce output identical to a single-shot run (north_rule R4). */
 class LineageSpec extends SparkSpec {
-  import spark.implicits._
 
   private def lines = spark.range(0, 1000, 1, 8)
     .select(concat(lit("""{"i":"""), col("id"), lit("}")).as("line"))

@@ -3,9 +3,8 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.geo.{Fixtures, MultiPolygon}
-import graft.model.{GeomType, SnapshotRequest, TypeFilters}
+import graft.model.{SnapshotRequest, TypeFilters}
 import graft.plan.PlanBuilder
-import graft.operators.SpatialJoin
 import graft.sinks.Sinks
 import graft.sources.ImageFixture
 
@@ -81,24 +80,5 @@ class SinksSpec extends SparkSpec {
     Sinks.json(extract, jDir)
     assert(spark.read.parquet(pDir).count() == extract.count())
     assert(spark.read.json(jDir).count() == extract.count())
-  }
-
-  test("tile tree: partitioned layout prunes to one tile") {
-    val dir = Files.createTempDirectory("tiles").toString
-    val pts = graft.sources.ImageTable.derive(images)
-      .select(col("image_id").as("pid"), col("lon"), col("lat"))
-    val tiled = SpatialJoin.tileAssign(pts, 2, 3)
-    Sinks.tileTree(tiled, dir)
-    val all = spark.read.parquet(dir)
-    assert(all.count() == tiled.count())
-    // single-tile read only touches that partition directory
-    val one = tiled.collect().head
-    val single = spark.read.parquet(dir)
-      .filter(col("z") === one.getInt(1) && col("tx") === one.getLong(2) &&
-        col("ty") === one.getLong(3))
-    val plan = single.queryExecution.executedPlan.toString
-    assert(single.count() > 0)
-    assert(plan.contains("PartitionFilters") || plan.contains("partitionFilters"),
-      s"expected partition pruning in plan")
   }
 }
