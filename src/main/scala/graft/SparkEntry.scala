@@ -29,11 +29,10 @@ object SparkEntry {
       sys.env.getOrElse("SPARK_GRAFT_ENTRY_DIR", "/root/testdata/sf0.001"))
 
   /** The fused flagship plan (Bench.flagship shape): extract → region
-    * assignment carrying lon/lat through the aggregation → tile explode on
-    * the SAME pipeline. One scan, one shuffle — the assignment agg reuses the
-    * derived table's pid partitioning, and the tile explode is narrow; the
-    * former two-branch join-back plan scanned the extract twice and shuffled
-    * the ×5-exploded tile side. */
+    * assignment passing lon/lat through → tile explode on the SAME
+    * pipeline. One scan; the broadcast assignment and the tile explode are
+    * narrow, so the only exchange is the derived point table's own DISTINCT
+    * on pid. */
   def flagshipEntry(spark: SparkSession, dir: String): DataFrame = {
     // kernel PIP (Kernels.pointInMultiPolygon): the literal pipCol tree,
     // pushed below the derived-point projection, exploded into a ~40 KB

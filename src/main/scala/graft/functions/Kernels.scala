@@ -4,11 +4,12 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{coalesce, lit}
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.geo.{Cell, Geo, MultiPolygon, Polygon}
+import graft.geo.{Cell, Fixtures, Geo, MultiPolygon, Polygon}
+import graft.operators.Multimodal
 
 /** Hot-path kernels, each reached as ONE Spark `StaticInvoke`/`Invoke` call
   * into plain JIT-compiled Scala.
@@ -29,14 +30,16 @@ import graft.geo.{Cell, Geo, MultiPolygon, Polygon}
   * Null convention: every call propagates null — a null argument gives null
   * and the kernel is not called. Where a result must stay non-null the
   * default is a `coalesce` at the call site:
-  *  - [[cellId]], [[pointInMultiPolygon]], [[regionRefine]],
-  *    [[featureIntersects]]: null (a filter drops the row, as for false);
+  *  - [[cellId]], [[pointInMultiPolygon]], [[featureIntersects]]: null (a
+  *    filter drops the row, as for false);
   *  - [[cellIn]]: null, as `Column.isin` gives; an empty set is a plain
   *    `false` for every row, null cell included, as `isin()` gives;
   *  - [[dot]]: null, and also null when an array is shorter than `dims` or
   *    holds a null element (element_at's null through the Column sum);
-  *  - [[regionCids]]: null; `SpatialJoin` passes a non-null array, and a
-  *    null word inside it sets no bit;
+  *  - [[regionCids]]: "0", the no-region default, through a `coalesce`
+  *    (a point whose cell has no cover row has null candidates);
+  *  - [[phash]]: null; `Multimodal.verifyPayloadLite`'s hamming is then
+  *    null and its `<= 8` filter drops the row;
   *  - [[pidRings]]: null; `GeoCols.derivedFeatures` coalesces to no rings;
   *  - [[signBucket]]: null; `Similarity.bucketCol` coalesces to 0, which
   *    the kernel also returns for a short array or a null element.
@@ -82,18 +85,21 @@ object Kernels {
     invoke(new Pip(geom), "contains", BooleanType, Seq(lon, lat),
       Seq(DoubleType, DoubleType))
 
-  /** Point inside `catalog(pos)`; `pos` is a catalog position, not a cid. */
-  def regionRefine(catalog: Seq[Polygon], pos: Column, lon: Column,
+  /** Comma-joined ascending distinct cids of the candidate regions holding
+    * the point, "0" when none does. `catalog` is sorted by cid; each
+    * candidate is `pos * 2 + refine` for the region at catalog position
+    * `pos`, ascending, and only a candidate with `refine = 1` takes the
+    * exact point-in-polygon test. */
+  def regionCids(catalog: Seq[Fixtures.Region], cands: Column, lon: Column,
       lat: Column): Column =
-    invoke(new RegionRefine(catalog.toArray), "contains", BooleanType,
-      Seq(pos, lon, lat), Seq(IntegerType, DoubleType, DoubleType))
+    coalesce(invoke(new RegionCids(catalog.map(_.poly).toArray,
+      catalog.map(_.cid).toArray), "assign", StringType, Seq(cands, lon, lat),
+      Seq(ArrayType(IntegerType), DoubleType, DoubleType)), lit("0"))
 
-  /** Comma-joined ascending distinct cids of the positions set in `words`,
-    * "0" when none is: bit b of word w is catalog position 64w + b, and
-    * `cids` lists the catalog's cids by position, ascending. */
-  def regionCids(cids: Seq[Int], words: Column): Column =
-    invoke(new RegionCids(cids.toArray), "decode", StringType, Seq(words),
-      Seq(ArrayType(LongType)))
+  /** 64-bit average hash of an image payload ([[Multimodal.payloadInfo]]). */
+  def phash(bytes: Column): Column =
+    static(Kernels.getClass, "phashAt", LongType, returnNullable = false,
+      Seq(bytes), Seq(BinaryType))
 
   /** Kind-aware feature × request-geometry intersect over the rings model
     * ([[Geo.featureIntersectsRings]]). */
@@ -139,32 +145,29 @@ object Kernels {
     override def toString: String = s"Pip(${geom.polys.length} polygons)"
   }
 
-  final class RegionRefine(catalog: Array[Polygon]) extends Serializable {
-    def contains(pos: Int, lonV: Double, latV: Double): Boolean =
-      Geo.pointInPolygon(lonV, latV, catalog(pos))
-    override def toString: String = s"RegionRefine(${catalog.length} regions)"
-  }
-
-  final class RegionCids(cids: Array[Int]) extends Serializable {
-    def decode(words: ArrayData): UTF8String = {
+  final class RegionCids(polys: Array[Polygon], cids: Array[Int])
+      extends Serializable {
+    def assign(cands: ArrayData, lonV: Double, latV: Double): UTF8String = {
       val sb = new java.lang.StringBuilder
       var last = 0
-      var w = 0
-      while (w < words.numElements()) {
-        var bits = if (words.isNullAt(w)) 0L else words.getLong(w)
-        while (bits != 0L) { // set bits, lowest position first
-          val cid = cids(64 * w + java.lang.Long.numberOfTrailingZeros(bits))
+      var i = 0
+      while (i < cands.numElements()) {
+        val c = cands.getInt(i)
+        val pos = c >> 1
+        if ((c & 1) == 0 || Geo.pointInPolygon(lonV, latV, polys(pos))) {
+          val cid = cids(pos)
           if (sb.length == 0) sb.append(cid)
           else if (cid != last) sb.append(',').append(cid) // repeats are adjacent
           last = cid
-          bits &= bits - 1
         }
-        w += 1
+        i += 1
       }
-      UTF8String.fromString(if (sb.length == 0) "0" else sb.toString)
+      if (sb.length == 0) Zero else UTF8String.fromString(sb.toString)
     }
     override def toString: String = s"RegionCids(${cids.length} regions)"
   }
+
+  private val Zero = UTF8String.fromString("0")
 
   final class FeatureIntersects(geom: MultiPolygon) extends Serializable {
     /** Kind dispatches on cached UTF8String constants, so the hot refine
@@ -233,6 +236,8 @@ object Kernels {
   }
 
   // ---- static kernels -------------------------------------------------------
+
+  def phashAt(bytes: Array[Byte]): Long = Multimodal.payloadInfo(bytes)._3
 
   /** Bit parity with the unrolled Column tree: accumulation seeded by the
     * FIRST term (not 0.0), exactly `terms.reduce(_ + _)` — identical IEEE

@@ -1,10 +1,11 @@
 package graft.operators
 
-import java.awt.image.BufferedImage
+import java.awt.image.{BufferedImage, DataBufferByte, PixelInterleavedSampleModel}
 import java.io.ByteArrayInputStream
 import javax.imageio.ImageIO
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels
 import graft.sources.ImageFixture
 
 /** Multimodal column operators: the image payload (`bytes` binary + typed
@@ -89,7 +90,7 @@ object Multimodal {
   // ---- DataFrame-level plumbing ------------------------------------------------
 
   /** (w, h, phash) of a payload: PNG takes the allocation-free lumaHash fast
-    * path; JPEG decodes via the cached reader. */
+    * path; JPEG decodes via the cached reader and hashes the raster bytes. */
   def payloadInfo(bytes: Array[Byte]): (Int, Int, Long) =
     if (PngCodec.isPng(bytes)) {
       val hd = PngCodec.header(bytes)
@@ -102,16 +103,59 @@ object Multimodal {
       }
     } else {
       val img = decode(bytes)
-      (img.getWidth, img.getHeight, ImageFixture.avgHash64(img))
+      (img.getWidth, img.getHeight, rasterHash64(img))
     }
 
-  private val phashUdf = udf((bytes: Array[Byte]) => payloadInfo(bytes)._3)
+  /** [[ImageFixture.avgHash64]] read straight from the interleaved bytes of
+    * a `TYPE_3BYTE_BGR` image, the JPEG reader's colour output: same loops,
+    * same floating-point order, but no allocating `getRGB` per pixel. Any
+    * other type or layout takes `avgHash64` itself. */
+  private def rasterHash64(img: BufferedImage): Long = {
+    val raster = img.getRaster
+    (raster.getSampleModel, raster.getDataBuffer) match {
+      case (sm: PixelInterleavedSampleModel, db: DataBufferByte)
+          if img.getType == BufferedImage.TYPE_3BYTE_BGR && db.getNumBanks == 1 =>
+        val data = db.getData
+        val Array(ro, go, bo) = sm.getBandOffsets
+        val (ps, ss) = (sm.getPixelStride, sm.getScanlineStride)
+        val base = db.getOffset - raster.getSampleModelTranslateY * ss -
+          raster.getSampleModelTranslateX * ps
+        val g = new Array[Double](64)
+        val (w, h) = (img.getWidth, img.getHeight)
+        var i = 0
+        while (i < 64) {
+          val bx = i % 8; val by = i / 8
+          var sum = 0.0; var n = 0
+          var y = by * h / 8
+          val yEnd = math.max(y + 1, (by + 1) * h / 8)
+          while (y < yEnd) {
+            var x = bx * w / 8
+            val xEnd = math.max(x + 1, (bx + 1) * w / 8)
+            while (x < xEnd) {
+              val p = base + y * ss + x * ps
+              sum += 0.299 * (data(p + ro) & 0xFF) + 0.587 * (data(p + go) & 0xFF) +
+                0.114 * (data(p + bo) & 0xFF)
+              n += 1; x += 1
+            }
+            y += 1
+          }
+          g(i) = sum / n
+          i += 1
+        }
+        val mean = g.sum / 64
+        var bits = 0L
+        i = 0
+        while (i < 64) { if (g(i) >= mean) bits |= (1L << i); i += 1 }
+        bits
+      case _ => ImageFixture.avgHash64(img)
+    }
+  }
 
   /** Decode + phash-verify only (the flagship ingest-verify step): replaces
     * the `bytes` column with `phash_hamming`. Narrow map, no shuffle. */
   def verifyPayloadLite(images: DataFrame): DataFrame =
     images
       .withColumn("phash_hamming",
-        bit_count(col("phash").bitwiseXOR(phashUdf(col("bytes")))))
+        bit_count(col("phash").bitwiseXOR(Kernels.phash(col("bytes")))))
       .drop("bytes")
 }

@@ -14,44 +14,40 @@ import graft.functions.{GeoCols, Kernels}
   * backend/sql/update_countries.sql:1) Spark-first, as one path for every
   * catalog:
   *
-  *  - the catalog is sorted by cid once; a region's position in that order
-  *    indexes both the exact refine and the membership bitmask, so the cid
-  *    domain (empty, sparse, negative, repeated) never matters;
-  *  - the dimension side is exploded driver-side into its covering cells at
-  *    `res` via [[Cell.cover]]: one `(cell, region_pos, refine)` row per
-  *    cell; cells fully inside a polygon carry `refine = false` and skip the
-  *    exact point-in-polygon test — the analogue of the reference's GIST
-  *    index recheck-elision;
-  *  - the cover table (|regions| × ~hundreds of cells) is tiny → broadcast
-  *    hash join, NO shuffle on the fact side;
-  *  - the exact refine is one kernel call per candidate row
-  *    ([[Kernels.regionRefine]]), so the whole join stage is one
-  *    WholeStageCodegen span over the scan;
-  *  - the per-point aggregate is `max(1, ceil(n/64))` declarative `bit_or`
-  *    long words over the matched position (8-byte partial state per word,
-  *    map-side combined), decoded by one kernel call
-  *    ([[Kernels.regionCids]]) through the position-ordered cid array:
-  *    ascending by construction, duplicates collapsed, "0" when empty.
+  *  - the catalog is sorted by cid once, and a region is named by its
+  *    position in that order, so the cid domain (empty, sparse, negative,
+  *    repeated) never matters;
+  *  - the dimension side is the regions' covering cells at `res`
+  *    ([[Cell.cover]]), grouped on the driver into ONE row per cell:
+  *    `(cell, cands)`, each candidate `pos * 2 + refine`, ascending. A cell
+  *    fully inside a polygon has `refine = 0` and skips the exact
+  *    point-in-polygon test — the analogue of the reference's GIST index
+  *    recheck elision;
+  *  - that table is tiny (one entry per cell, not per (cell, region)), so it
+  *    is broadcast, and the left join is at most 1:1: one output row per
+  *    input point;
+  *  - one kernel call per point ([[Kernels.regionCids]]) refines the
+  *    flagged candidates and emits the ascending cids, repeats collapsed,
+  *    "0" when none matches or the point's cell has no candidates.
   *
-  * Skew: a dense cell only multiplies a fact row by the number of regions
-  * covering that cell (bounded by the catalog, not the data). Salting
-  * spreads a shuffle keyed on `cell`, and this plan has none: the cover is
-  * broadcast, and the only exchange is the aggregation's, keyed on the
-  * unique point id — so no reducer is hot however many points share a
-  * cell. */
+  * The plan is one narrow stage over the scan: no exchange and no
+  * aggregate, so a dense cell costs only its own rows' refines and no task
+  * or reducer is hot however many points share a cell. */
 object SpatialJoin {
 
-  /** Build the broadcastable cover table: one row per (cell, pos, refine),
-    * `pos` being the region's position in `regions`. */
-  def coverRows(regions: Seq[Fixtures.Region], res: Int): Seq[(Long, Int, Boolean)] =
+  /** The broadcastable cover table: one row per cell, listing the regions
+    * that touch it as `pos * 2 + refine` in ascending order, `pos` being the
+    * region's position in `regions`. */
+  def coverRows(regions: Seq[Fixtures.Region], res: Int): Seq[(Long, Array[Int])] =
     regions.zipWithIndex.flatMap { case (r, pos) =>
       val (full, part) = Cell.cover(r.poly, res)
-      full.toSeq.map(c => (c, pos, false)) ++ part.toSeq.map(c => (c, pos, true))
-    }
+      full.toSeq.map(c => (c, pos * 2)) ++ part.toSeq.map(c => (c, pos * 2 + 1))
+    }.groupMap(_._1)(_._2).toSeq.map { case (c, cands) => (c, cands.sorted.toArray) }
 
   /** points: (pid: Long, lon: Double, lat: Double) → (pid, cids: String)
     * where cids = comma-joined ascending region ids, "0" when none
-    * (reference default `'{0}'`, backend/sql/pre_indexes.sql). */
+    * (reference default `'{0}'`, backend/sql/pre_indexes.sql). One output
+    * row per input row, as the reference's per-feature update gives. */
   def assignRegions(
       spark: SparkSession,
       points: DataFrame,
@@ -59,11 +55,9 @@ object SpatialJoin {
       res: Int = 7): DataFrame =
     assignRegionsKeep(spark, points, regions, res, Nil)
 
-  /** Like [[assignRegions]] but carries `keep` columns through the
-    * aggregation (values are functions of pid, so first() is exact). Lets a
-    * downstream tile explode run in the SAME pipeline instead of re-joining
-    * back to the fact table — one shuffle for the whole
-    * extract→assign→tile flagship instead of two plus a join. */
+  /** Like [[assignRegions]] but passes `keep` columns through, so a
+    * downstream tile explode runs in the same narrow pipeline instead of
+    * re-joining back to the fact table. */
   def assignRegionsKeep(
       spark: SparkSession,
       points: DataFrame,
@@ -72,29 +66,15 @@ object SpatialJoin {
       keep: Seq[String] = Nil): DataFrame = {
     import spark.implicits._
     val catalog = regions.sortBy(_.cid)
-    val cover = coverRows(catalog, res).toDF("cell", "region_pos", "refine")
+    val cover = coverRows(catalog, res).toDF("cell", "cands")
     // reuse a materialized bucket column when the caller carries one at the
     // join resolution (ingest-time derivation — no per-row recompute)
     val withCell =
       if (points.columns.contains("cell") && res == graft.sources.ImageTable.BucketRes)
         points
       else points.withColumn("cell", GeoCols.cellCol(res, col("lon"), col("lat")))
-    val refine = Kernels.regionRefine(catalog.map(_.poly), col("region_pos"),
-      col("lon"), col("lat"))
-    val hit = when(!col("refine") || refine, col("region_pos"))
-    // word w holds positions [64w, 64w + 63]; a null hit (no cover row, or
-    // the refine said no) sets no bit, and a word with no bit set is null
-    val words = (0 until math.max(1, (catalog.size + 63) / 64)).map { w =>
-      bit_or(when(shiftright(col("hit"), 6) === w,
-        call_function("shiftleft", lit(1L), col("hit").bitwiseAND(63)))).as(s"word$w")
-    }
-    val aggs = words ++ keep.map(c => first(col(c)).as(c))
-    val cids = Kernels.regionCids(catalog.map(_.cid),
-      array(words.indices.map(w => col(s"word$w")): _*))
+    val cids = Kernels.regionCids(catalog, col("cands"), col("lon"), col("lat"))
     withCell.join(broadcast(cover), Seq("cell"), "left")
-      .withColumn("hit", hit)
-      .groupBy(col("pid"))
-      .agg(aggs.head, aggs.tail: _*)
       .select((col("pid") +: cids.as("cids") +: keep.map(col)): _*)
   }
 

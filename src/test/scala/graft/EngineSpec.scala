@@ -119,7 +119,19 @@ class EngineSpec extends SparkSpec {
     assignedMatchesOracle(Fixtures.regions :+ r1.copy(cid = r2.cid))
   }
 
-  test("60,000 points in one res-7 cell: broadcast join, one pid exchange, oracle-exact") {
+  test("assignRegions keeps one output row per input row (duplicated pids)") {
+    // every point twice: no per-pid aggregation folds the pair into one row
+    val twice = GeoCols.derivedPoints(spark, sfDir)
+    val got = SpatialJoin.assignRegions(spark, twice.union(twice))
+      .collect().map(r => (r.getLong(0), r.getString(1))).groupBy(_._1)
+    assert(got.size == points.size)
+    points.foreach { case (pid, lon, lat) =>
+      assert(got(pid).map(_._2).toSeq == Seq.fill(2)(oracleCids(Fixtures.regions, lon, lat)),
+        s"pid=$pid ($lon,$lat)")
+    }
+  }
+
+  test("60,000 points in one res-7 cell: broadcast join, no exchange, oracle-exact") {
     // a cell the first region covers only partly, so every point reaches the
     // exact refine
     val cell = Cell.cover(Fixtures.regions.head.poly, 7)._2.min
@@ -134,9 +146,9 @@ class EngineSpec extends SparkSpec {
     val assigned = SpatialJoin.assignRegions(spark, dense.toDF("pid", "lon", "lat"))
     val plan = assigned.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"cover join must broadcast:\n$plan")
-    val exchanges = plan.linesIterator.filter(_.contains(" Exchange ")).toSeq
-    assert(exchanges.size == 1 && exchanges.head.contains("hashpartitioning(pid"),
-      s"expected one exchange keyed on pid:\n$plan")
+    assert(!plan.linesIterator.exists(l =>
+      l.contains(" Exchange ") || l.contains("Aggregate")),
+      s"expected no exchange or aggregate:\n$plan")
     val got = assigned.collect().map(r => (r.getLong(0), r.getString(1))).toMap
     assert(got.size == dense.size)
     dense.foreach { case (pid, lon, lat) =>

@@ -1,6 +1,9 @@
 package graft
 
+import java.awt.image.BufferedImage
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.file.Files
+import javax.imageio.ImageIO
 import org.apache.spark.sql.functions._
 import graft.operators.Multimodal
 import graft.sources.{ImageFixture, ImageTable}
@@ -27,6 +30,28 @@ class FixtureSpec extends SparkSpec {
       else assert(hamming <= 8, s"${r.image_id}: phash drift $hamming bits")
     }
     assert(rows.exists(_.fmt == "jpeg") && rows.exists(_.fmt == "png"))
+  }
+
+  test("JPEG phash from the raster bytes ≡ avgHash64 of the ImageIO decode") {
+    def reference(bytes: Array[Byte]): (java.awt.image.BufferedImage, Long) = {
+      val img = ImageIO.read(new ByteArrayInputStream(bytes))
+      (img, ImageFixture.avgHash64(img))
+    }
+    val jpegs = (0L until 3000L).map(ImageFixture.row).filter(_.fmt == "jpeg")
+    assert(jpegs.size > 500, s"${jpegs.size} JPEG rows")
+    jpegs.foreach { r =>
+      val (img, hash) = reference(r.bytes)
+      assert(img.getType == BufferedImage.TYPE_3BYTE_BGR, r.image_id)
+      assert(Multimodal.payloadInfo(r.bytes)._3 == hash, r.image_id)
+    }
+    // a grayscale JPEG decodes to TYPE_BYTE_GRAY and takes avgHash64 itself
+    val gray = new BufferedImage(24, 16, BufferedImage.TYPE_BYTE_GRAY)
+    gray.getGraphics.drawImage(ImageFixture.pixels("gray", 24, 16), 0, 0, null)
+    val out = new ByteArrayOutputStream
+    assert(ImageIO.write(gray, "jpeg", out))
+    val (img, hash) = reference(out.toByteArray)
+    assert(img.getType == BufferedImage.TYPE_BYTE_GRAY)
+    assert(Multimodal.payloadInfo(out.toByteArray)._3 == hash)
   }
 
   test("captions parse to non-empty tag maps with name key") {

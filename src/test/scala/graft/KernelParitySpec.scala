@@ -86,12 +86,28 @@ class KernelParitySpec extends SparkSpec {
   }
 
   test("region refine ≡ pipCol per catalog region") {
-    val polys = Fixtures.regions.map(_.poly)
-    polys.zipWithIndex.foreach { case (poly, pos) =>
-      assertPointParity(GeoCols.pipCol(poly, col("lon"), col("lat")),
-        Kernels.regionRefine(polys, lit(pos), col("lon"), col("lat")),
+    // one candidate per catalog position: refine-flagged it is the exact
+    // test, unflagged (a full cover cell) it names the region unconditionally
+    val catalog = Fixtures.regions.sortBy(_.cid)
+    def cids(cands: Column) =
+      Kernels.regionCids(catalog, cands, col("lon"), col("lat"))
+    val pts = GeoCols.derivedPoints(spark, sfDir)
+    catalog.zipWithIndex.foreach { case (r, pos) =>
+      val cid = lit(r.cid.toString)
+      val tree = when(GeoCols.pipCol(r.poly, col("lon"), col("lat")), cid)
+        .otherwise(lit("0"))
+      assert(mismatches(pts, tree, cids(array(lit(pos * 2 + 1)))) == 0,
         s"region at position $pos")
+      assert(mismatches(pts, cid, cids(array(lit(pos * 2)))) == 0,
+        s"full cell at position $pos")
     }
+    assert(pts.filter(not(cids(array(lit(1))) === "0")).count() > 0,
+      "no point inside the first region")
+    // a null coordinate, or a point whose cell has no cover row, is "0"
+    assert(nullPoints.filter((col("lon").isNull || col("lat").isNull) &&
+      not(cids(array(lit(1), lit(2))) === "0")).count() == 0)
+    assert(pts.filter(not(cids(lit(null).cast("array<int>")) === "0"))
+      .count() == 0)
   }
 
   test("feature intersect ≡ featureIntersectsRingsUdf") {

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec,
   SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.geo.{Fixtures, MultiPolygon}
 import graft.model.{GeomType, SnapshotRequest}
@@ -16,7 +18,7 @@ import graft.sources.ImageFixture
 
 /** Physical-plan assertions: the shapes that matter at 100 TB must be in the
   * plan, not just intended — filter pushdown to the scan, broadcast joins for
-  * catalog-sized sides, a single exchange for the assignment pipeline, and
+  * catalog-sized sides, no exchange in the assignment pipeline, and
   * whole-stage codegen over the hot path. */
 class PlanQualitySpec extends SparkSpec {
 
@@ -35,6 +37,19 @@ class PlanQualitySpec extends SparkSpec {
       req.geometry, col("kind"), col("lon"), col("lat"), col("cell"),
       col("rings")))
   }
+
+  /** Every physical node, through AQE's current plan and its query stages. */
+  private def physical(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => physical(a.executedPlan)
+    case q: QueryStageExec => physical(q.plan)
+    case o => o +: o.children.flatMap(physical)
+  }
+
+  /** The shuffles and aggregates of `df`'s physical plan, by node name. */
+  private def shufflesAndAggs(df: DataFrame): Seq[String] =
+    physical(df.queryExecution.executedPlan).collect {
+      case n @ (_: ShuffleExchangeExec | _: BaseAggregateExec) => n.nodeName
+    }
 
   private def pushedFilters(df: DataFrame): String =
     df.queryExecution.executedPlan.toString.linesIterator
@@ -57,11 +72,6 @@ class PlanQualitySpec extends SparkSpec {
     val df = ImageFixture.read(spark, tableDir).filter(PlanBuilder.geometryFilter(
       geom, col("kind"), col("lon"), col("lat"), col("cell"), col("rings")))
     df.collect() // AQE: inspect the final executed plan
-    def physical(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => physical(a.executedPlan)
-      case q: QueryStageExec => physical(q.plan)
-      case o => o +: o.children.flatMap(physical)
-    }
     def listSizes(exprs: Seq[Expression]): Seq[Int] = exprs.flatMap(_.collect {
       case In(_, list) => list.size
       case InSet(_, hset) => hset.size
@@ -91,25 +101,9 @@ class PlanQualitySpec extends SparkSpec {
     val assigned = SpatialJoin.assignRegions(spark, pts)
     val plan = assigned.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), "cover join must broadcast")
-    assert(!plan.contains("SortMergeJoin"), "fact side must not shuffle for the join")
-    // exactly one exchange: the final per-point aggregation
-    val exchanges = plan.linesIterator.count(l =>
-      l.contains("Exchange hashpartitioning") || l.contains("Exchange rangepartitioning"))
-    assert(exchanges == 1, s"expected 1 shuffle, found $exchanges:\n${plan.take(3000)}")
-  }
-
-  test("partial aggregation runs map-side before the exchange") {
-    val pts = extractPlan.select(col("image_id").as("pid"),
-      col("lon"), col("lat"), col("cell"))
-    val plan = SpatialJoin.assignRegions(spark, pts)
-      .queryExecution.executedPlan.toString
-    // HashAggregate(partial_bit_or) ... Exchange ... HashAggregate(bit_or)
-    val lines = plan.linesIterator.toSeq
-    val partialIdx = lines.indexWhere(l =>
-      l.contains("Aggregate") && l.contains("partial"))
-    val exchangeIdx = lines.indexWhere(_.contains("Exchange"))
-    assert(partialIdx >= 0 && exchangeIdx >= 0 && exchangeIdx < partialIdx,
-      "partial agg must sit below the exchange (map-side combine)")
+    // one row per cell on the build side: nothing to put back together
+    assert(shufflesAndAggs(assigned).isEmpty,
+      s"exchange or aggregate in the assignment:\n${plan.take(3000)}")
   }
 
   test("whole-stage codegen spans the extract hot path") {
@@ -170,46 +164,44 @@ class PlanQualitySpec extends SparkSpec {
       s"knn leaked ${after - before} persisted RDDs (round slices must be unpersisted)")
   }
 
-  test("254 regions: broadcast cover, one exchange, bit_or words") {
+  test("254 regions: broadcast cover, one row per cell, no exchange") {
     // the reference's countries table holds 254 rows; assert the join shape
     // that must hold at 10^12 fact rows
     val regions254 = TestCatalogs.regions254
-    // cover stays dim-table-sized: 13 B/row in flight, comfortably under the
-    // 10 MB broadcast budget even at the full catalog scale
+    // the cover stays dim-table-sized, one row per cell, each candidate list
+    // ascending by catalog position
     val coverRows = SpatialJoin.coverRows(regions254, 7)
     assert(coverRows.size < 300000, s"cover blew up: ${coverRows.size} rows")
+    assert(coverRows.map(_._1).distinct.size == coverRows.size)
+    assert(coverRows.forall { case (_, cands) =>
+      cands.nonEmpty && cands.sameElements(cands.sorted.distinct) })
     val pts = extractPlan.select(col("image_id").as("pid"), col("lon"), col("lat"))
-    val plan = SpatialJoin.assignRegions(spark, pts, regions254)
-      .queryExecution.executedPlan.toString
+    val assigned = SpatialJoin.assignRegions(spark, pts, regions254)
+    val plan = assigned.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), "254-region cover must broadcast")
-    assert(!plan.contains("SortMergeJoin"), "fact side must not shuffle")
-    val exchanges = plan.linesIterator.count(l =>
-      l.contains("Exchange hashpartitioning") || l.contains("Exchange rangepartitioning"))
-    assert(exchanges == 1, s"expected 1 shuffle, found $exchanges")
-    // four declarative bit_or words, not an object aggregate
-    val partial = plan.linesIterator.find(_.contains("partial_bit_or")).getOrElse("")
-    assert(partial.contains("HashAggregate") &&
-      "partial_bit_or".r.findAllIn(partial).size == 4,
-      s"expected four bit_or words in a HashAggregate:\n${plan.take(3000)}")
-    assert(!plan.contains("ObjectHashAggregate") && !plan.contains("SortAggregate"),
-      s"object/sort aggregate in the assignment:\n${plan.take(3000)}")
+    assert(shufflesAndAggs(assigned).isEmpty,
+      s"exchange or aggregate in the assignment:\n${plan.take(3000)}")
   }
 
   test("fused flagship entry(): one exchange, no join-back of the tile explode") {
     // the r3 plan joined tileAssign(p) back to assignRegions(p) on pid —
     // two scans of the extract plus a shuffle join of the ×5-exploded tile
-    // side; the fused plan carries lon/lat through the assignment agg and
-    // explodes on its output
-    val df = SparkEntry.flagshipEntry(spark, "/root/testdata/sf0.001")
+    // side; the fused plan passes lon/lat through the assignment and
+    // explodes on its output. The one exchange and aggregate left are the
+    // derived point table's own DISTINCT on pid; over a stored images table
+    // (Bench.flagship, perfbench) there are none.
+    val dir = "/root/testdata/sf0.001"
+    val df = SparkEntry.flagshipEntry(spark, dir)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), "cover join must broadcast")
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
       s"tile explode must not be joined back on pid:\n${plan.take(3000)}")
-    val exchanges = plan.linesIterator.count(l =>
-      l.contains("Exchange hashpartitioning") || l.contains("Exchange rangepartitioning"))
-    assert(exchanges == 1,
-      s"fused flagship must have exactly one shuffle, found $exchanges:\n${plan.take(3000)}")
+    assert(shufflesAndAggs(df) == shufflesAndAggs(graft.functions.GeoCols
+      .derivedPoints(spark, dir)), s"assignment adds a shuffle:\n${plan.take(3000)}")
     assert(df.limit(1).count() == 1)
+    val bench = Bench.flagshipPlan(ImageFixture.read(spark, tableDir))
+    assert(shufflesAndAggs(bench).isEmpty,
+      s"exchange or aggregate in Bench.flagship:\n${bench.queryExecution.executedPlan}")
   }
 
   test("mvt tile pipeline: no joins, bounded exchanges (1 uncapped / 2 capped)") {
@@ -259,7 +251,9 @@ class PlanQualitySpec extends SparkSpec {
       .filter(PlanBuilder.geometryFilter(MultiPolygon(Seq(Fixtures.requestPolygon)),
         col("kind"), col("lon"), col("lat"), col("cell"), col("rings")))
     for ((name, df) <- Seq("flagshipEntry" -> SparkEntry.flagshipEntry(spark, sfDir),
-        "geometryFilter over derivedFeatures" -> extract)) {
+        "geometryFilter over derivedFeatures" -> extract,
+        "Bench.flagship (payload decode)" ->
+          Bench.flagshipPlan(ImageFixture.read(spark, tableDir)))) {
       df.collect() // AQE: inspect the final executed plan
       val all = nodes(df.queryExecution.executedPlan, inWsc = false)
       val plan = df.queryExecution.executedPlan.toString
