@@ -244,6 +244,14 @@ object Bench {
       runs.collect { case (n, Left(cls)) => n -> cls })
   }
 
+  /** The fixture table at `dir` is missing or was written before the rings
+    * geometry model. This asks what the files really hold, so it reads a
+    * footer: `ImageFixture.read` passes the engine's schema, whose columns
+    * always include `rings`. */
+  def needsRegen(spark: SparkSession, dir: String): Boolean =
+    !new java.io.File(s"$dir/data/_SUCCESS").exists() ||
+      !spark.read.parquet(s"$dir/data").columns.contains("rings")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -251,9 +259,8 @@ object Bench {
     // ---- fixture (one-time; deterministic, reused across rounds; regen
     // when the stored schema predates the rings geometry model) -------------
     val gen = session(cpus.toInt)
-    val needGen = !new java.io.File(s"$FixtureDir/data/_SUCCESS").exists() ||
-      !ImageFixture.read(gen, FixtureDir).columns.contains("rings")
-    if (needGen) ImageFixture.write(gen, FixtureN, FixtureDir, partitions = 128)
+    if (needsRegen(gen, FixtureDir))
+      ImageFixture.write(gen, FixtureN, FixtureDir, partitions = 128)
     // total images the pipeline processes (the throughput denominator is the
     // full table scanned, as in the reference's country-export sweep)
     val totalImages = ImageFixture.read(gen, FixtureDir).count()

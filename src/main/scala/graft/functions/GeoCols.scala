@@ -559,45 +559,6 @@ object GeoCols {
   val lengthRingsUdf = udf((rings: scala.collection.Seq[scala.collection.Seq[Double]]) =>
     graft.geo.Geo.lengthRings(rings))
 
-  /** GeoJSON geometry object per kind over the rings model — Point /
-    * LineString / MultiLineString / Polygon / MultiPolygon (the row-level
-    * half of ST_AsGeoJSON, builder.py:85-95). Serialization only (sink
-    * side, never a filter predicate), evaluated executor-side. */
-  val geoJsonGeomUdf = udf((kind: String, lon: Double, lat: Double,
-      rings: scala.collection.Seq[scala.collection.Seq[Double]],
-      roles: scala.collection.Seq[Int]) => {
-    // one routing authority: FeatureModel.fromRings groups rings into typed
-    // closed-ring parts (the kml UDF takes the same route) — no third copy
-    // of the roles->parts convention to drift
-    val g = graft.sinks.FeatureModel.fromRings(kind, lon, lat, rings, roles)
-    // single-pass StringBuilder — the nested map/mkString version allocated
-    // an intermediate string per vertex (measured 3x on the geojson sink)
-    val sb = new java.lang.StringBuilder(64)
-    def pt(p: (Double, Double)): Unit = {
-      sb.append('[').append(p._1).append(',').append(p._2).append(']'); ()
-    }
-    def seq[T](xs: Seq[T])(f: T => Unit): Unit = {
-      sb.append('[')
-      var i = 0
-      while (i < xs.length) { if (i > 0) sb.append(','); f(xs(i)); i += 1 }
-      sb.append(']'); ()
-    }
-    def ring(r: Seq[(Double, Double)]): Unit = seq(r)(pt)
-    def geom(tpe: String)(body: => Unit): String = {
-      sb.append("{\"type\":\"").append(tpe).append("\",\"coordinates\":")
-      body
-      sb.append('}')
-      sb.toString
-    }
-    g.gtype match {
-      case 1 => geom("Point")(pt(g.parts.head.head.head))
-      case 2 => geom("LineString")(ring(g.parts.head.head))
-      case 5 => geom("MultiLineString")(seq(g.parts)(p => ring(p.head)))
-      case 3 => geom("Polygon")(seq(g.parts.head)(ring))
-      case _ => geom("MultiPolygon")(seq(g.parts)(p => seq(p)(ring)))
-    }
-  })
-
   // ---- haversine ------------------------------------------------------------
 
   def haversineMetersCol(lon1: Column, lat1: Column, lon2: Column, lat2: Column): Column = {

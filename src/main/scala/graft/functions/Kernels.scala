@@ -10,6 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.geo.{Cell, Fixtures, Geo, MultiPolygon, Polygon}
 import graft.operators.Multimodal
+import graft.sinks.FeatureModel
 
 /** Hot-path kernels, each reached as ONE Spark `StaticInvoke`/`Invoke` call
   * into plain JIT-compiled Scala.
@@ -41,6 +42,10 @@ import graft.operators.Multimodal
   *  - [[phash]]: null; `Multimodal.verifyPayloadLite`'s hamming is then
   *    null and its `<= 8` filter drops the row;
   *  - [[pidRings]]: null; `GeoCols.derivedFeatures` coalesces to no rings;
+  *  - [[geoJsonGeom]]: null, so the whole GeoJSON feature string is null.
+  *    The row UDF it replaced threw on null rings (and on null roles beside
+  *    non-empty rings) and gave a Point for a null kind; no source produces
+  *    any of these nulls;
   *  - [[signBucket]]: null; `Similarity.bucketCol` coalesces to 0, which
   *    the kernel also returns for a short array or a null element.
   * Every argument type is declared, so the analyzer casts another numeric
@@ -108,6 +113,15 @@ object Kernels {
     invoke(new FeatureIntersects(geom), "intersects", BooleanType,
       Seq(kind, lon, lat, rings),
       Seq(StringType, DoubleType, DoubleType, RingsType))
+
+  /** GeoJSON geometry object of a feature over the rings model:
+    * [[FeatureModel.geoJson]] of [[FeatureModel.fromRings]], the rings and
+    * roles read through zero-copy views. */
+  def geoJsonGeom(kind: Column, lon: Column, lat: Column, rings: Column,
+      roles: Column): Column =
+    static(Kernels.getClass, "geoJsonGeomAt", StringType, returnNullable = false,
+      Seq(kind, lon, lat, rings, roles),
+      Seq(StringType, DoubleType, DoubleType, RingsType, ArrayType(IntegerType)))
 
   /** Flat rings of the pid-derived feature ([[ringsFor]]). */
   def pidRings(pid: Column, lon: Column, lat: Column): Column =
@@ -188,6 +202,7 @@ object Kernels {
 
   private val PointU = UTF8String.fromString("point")
   private val LineU = UTF8String.fromString("line")
+  private val PolygonU = UTF8String.fromString("polygon")
 
   final class SignBucket(planes: Array[Array[Double]]) extends Serializable {
     private val projDims = planes(0).length
@@ -225,6 +240,12 @@ object Kernels {
     override def length: Int = a.numElements()
   }
 
+  private final class IntView(a: ArrayData)
+      extends scala.collection.IndexedSeq[Int] {
+    override def apply(i: Int): Int = a.getInt(i)
+    override def length: Int = a.numElements()
+  }
+
   /** One materialized outer level (parts are tiny), inner rings stay views
     * over the Catalyst [[ArrayData]] — no per-row deep conversion. */
   private def ringsView(a: ArrayData): scala.collection.Seq[scala.collection.Seq[Double]] = {
@@ -238,6 +259,19 @@ object Kernels {
   // ---- static kernels -------------------------------------------------------
 
   def phashAt(bytes: Array[Byte]): Long = Multimodal.payloadInfo(bytes)._3
+
+  /** `fromRings` routes "line" and "polygon" and serializes every other
+    * kind as a Point; the cached constants keep the per-row kind test free
+    * of String allocation. */
+  def geoJsonGeomAt(kindU: UTF8String, lonV: Double, latV: Double,
+      ringsA: ArrayData, rolesA: ArrayData): UTF8String = {
+    val kindStr =
+      if (kindU.equals(LineU)) "line"
+      else if (kindU.equals(PolygonU)) "polygon"
+      else "point"
+    UTF8String.fromString(FeatureModel.geoJson(FeatureModel.fromRings(
+      kindStr, lonV, latV, ringsView(ringsA), new IntView(rolesA))))
+  }
 
   /** Bit parity with the unrolled Column tree: accumulation seeded by the
     * FIRST term (not 0.0), exactly `terms.reduce(_ + _)` — identical IEEE

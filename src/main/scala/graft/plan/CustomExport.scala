@@ -3,9 +3,10 @@ package graft.plan
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geo.{Geo, MultiPolygon}
+import graft.lineage.Lineage
 import graft.model.{Category, GeomType, SnapshotRequest, WhereParser}
 import graft.sources.ImageTable
 
@@ -34,7 +35,9 @@ object CustomExport {
   /** Materialize the staged table (explicit parquet staging, not cache():
     * persist is per-session best-effort; the reference's staging table is
     * durable and shared by every category × format job — and at 100 TB a
-    * prefiltered staging parquet is re-readable by later runs for free). */
+    * prefiltered staging parquet is re-readable by later runs for free).
+    * The read-back passes the schema just written, so it starts no
+    * footer-inference job. */
   def stage(spark: SparkSession, images: DataFrame,
       geometry: Option[MultiPolygon], stagingDir: String): DataFrame = {
     var df = ImageTable.derive(images)
@@ -43,7 +46,7 @@ object CustomExport {
         col("lon"), col("lat"), col("cell"), col("rings")))
     }
     df.write.mode(SaveMode.Overwrite).parquet(stagingDir)
-    spark.read.parquet(stagingDir)
+    spark.read.schema(df.schema).parquet(stagingDir)
   }
 
   /** One category's extract over the staged table (types → kind routing,
@@ -172,11 +175,12 @@ object CustomExport {
           graft.sinks.Zip.zipDir(catDir, s"$outDir/${c.name}.zip")
         val n = reported.getOrElse {
           if (formats.contains("parquet"))
-            spark.read.parquet(s"$catDir/parquet").count()
+            spark.read.schema(df.schema).parquet(s"$catDir/parquet").count()
           else if (formats.contains("geojson"))
             // the compacted lineage parquet survives part cleanup;
             // coalesce: SUM over zero manifest rows is NULL (empty category)
-            spark.read.parquet(s"$catDir/geojson/lineage")
+            spark.read.schema(Encoders.product[Lineage.PartMeta].schema)
+              .parquet(s"$catDir/geojson/lineage")
               .agg(coalesce(sum("rowCount"), lit(0L)))
               .collect().head.getLong(0)
           else df.count()
@@ -193,22 +197,22 @@ object CustomExport {
   /** The reference's third entry point: POST /v1/snapshot/plain/
     * (API/raw_data.py:467-496 guards area ≤ 10 km²; app.py:868-881 cursors
     * rows into an in-memory FeatureCollection). Same plan as build(), with a
-    * driver-side area guard and row cap; returns the FeatureCollection JSON. */
+    * driver-side area guard and row cap; returns the FeatureCollection JSON.
+    * One Spark job: each partition ships at most `rowCap + 1` features and
+    * the driver applies the cap to their sum, in partition order, so the
+    * driver holds at most partitions × (`rowCap` + 1) feature strings. (A
+    * `toLocalIterator` ran one job per partition; `limit(rowCap + 1)`
+    * would scan 1, then 4, then 16 partitions, one job each.) */
   def plainSnapshot(images: DataFrame, req: SnapshotRequest,
       maxAreaKm2: Double = 10.0, rowCap: Int = 10000): String = {
     val area = req.geometry.polys.map(Geo.geodesicAreaKm2).sum
     require(area <= maxAreaKm2,
       f"plain path rejects areas over $maxAreaKm2%.0f km² (got $area%.1f)")
     val feats = PlanBuilder.toGeoJsonFeature(PlanBuilder.build(images, req))
-    val it = feats.toLocalIterator()
-    val sb = new StringBuilder("""{"type":"FeatureCollection","features":[""")
-    var n = 0
-    while (it.hasNext) {
-      require(n < rowCap, s"plain path row cap $rowCap exceeded")
-      if (n > 0) sb.append(',')
-      sb.append(it.next().getString(0))
-      n += 1
-    }
-    sb.append("]}").toString
+      .as(Encoders.STRING)
+      .mapPartitions(_.take(rowCap + 1))(Encoders.STRING)
+      .collect()
+    require(feats.length <= rowCap, s"plain path row cap $rowCap exceeded")
+    feats.mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
   }
 }

@@ -219,7 +219,7 @@ object PlanBuilder {
   /** The feature-serialization Column itself — composable into wider plans
     * (e.g. the PMTiles path tile-assigns rows that carry this column). The
     * properties/envelope assembly stays pure-Column; the variable-arity
-    * geometry serializes through the compact executor-side kernel UDF. */
+    * geometry serializes through one kernel call (`Kernels.geoJsonGeom`). */
   def geoJsonFeatureCol(df: DataFrame): Column = {
     val have = df.columns.toSet
     val props = to_json(struct(df.columns.filterNot(graft.sinks.FeatureModel.geomCols)
@@ -230,7 +230,7 @@ object PlanBuilder {
       else if (have("osm_type")) Some(col("osm_type")) else None
     val geomJson = kindCol match {
       case Some(k) if have("rings") =>
-        GeoCols.geoJsonGeomUdf(k, col("lon"), col("lat"), col("rings"),
+        Kernels.geoJsonGeom(k, col("lon"), col("lat"), col("rings"),
           if (have("roles")) col("roles") else array().cast("array<int>"))
       case _ => concat(lit("""{"type":"Point","coordinates":["""),
         col("lon").cast("string"), lit(","), col("lat").cast("string"), lit("]}"))

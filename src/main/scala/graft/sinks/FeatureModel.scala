@@ -7,8 +7,8 @@ import org.apache.spark.sql.types.MapType
   * sinks: geometry-column set, the `kind`/`osm_type` alias, jsonb-style map
   * stringification, and the per-row geometry extraction. FlatGeobuf, GPKG,
   * PGDump and the XML/JSON sinks all consume this; a feature-model change
-  * lands here once. (`GeoCols.geoJsonGeomUdf` is the plan-side twin of the
-  * same model.)
+  * lands here once. (`Kernels.geoJsonGeom` serializes the same model in
+  * the plan, through [[fromRings]] and [[geoJson]].)
   *
   * Geometry storage (the reference's arbitrary OSM geometry, backend/
   * raw.lua:128-180): `rings` array<array<double>> of flat xy rings plus
@@ -92,6 +92,38 @@ object FeatureModel {
       val parts = groupParts(rings, roles, close = true)
       Geom(if (parts.length > 1) 6 else 3, parts)
     case _ => Geom(1, IndexedSeq(IndexedSeq(IndexedSeq((lon, lat)))))
+  }
+
+  /** GeoJSON geometry object of `g` — Point / LineString / MultiLineString /
+    * Polygon / MultiPolygon (the row-level half of ST_AsGeoJSON,
+    * builder.py:85-95). Single-pass StringBuilder: the nested map/mkString
+    * version allocated an intermediate string per vertex (measured 3x on
+    * the geojson sink). */
+  def geoJson(g: Geom): String = {
+    val sb = new java.lang.StringBuilder(64)
+    def pt(p: (Double, Double)): Unit = {
+      sb.append('[').append(p._1).append(',').append(p._2).append(']'); ()
+    }
+    def seq[T](xs: Seq[T])(f: T => Unit): Unit = {
+      sb.append('[')
+      var i = 0
+      while (i < xs.length) { if (i > 0) sb.append(','); f(xs(i)); i += 1 }
+      sb.append(']'); ()
+    }
+    def ring(r: Seq[(Double, Double)]): Unit = seq(r)(pt)
+    def geom(tpe: String)(body: => Unit): String = {
+      sb.append("{\"type\":\"").append(tpe).append("\",\"coordinates\":")
+      body
+      sb.append('}')
+      sb.toString
+    }
+    g.gtype match {
+      case 1 => geom("Point")(pt(g.parts.head.head.head))
+      case 2 => geom("LineString")(ring(g.parts.head.head))
+      case 5 => geom("MultiLineString")(seq(g.parts)(p => ring(p.head)))
+      case 3 => geom("Polygon")(seq(g.parts.head)(ring))
+      case _ => geom("MultiPolygon")(seq(g.parts)(p => seq(p)(ring)))
+    }
   }
 
   /** Row-side geometry reader over column POSITIONS (serializable, usable

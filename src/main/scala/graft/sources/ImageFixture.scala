@@ -3,8 +3,9 @@ package graft.sources
 import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
 import javax.imageio.ImageIO
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Deterministic image+caption fixture generator (FIXTURES.md §1): the
   * engine's replacement for the reference's pokhara.osm.pbf fixture
@@ -173,74 +174,97 @@ object ImageFixture {
     spark.range(0, n, 1, partitions).as[Long].map(row _).toDF()
   }
 
-  /** Write as the engine's Iceberg-emulated table: data clustered by cell
-    * (range-partitioned on the space-filling curve = CLUSTER analogue), plus
-    * a manifest sidecar with per-file cell min/max and a snapshot log
-    * (SURVEY.md §1.3, §7.1). Snapshot 1. */
-  def write(spark: SparkSession, n: Long, baseDir: String, partitions: Int = 32): Unit = {
-    import spark.implicits._
-    val df = ImageTable.derive(generate(spark, n, partitions))
-    // uncompressed: the payload column is already-compressed PNG/JPEG, and
-    // the snappy codec's JNI critical sections (GCLocker) collide with the
-    // humongous byte-array allocations of the vectorized reader at 32 scan
-    // threads — measured multi-second young-GC stalls
-    df.repartitionByRange(partitions, col("cell"))
+  /** Manifest rows: per-file cell range and row count, tagged with the
+    * snapshot that added the file (what Iceberg keeps in manifest files;
+    * `append` reads its file list to find the new files). */
+  private val ManifestSchema = StructType(Seq(
+    StructField("file", StringType), StructField("cell_min", LongType),
+    StructField("cell_max", LongType), StructField("rows", LongType),
+    StructField("snapshot_id", LongType)))
+
+  /** Snapshot log: one row per commit. */
+  private val SnapshotSchema = StructType(Seq(
+    StructField("snapshot_id", LongType), StructField("row_count", LongType),
+    StructField("committed_at", LongType)))
+
+  /** Cell-clustered data write: range-partitioned on the space-filling curve
+    * (the CLUSTER analogue), sorted by cell within each file. Uncompressed:
+    * the payload column is already-compressed PNG/JPEG, and the snappy
+    * codec's JNI critical sections (GCLocker) collide with the humongous
+    * byte-array allocations of the vectorized reader at 32 scan threads —
+    * measured multi-second young-GC stalls. */
+  private def writeData(rows: DataFrame, baseDir: String, partitions: Int,
+      mode: SaveMode): Unit =
+    ImageTable.derive(rows)
+      .repartitionByRange(partitions, col("cell"))
       .sortWithinPartitions("cell")
-      .write.mode(SaveMode.Overwrite)
+      .write.mode(mode)
       .option("compression", "uncompressed")
       .parquet(s"$baseDir/data")
-    // manifest: per-file cell range + owning snapshot (what Iceberg keeps in
-    // manifest files; `append` reads its file list to find the new files)
-    val manifest = spark.read.parquet(s"$baseDir/data")
-      .groupBy(input_file_name().as("file"))
-      .agg(min("cell").as("cell_min"), max("cell").as("cell_max"),
-        count(lit(1)).as("rows"))
-      .withColumn("snapshot_id", lit(1L))
-    manifest.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/manifest")
-    Seq((1L, n, System.currentTimeMillis()))
-      .toDF("snapshot_id", "row_count", "committed_at")
-      .write.mode(SaveMode.Overwrite).parquet(s"$baseDir/snapshot")
+
+  /** Commit `files` as snapshot `sid`: their manifest rows (one aggregate,
+    * collected once; one row per file that holds rows) and the snapshot log
+    * entry with the rows they add. Returns the added row count. */
+  private def commit(spark: SparkSession, baseDir: String, files: Seq[String],
+      sid: Long, mode: SaveMode): Long = {
+    val rows =
+      if (files.isEmpty) Array.empty[Row]
+      else spark.read.schema(ImageTable.Schema).parquet(files: _*)
+        .groupBy(input_file_name().as("file"))
+        .agg(min("cell"), max("cell"), count(lit(1)))
+        .withColumn("snapshot_id", lit(sid))
+        .collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), ManifestSchema)
+      .coalesce(1).write.mode(mode).parquet(s"$baseDir/manifest")
+    val added = rows.map(_.getLong(3)).sum
+    spark.createDataFrame(java.util.List.of(
+        Row(sid, added, System.currentTimeMillis())), SnapshotSchema)
+      .write.mode(mode).parquet(s"$baseDir/snapshot")
+    added
+  }
+
+  /** Write as the engine's Iceberg-emulated table: data clustered by cell,
+    * plus a manifest sidecar with per-file cell min/max and a snapshot log
+    * (SURVEY.md §1.3, §7.1). Snapshot 1. */
+  def write(spark: SparkSession, n: Long, baseDir: String, partitions: Int = 32): Unit = {
+    writeData(generate(spark, n, partitions), baseDir, partitions, SaveMode.Overwrite)
+    commit(spark, baseDir, dataFiles(spark, baseDir), 1L, SaveMode.Overwrite)
+    ()
   }
 
   private def uriPath(s: String): String =
     try new java.net.URI(s).getPath catch { case _: Exception => s }
 
+  /** The data files of the table, listed without opening any. */
+  private def dataFiles(spark: SparkSession, baseDir: String): Seq[String] =
+    read(spark, baseDir).inputFiles.toIndexedSeq
+
   /** Append-commit (Iceberg snapshot semantics): new data files land in the
     * data directory, the manifest gains rows tagged with the NEW snapshot id
     * (an append commit never rewrites existing manifest rows or data files),
-    * and the snapshot log grows by one. Returns the new snapshot id. */
+    * and the snapshot log grows by one. Every read of the table's own files
+    * passes the schema the engine wrote, so no read infers one. Returns the
+    * new snapshot id. */
   def append(spark: SparkSession, rows: DataFrame, baseDir: String,
       partitions: Int = 4): Long = {
     import spark.implicits._
-    val known = spark.read.parquet(s"$baseDir/manifest")
+    val known = spark.read.schema(ManifestSchema).parquet(s"$baseDir/manifest")
       .select("file").as[String].collect().map(uriPath).toSet
-    val sid = spark.read.parquet(s"$baseDir/snapshot")
-      .agg(max("snapshot_id")).as[Long].head() + 1
-    ImageTable.derive(rows)
-      .repartitionByRange(partitions, col("cell"))
-      .sortWithinPartitions("cell")
-      .write.mode(SaveMode.Append)
-      .option("compression", "uncompressed")
-      .parquet(s"$baseDir/data")
+    val sid = spark.read.schema(SnapshotSchema).parquet(s"$baseDir/snapshot")
+      .select("snapshot_id").as[Long].collect().max + 1
+    writeData(rows, baseDir, partitions, SaveMode.Append)
     // an append commit touches only the NEW files: diff the file LISTING
     // (no data scan) against the manifest, then aggregate just those files —
     // O(batch) per commit, never O(table)
-    val newFiles = spark.read.parquet(s"$baseDir/data").inputFiles
-      .filterNot(f => known(uriPath(f)))
-    val newManifest = spark.read.parquet(newFiles.toIndexedSeq: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(min("cell").as("cell_min"), max("cell").as("cell_max"),
-        count(lit(1)).as("rows"))
-      .withColumn("snapshot_id", lit(sid))
-    newManifest.write.mode(SaveMode.Append).parquet(s"$baseDir/manifest")
-    val added = newManifest.agg(coalesce(sum("rows"), lit(0L))).as[Long].head()
-    Seq((sid, added, System.currentTimeMillis()))
-      .toDF("snapshot_id", "row_count", "committed_at")
-      .write.mode(SaveMode.Append).parquet(s"$baseDir/snapshot")
+    commit(spark, baseDir, dataFiles(spark, baseDir).filterNot(f => known(uriPath(f))),
+      sid, SaveMode.Append)
     sid
   }
 
-  /** Current-snapshot read (all committed files). */
+  /** Current-snapshot read (all committed files), with the schema the engine
+    * wrote: no footer is opened until a query runs. A question about what the
+    * files on disk really hold (an old table without `rings`) needs a plain
+    * `spark.read.parquet` footer read instead. */
   def read(spark: SparkSession, baseDir: String): DataFrame =
-    spark.read.parquet(s"$baseDir/data")
+    spark.read.schema(ImageTable.Schema).parquet(s"$baseDir/data")
 }

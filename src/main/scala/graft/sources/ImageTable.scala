@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.GeoCols
 
 /** The engine's one fact table (BASELINE.json input_hint):
@@ -27,6 +28,27 @@ import graft.functions.GeoCols
 object ImageTable {
 
   val BucketRes = 7
+
+  /** The stored table's schema: [[derive]] over the raw rows, every field
+    * nullable as on any Parquet read. The engine writes every file of the
+    * table, so its reads pass this instead of inferring it from a footer
+    * (Iceberg keeps the schema in table metadata, never in the data files);
+    * FixtureSpec pins it to the footers of a written and an appended table. */
+  val Schema: StructType = StructType(Seq(
+    StructField("image_id", StringType),
+    StructField("bytes", BinaryType),
+    StructField("w", IntegerType),
+    StructField("h", IntegerType),
+    StructField("fmt", StringType),
+    StructField("caption", StringType),
+    StructField("phash", LongType),
+    StructField("lon", DoubleType),
+    StructField("lat", DoubleType),
+    StructField("tags", MapType(StringType, StringType)),
+    StructField("kind", StringType),
+    StructField("cell", LongType),
+    StructField("rings", ArrayType(ArrayType(DoubleType))),
+    StructField("roles", ArrayType(IntegerType))))
 
   private def unit(h: Column): Column =
     (pmod(h, lit(1000000000L))).cast("double") / lit(1.0e9)

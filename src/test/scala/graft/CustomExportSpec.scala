@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.geo.{Fixtures, MultiPolygon}
 import graft.model.{Category, GeomType, SnapshotRequest, TypeFilters}
@@ -177,5 +178,48 @@ class CustomExportSpec extends SparkSpec {
     val parsed = spark.read.json(Seq(fc).toDS)
     assert(parsed.select(col("type")).as[String].head() == "FeatureCollection")
     assert(parsed.select(size(col("features"))).as[Int].head() > 3)
+  }
+
+  test("plain path: one Spark job, byte-identical to a driver-iterated concatenation") {
+    val images = ImageFixture.read(spark, baseDir)
+    assert(images.inputFiles.length >= 4)
+    val big = SnapshotRequest(geometry = geom)
+    val feats = PlanBuilder.toGeoJsonFeature(PlanBuilder.build(images, big))
+    assert(feats.rdd.getNumPartitions > 1, "one partition would hide a per-partition job")
+    // the concatenation plainSnapshot made with toLocalIterator
+    def iterated(rowCap: Int): String = {
+      val it = feats.toLocalIterator()
+      val sb = new StringBuilder("""{"type":"FeatureCollection","features":[""")
+      var n = 0
+      while (it.hasNext) {
+        require(n < rowCap, s"plain path row cap $rowCap exceeded")
+        if (n > 0) sb.append(',')
+        sb.append(it.next().getString(0))
+        n += 1
+      }
+      sb.append("]}").toString
+    }
+    def plain(rowCap: Int) =
+      CustomExport.plainSnapshot(images, big, maxAreaKm2 = 1e9, rowCap = rowCap)
+    var fc = ""
+    assert(jobsOf { fc = plain(10000) } == 1)
+    assert(fc == iterated(10000))
+    // the cap holds at its exact boundary, and fails one below it and at 3
+    val n = feats.count().toInt
+    assert(n > 3)
+    assert(plain(n) == fc)
+    for (cap <- Seq(n - 1, 3)) {
+      val e = intercept[IllegalArgumentException](plain(cap))
+      assert(e.getMessage == intercept[IllegalArgumentException](iterated(cap)).getMessage)
+    }
+  }
+
+  test("staging writes once and reads back the schema it wrote, with no inference job") {
+    val images = ImageFixture.read(spark, baseDir)
+    val staging = Files.createTempDirectory("ce_stage_jobs").toString
+    var staged: DataFrame = null
+    assert(jobsOf { staged = CustomExport.stage(spark, images, Some(geom), staging) } == 1,
+      "the staging write only")
+    assert(staged.schema == spark.read.parquet(staging).schema)
   }
 }

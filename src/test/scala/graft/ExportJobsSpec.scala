@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.sinks.{FlatGeobuf, PgDump, Sinks}
 
 /** Every single-file sink finishes through `Lineage.assemble`: the encode
@@ -11,28 +8,6 @@ import graft.sinks.{FlatGeobuf, PgDump, Sinks}
   * from the commit manifests. */
 class ExportJobsSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Spark jobs `body` starts on this thread (job group filtered, so other
-    * work on the shared session is not counted). */
-  private def jobsOf(body: => Any): Int = {
-    val group = s"export-jobs-${System.nanoTime()}"
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try body
-    finally {
-      sc.clearJobGroup()
-      TestBus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get()
-  }
 
   test("csv, kml, fgb and sql sinks each run exactly 2 Spark jobs") {
     val df = Seq(("a1", "point", 1.5, 2.5), ("a2", "point", -3.0, 4.0),

@@ -5,6 +5,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.file.Files
 import javax.imageio.ImageIO
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.operators.Multimodal
 import graft.sources.{ImageFixture, ImageTable}
 
@@ -140,5 +141,64 @@ class FixtureSpec extends SparkSpec {
     // snapshot log grew by one append entry with the added-row count
     val log = spark.read.parquet(s"$dir/snapshot").orderBy("snapshot_id").collect()
     assert(log.length == 2 && log(1).getLong(0) == 2L && log(1).getLong(1) == 50L)
+  }
+
+  /** `t` with every field, array element and map value nullable: what a
+    * Parquet read reports for any written schema. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(m.keyType, nullable(m.valueType), valueContainsNull = true)
+    case o => o
+  }
+
+  /** Names, types (element and value nullability included) and nullability. */
+  private def fields(t: DataType): Seq[(String, DataType, Boolean)] =
+    t.asInstanceOf[StructType].fields.toSeq.map(f => (f.name, f.dataType, f.nullable))
+
+  /** 50 fresh ids after the first N, as one append batch. */
+  private def appendBatch = ImageFixture.generate(spark, N + 50, 4)
+    .filter(col("image_id") > ImageFixture.imageId(N - 1))
+
+  test("ImageTable.Schema = the footers of a written and an appended table") {
+    val dir = Files.createTempDirectory("imgschema").toString
+    ImageFixture.write(spark, N, dir, partitions = 4)
+    // every data file's footer, merged: a file that differs shows
+    def footers = spark.read.option("mergeSchema", "true").parquet(s"$dir/data").schema
+    assert(fields(footers) == fields(ImageTable.Schema), "written table")
+    ImageFixture.append(spark, appendBatch, dir)
+    assert(fields(footers) == fields(ImageTable.Schema), "appended table")
+    assert(fields(ImageFixture.read(spark, dir).schema) == fields(ImageTable.Schema))
+    assert(fields(nullable(ImageTable.derive(ImageFixture.generate(spark, 10, 1)).schema)) ==
+      fields(ImageTable.Schema), "derive over the raw rows, made nullable")
+  }
+
+  test("ImageFixture.read starts no job; an append commit runs at most 10 and writes the same manifest") {
+    val dir = Files.createTempDirectory("imgjobs").toString
+    ImageFixture.write(spark, N, dir, partitions = 4)
+    assert(jobsOf(ImageFixture.read(spark, dir).columns) == 0, "no footer-inference job")
+    var sid = 0L
+    val jobs = jobsOf { sid = ImageFixture.append(spark, appendBatch, dir, partitions = 2) }
+    assert(sid == 2L)
+    info(s"append commit: $jobs Spark jobs")
+    assert(jobs <= 10, s"append commit ran $jobs jobs")
+    // manifest: one row per data file that holds rows, with the cell range
+    // and row count an independent aggregate over the files gives; the 50
+    // appended rows sit in files tagged with the new snapshot id
+    val perFile = spark.read.parquet(s"$dir/data")
+      .groupBy(input_file_name().as("file"))
+      .agg(min("cell"), max("cell"), count(lit(1)))
+      .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    val manifest = spark.read.parquet(s"$dir/manifest").collect()
+      .map(r => (r.getAs[String]("file"), (r.getAs[Long]("cell_min"),
+        r.getAs[Long]("cell_max"), r.getAs[Long]("rows"), r.getAs[Long]("snapshot_id"))))
+    assert(manifest.map(_._1).toSet == perFile.keySet && manifest.length == perFile.size)
+    manifest.foreach { case (f, (lo, hi, n, _)) => assert(perFile(f) == ((lo, hi, n))) }
+    assert(manifest.filter(_._2._4 == 2L).map(_._2._3).sum == 50L)
+    assert(manifest.filter(_._2._4 == 1L).map(_._2._3).sum == N)
+    val log = spark.read.parquet(s"$dir/snapshot").orderBy("snapshot_id")
+      .select("snapshot_id", "row_count").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(log.toSeq == Seq((1L, N), (2L, 50L)))
   }
 }

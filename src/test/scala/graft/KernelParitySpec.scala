@@ -6,6 +6,7 @@ import graft.functions.{GeoCols, Kernels}
 import graft.geo.{Fixtures, MultiPolygon}
 import graft.operators.{Dedup, Similarity}
 import graft.plan.PlanBuilder
+import graft.sinks.FeatureModel
 
 /** Every hot-path kernel call must produce EXACTLY the values of the Column
   * tree or UDF it replaced (null-safe equality, bit-exact doubles), and each
@@ -124,6 +125,32 @@ class KernelParitySpec extends SparkSpec {
     val kernel = Kernels.featureIntersects(geom, cols(0), cols(1), cols(2), cols(3))
     assert(mismatches(df, udfCol, kernel) == 0)
     assert(df.filter(kernel).count() > 0, "no intersecting feature exercised")
+  }
+
+  test("GeoJSON geometry kernel ≡ the fromRings + geoJson row UDF") {
+    // the row UDF the kernel replaced, whose body moved to FeatureModel
+    val rowUdf = udf((kind: String, lon: Double, lat: Double,
+        rings: scala.collection.Seq[scala.collection.Seq[Double]],
+        roles: scala.collection.Seq[Int]) =>
+      FeatureModel.geoJson(FeatureModel.fromRings(kind, lon, lat, rings, roles)))
+    val f = GeoCols.derivedFeatures(spark, sfDir)
+      .select(col("kind"), col("lon"), col("lat"), col("rings"), col("roles"))
+    // toGeoJsonFeature passes empty roles for frames without them: all outer
+    val df = f.union(f.limit(200).withColumn("roles", array().cast("array<int>")))
+    val cols = Seq("kind", "lon", "lat", "rings", "roles").map(col)
+    def kernel(c: Seq[Column]) = Kernels.geoJsonGeom(c(0), c(1), c(2), c(3), c(4))
+    assert(mismatches(df, rowUdf(cols: _*), kernel(cols)) == 0)
+    // every geometry type, polygons with holes and multi-part shapes occur
+    val types = df.select(regexp_extract(kernel(cols), "^\\{\"type\":\"(\\w+)\"", 1))
+      .distinct().as[String].collect().toSet
+    assert(types == Set("Point", "LineString", "MultiLineString", "Polygon", "MultiPolygon"))
+    assert(f.filter(array_contains(col("roles"), 1)).count() > 0, "no hole")
+    // a null argument gives null (the row UDF threw on null rings)
+    val some = f.limit(20)
+    val nulls = Seq("kind" -> "string", "lon" -> "double", "lat" -> "double",
+        "rings" -> "array<array<double>>", "roles" -> "array<int>")
+      .map { case (c, t) => some.withColumn(c, lit(null).cast(t)) }.reduce(_ union _)
+    assert(nulls.filter(kernel(cols).isNotNull).count() == 0)
   }
 
   test("cell membership ≡ Column.isin over one set of cells") {
