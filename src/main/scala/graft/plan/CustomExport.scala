@@ -201,8 +201,9 @@ object CustomExport {
     * One Spark job: each partition ships at most `rowCap + 1` features and
     * the driver applies the cap to their sum, in partition order, so the
     * driver holds at most partitions × (`rowCap` + 1) feature strings. (A
-    * `toLocalIterator` ran one job per partition; `limit(rowCap + 1)`
-    * would scan 1, then 4, then 16 partitions, one job each.) */
+    * `toLocalIterator` would run one job per partition, and
+    * `limit(rowCap + 1)` scans 1, then 4, then 16 partitions, one job
+    * each.) */
   def plainSnapshot(images: DataFrame, req: SnapshotRequest,
       maxAreaKm2: Double = 10.0, rowCap: Int = 10000): String = {
     val area = req.geometry.polys.map(Geo.geodesicAreaKm2).sum
