@@ -20,7 +20,8 @@ import scala.jdk.CollectionConverters._
   *  - resume lists committed partition ids and re-runs ONLY the missing ones
   *    (the anti-join of partitions against the lineage table);
   *  - `assemble` is every file sink's driver-side finish: it compacts the
-  *    .done rows into a lineage parquet table, takes the row count and
+  *    .done rows into the `lineage/` record (one JSON line per partition,
+  *    written by the driver, no Spark job), takes the row count and
   *    envelope from them, has the format write header + parts + footer (or
   *    its b-tree / triple) at a temp path, renames it into place and drops
   *    `parts/`. A sink supplies only its row encoder and that writer.
@@ -205,7 +206,7 @@ object Lineage {
     * assembled — a SUCCEEDED export must not leave .done files that would
     * make a later export to the same path silently reuse stale data (and
     * must not keep the dataset duplicated on disk). The compacted `lineage`
-    * parquet table survives for accounting. */
+    * record survives for accounting. */
   def cleanParts(outDir: String): Unit = {
     val d = Paths.get(outDir, "parts")
     if (Files.exists(d)) {
@@ -214,17 +215,33 @@ object Lineage {
     }
   }
 
-  /** Compact per-partition manifests into the lineage parquet table; returns
-    * the lineage DataFrame. */
+  /** Compact per-partition manifests into the lineage record; returns its
+    * rows as a local DataFrame (no Spark job). */
   def finish(spark: SparkSession, outDir: String): DataFrame =
     compact(spark, outDir, manifests(outDir).map(_._1))
 
+  /** The lineage record's one file: a JSON line per [[PartMeta]], readable
+    * with `spark.read.schema(Encoders.product[PartMeta].schema).json`. */
+  private val RecordFile = "manifests.json"
+
+  /** The driver writes the record: a few bytes per partition need no
+    * Spark job. `status` is the commit loop's own constant, so it needs no
+    * escaping. Written through [[replaceAtomically]]; anything else in
+    * `lineage/` (an earlier run's record) is removed after it lands. */
   private def compact(spark: SparkSession, outDir: String,
       metas: Seq[PartMeta]): DataFrame = {
-    import spark.implicits._
-    val df = metas.toDF()
-    df.write.mode("overwrite").parquet(s"$outDir/lineage")
-    df
+    val dir = Paths.get(outDir, "lineage")
+    Files.createDirectories(dir)
+    val out = dir.resolve(RecordFile)
+    replaceAtomically(out) { tmp =>
+      Files.write(tmp, metas.map { m =>
+        s"""{"partitionId":${m.partitionId},"rowCount":${m.rowCount},""" +
+          s""""bytes":${m.bytes},"status":"${m.status}",""" +
+          s""""wallMillis":${m.wallMillis}}\n"""
+      }.mkString.getBytes(StandardCharsets.UTF_8))
+    }
+    listDir(dir).filterNot(_ == out).foreach(Files.delete)
+    spark.createDataFrame(metas)
   }
 
   /** What an export committed: the row count and the merged envelope
@@ -234,10 +251,10 @@ object Lineage {
       parts: Seq[Path])
 
   /** The one driver-side finish of every file sink: compact the manifests
-    * into the `lineage` table, let the format `write` its final file at a
+    * into the `lineage` record, let the format `write` its final file at a
     * temp path from the committed parts, rename it atomically to `out`,
-    * then drop `parts/`. Returns the committed row count — no Spark job
-    * beyond the lineage write. */
+    * then drop `parts/`. Returns the committed row count; starts no Spark
+    * job. */
   def assemble(spark: SparkSession, outDir: String, ext: String, out: Path)(
       write: (Path, Committed) => Unit): Long = {
     val ms = manifests(outDir)

@@ -6,7 +6,6 @@ import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geo.{Geo, MultiPolygon}
-import graft.lineage.Lineage
 import graft.model.{Category, GeomType, SnapshotRequest, WhereParser}
 import graft.sources.ImageTable
 
@@ -36,8 +35,9 @@ object CustomExport {
     * persist is per-session best-effort; the reference's staging table is
     * durable and shared by every category × format job — and at 100 TB a
     * prefiltered staging parquet is re-readable by later runs for free).
-    * The read-back passes the schema just written, so it starts no
-    * footer-inference job. */
+    * Only [[StagedColumns]] are written: the payload `bytes`, `cell` and
+    * the other image columns are read by no category. The read-back passes
+    * the schema just written, so it starts no footer-inference job. */
   def stage(spark: SparkSession, images: DataFrame,
       geometry: Option[MultiPolygon], stagingDir: String): DataFrame = {
     var df = ImageTable.derive(images)
@@ -45,9 +45,15 @@ object CustomExport {
       df = df.filter(PlanBuilder.geometryFilter(g, col("kind"),
         col("lon"), col("lat"), col("cell"), col("rings")))
     }
+    df = df.select(StagedColumns.map(col): _*)
     df.write.mode(SaveMode.Overwrite).parquet(stagingDir)
     spark.read.schema(df.schema).parquet(stagingDir)
   }
+
+  /** The columns [[extractCategory]] reads: the where-DSL reads only
+    * `tags[...]`. */
+  private val StagedColumns: Seq[String] =
+    Seq("image_id", "kind", "lon", "lat", "tags", "rings", "roles")
 
   /** One category's extract over the staged table (types → kind routing,
     * select → attribute projection, where-DSL). */
@@ -66,13 +72,12 @@ object CustomExport {
   /** The full format matrix (the reference's ogr2ogr/DuckDB format table,
     * app.py:549-616): writes `df` as `fmt` under `dir`. Returns the row count
     * when the sink itself reports one (the single-file formats take it from
-    * their commit manifests); the geojson, parquet and json writers return
-    * None and the caller reuses already-written metadata instead of
-    * re-counting. */
+    * their commit manifests); the parquet and json writers return None and
+    * the caller reuses already-written metadata instead of re-counting. */
   def writeFormat(df: DataFrame, fmt: String, dir: String,
       table: String, pmTilesZooms: (Int, Int) = (2, 6)): Option[Long] = fmt match {
     case "geojson" =>
-      graft.sinks.Sinks.featureCollection(df, s"$dir/geojson"); None
+      Some(graft.sinks.Sinks.featureCollection(df, s"$dir/geojson"))
     case "parquet" =>
       graft.sinks.Sinks.parquetZstd(df, s"$dir/parquet"); None
     case "csv" =>
@@ -167,8 +172,8 @@ object CustomExport {
           case (f, Some(n)) if !Set("pmtiles", "mbtiles", "shp")(f) => n
         }
         // row count preference: a sink-reported exact count, else parquet
-        // footer counts / lineage manifests, else one count job — never a
-        // redundant pass when a format already knows
+        // footer counts, else one count job — never a redundant pass when a
+        // format already knows
         // S9 packaging parity: zip the category's format outputs after all
         // its formats land (the reference's zipfly step before upload)
         if (zipOutputs)
@@ -176,13 +181,6 @@ object CustomExport {
         val n = reported.getOrElse {
           if (formats.contains("parquet"))
             spark.read.schema(df.schema).parquet(s"$catDir/parquet").count()
-          else if (formats.contains("geojson"))
-            // the compacted lineage parquet survives part cleanup;
-            // coalesce: SUM over zero manifest rows is NULL (empty category)
-            spark.read.schema(Encoders.product[Lineage.PartMeta].schema)
-              .parquet(s"$catDir/geojson/lineage")
-              .agg(coalesce(sum("rowCount"), lit(0L)))
-              .collect().head.getLong(0)
           else df.count()
         }
         c.name -> n

@@ -19,9 +19,10 @@ import org.apache.spark.sql.types._
   * enough that the explicit encoder doubles as documentation.
   *
   * Scale shape: [[tilePayloads]] is the distributed pipeline — the per-tile
-  * groupBy is the only shuffle, and tile assembly + protobuf encode + gzip
-  * all run as a narrow `Dataset.map` in the executors. The archive writers
-  * ([[PmTiles]]/[[MbTiles]]) stream the ready-made payload bytes.
+  * group is the only shuffle, and tile assembly + protobuf encode + gzip
+  * run in the executors, in the task that streams each tile's group. The
+  * archive writers ([[PmTiles]]/[[MbTiles]]) stream the ready-made payload
+  * bytes.
   */
 object Mvt {
 
@@ -276,17 +277,21 @@ object Mvt {
 
   /** Feature DataFrame (kind, lon, lat, rings, roles + attribute columns) →
     * (z, tx, ty, payload) with one gzip MVT tile per row. The per-tile
-    * groupBy is the only shuffle (plus one more when the cap engages);
-    * encode + gzip are a narrow typed map.
+    * group is the one shuffle exchange, keyed on (z, tx, ty); tile
+    * assembly, protobuf encode and gzip run in the reduce task that
+    * streams the group.
     *
     * `maxFeaturesPerTile`: a z2 tile sees ~1/16th of the WHOLE table, so at
     * 10^12 rows an uncapped per-tile group is a single-task scale-killer
     * (and no renderable tile wants 10^10 features). Like tippecanoe's
     * feature-dropping on over-full tiles, each tile keeps a deterministic
-    * pseudo-random subset: phase 1 caps each of `CapSalt` hash sub-buckets
-    * (bounds every task at cap rows even for planet-sized tiles), phase 2
-    * caps the ≤ CapSalt·cap survivors. Under-cap tiles pass through
-    * exactly. ≤ 0 disables. */
+    * pseudo-random subset: the `maxFeaturesPerTile` rows with the smallest
+    * `xxhash64(_attrs, _geom)`. Each map task sorts its rows by
+    * (z, tx, ty, hash) and ships only the first `maxFeaturesPerTile` of
+    * each tile, so a task sends at most that many rows per tile however
+    * large the tile is; the reduce side streams each tile's group sorted
+    * by hash and keeps its first `maxFeaturesPerTile`. Under-cap tiles pass
+    * through exactly. ≤ 0 disables the cap. */
   def tilePayloads(df0: DataFrame, zooms: (Int, Int),
       layerName: String, extent: Int = DefaultExtent,
       maxFeaturesPerTile: Int = 10000): DataFrame = {
@@ -302,79 +307,90 @@ object Mvt {
     val packed = df.select(
       col("lon"), col("lat"), geomStruct.as("_geom"),
       struct(attrCols.map(col): _*).as("_attrs"))
-    val tiled0 = graft.operators.SpatialJoin.tileAssign(packed, zooms._1, zooms._2)
-    val tiled =
-      if (maxFeaturesPerTile <= 0) tiled0
-      else {
-        import org.apache.spark.sql.expressions.Window
-        val CapSalt = 16
-        val h = xxhash64(col("_attrs"), col("_geom"))
-        val w1 = Window
-          .partitionBy(col("z"), col("tx"), col("ty"), pmod(h, lit(CapSalt)))
-          .orderBy(h)
-        val w2 = Window.partitionBy(col("z"), col("tx"), col("ty")).orderBy(h)
-        tiled0
-          .withColumn("_rn", row_number().over(w1))
-          .filter(col("_rn") <= maxFeaturesPerTile).drop("_rn")
-          .withColumn("_rn", row_number().over(w2))
-          .filter(col("_rn") <= maxFeaturesPerTile).drop("_rn")
-      }
-    val grouped = tiled.groupBy(col("z"), col("tx"), col("ty"))
-      .agg(collect_list(struct(col("_geom"), col("_attrs"))).as("feats"))
+    // (z, tx, ty, _geom, _attrs, _h): the tile key first, for capTile
+    val tiled = graft.operators.SpatialJoin.tileAssign(packed, zooms._1, zooms._2)
+      .select(col("z"), col("tx"), col("ty"), col("_geom"), col("_attrs"),
+        xxhash64(col("_attrs"), col("_geom")).as("_h"))
+    val rowEnc = Encoders.row(tiled.schema)
+    val cap = if (maxFeaturesPerTile <= 0) Int.MaxValue else maxFeaturesPerTile
+    val shipped =
+      if (maxFeaturesPerTile <= 0) tiled
+      else tiled.sortWithinPartitions(col("z"), col("tx"), col("ty"), col("_h"))
+        .mapPartitions((it: Iterator[Row]) => capTile(it, cap))(rowEnc)
     val attrSchema = StructType(attrCols.map(c => df.schema(c)))
     val idIdx = attrCols.indexWhere { c =>
       c == "image_id" && (attrSchema(c).dataType == LongType ||
         attrSchema(c).dataType == IntegerType)
     }
+    val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong,
+      Encoders.scalaLong)
     val enc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong,
       Encoders.scalaLong, Encoders.BINARY)
-    grouped.map { row =>
-      val z = row.getInt(0); val tx = row.getLong(1); val ty = row.getLong(2)
-      val feats = row.getSeq[Row](3).map { fr =>
-        val g = fr.getStruct(0); val a = fr.getStruct(1)
-        val kind = g.getString(0)
-        val lon = g.getDouble(1); val lat = g.getDouble(2)
-        def local(x: Double, y: Double): (Long, Long) =
-          tileLocal(z, tx, ty, extent, x, y)
-        def localRing(fl: scala.collection.Seq[Double]): IndexedSeq[(Long, Long)] =
-          (0 until fl.length / 2).map(i => local(fl(2 * i), fl(2 * i + 1)))
-        val storedRings =
-          (if (g.length > 3 && !g.isNullAt(3)) g.getSeq[scala.collection.Seq[Double]](3)
-           else Nil).filter(_.nonEmpty) // empty rings degrade, never crash
-        val storedRoles0 =
-          if (g.length > 4 && !g.isNullAt(4)) g.getSeq[Int](4) else Nil
-        // missing/short roles mean all-outer, matching FeatureModel.fromRings
-        val storedRoles =
-          if (storedRoles0.length == storedRings.length) storedRoles0
-          else Seq.fill(storedRings.length)(0)
-        val (gtype, rings, exterior) = kind match {
-          case "line" if storedRings.nonEmpty =>
-            (2, storedRings.map(localRing), None)
-          case "polygon" if storedRings.nonEmpty =>
-            (3, storedRings.map(localRing),
-              Some(storedRoles.map(_ == 0)))
-          case _ => (1, Seq(IndexedSeq(local(lon, lat))), None)
-        }
-        // null attributes are OMITTED (absent tag), never encoded as ""
-        // — the typed vector_layers inventory promises e.g. Number fields,
-        // and a string "" value would contradict it
-        val attrs = attrCols.indices.flatMap { i =>
-          if (a.isNullAt(i)) None else Some(attrCols(i) -> a.get(i))
-        }
-        val id = if (idIdx >= 0 && !a.isNullAt(idIdx))
-          a.get(idIdx) match {
-            case l: Long => Some(l); case i: Int => Some(i.toLong); case _ => None }
-        else None
-        Feature(id, gtype, rings, attrs, exterior)
-      // collect_list order is nondeterministic; fix it (id, canonical attr
-      // values — binary attrs would toString to identity hashes — then
-      // geometry for attr-less frames) so re-runs produce byte-identical
-      // tiles. Geometry compares through an allocation-free lexicographic
-      // walk: the old rings.toString key string-built every vertex of every
-      // feature (measured 3-4x tile-encode regression on multi-ring data)
+    shipped.groupBy(col("z"), col("tx"), col("ty"))
+      .as[(Int, Long, Long), Row](keyEnc, rowEnc)
+      .flatMapSortedGroups(col("_h")) { (key: (Int, Long, Long), rows: Iterator[Row]) =>
+        val (z, tx, ty) = key
+        val feats = rows.take(cap).map { r =>
+          feature(z, tx, ty, extent, r.getStruct(3), r.getStruct(4), attrCols, idIdx)
+        }.toSeq
+        // feature order: id, canonical attr values (binary attrs would
+        // toString to identity hashes), then geometry for attr-less
+        // frames, so re-runs produce byte-identical tiles
+        Iterator.single(
+          (z, tx, ty, Zip.gzip(encodeTile(layerName, extent, sortFeatures(feats)))))
+      }(enc).toDF("z", "tx", "ty", "payload")
+  }
+
+  /** The first `cap` rows of each tile in a partition sorted by
+    * (z, tx, ty, hash): the map-side half of the per-tile cap. */
+  private def capTile(it: Iterator[Row], cap: Int): Iterator[Row] = {
+    var z = -1; var tx = 0L; var ty = 0L; var n = 0
+    it.filter { r =>
+      if (r.getInt(0) != z || r.getLong(1) != tx || r.getLong(2) != ty) {
+        z = r.getInt(0); tx = r.getLong(1); ty = r.getLong(2); n = 0
       }
-      val ordered = sortFeatures(feats)
-      (z, tx, ty, Zip.gzip(encodeTile(layerName, extent, ordered)))
-    }(enc).toDF("z", "tx", "ty", "payload")
+      n += 1
+      n <= cap
+    }
+  }
+
+  /** One row's [[Feature]] in tile (z, tx, ty): `g` is the geometry struct
+    * (kind, lon, lat[, rings, roles]), `a` the attribute struct. */
+  private def feature(z: Int, tx: Long, ty: Long, extent: Int, g: Row, a: Row,
+      attrCols: Seq[String], idIdx: Int): Feature = {
+    val kind = g.getString(0)
+    val lon = g.getDouble(1); val lat = g.getDouble(2)
+    def local(x: Double, y: Double): (Long, Long) =
+      tileLocal(z, tx, ty, extent, x, y)
+    def localRing(fl: scala.collection.Seq[Double]): IndexedSeq[(Long, Long)] =
+      (0 until fl.length / 2).map(i => local(fl(2 * i), fl(2 * i + 1)))
+    val storedRings =
+      (if (g.length > 3 && !g.isNullAt(3)) g.getSeq[scala.collection.Seq[Double]](3)
+       else Nil).filter(_.nonEmpty) // empty rings degrade, never crash
+    val storedRoles0 =
+      if (g.length > 4 && !g.isNullAt(4)) g.getSeq[Int](4) else Nil
+    // missing/short roles mean all-outer, matching FeatureModel.fromRings
+    val storedRoles =
+      if (storedRoles0.length == storedRings.length) storedRoles0
+      else Seq.fill(storedRings.length)(0)
+    val (gtype, rings, exterior) = kind match {
+      case "line" if storedRings.nonEmpty =>
+        (2, storedRings.map(localRing), None)
+      case "polygon" if storedRings.nonEmpty =>
+        (3, storedRings.map(localRing),
+          Some(storedRoles.map(_ == 0)))
+      case _ => (1, Seq(IndexedSeq(local(lon, lat))), None)
+    }
+    // null attributes are OMITTED (absent tag), never encoded as ""
+    // — the typed vector_layers inventory promises e.g. Number fields,
+    // and a string "" value would contradict it
+    val attrs = attrCols.indices.flatMap { i =>
+      if (a.isNullAt(i)) None else Some(attrCols(i) -> a.get(i))
+    }
+    val id = if (idIdx >= 0 && !a.isNullAt(idIdx))
+      a.get(idIdx) match {
+        case l: Long => Some(l); case i: Int => Some(i.toLong); case _ => None }
+    else None
+    Feature(id, gtype, rings, attrs, exterior)
   }
 }

@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels
 import graft.lineage.Lineage
 
 /** Minimal from-scratch PMTiles v3 archive writer — the reference's actual
@@ -132,7 +133,7 @@ object PmTiles {
   def writePayloads(perTile0: DataFrame, path: String,
       leafSize: Int = LeafSize): (Long, Long) = {
     val perTile = perTile0
-      .withColumn("tile_id", udf(tileId _).apply(col("z"), col("tx"), col("ty")))
+      .withColumn("tile_id", Kernels.tileId(col("z"), col("tx"), col("ty")))
       .select(col("tile_id"), col("z"), col("payload"))
       .orderBy(col("tile_id"))
     val out = Paths.get(path)

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.plan.PlanBuilder
@@ -25,11 +25,12 @@ object Sinks {
     * rows into a single `{"type":"FeatureCollection","features":[...]}` file,
     * app.py:618-646). The distributed write stays resumable (lineage parts);
     * only the final concat is a driver-side sequential stream — exactly the
-    * reference's boundary. Returns the assembled file path. */
-  def featureCollection(extract: DataFrame, outDir: String): Path = {
+    * reference's boundary. Writes `outDir/export.geojson`; returns the
+    * feature count from the commit manifests. */
+  def featureCollection(extract: DataFrame, outDir: String): Long = {
     geojson(extract, outDir)
-    val out = Paths.get(outDir, "export.geojson")
-    Lineage.assemble(extract.sparkSession, outDir, "jsonl", out) { (tmp, c) =>
+    Lineage.assemble(extract.sparkSession, outDir, "jsonl",
+      Paths.get(outDir, "export.geojson")) { (tmp, c) =>
       val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
       var first = true
       try {
@@ -51,7 +52,6 @@ object Sinks {
         w.write("]}")
       } finally w.close()
     }
-    out
   }
 
   /** Minimal RFC-4180 field quoting for the driver-written header (data

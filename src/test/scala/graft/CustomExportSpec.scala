@@ -155,8 +155,9 @@ class CustomExportSpec extends SparkSpec {
       allGeometry = Some(TypeFilters(attributes = Some(Seq("name")))))
     val extract = PlanBuilder.build(ImageFixture.read(spark, baseDir), req)
     val n = extract.count()
-    val path = graft.sinks.Sinks.featureCollection(extract, outDir)
-    val fc = new String(Files.readAllBytes(path), "UTF-8")
+    assert(graft.sinks.Sinks.featureCollection(extract, outDir) == n)
+    val fc = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(outDir, "export.geojson")), "UTF-8")
     val parsed = spark.read.json(Seq(fc).toDS)
     assert(parsed.select(col("type")).as[String].head() == "FeatureCollection")
     assert(parsed.select(size(col("features"))).as[Int].head() == n)
@@ -221,5 +222,65 @@ class CustomExportSpec extends SparkSpec {
     assert(jobsOf { staged = CustomExport.stage(spark, images, Some(geom), staging) } == 1,
       "the staging write only")
     assert(staged.schema == spark.read.parquet(staging).schema)
+  }
+
+  /** The categories of the benchmark's export mix (size classes aside). */
+  private val mixCategories = {
+    import GeomType.{Line, Point, Polygon}
+    Seq(
+      Category("buildings", Seq(Polygon), Seq("building", "name"),
+        Some("tags['building'] IS NOT NULL")),
+      Category("roads", Seq(Line, Point), Seq("highway"),
+        Some("tags['highway'] IN ('residential', 'primary')")),
+      Category("amenities", Seq(Point), Seq("amenity", "name"),
+        Some("tags['amenity'] = 'school' OR tags['amenity'] = 'cafe'")),
+      Category("water", Seq(Line, Polygon), Seq("waterway"),
+        Some("tags['waterway'] IS NOT NULL")),
+      Category("landuse", Seq(Polygon), Seq("landuse"),
+        Some("tags['landuse'] = 'farmland' AND NOT tags['building'] = 'no'")),
+      Category("named", Seq(Point, Line, Polygon), Seq("name"),
+        Some("tags['name'] IN ('n1', 'n2', 'n3', 'n4', 'n5')")))
+  }
+
+  test("staging keeps only the category columns; extracts equal those over the full derived table") {
+    val images = ImageFixture.read(spark, baseDir)
+    val staging = Files.createTempDirectory("ce_stage_cols").toString
+    val staged = CustomExport.stage(spark, images, Some(geom), staging)
+    val seven = Seq("image_id", "kind", "lon", "lat", "tags", "rings", "roles")
+    assert(staged.columns.toSeq == seven)
+    assert(spark.read.parquet(staging).columns.toSeq == seven)
+    val full = graft.sources.ImageTable.derive(images)
+      .filter(PlanBuilder.geometryFilter(geom, col("kind"), col("lon"), col("lat"),
+        col("cell"), col("rings")))
+    mixCategories.foreach { c =>
+      val a = CustomExport.extractCategory(staged, c)
+      val b = CustomExport.extractCategory(full, c)
+      assert(a.schema == b.schema, c.name)
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, c.name)
+      assert(a.count() == b.count(), c.name)
+    }
+    assert(mixCategories.exists(c => CustomExport.extractCategory(staged, c).count() > 0))
+  }
+
+  test("export job budgets: city 10, regional 8, continental 4 Spark jobs") {
+    val images = ImageFixture.read(spark, baseDir)
+    val sets = Seq(
+      (mixCategories(1), Seq("pmtiles", "shp", "csv", "geojson"), 10),
+      (mixCategories(0), Seq("mbtiles", "gpkg", "json", "kml"), 8),
+      (mixCategories(3), Seq("fgb", "sql", "parquet"), 4))
+    val jobs = sets.map { case (c, fmts, _) =>
+      val staging = Files.createTempDirectory("ce_budget_st").toString
+      val outDir = Files.createTempDirectory("ce_budget_out").toString
+      var counts = Map.empty[String, Long]
+      val n = jobsOf {
+        counts = CustomExport.processCategories(spark, images, Some(geom), Seq(c),
+          staging, outDir, formats = fmts, zipOutputs = true)
+      }
+      assert(counts.contains(c.name))
+      n
+    }
+    info(s"jobs per export: ${jobs.mkString("/")}")
+    assert(jobs.zip(sets).forall { case (n, s) => n <= s._3 },
+      s"jobs per export ${jobs.mkString("/")}, budget ${sets.map(_._3).mkString("/")}")
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import graft.lineage.Lineage
 
@@ -14,7 +15,13 @@ class LineageSpec extends SparkSpec {
   test("clean export commits all partitions with metrics") {
     val dir = Files.createTempDirectory("exp").toString
     Lineage.exportResumable(lines, dir)
-    val lineage = Lineage.finish(spark, dir)
+    var lineage: DataFrame = null
+    assert(jobsOf { lineage = Lineage.finish(spark, dir) } == 0,
+      "the driver writes the lineage record")
+    // the record reads back as the manifests' rows through the PartMeta schema
+    val back = spark.read.schema(Encoders.product[Lineage.PartMeta].schema)
+      .json(s"$dir/lineage")
+    assert(back.collect().toSet == lineage.collect().toSet)
     assert(lineage.count() == 8)
     assert(lineage.filter(col("status") =!= "committed").count() == 0)
     assert(lineage.agg(sum("rowCount")).collect().head.getLong(0) == 1000)

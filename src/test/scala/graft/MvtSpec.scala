@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sinks.{Mvt, PmTiles}
 import graft.sources.{ImageFixture, ImageTable}
@@ -334,6 +335,66 @@ class MvtSpec extends SparkSpec {
     val ids = (l: MvtDecode.Layer) =>
       l.features.map(f => l.attrs(f)("image_id")).toSet
     assert(ids(l1).subsetOf(ids(l2)))
+  }
+
+  private def payloadMap(df: DataFrame): Map[(Int, Long, Long), Seq[Byte]] =
+    df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) ->
+      r.getAs[Array[Byte]](3).toSeq).toMap
+
+  test("per-tile cap in one exchange keeps the two-window selection, byte for byte") {
+    import org.apache.spark.sql.expressions.Window
+    val zooms = (0, 4)
+    // the pipeline's packing of `feats`: geometry struct, attribute struct,
+    // and the hash that ranks a tile's rows
+    val tiled = graft.operators.SpatialJoin.tileAssign(feats.select(col("lon"), col("lat"),
+        struct(col("kind"), col("lon"), col("lat"), col("rings"), col("roles")).as("_geom"),
+        struct(col("image_id")).as("_attrs")), zooms._1, zooms._2)
+      .withColumn("_h", xxhash64(col("_attrs"), col("_geom")))
+    val perTile = tiled.groupBy("z", "tx", "ty").count()
+    assert(perTile.filter(col("count") > 50).count() > 0, "cap 50 binds somewhere")
+    for (cap <- Seq(10000, 50, 3)) {
+      // the selection the single exchange replaced: cap rows per salted
+      // hash sub-bucket of a tile, then cap rows per tile, both by hash
+      val w1 = Window.partitionBy(col("z"), col("tx"), col("ty"), pmod(col("_h"), lit(16)))
+        .orderBy(col("_h"))
+      val w2 = Window.partitionBy(col("z"), col("tx"), col("ty")).orderBy(col("_h"))
+      val kept = tiled
+        .withColumn("_rn", row_number().over(w1)).filter(col("_rn") <= cap)
+        .withColumn("_rn", row_number().over(w2)).filter(col("_rn") <= cap)
+        .select(col("z"), col("_attrs.image_id").as("image_id"))
+      // a zoom's tiles are disjoint, so one uncapped run over the rows kept
+      // at zoom z encodes each tile of z from exactly its kept rows
+      val want = (zooms._1 to zooms._2).map { z =>
+        payloadMap(Mvt.tilePayloads(
+          feats.join(kept.filter(col("z") === z).select("image_id"), "image_id"),
+          (z, z), "export", maxFeaturesPerTile = 0))
+      }.reduce(_ ++ _)
+      val got = payloadMap(Mvt.tilePayloads(feats, zooms, "export",
+        maxFeaturesPerTile = cap))
+      assert(got.size == perTile.count(), s"cap $cap: every tile present")
+      assert(got == want, s"cap $cap: payload bytes differ from the two-window selection")
+    }
+  }
+
+  test("per-tile cap: each map task ships at most cap rows of a tile") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def physical(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => physical(a.executedPlan)
+      case q: QueryStageExec => physical(q.plan)
+      case o => o +: o.children.flatMap(physical)
+    }
+    val cap = 3
+    val df = Mvt.tilePayloads(feats, (0, 0), "export", maxFeaturesPerTile = cap)
+    assert(df.collect().length == 1)
+    val exchanges = physical(df.queryExecution.executedPlan)
+      .collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.length == 1)
+    // every feature is in the one z0 tile; each map task ships at most `cap`
+    val shipped = exchanges.head.metrics("shuffleRecordsWritten").value
+    assert(shipped > 0 && shipped <= cap * feats.rdd.getNumPartitions,
+      s"$shipped rows shipped from ${feats.rdd.getNumPartitions} map tasks")
   }
 
   test("PMTiles MVT archive: tile_type 1, directory-addressed payloads decode") {

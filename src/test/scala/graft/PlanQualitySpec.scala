@@ -204,23 +204,23 @@ class PlanQualitySpec extends SparkSpec {
       s"exchange or aggregate in Bench.flagship:\n${bench.queryExecution.executedPlan}")
   }
 
-  test("mvt tile pipeline: no joins, bounded exchanges (1 uncapped / 2 capped)") {
+  test("mvt tile pipeline: no joins or windows, one exchange capped or not") {
     val feats = ImageFixture.read(spark, tableDir).drop("bytes")
     def shape(df: org.apache.spark.sql.DataFrame): (Int, Boolean) = {
       val plan = df.queryExecution.executedPlan.toString
       (plan.linesIterator.count(l =>
         l.contains("Exchange hashpartitioning") || l.contains("Exchange rangepartitioning")),
-        plan.contains("Join"))
+        plan.contains("Join") || plan.contains("Window"))
     }
     val (exU, joinU) = shape(graft.sinks.Mvt.tilePayloads(
       feats, (2, 4), "t", maxFeaturesPerTile = 0))
     assert(!joinU && exU == 1,
       s"uncapped tile pipeline must be explode + ONE per-tile shuffle ($exU)")
-    // the cap's two windows share the per-tile partitioning with the final
-    // aggregation — one extra exchange total, not one per window
+    // the cap is a map-side sort and a sorted group stream on the same
+    // per-tile exchange: no window, no exchange of its own
     val (exC, joinC) = shape(graft.sinks.Mvt.tilePayloads(feats, (2, 4), "t"))
-    assert(!joinC && exC == 2,
-      s"capped tile pipeline must add exactly one exchange ($exC)")
+    assert(!joinC && exC == 1,
+      s"capped tile pipeline must keep the ONE per-tile shuffle ($exC)")
   }
 
   test("equi-join with a catalog-sized dim side broadcasts") {
