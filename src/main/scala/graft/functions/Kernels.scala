@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.geo.{Cell, Fixtures, Geo, MultiPolygon, Polygon}
 import graft.operators.Multimodal
-import graft.sinks.{FeatureModel, PmTiles}
+import graft.sinks.FeatureModel
 
 /** Hot-path kernels, each reached as ONE Spark `StaticInvoke`/`Invoke` call
   * into plain JIT-compiled Scala.
@@ -46,8 +46,6 @@ import graft.sinks.{FeatureModel, PmTiles}
   *    The row UDF it replaced threw on null rings (and on null roles beside
   *    non-empty rings) and gave a Point for a null kind; no source produces
   *    any of these nulls;
-  *  - [[tileId]]: null; a tile row from `SpatialJoin.tileAssign` never
-  *    has a null z, x or y;
   *  - [[signBucket]]: null; `Similarity.bucketCol` coalesces to 0, which
   *    the kernel also returns for a short array or a null element.
   * Every argument type is declared, so the analyzer casts another numeric
@@ -129,12 +127,6 @@ object Kernels {
   def pidRings(pid: Column, lon: Column, lat: Column): Column =
     static(Kernels.getClass, "pidRingsAt", RingsType, returnNullable = false,
       Seq(pid, lon, lat), Seq(LongType, DoubleType, DoubleType))
-
-  /** PMTiles v3 tile id of tile (z, x, y) ([[PmTiles.tileId]]): the tile
-    * count of the zooms below `z` plus the Hilbert index within it. */
-  def tileId(z: Column, x: Column, y: Column): Column =
-    static(PmTiles.getClass, "tileId", LongType, returnNullable = false,
-      Seq(z, x, y), Seq(IntegerType, LongType, LongType))
 
   /** Left-associated dot product over the first `dims` elements. */
   def dot(dims: Int, a: Column, b: Column): Column =

@@ -1,6 +1,7 @@
 package graft.lineage
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException,
+  OutputStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.TaskContext
@@ -47,27 +48,35 @@ object Lineage {
     * partition ids — wrong output with "committed" status. The run manifest
     * refuses that: a fingerprint mismatch discards all stale parts and
     * restarts clean. */
-  def runFingerprint(df: DataFrame): String = {
+  def runFingerprint(df: DataFrame): String = runFingerprint(df, df, "")
+
+  /** [[runFingerprint]] of `df`'s partitioning with the plan and input
+    * files of `source`, plus `params`: for a frame whose plan carries
+    * closures (the tile sinks' grouping functions hash by identity, so
+    * two builds of one frame never match), `source` is the closure-free
+    * frame it is built from and `params` what the build adds. */
+  def runFingerprint(df: DataFrame, source: DataFrame, params: String): String = {
     // df.rdd finalizes the plan (under AQE this materializes intermediate
     // query stages); callers pass the SAME Dataset instance they export, so
     // the commit loop reuses this lazy rdd and its shuffle outputs — the
     // fingerprint does not cost a second execution
     val n = df.rdd.getNumPartitions
     val h = java.security.MessageDigest.getInstance("MD5")
-    h.update(df.queryExecution.analyzed.semanticHash().toString
+    h.update(source.queryExecution.analyzed.semanticHash().toString
       .getBytes(StandardCharsets.UTF_8))
-    h.update(df.inputFiles.sorted.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    h.update(source.inputFiles.sorted.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    h.update(params.getBytes(StandardCharsets.UTF_8))
     s"$n-${h.digest().map("%02x".format(_)).mkString}"
   }
 
   /** Create parts/, validate the run manifest, and discard stale parts from
     * a run with a different fingerprint (or from a pre-manifest run — no
     * provenance means no safe resume). Returns the committed ids to skip. */
-  private def prepareRun(df: DataFrame, outDir: String): Set[Int] = {
+  private def prepareRun(fingerprint: String, outDir: String): Set[Int] = {
     val d = Paths.get(outDir, "parts")
     Files.createDirectories(d)
     val mf = d.resolve("_run.json")
-    val json = s"""{"fingerprint":"${runFingerprint(df)}"}"""
+    val json = s"""{"fingerprint":"$fingerprint"}"""
     val existing =
       if (Files.exists(mf))
         Some(new String(Files.readAllBytes(mf), StandardCharsets.UTF_8))
@@ -117,19 +126,45 @@ object Lineage {
       ext = "jsonl", failAtPartition = failAtPartition)
   }
 
-  /** The one commit loop: each task encodes its rows with the
-    * (serializable) `encode` closure and streams the bytes to
-    * `parts/p<id>.<ext>` under the write-ahead + atomic-rename + manifest
-    * protocol above. `coords` accumulates the partition's envelope in the
-    * same pass, so sinks that need a global envelope never re-scan. */
+  /** [[commitPartitions]] with a per-row encoder: each task encodes its
+    * rows with the (serializable) `encode` closure and streams the bytes to
+    * its part. `coords` accumulates the partition's envelope in the same
+    * pass, so sinks that need a global envelope never re-scan. */
   def exportResumableBytes(
       df: DataFrame,
       outDir: String,
       encode: Row => Array[Byte],
       ext: String = "bin",
       failAtPartition: Int = -1,
-      coords: Option[Row => Iterable[(Double, Double)]] = None): Unit = {
-    val done = prepareRun(df, outDir)
+      coords: Option[Row => Iterable[(Double, Double)]] = None): Unit =
+    commitPartitions(df, outDir, ext, failAtPartition) { (it, w) =>
+      var n = 0L
+      var minX = Double.MaxValue; var minY = Double.MaxValue
+      var maxX = Double.MinValue; var maxY = Double.MinValue
+      it.foreach { r =>
+        w.write(encode(r)); n += 1
+        coords.foreach(_(r).foreach { case (x, y) =>
+          if (x < minX) minX = x; if (x > maxX) maxX = x
+          if (y < minY) minY = y; if (y > maxY) maxY = y
+        })
+      }
+      (n, if (minX != Double.MaxValue) Some(Array(minX, minY, maxX, maxY)) else None)
+    }
+
+  /** The one commit loop: each task streams its partition through the
+    * (serializable) `write`, which returns the partition's row count and
+    * envelope, into `parts/p<id>.<ext>` under the write-ahead +
+    * atomic-rename + manifest protocol above. A sink whose part needs a
+    * trailer after its rows (the tile sinks' index runs) writes it here.
+    * `fingerprint` defaults to [[runFingerprint]] of `df`. */
+  def commitPartitions(
+      df: DataFrame,
+      outDir: String,
+      ext: String,
+      failAtPartition: Int = -1,
+      fingerprint: Option[String] = None)(
+      write: (Iterator[Row], OutputStream) => (Long, Option[Array[Double]])): Unit = {
+    val done = prepareRun(fingerprint.getOrElse(runFingerprint(df)), outDir)
     val doneBc = df.sparkSession.sparkContext.broadcast(done)
     df.foreachPartition { (it: Iterator[Row]) =>
       val pid = TaskContext.getPartitionId()
@@ -143,23 +178,14 @@ object Lineage {
         val tmp = Paths.get(outDir, "parts", s"p$pid.a$attempt.tmp")
         val fin = Paths.get(outDir, "parts", s"p$pid.$ext")
         val w = new BufferedOutputStream(Files.newOutputStream(tmp))
-        var n = 0L
-        var minX = Double.MaxValue; var minY = Double.MaxValue
-        var maxX = Double.MinValue; var maxY = Double.MinValue
-        try it.foreach { r =>
-          w.write(encode(r)); n += 1
-          coords.foreach(_(r).foreach { case (x, y) =>
-            if (x < minX) minX = x; if (x > maxX) maxX = x
-            if (y < minY) minY = y; if (y > maxY) maxY = y
-          })
-        }
-        finally w.close()
+        // a failed attempt leaves no tmp behind; committed parts stay
+        val (n, env) =
+          try try write(it, w) finally w.close()
+          catch { case e: Throwable => Files.deleteIfExists(tmp); throw e }
         val sz = Files.size(tmp)
         Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE,
           StandardCopyOption.REPLACE_EXISTING)
-        val envField =
-          if (minX != Double.MaxValue) s""","env":[$minX,$minY,$maxX,$maxY]"""
-          else ""
+        val envField = env.fold("")(e => s""","env":[${e.mkString(",")}]""")
         val meta = s"""{"partitionId":$pid,"rowCount":$n,"bytes":$sz,""" +
           s""""status":"committed","wallMillis":${System.currentTimeMillis() - t0}$envField}"""
         val mTmp = Paths.get(outDir, "parts", s"p$pid.done.tmp")
@@ -256,7 +282,17 @@ object Lineage {
     * then drop `parts/`. Returns the committed row count; starts no Spark
     * job. */
   def assemble(spark: SparkSession, outDir: String, ext: String, out: Path)(
-      write: (Path, Committed) => Unit): Long = {
+      write: (Path, Committed) => Unit): Long =
+    assembleParts(spark, outDir, ext) { c =>
+      replaceAtomically(out)(write(_, c))
+      c.rows
+    }
+
+  /** [[assemble]] for sinks that build several files from one set of parts
+    * (the shapefile's three triples, both tile archives): `write` renames
+    * its own outputs into place; `parts/` goes once it returns. */
+  def assembleParts[A](spark: SparkSession, outDir: String, ext: String)(
+      write: Committed => A): A = {
     val ms = manifests(outDir)
     compact(spark, outDir, ms.map(_._1))
     val envs = ms.flatMap(_._2)
@@ -265,9 +301,9 @@ object Lineage {
       else Some(Array(envs.map(_(0)).min, envs.map(_(1)).min,
         envs.map(_(2)).max, envs.map(_(3)).max)),
       committedPartFiles(outDir, ext))
-    replaceAtomically(out)(write(_, committed))
+    val result = write(committed)
     cleanParts(outDir)
-    committed.rows
+    result
   }
 
   /** The temp-and-rename step of every single-file output: `write` builds

@@ -1,6 +1,8 @@
 package graft.plan
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.functions._
 import graft.geo.{Cell, MultiPolygon}
 import graft.functions.{GeoCols, Kernels}
@@ -79,9 +81,18 @@ object PlanBuilder {
     if (cells.isEmpty) lit(false)
     else {
       val s = cells.toSeq.sorted
-      if (s.size <= PushedInMax) cell.isin(s: _*)
+      if (s.size <= PushedInMax) cellInSet(cell, s)
       else cell.between(lit(s.head), lit(s.last)) && Kernels.cellIn(s, cell)
     }
+
+  /** `cell IN (cells)` built as an `InSet`, whose generated code reads the
+    * set as a reference object: requests with different covers share one
+    * compiled class. A plain request's cover has ≤ 10 cells, below Spark's
+    * `In` → `InSet` conversion threshold, and an `In` inlines every
+    * literal: 2 new classes (17-35 ms) on 4 of 5 perfbench plain requests.
+    * Parquet still receives it as a pushed `sources.In`. */
+  private def cellInSet(cell: Column, cells: Seq[Long]): Column =
+    ExprBridge.column(InSet(ExprBridge.expression(cell), cells.map(Long.box).toSet[Any]))
 
   private val PushedInMax = 1000
 

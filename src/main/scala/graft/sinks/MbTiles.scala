@@ -2,7 +2,6 @@ package graft.sinks
 
 import java.nio.file.Paths
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import graft.lineage.Lineage
 
 /** From-scratch MBTiles sink — the reference's ENABLE_TILES export branch
@@ -14,10 +13,16 @@ import graft.lineage.Lineage
   *
   * Rows arrive from the same distributed tile pipeline as the PMTiles sink —
   * tileAssign explode + per-tile feature aggregation is the only shuffle —
-  * and stream to the container in (z, x, y) order. Tile payloads are gzip
-  * MVT ([[Mvt]], `format=pbf`); tile_row uses the TMS flip the MBTiles spec
-  * requires. The container is built at `<path>.tmp` and renamed into place,
-  * so a failed job never clobbers or half-writes `path`. */
+  * and each reduce partition commits its payloads as a resumable part with
+  * a `(z, x, y)`-sorted index run ([[Mvt.commitTiles]]). The driver
+  * k-way-merges those runs and streams the payloads to the container in
+  * (z, x, y) order: no global sort, no sampling job, no `toLocalIterator`.
+  * Tile payloads are gzip MVT ([[Mvt]], `format=pbf`); tile_row uses the
+  * TMS flip the MBTiles spec requires. The container is built at
+  * `<path>.tmp` and renamed into place, so a failed job never clobbers or
+  * half-writes `path`; the committed parts live under `<path>.state` until
+  * the container lands, so a killed write resumes with the missing
+  * partitions only. */
 object MbTiles {
 
   /** The reference-parity sink: feature DataFrame → gzip MVT payloads
@@ -25,9 +30,11 @@ object MbTiles {
     * metadata row describing the vector layer — what tippecanoe's mbtiles
     * output carries (src/app.py:592-603). Returns the tile count. */
   def writeMvt(features: DataFrame, path: String, zooms: (Int, Int),
-      name: String): Long =
-    writePayloads(Mvt.tilePayloads(features, zooms, name), path, name,
-      vectorLayersJson(features, zooms, name))
+      name: String, failAtPartition: Int = -1): Long = {
+    val payloads = Mvt.tilePayloads(features, zooms, name)
+    write(payloads, path, name, vectorLayersJson(features, zooms, name),
+      failAtPartition, Some(Mvt.tilesFingerprint(payloads, features, zooms, name)))
+  }
 
   /** MBTiles 1.3 `json` metadata (required when format=pbf): the vector
     * layer inventory tile readers use for styling. Field types follow the
@@ -51,31 +58,37 @@ object MbTiles {
     s"""{"vector_layers":[{"id":"${esc(name)}","minzoom":${zooms._1},"maxzoom":${zooms._2},"fields":{$fields}}]}"""
   }
 
-  /** Container assembly over ready-made (z, tx, ty, gzip MVT payload) rows;
-    * `vectorLayers` is the `json` metadata row ([[vectorLayersJson]]).
-    * Returns the tile count. */
-  def writePayloads(perTile0: DataFrame, path: String, name: String,
-      vectorLayers: String): Long = {
-    val perTile = perTile0.orderBy(col("z"), col("tx"), col("ty"))
+  /** Container assembly over ready-made (z, tx, ty, gzip MVT payload)
+    * rows, one per tile: the rows commit as tile parts, then the driver
+    * merges them in (z, x, y) order. `vectorLayers` is the `json` metadata
+    * row ([[vectorLayersJson]]). Returns the tile count. */
+  def writePayloads(perTile: DataFrame, path: String, name: String,
+      vectorLayers: String, failAtPartition: Int = -1): Long =
+    write(perTile, path, name, vectorLayers, failAtPartition, None)
+
+  private def write(perTile: DataFrame, path: String, name: String,
+      vectorLayers: String, failAtPartition: Int, fingerprint: Option[String]): Long = {
+    val state = s"$path.state"
+    Mvt.commitTiles(perTile, state, failAtPartition, fingerprint)
+    Mvt.assembleTiles(perTile.sparkSession, state)(archive(_, path, name, vectorLayers))
+  }
+
+  /** Build the container at `path` from committed tile parts. Returns the
+    * tile count. */
+  def archive(tiles: Mvt.TileParts, path: String, name: String,
+      vectorLayers: String): Long =
     Lineage.replaceAtomically(Paths.get(path)) { tmp =>
       val db = new Sqlite(tmp.toString)
       try {
         var minZ = Int.MaxValue; var maxZ = 0
         var n = 0L
-        val it = perTile.toLocalIterator()
-        val rows = new Iterator[(Long, Seq[Any])] {
-          def hasNext: Boolean = it.hasNext
-          def next(): (Long, Seq[Any]) = {
-            val r = it.next()
-            val z = r.getInt(0); val tx = r.getLong(1); val ty = r.getLong(2)
-            if (z < minZ) minZ = z
-            if (z > maxZ) maxZ = z
-            n += 1
-            val payload = r.getAs[Array[Byte]](3)
-            // TMS row flip (MBTiles spec: row 0 is the southern edge)
-            val tmsRow = (1L << z) - 1L - ty
-            (n, Seq[Any](z.toLong, tx, tmsRow, payload))
-          }
+        val rows = tiles.tiles(Mvt.ByZxy).map { case (part, e) =>
+          if (e.z < minZ) minZ = e.z
+          if (e.z > maxZ) maxZ = e.z
+          n += 1
+          // TMS row flip (MBTiles spec: row 0 is the southern edge)
+          val tmsRow = (1L << e.z) - 1L - e.ty
+          (n, Seq[Any](e.z.toLong, e.tx, tmsRow, tiles.payload(part, e)))
         }
         db.writeTable("tiles",
           "CREATE TABLE tiles (zoom_level INTEGER, tile_column INTEGER, tile_row INTEGER, tile_data BLOB)",
@@ -98,5 +111,4 @@ object MbTiles {
         n
       } finally db.close()
     }
-  }
 }

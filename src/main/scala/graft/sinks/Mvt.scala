@@ -20,9 +20,15 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: [[tilePayloads]] is the distributed pipeline — the per-tile
   * group is the only shuffle, and tile assembly + protobuf encode + gzip
-  * run in the executors, in the task that streams each tile's group. The
-  * archive writers ([[PmTiles]]/[[MbTiles]]) stream the ready-made payload
-  * bytes.
+  * run in the executors, in the task that streams each tile's group.
+  * [[commitTiles]] writes each reduce partition's payloads as one
+  * resumable commit-loop part that ends in two index runs: its tiles
+  * sorted by PMTiles `tile_id` and by MBTiles `(z, tx, ty)`, each entry
+  * `(keys, offset, length, sha-256)`. The archive writers
+  * ([[PmTiles]]/[[MbTiles]]) k-way-merge one run across the parts
+  * ([[TileParts]]) and copy the payloads in that order: one write job
+  * (two under AQE, whose shuffle stage runs first), payloads encoded once,
+  * and both archives of one export built from the same parts.
   */
 object Mvt {
 
@@ -340,6 +346,156 @@ object Mvt {
           (z, tx, ty, Zip.gzip(encodeTile(layerName, extent, sortFeatures(feats)))))
       }(enc).toDF("z", "tx", "ty", "payload")
   }
+
+  // ---- committed tile parts: the archives' one distributed write ----------
+
+  /** Extension of a committed tile part. */
+  private val TilePartExt = "tiles"
+
+  /** One tile of a committed part: its archive keys, where its payload sits
+    * in the part, and the payload's SHA-256 (PMTiles' duplicate key). */
+  final case class TileEntry(tileId: Long, z: Int, tx: Long, ty: Long,
+      offset: Long, length: Int, sha: Array[Byte])
+
+  private val EntryBytes = 8 + 4 + 8 + 8 + 8 + 4 + 32
+
+  /** The index runs every part ends with, in this order: PMTiles key order
+    * and MBTiles key order. */
+  val ByTileId = 0
+  val ByZxy = 1
+
+  private def writeEntry(out: java.io.DataOutputStream, e: TileEntry): Unit = {
+    out.writeLong(e.tileId); out.writeInt(e.z); out.writeLong(e.tx)
+    out.writeLong(e.ty); out.writeLong(e.offset); out.writeInt(e.length)
+    out.write(e.sha)
+  }
+
+  /** Commit (z, tx, ty, payload) rows — [[tilePayloads]], one row per tile —
+    * as resumable lineage parts under `stateDir`. A part is its partition's
+    * payloads as they arrive, then the partition's [[TileEntry]] index in
+    * [[ByTileId]] order, again in [[ByZxy]] order, then the tile count
+    * (8 bytes). Only the index entries are sorted, in the task; payloads
+    * are written once. `fingerprint` identifies the run for resume (see
+    * [[Lineage.runFingerprint]]); by default the payload frame's own. */
+  def commitTiles(payloads: DataFrame, stateDir: String,
+      failAtPartition: Int = -1, fingerprint: Option[String] = None): Unit = {
+    // the columns by name, without a projection: the commit must run on
+    // the Dataset instance the fingerprint planned, or under AQE the
+    // shuffle stage runs twice
+    val Seq(zi, xi, yi, pi) =
+      Seq("z", "tx", "ty", "payload").map(payloads.schema.fieldIndex)
+    graft.lineage.Lineage.commitPartitions(payloads, stateDir, TilePartExt,
+        failAtPartition, fingerprint) { (it, w) =>
+      val sha = java.security.MessageDigest.getInstance("SHA-256")
+      val entries = scala.collection.mutable.ArrayBuffer.empty[TileEntry]
+      var off = 0L
+      it.foreach { r =>
+        val z = r.getInt(zi); val tx = r.getLong(xi); val ty = r.getLong(yi)
+        val p = r.getAs[Array[Byte]](pi)
+        w.write(p)
+        entries += TileEntry(PmTiles.tileId(z, tx, ty), z, tx, ty, off,
+          p.length, sha.digest(p))
+        off += p.length
+      }
+      val out = new java.io.DataOutputStream(w)
+      entries.sortBy(_.tileId).foreach(writeEntry(out, _))
+      entries.sortBy(e => (e.z, e.tx, e.ty)).foreach(writeEntry(out, _))
+      out.writeLong(entries.size.toLong)
+      out.flush()
+      (entries.size.toLong, None)
+    }
+  }
+
+  /** Run fingerprint of a tile frame built by [[tilePayloads]] from
+    * `features`: the frame's plan holds closures, so the features' plan and
+    * the build parameters stand for it. */
+  def tilesFingerprint(payloads: DataFrame, features: DataFrame,
+      zooms: (Int, Int), layerName: String): String =
+    graft.lineage.Lineage.runFingerprint(payloads, features,
+      s"mvt $zooms $layerName $DefaultExtent")
+
+  /** The committed tile parts of one export, open for reading: the merged
+    * index runs and positioned payload reads. Driver memory is one pending
+    * entry and one read buffer per part, whatever the tile count. */
+  final class TileParts(parts: Seq[java.nio.file.Path]) extends AutoCloseable {
+    import java.nio.ByteBuffer
+    import java.nio.channels.FileChannel
+    private val chans = parts.map(p =>
+      FileChannel.open(p, java.nio.file.StandardOpenOption.READ)).toIndexedSeq
+    private val streams = scala.collection.mutable.ArrayBuffer.empty[java.io.InputStream]
+
+    private def readFully(ch: FileChannel, b: ByteBuffer, pos: Long): Unit = {
+      var at = pos
+      while (b.hasRemaining) {
+        val n = ch.read(b, at)
+        if (n < 0) throw new java.io.EOFException(s"tile part ends at $at")
+        at += n
+      }
+    }
+
+    private val counts = chans.map { ch =>
+      val b = ByteBuffer.allocate(8)
+      readFully(ch, b, ch.size - 8)
+      b.getLong(0)
+    }
+
+    /** Part `i`'s index run `order`, read sequentially. */
+    private def run(i: Int, order: Int): Iterator[TileEntry] = {
+      val n = counts(i)
+      val start = chans(i).size - 8 - (2 - order) * n * EntryBytes
+      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
+        java.nio.file.Files.newInputStream(parts(i))))
+      streams += in
+      in.skipNBytes(start)
+      Iterator.fill(n.toInt) {
+        val tid = in.readLong(); val z = in.readInt(); val tx = in.readLong()
+        val ty = in.readLong(); val off = in.readLong(); val len = in.readInt()
+        val sha = new Array[Byte](32)
+        in.readFully(sha)
+        TileEntry(tid, z, tx, ty, off, len, sha)
+      }
+    }
+
+    /** Every tile of the parts in archive key order `order`, with the index
+      * of the part it sits in: a k-way merge of the parts' runs. A tile
+      * lives in one part (tiles are grouped by key), so keys never tie. */
+    def tiles(order: Int): Iterator[(Int, TileEntry)] = {
+      val key: TileEntry => (Long, Long, Long) =
+        if (order == ByTileId) e => (e.tileId, 0L, 0L)
+        else e => (e.z.toLong, e.tx, e.ty)
+      val runs = chans.indices.map(run(_, order))
+      val heads = scala.collection.mutable.PriorityQueue.empty[(Int, TileEntry)](
+        Ordering.by[(Int, TileEntry), (Long, Long, Long)](h => key(h._2)).reverse)
+      runs.zipWithIndex.foreach { case (r, i) => if (r.hasNext) heads.enqueue((i, r.next())) }
+      new Iterator[(Int, TileEntry)] {
+        def hasNext: Boolean = heads.nonEmpty
+        def next(): (Int, TileEntry) = {
+          val h = heads.dequeue()
+          if (runs(h._1).hasNext) heads.enqueue((h._1, runs(h._1).next()))
+          h
+        }
+      }
+    }
+
+    /** The payload of `e`, from part `part`. */
+    def payload(part: Int, e: TileEntry): Array[Byte] = {
+      val b = ByteBuffer.allocate(e.length)
+      readFully(chans(part), b, e.offset)
+      b.array()
+    }
+
+    def close(): Unit = { streams.foreach(_.close()); chans.foreach(_.close()) }
+  }
+
+  /** Driver-side finish of the tile sinks: compact the committed parts'
+    * manifests into the lineage record, let `write` build the archive(s)
+    * from them, then drop the parts. */
+  def assembleTiles[A](spark: org.apache.spark.sql.SparkSession, stateDir: String)(
+      write: TileParts => A): A =
+    graft.lineage.Lineage.assembleParts(spark, stateDir, TilePartExt) { c =>
+      val tp = new TileParts(c.parts)
+      try write(tp) finally tp.close()
+    }
 
   /** The first `cap` rows of each tile in a partition sorted by
     * (z, tx, ty, hash): the map-side half of the per-tile cap. */

@@ -5,8 +5,6 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import graft.functions.Kernels
 import graft.lineage.Lineage
 
 /** Minimal from-scratch PMTiles v3 archive writer — the reference's actual
@@ -22,11 +20,18 @@ import graft.lineage.Lineage
   * Tile payloads are gzip MVT (tile_type 0x01 via [[writeMvt]] —
   * tippecanoe output parity).
   *
-  * The heavy work (tile assignment, per-tile feature grouping) is the
-  * distributed plan; this writer streams the per-tile groups on the driver —
-  * the same single-archive boundary as tippecanoe itself. The archive is
-  * built at `<path>.tmp` and renamed into place, so a failed job never
-  * clobbers or half-writes `path`.
+  * The heavy work (tile assignment, per-tile feature grouping, encode,
+  * gzip) is the distributed plan, and each reduce partition commits its
+  * payloads as a resumable part with a tile-id-sorted index run
+  * ([[Mvt.commitTiles]]). The driver k-way-merges those runs and copies
+  * the payloads in tile-id order — the same single-archive boundary as
+  * tippecanoe itself — so the archive stays clustered, and duplicate
+  * coalescing happens in that merge. No global sort, no sampling job, no
+  * payload streamed through a `toLocalIterator`. The archive is built at
+  * `<path>.tmp` and renamed into place, so a failed job never clobbers or
+  * half-writes `path`; the committed parts live under `<path>.state` until
+  * the archive lands, so a killed write resumes with the missing
+  * partitions only.
   */
 object PmTiles {
 
@@ -114,8 +119,11 @@ object PmTiles {
     * PMTiles archive with tile_type 1, the same content tippecanoe emits
     * (src/app.py:690-698). Returns (tiles written, archive bytes). */
   def writeMvt(features: DataFrame, path: String, zooms: (Int, Int),
-      layerName: String): (Long, Long) =
-    writePayloads(Mvt.tilePayloads(features, zooms, layerName), path)
+      layerName: String, failAtPartition: Int = -1): (Long, Long) = {
+    val payloads = Mvt.tilePayloads(features, zooms, layerName)
+    write(payloads, path, LeafSize, failAtPartition,
+      Some(Mvt.tilesFingerprint(payloads, features, zooms, layerName)))
+  }
 
   /** Entries per leaf directory. The v3 spec caps the root directory (it
     * must be fetchable in one ~16 KB read); archives beyond `LeafSize`
@@ -125,27 +133,36 @@ object PmTiles {
     * tiles, not 16 B × every tile (a planet pyramid has ~10^8 tiles). */
   val LeafSize: Int = 16384
 
-  /** Archive assembly over ready-made (z, tx, ty, gzip MVT payload) rows:
-    * group-per-tile already done, payloads already compressed — the driver
-    * streams bytes in Hilbert order; directory entries chunk into leaf
-    * directories once the archive outgrows a single root. Returns (tiles
+  /** Archive assembly over ready-made (z, tx, ty, gzip MVT payload) rows,
+    * one per tile: the rows commit as tile parts, then the driver merges
+    * them in Hilbert order; directory entries chunk into leaf directories
+    * once the archive outgrows a single root. Returns (tiles written,
+    * archive bytes). */
+  def writePayloads(perTile: DataFrame, path: String,
+      leafSize: Int = LeafSize, failAtPartition: Int = -1): (Long, Long) =
+    write(perTile, path, leafSize, failAtPartition, None)
+
+  private def write(perTile: DataFrame, path: String, leafSize: Int,
+      failAtPartition: Int, fingerprint: Option[String]): (Long, Long) = {
+    val state = s"$path.state"
+    Mvt.commitTiles(perTile, state, failAtPartition, fingerprint)
+    Mvt.assembleTiles(perTile.sparkSession, state)(archive(_, path, leafSize))
+  }
+
+  /** Build the archive at `path` from committed tile parts. Returns (tiles
     * written, archive bytes). */
-  def writePayloads(perTile0: DataFrame, path: String,
+  def archive(tiles: Mvt.TileParts, path: String,
       leafSize: Int = LeafSize): (Long, Long) = {
-    val perTile = perTile0
-      .withColumn("tile_id", Kernels.tileId(col("z"), col("tx"), col("ty")))
-      .select(col("tile_id"), col("z"), col("payload"))
-      .orderBy(col("tile_id"))
     val out = Paths.get(path)
     Files.createDirectories(out.getParent)
     // tile payloads stream to a sidecar file; leaf directories to a second
     val dataTmp = Files.createTempFile(out.getParent, "pmtiles-data", ".tmp")
     val leafTmp = Files.createTempFile(out.getParent, "pmtiles-leaf", ".tmp")
     try Lineage.replaceAtomically(out)(
-      writePayloadsTo(perTile, _, dataTmp, leafTmp, leafSize))
+      writeArchive(tiles, _, dataTmp, leafTmp, leafSize))
     finally {
-      // a failed job (stage kill, OOM in toLocalIterator) must not orphan
-      // the sidecars — the data one can be archive-sized
+      // a failed assembly must not orphan the sidecars — the data one can
+      // be archive-sized
       Files.deleteIfExists(dataTmp)
       Files.deleteIfExists(leafTmp)
       ()
@@ -159,18 +176,17 @@ object PmTiles {
     * never corrupted. */
   val DedupWindow: Int = 1 << 19
 
-  private def writePayloadsTo(perTile: DataFrame, out: java.nio.file.Path,
+  private def writeArchive(tiles: Mvt.TileParts, out: java.nio.file.Path,
       dataTmp: java.nio.file.Path, leafTmp: java.nio.file.Path,
       leafSize: Int): (Long, Long) = {
     val dataOut = new java.io.BufferedOutputStream(Files.newOutputStream(dataTmp))
     val leafOut = new java.io.BufferedOutputStream(Files.newOutputStream(leafTmp))
-    val it = perTile.toLocalIterator()
     val entries = scala.collection.mutable.ArrayBuffer.empty[Entry]
     val rootEntries = scala.collection.mutable.ArrayBuffer.empty[Entry]
     // duplicate coalescing: identical payloads share one data blob (the
     // spec's tile_contents < addressed_tiles case; what keeps ocean/empty
-    // tiles cheap in planet archives — tippecanoe dedupes the same way)
-    val sha = java.security.MessageDigest.getInstance("SHA-256")
+    // tiles cheap in planet archives — tippecanoe dedupes the same way).
+    // The SHA-256 of each payload comes from its part's index.
     val seen = new java.util.LinkedHashMap[scala.collection.immutable.ArraySeq[Byte], (Long, Int)](
       1024, 0.75f, true) { // access-order = LRU: hot blobs (ocean tiles) stay pinned
       override def removeEldestEntry(
@@ -193,18 +209,15 @@ object PmTiles {
       entries.clear()
     }
     try {
-      while (it.hasNext) {
-        val r = it.next()
-        val tid = r.getLong(0)
-        val payload = r.getAs[Array[Byte]](2)
-        val key = scala.collection.immutable.ArraySeq.unsafeWrapArray(
-          sha.digest(payload))
+      tiles.tiles(Mvt.ByTileId).foreach { case (part, e) =>
+        val tid = e.tileId
+        val key = scala.collection.immutable.ArraySeq.unsafeWrapArray(e.sha)
         val (off, len) = Option(seen.get(key)) match {
           case Some(prior) => prior // coalesce: no new data bytes
           case None =>
-            dataOut.write(payload)
-            val blob = (dataLen, payload.length)
-            dataLen += payload.length
+            dataOut.write(tiles.payload(part, e))
+            val blob = (dataLen, e.length)
+            dataLen += e.length
             nContents += 1
             seen.put(key, blob)
             blob
@@ -221,7 +234,7 @@ object PmTiles {
           nEntries += 1
         }
         nAddressed += 1
-        val z = r.getInt(1)
+        val z = e.z
         if (z < minZ) minZ = z; if (z > maxZ) maxZ = z
         if (entries.size >= leafSize) { leafMode = true; flushLeaf() }
       }

@@ -3,7 +3,7 @@ package graft.sinks
 import java.io.RandomAccessFile
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, Row}
 import graft.lineage.Lineage
 
@@ -19,11 +19,14 @@ import graft.lineage.Lineage
   * multi-ring/multi-part polygon records (outer rings rewound clockwise,
   * holes counter-clockwise, as the spec requires).
   *
-  * Shape and dBASE records encode map-side into committed, resumable lineage
-  * parts; the driver streams them into the triple — a shapefile is a single
-  * file with a global header (bbox + total length patched at the end via
+  * One pass: each task encodes its partition's rows, every kind, into one
+  * committed, resumable lineage part of kind-tagged frames (shape record
+  * ++ dBASE record). The driver streams the committed parts once and
+  * routes each frame to its kind's triple, counting records and growing
+  * that triple's envelope as it goes — a shapefile is a single file with a
+  * global header (bbox + total length patched at the end via
   * RandomAccessFile), the same single-writer boundary as the reference's
-  * ogr2ogr subprocess.
+  * ogr2ogr subprocess. One Spark job per export, whatever the kinds.
   */
 object Shapefile {
 
@@ -153,39 +156,60 @@ object Shapefile {
     case _ => 5
   }
 
-  /** Driver half of [[write]]: stream pre-encoded (shape, dbfRecord)
-    * frames into the triple — record numbering, shx framing and header
-    * patches only; the envelope comes from the parts' lineage manifests. The
-    * .shp goes to `shpPath` (the assembly's temp file, renamed last, so a
-    * triple whose .shp exists is whole). */
-  private def assembleTriple(shpPath: String, base: String, st: Int,
-      fieldNames: Seq[String], frames: Iterator[(Array[Byte], Array[Byte])],
-      env: Option[Array[Double]]): Unit = {
-    val shp = new Patchable(shpPath)
-    val shx = new Patchable(s"$base.shx")
-    val dbf = new DbfWriter(s"$base.dbf", fieldNames)
+  /** Driver half of [[write]]: one kind's triple, fed pre-encoded
+    * (shape, dbfRecord) frames — record numbering, shx framing, the
+    * envelope (from each shape record's own bbox or point) and header
+    * patches only. The .shp streams to `<base>.shp.tmp` and is renamed
+    * last, so a triple whose .shp exists is whole. */
+  private final class Triple(base: String, st: Int, fieldNames: Seq[String]) {
+    private val shpTmp = s"$base.shp.tmp"
+    private val shp = new Patchable(shpTmp)
+    private val shx = new Patchable(s"$base.shx")
+    private val dbf = new DbfWriter(s"$base.dbf", fieldNames)
+    private val ext = Extent()
+    private var recNo = 0
     shp.writeBytes(header(st))
     shx.writeBytes(header(st))
-    var recNo = 0
-    frames.foreach { case (shape, dbfRec) =>
+
+    def add(shape: Array[Byte], dbfRec: Array[Byte]): Unit = {
       recNo += 1
       shx.writeBytes(be((shp.written / 2).toInt) ++ be(shape.length / 2))
       shp.writeBytes(be(recNo) ++ be(shape.length / 2) ++ shape)
       dbf.writeRecord(dbfRec)
+      val b = ByteBuffer.wrap(shape).order(ByteOrder.LITTLE_ENDIAN)
+      ext.add(b.getDouble(4), b.getDouble(12))
+      if (st != 1) ext.add(b.getDouble(20), b.getDouble(28))
     }
-    shp.flush(); shx.flush()
-    shp.patch(24, be((shp.written / 2).toInt))
-    shx.patch(24, be((shx.written / 2).toInt))
-    env.foreach { e =>
-      val bbox = led(e(0)) ++ led(e(1)) ++ led(e(2)) ++ led(e(3))
-      shp.patch(36, bbox)
-      shx.patch(36, bbox)
+
+    private var finished = false
+
+    /** Patch the headers, close the three files, write the .prj and
+      * rename the .shp into place; returns the record count. */
+    def finish(): Int = {
+      shp.flush(); shx.flush()
+      shp.patch(24, be((shp.written / 2).toInt))
+      shx.patch(24, be((shx.written / 2).toInt))
+      if (recNo > 0) {
+        shp.patch(36, ext.bytes)
+        shx.patch(36, ext.bytes)
+      }
+      shp.close(); shx.close()
+      dbf.close()
+      finished = true
+      Files.write(Paths.get(s"$base.prj"),
+        Wgs84Wkt.getBytes(StandardCharsets.US_ASCII))
+      Files.move(Paths.get(shpTmp), Paths.get(s"$base.shp"),
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      recNo
     }
-    shp.close(); shx.close()
-    dbf.close()
-    Files.write(Paths.get(s"$base.prj"),
-      Wgs84Wkt.getBytes(StandardCharsets.US_ASCII))
-    ()
+
+    /** A failed assembly leaves no file open and no `.shp.tmp` behind; a
+      * triple already renamed into place is whole and stays. */
+    def abort(): Unit = {
+      if (!finished) { shp.close(); shx.close(); dbf.close() }
+      Files.deleteIfExists(Paths.get(shpTmp))
+      ()
+    }
   }
 
   /** The shapefile-spec geometry parts per row; serializable, run map-side.
@@ -205,16 +229,18 @@ object Shapefile {
     }
   }
 
+  private val Kinds = Seq("point", "line", "polygon")
+
   /** Export a feature DataFrame (kind, lon, lat, rings, roles, + attribute
     * columns) as per-kind shapefile triples under `dir`. Attribute columns =
     * everything except the geometry columns, stringified. `prefix` gives the
     * reference's GIS-convention names (`{name}_point.shp` etc.,
-    * src/app.py:483-547). Each task encodes its partition's shape records
-    * and fixed-width dBASE records map-side into committed, resumable byte
-    * parts (one [[Lineage.frame]] per shape ++ dbf record; per-part envelope
-    * in the lineage manifests); the driver streams the pre-encoded frames
-    * into the .shp/.shx/.dbf triple — record numbering and header patches
-    * only. Parts clean up after success. Returns kind → record count. */
+    * src/app.py:483-547). One pass: each task encodes its partition's shape
+    * and fixed-width dBASE records map-side into one committed, resumable
+    * byte part, a [[Lineage.frame]] per row of (kind byte ++ shape ++ dbf
+    * record); the driver routes the frames into the three .shp/.shx/.dbf
+    * triples (a kind with no rows still gets an empty triple). Parts clean
+    * up after success. Returns kind → record count. */
   def write(df0: DataFrame, dir: String, prefix: String = "",
       failAtPartition: Int = -1): Map[String, Int] = {
     Files.createDirectories(Paths.get(dir))
@@ -222,35 +248,38 @@ object Shapefile {
     val attrCols = df.columns.filterNot(FeatureModel.geomCols).toSeq
     val idx = df.columns.zipWithIndex.toMap
     val attrIdxs = attrCols.map(idx)
+    val kindIdx = idx("kind")
     val haveVerts = df.columns.contains("rings")
+    val shapeTypes = Kinds.map(k => kindShapeType(if (haveVerts) k else "point"))
     val geometry = geometryClosure(df.columns.toIndexedSeq)
     val dbfWidth = 64
     val nFields = attrCols.size
-    Seq("point", "line", "polygon").map { kind =>
-      val st = kindShapeType(if (haveVerts) kind else "point")
-      val encode = (r: Row) => {
-        val parts = geometry(r)
-        val shape = if (st == 1) pointShape(parts.head.head._1, parts.head.head._2)
-          else polyShape(st, parts)
-        val dbfRec = dbfRecord(
-          attrIdxs.map(i => Option(r.get(i)).map(_.toString).orNull),
-          nFields, dbfWidth)
-        Lineage.frame(shape ++ dbfRec)
+    val encode = (r: Row) => {
+      val k = Kinds.indexOf(r.getString(kindIdx))
+      val st = shapeTypes(k)
+      val parts = geometry(r)
+      val shape = if (st == 1) pointShape(parts.head.head._1, parts.head.head._2)
+        else polyShape(st, parts)
+      val dbfRec = dbfRecord(
+        attrIdxs.map(i => Option(r.get(i)).map(_.toString).orNull),
+        nFields, dbfWidth)
+      Lineage.frame(Array(k.toByte) ++ shape ++ dbfRec)
+    }
+    val stateDir = s"$dir/.${prefix}shp.state"
+    Lineage.exportResumableBytes(df.filter(df.col("kind").isin(Kinds: _*)),
+      stateDir, encode, ext = "shpart", failAtPartition = failAtPartition)
+    val dbfRecSize = 1 + nFields * dbfWidth
+    Lineage.assembleParts(df.sparkSession, stateDir, "shpart") { c =>
+      val triples = Kinds.zip(shapeTypes).map { case (k, st) =>
+        new Triple(s"$dir/$prefix$k", st, attrCols)
       }
-      val stateDir = s"$dir/.$prefix$kind.state"
-      val part = df.filter(df.col("kind") === kind)
-      Lineage.exportResumableBytes(part, stateDir, encode,
-        ext = "shpart", failAtPartition = failAtPartition,
-        coords = Some((r: Row) => geometry(r).flatten))
-      val dbfRecSize = 1 + nFields * dbfWidth
-      val base = s"$dir/$prefix$kind"
-      val n = Lineage.assemble(df.sparkSession, stateDir, "shpart",
-        Paths.get(s"$base.shp")) { (tmp, c) =>
-        assembleTriple(tmp.toString, base, st, attrCols,
-          Lineage.frames(c.parts).map(rec => rec.splitAt(rec.length - dbfRecSize)),
-          c.envelope)
-      }
-      kind -> n.toInt
-    }.toMap
+      try {
+        Lineage.frames(c.parts).foreach { rec =>
+          triples(rec(0).toInt).add(rec.slice(1, rec.length - dbfRecSize),
+            rec.takeRight(dbfRecSize))
+        }
+        Kinds.zip(triples.map(_.finish())).toMap
+      } catch { case e: Throwable => triples.foreach(_.abort()); throw e }
+    }
   }
 }

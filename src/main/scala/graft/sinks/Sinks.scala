@@ -85,15 +85,46 @@ object Sinks {
   }
 
   /** S5 — JSON lines (the FlatGeobuf/KML structural stand-in: one nested
-    * record per row). */
-  def json(extract: DataFrame, outDir: String): Unit =
-    extract.write.mode(SaveMode.Overwrite).json(outDir)
+    * record per row) as ONE file `export.json`. Rows serialize in the PLAN
+    * (`to_json`, the generator Spark's json writer uses) into committed,
+    * resumable byte parts; the driver concatenates them. No per-write name
+    * enters the output, so the same rows give the same bytes. Returns the
+    * row count from the commit manifests. */
+  def json(extract: DataFrame, outDir: String): Long = {
+    val lines = extract.select(
+      to_json(struct(extract.columns.map(col).toIndexedSeq: _*)).as("line"))
+    Lineage.exportResumableBytes(lines, outDir,
+      r => (r.getString(0) + "\n").getBytes(StandardCharsets.UTF_8),
+      ext = "jsonpart")
+    Lineage.assembleConcat(extract.sparkSession, outDir, "jsonpart",
+      Paths.get(outDir, "export.json"))(_ => Array.emptyByteArray, Array.emptyByteArray)
+  }
+
+  /** Spark's part-file names carry a per-write UUID
+    * (`part-00000-<uuid>-c000.zstd.parquet`). */
+  private val SparkPartName = """(part-\d+)-[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}(-c\d+.*)""".r
 
   /** S8 — zstd parquet dump (the reference's DuckDB EXPORT DATABASE
-    * (FORMAT PARQUET, COMPRESSION ZSTD), app.py:1742). */
-  def parquetZstd(extract: DataFrame, outDir: String): Unit =
+    * (FORMAT PARQUET, COMPRESSION ZSTD), app.py:1742). The parts are
+    * renamed to `part-<n>-c<k>.zstd.parquet`, dropping the writer's
+    * per-write UUID, so the same rows give the same file names. The bytes
+    * still carry parquet-mr's encoding-list order, which can differ between
+    * JVMs. */
+  def parquetZstd(extract: DataFrame, outDir: String): Unit = {
     extract.write.mode(SaveMode.Overwrite)
       .option("compression", "zstd").parquet(outDir)
+    val dir = new org.apache.hadoop.fs.Path(outDir)
+    // the Hadoop file system renames each part's checksum file with it
+    val fs = dir.getFileSystem(extract.sparkSession.sparkContext.hadoopConfiguration)
+    fs.listStatus(dir).map(_.getPath).foreach { p =>
+      p.getName match {
+        case SparkPartName(part, rest) =>
+          require(fs.rename(p, new org.apache.hadoop.fs.Path(dir, part + rest)),
+            s"cannot rename $p")
+        case _ => ()
+      }
+    }
+  }
 
   /** KML geometry per [[FeatureModel.Geom]] — Point / LineString / Polygon
     * with innerBoundaryIs holes / MultiGeometry for multi-part shapes. Pure

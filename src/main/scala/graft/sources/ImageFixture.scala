@@ -204,7 +204,9 @@ object ImageFixture {
 
   /** Commit `files` as snapshot `sid`: their manifest rows (one aggregate,
     * collected once; one row per file that holds rows) and the snapshot log
-    * entry with the rows they add. Returns the added row count. */
+    * entry with the rows they add. Returns the added row count. The driver
+    * adds `sid` to the collected rows: as a plan literal it would be
+    * inlined into the generated code, one new class per commit. */
   private def commit(spark: SparkSession, baseDir: String, files: Seq[String],
       sid: Long, mode: SaveMode): Long = {
     val rows =
@@ -212,8 +214,8 @@ object ImageFixture {
       else spark.read.schema(ImageTable.Schema).parquet(files: _*)
         .groupBy(input_file_name().as("file"))
         .agg(min("cell"), max("cell"), count(lit(1)))
-        .withColumn("snapshot_id", lit(sid))
         .collect()
+        .map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3), sid))
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), ManifestSchema)
       .coalesce(1).write.mode(mode).parquet(s"$baseDir/manifest")
     val added = rows.map(_.getLong(3)).sum

@@ -99,7 +99,7 @@ class CustomExportSpec extends SparkSpec {
     assert(sqlLines.get(sqlLines.size - 1) == "\\.")
   }
 
-  test("zip packaging: streamed archive of category outputs, deterministic bytes") {
+  test("zip packaging: streamed archive mirrors the category outputs") {
     import java.util.zip.ZipInputStream
     val staging = Files.createTempDirectory("ce_zip_st").toString
     val outDir = Files.createTempDirectory("ce_zip_out").toString
@@ -142,11 +142,47 @@ class CustomExportSpec extends SparkSpec {
     assert(got.keys.exists(_.endsWith("export.geojson")))
     // pipeline-internal accounting stays out of the user-facing archive
     assert(!got.keys.exists(k => k.split('/').contains("lineage")))
-    // deterministic re-zip
-    val again = s"$outDir/again.zip"
-    graft.sinks.Zip.zipDir(catDir.toString, again)
-    assert(java.util.Arrays.equals(Files.readAllBytes(zipPath),
-      Files.readAllBytes(java.nio.file.Paths.get(again))))
+  }
+
+  test("two processCategories runs give byte-identical category zips") {
+    val images = ImageFixture.read(spark, baseDir)
+    val fmts = Seq("geojson", "parquet", "csv", "json", "shp", "kml", "fgb",
+      "sql", "gpkg", "pmtiles", "mbtiles")
+    def run(): (Array[Byte], Long) = {
+      val staging = Files.createTempDirectory("ce_repro_st").toString
+      val outDir = Files.createTempDirectory("ce_repro_out").toString
+      val n = CustomExport.processCategories(spark, images, Some(geom),
+        Seq(cats.head), staging, outDir, formats = fmts, zipOutputs = true)(cats.head.name)
+      (Files.readAllBytes(java.nio.file.Paths.get(s"$outDir/${cats.head.name}.zip")), n)
+    }
+    val (a, n) = run()
+    val (b, _) = run()
+    assert(n > 0)
+    // within one JVM parquet-mr lists encodings in one order, so the parquet
+    // parts are byte-identical too; across JVMs that order may differ
+    assert(java.util.Arrays.equals(a, b), "the same export must zip to the same bytes")
+  }
+
+  test("staging runs at most one write task per core on a table with more files") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    val dir = Files.createTempDirectory("ce_many_files").toString
+    ImageFixture.write(spark, 1200, dir, partitions = 12)
+    val images = ImageFixture.read(spark, dir)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(images.inputFiles.length > cores)
+    val staging = Files.createTempDirectory("ce_many_st").toString
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        tasks.addAndGet(e.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    var staged: DataFrame = null
+    val jobs = try jobsOf { staged = CustomExport.stage(spark, images, None, staging) }
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs == 1)
+    assert(tasks.get() <= cores, s"${tasks.get()} staging tasks on $cores cores")
+    assert(staged.count() == images.count())
   }
 
   test("featureCollection assembles ONE valid parseable GeoJSON file") {
@@ -262,11 +298,11 @@ class CustomExportSpec extends SparkSpec {
     assert(mixCategories.exists(c => CustomExport.extractCategory(staged, c).count() > 0))
   }
 
-  test("export job budgets: city 10, regional 8, continental 4 Spark jobs") {
+  test("export job budgets: city 6, regional 6, continental 4 Spark jobs") {
     val images = ImageFixture.read(spark, baseDir)
     val sets = Seq(
-      (mixCategories(1), Seq("pmtiles", "shp", "csv", "geojson"), 10),
-      (mixCategories(0), Seq("mbtiles", "gpkg", "json", "kml"), 8),
+      (mixCategories(1), Seq("pmtiles", "shp", "csv", "geojson"), 6),
+      (mixCategories(0), Seq("mbtiles", "gpkg", "json", "kml"), 6),
       (mixCategories(3), Seq("fgb", "sql", "parquet"), 4))
     val jobs = sets.map { case (c, fmts, _) =>
       val staging = Files.createTempDirectory("ce_budget_st").toString

@@ -173,26 +173,6 @@ class KernelParitySpec extends SparkSpec {
       Kernels.cellIn(cells, col("cell")).isNull).count() == 1)
   }
 
-  test("PMTiles tile id kernel ≡ PmTiles.tileId: z 0..14, tile corners, random tiles, nulls") {
-    val rng = new scala.util.Random(7)
-    val tiles = (0 to 14).flatMap { z =>
-      val last = (1L << z) - 1
-      Seq((0L, 0L), (last, 0L), (0L, last), (last, last)).map { case (x, y) => (z, x, y) } ++
-        Seq.fill(20)((z, (rng.nextDouble() * (last + 1)).toLong,
-          (rng.nextDouble() * (last + 1)).toLong))
-    }
-    val want = tiles.map { case (z, x, y) => ((z, x, y), graft.sinks.PmTiles.tileId(z, x, y)) }
-    val got = tiles.toDF("z", "x", "y")
-      .select(col("z"), col("x"), col("y"), Kernels.tileId(col("z"), col("x"), col("y")))
-      .as[(Int, Long, Long, Long)].collect().map { case (z, x, y, id) => ((z, x, y), id) }
-    assert(got.toSet == want.toSet)
-    assert(got.map(_._2).distinct.length == tiles.distinct.length, "ids are unique")
-    val nulls = Seq[(Option[Int], Option[Long], Option[Long])](
-      (None, Some(1L), Some(1L)), (Some(3), None, Some(1L)),
-      (Some(3), Some(1L), None), (None, None, None)).toDF("z", "x", "y")
-    assert(nulls.filter(Kernels.tileId(col("z"), col("x"), col("y")).isNotNull).count() == 0)
-  }
-
   test("DotProductExpr ≡ unrolled 64-term dot tree") {
     val emb = embeddings
     val tree = (0 until Similarity.Dims).map(i =>

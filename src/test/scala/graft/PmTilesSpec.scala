@@ -3,11 +3,15 @@ package graft
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPInputStream
-import graft.sinks.PmTiles
+import org.apache.spark.sql.functions.col
+import graft.lineage.Lineage
+import graft.sinks.{MbTiles, PmTiles}
+import graft.sources.{ImageFixture, ImageTable}
 
 /** PMTiles v3 archive layout against an independent minimal reader (gzip
   * varint directory, leaf directories, payload slicing and dedup) plus
-  * Hilbert tile-id properties; the MVT archive round-trip is in MvtSpec. */
+  * Hilbert tile-id properties, and the resumable tile commit shared with
+  * MBTiles; the MVT archive round-trip is in MvtSpec. */
 class PmTilesSpec extends SparkSpec {
 
   test("hilbert tile ids are bijective per zoom and globally unique") {
@@ -154,5 +158,37 @@ class PmTilesSpec extends SparkSpec {
     assert(payloadAt(0) == "ocean" && payloadAt(1) == "land" &&
       payloadAt(2) == "ocean")
     assert(offs(2) == offs(0), "duplicate payload shares the first blob")
+  }
+
+  test("pmtiles and mbtiles: kill mid-export, resume completes byte-identically") {
+    // features read back from parquet: a plan without closures, so a resumed
+    // run's fingerprint matches the killed run's
+    val src = Files.createTempDirectory("tiles_src").resolve("f").toString
+    ImageTable.derive(ImageFixture.generate(spark, 400, 2))
+      .select(Seq("image_id", "kind", "lon", "lat", "rings", "roles").map(col): _*)
+      .write.parquet(src)
+    val feats = spark.read.parquet(src)
+    val dir = Files.createTempDirectory("tiles_kill")
+    val writers: Seq[(String, (String, Int) => Any)] = Seq(
+      "export.pmtiles" -> ((p, f) => PmTiles.writeMvt(feats, p, (2, 3), "export", f)),
+      "export.mbtiles" -> ((p, f) => MbTiles.writeMvt(feats, p, (2, 3), "export", f)))
+    // four payload partitions: AQE would coalesce this small shuffle into one
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    try writers.foreach { case (name, write) =>
+      val clean = dir.resolve(s"clean-$name")
+      val resumed = dir.resolve(name)
+      write(clean.toString, -1)
+      intercept[Exception](write(resumed.toString, 2))
+      val committed = Lineage.committedParts(s"$resumed.state")
+      assert(committed.nonEmpty && !committed(2), s"$name: a partial commit")
+      assert(!Files.exists(resumed))
+      // the resume runs only the missing partitions: a fault injected at a
+      // committed one never fires
+      write(resumed.toString, committed.min)
+      assert(java.util.Arrays.equals(Files.readAllBytes(clean), Files.readAllBytes(resumed)),
+        s"$name must be byte-identical to a clean run")
+      assert(!Files.exists(Paths.get(s"$resumed.state", "parts")))
+    } finally spark.conf.unset(coalesce)
   }
 }

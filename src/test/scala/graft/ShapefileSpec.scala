@@ -144,7 +144,7 @@ class ShapefileSpec extends SparkSpec {
     intercept[Exception] {
       Shapefile.write(parts, d2, failAtPartition = 3)
     }
-    assert(graft.lineage.Lineage.committedParts(s"$d2/.point.state").nonEmpty)
+    assert(graft.lineage.Lineage.committedParts(s"$d2/.shp.state").nonEmpty)
     val counts = Shapefile.write(parts, d2)
     // a resumed run is byte-identical to a clean run on the same partitioning
     assert(Shapefile.write(parts, d1) == counts)
@@ -155,7 +155,7 @@ class ShapefileSpec extends SparkSpec {
         s"$kind.$ext must be byte-identical")
     }
     // resumable state cleaned after success (compacted lineage remains)
-    assert(!Files.exists(Paths.get(s"$d2/.point.state/parts")))
+    assert(!Files.exists(Paths.get(s"$d2/.shp.state/parts")))
     // count and bbox against the source rows, through the independent parser
     val byKind = feats.collect().groupBy(_.getString(1))
     for (kind <- Seq("point", "line", "polygon")) {

@@ -426,10 +426,16 @@ class SqliteSinksSpec extends SparkSpec {
       "the earlier mbtiles archive must survive a failed rewrite")
     assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(pm)), pmBytes),
       "the earlier pmtiles archive must survive a failed rewrite")
-    val left = Files.list(dir)
-    try assert(left.iterator().asScala.map(_.getFileName.toString).toSet ==
-      Set("export.mbtiles", "export.pmtiles"), "no temp or sidecar file remains")
-    finally left.close()
+    // the failed write keeps its committed tile parts for a resume, in each
+    // archive's `.state` directory; no temp or sidecar file remains
+    val left = Files.walk(dir)
+    try {
+      val names = left.iterator().asScala.map(dir.relativize(_).toString)
+        .filter(_.nonEmpty).toSeq
+      assert(names.filterNot(_.contains("/")).toSet == Set("export.mbtiles",
+        "export.pmtiles", "export.mbtiles.state", "export.pmtiles.state"))
+      assert(!names.exists(_.endsWith(".tmp")), s"no temp or sidecar file remains: $names")
+    } finally left.close()
   }
 
   test("real sqlite accepts the gpkg and mbtiles containers (tools/sqlite_check.py)") {
