@@ -167,10 +167,8 @@ object CustomExport {
             // + gzip) and one commit feed BOTH archive containers
             val zooms = (2, 6)
             val payloads = graft.sinks.Mvt.tilePayloads(df, zooms, c.name)
-            val state = s"$catDir/.tiles.state"
-            graft.sinks.Mvt.commitTiles(payloads, state, fingerprint =
-              Some(graft.sinks.Mvt.tilesFingerprint(payloads, df, zooms, c.name)))
-            graft.sinks.Mvt.assembleTiles(spark, state) { tiles =>
+            graft.sinks.Mvt.writeArchives(payloads, s"$catDir/.tiles.state",
+                Some(graft.sinks.Mvt.tilesFingerprint(payloads, df, zooms, c.name))) { tiles =>
               val pm = graft.sinks.PmTiles.archive(tiles, s"$catDir/export.pmtiles")._1
               val mb = graft.sinks.MbTiles.archive(tiles, s"$catDir/export.mbtiles",
                 c.name, graft.sinks.MbTiles.vectorLayersJson(df, zooms, c.name))

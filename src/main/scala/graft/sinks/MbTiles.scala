@@ -14,7 +14,7 @@ import graft.lineage.Lineage
   * Rows arrive from the same distributed tile pipeline as the PMTiles sink —
   * tileAssign explode + per-tile feature aggregation is the only shuffle —
   * and each reduce partition commits its payloads as a resumable part with
-  * a `(z, x, y)`-sorted index run ([[Mvt.commitTiles]]). The driver
+  * a `(z, x, y)`-sorted index run ([[Mvt.writeArchives]]). The driver
   * k-way-merges those runs and streams the payloads to the container in
   * (z, x, y) order: no global sort, no sampling job, no `toLocalIterator`.
   * Tile payloads are gzip MVT ([[Mvt]], `format=pbf`); tile_row uses the
@@ -32,8 +32,10 @@ object MbTiles {
   def writeMvt(features: DataFrame, path: String, zooms: (Int, Int),
       name: String, failAtPartition: Int = -1): Long = {
     val payloads = Mvt.tilePayloads(features, zooms, name)
-    write(payloads, path, name, vectorLayersJson(features, zooms, name),
-      failAtPartition, Some(Mvt.tilesFingerprint(payloads, features, zooms, name)))
+    val layers = vectorLayersJson(features, zooms, name)
+    Mvt.writeArchives(payloads, s"$path.state",
+      Some(Mvt.tilesFingerprint(payloads, features, zooms, name)),
+      failAtPartition)(archive(_, path, name, layers))
   }
 
   /** MBTiles 1.3 `json` metadata (required when format=pbf): the vector
@@ -63,15 +65,9 @@ object MbTiles {
     * merges them in (z, x, y) order. `vectorLayers` is the `json` metadata
     * row ([[vectorLayersJson]]). Returns the tile count. */
   def writePayloads(perTile: DataFrame, path: String, name: String,
-      vectorLayers: String, failAtPartition: Int = -1): Long =
-    write(perTile, path, name, vectorLayers, failAtPartition, None)
-
-  private def write(perTile: DataFrame, path: String, name: String,
-      vectorLayers: String, failAtPartition: Int, fingerprint: Option[String]): Long = {
-    val state = s"$path.state"
-    Mvt.commitTiles(perTile, state, failAtPartition, fingerprint)
-    Mvt.assembleTiles(perTile.sparkSession, state)(archive(_, path, name, vectorLayers))
-  }
+      vectorLayers: String): Long =
+    Mvt.writeArchives(perTile, s"$path.state", None)(
+      archive(_, path, name, vectorLayers))
 
   /** Build the container at `path` from committed tile parts. Returns the
     * tile count. */

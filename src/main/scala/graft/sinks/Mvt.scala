@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * Scale shape: [[tilePayloads]] is the distributed pipeline — the per-tile
   * group is the only shuffle, and tile assembly + protobuf encode + gzip
   * run in the executors, in the task that streams each tile's group.
-  * [[commitTiles]] writes each reduce partition's payloads as one
+  * [[writeArchives]] commits each reduce partition's payloads as one
   * resumable commit-loop part that ends in two index runs: its tiles
   * sorted by PMTiles `tile_id` and by MBTiles `(z, tx, ty)`, each entry
   * `(keys, offset, length, sha-256)`. The archive writers
@@ -377,8 +377,8 @@ object Mvt {
     * (8 bytes). Only the index entries are sorted, in the task; payloads
     * are written once. `fingerprint` identifies the run for resume (see
     * [[Lineage.runFingerprint]]); by default the payload frame's own. */
-  def commitTiles(payloads: DataFrame, stateDir: String,
-      failAtPartition: Int = -1, fingerprint: Option[String] = None): Unit = {
+  private def commitTiles(payloads: DataFrame, stateDir: String,
+      failAtPartition: Int, fingerprint: Option[String]): Unit = {
     // the columns by name, without a projection: the commit must run on
     // the Dataset instance the fingerprint planned, or under AQE the
     // shuffle stage runs twice
@@ -487,15 +487,19 @@ object Mvt {
     def close(): Unit = { streams.foreach(_.close()); chans.foreach(_.close()) }
   }
 
-  /** Driver-side finish of the tile sinks: compact the committed parts'
-    * manifests into the lineage record, let `write` build the archive(s)
-    * from them, then drop the parts. */
-  def assembleTiles[A](spark: org.apache.spark.sql.SparkSession, stateDir: String)(
-      write: TileParts => A): A =
-    graft.lineage.Lineage.assembleParts(spark, stateDir, TilePartExt) { c =>
+  /** The tile sinks' write: commit `payloads` ([[commitTiles]]) under
+    * `stateDir`, then, on the driver, compact the committed parts'
+    * manifests into the lineage record, let `build` make the archive(s)
+    * from them, and drop the parts. One commit can feed several archives. */
+  def writeArchives[A](payloads: DataFrame, stateDir: String,
+      fingerprint: Option[String], failAtPartition: Int = -1)(
+      build: TileParts => A): A = {
+    commitTiles(payloads, stateDir, failAtPartition, fingerprint)
+    graft.lineage.Lineage.assembleParts(payloads.sparkSession, stateDir, TilePartExt) { c =>
       val tp = new TileParts(c.parts)
-      try write(tp) finally tp.close()
+      try build(tp) finally tp.close()
     }
+  }
 
   /** The first `cap` rows of each tile in a partition sorted by
     * (z, tx, ty, hash): the map-side half of the per-tile cap. */

@@ -23,7 +23,7 @@ import graft.lineage.Lineage
   * The heavy work (tile assignment, per-tile feature grouping, encode,
   * gzip) is the distributed plan, and each reduce partition commits its
   * payloads as a resumable part with a tile-id-sorted index run
-  * ([[Mvt.commitTiles]]). The driver k-way-merges those runs and copies
+  * ([[Mvt.writeArchives]]). The driver k-way-merges those runs and copies
   * the payloads in tile-id order — the same single-archive boundary as
   * tippecanoe itself — so the archive stays clustered, and duplicate
   * coalescing happens in that merge. No global sort, no sampling job, no
@@ -121,8 +121,9 @@ object PmTiles {
   def writeMvt(features: DataFrame, path: String, zooms: (Int, Int),
       layerName: String, failAtPartition: Int = -1): (Long, Long) = {
     val payloads = Mvt.tilePayloads(features, zooms, layerName)
-    write(payloads, path, LeafSize, failAtPartition,
-      Some(Mvt.tilesFingerprint(payloads, features, zooms, layerName)))
+    Mvt.writeArchives(payloads, s"$path.state",
+      Some(Mvt.tilesFingerprint(payloads, features, zooms, layerName)),
+      failAtPartition)(archive(_, path))
   }
 
   /** Entries per leaf directory. The v3 spec caps the root directory (it
@@ -139,15 +140,8 @@ object PmTiles {
     * once the archive outgrows a single root. Returns (tiles written,
     * archive bytes). */
   def writePayloads(perTile: DataFrame, path: String,
-      leafSize: Int = LeafSize, failAtPartition: Int = -1): (Long, Long) =
-    write(perTile, path, leafSize, failAtPartition, None)
-
-  private def write(perTile: DataFrame, path: String, leafSize: Int,
-      failAtPartition: Int, fingerprint: Option[String]): (Long, Long) = {
-    val state = s"$path.state"
-    Mvt.commitTiles(perTile, state, failAtPartition, fingerprint)
-    Mvt.assembleTiles(perTile.sparkSession, state)(archive(_, path, leafSize))
-  }
+      leafSize: Int = LeafSize): (Long, Long) =
+    Mvt.writeArchives(perTile, s"$path.state", None)(archive(_, path, leafSize))
 
   /** Build the archive at `path` from committed tile parts. Returns (tiles
     * written, archive bytes). */

@@ -164,12 +164,24 @@ object Shapefile {
   private final class Triple(base: String, st: Int, fieldNames: Seq[String]) {
     private val shpTmp = s"$base.shp.tmp"
     private val shp = new Patchable(shpTmp)
-    private val shx = new Patchable(s"$base.shx")
-    private val dbf = new DbfWriter(s"$base.dbf", fieldNames)
+    private val shx = closingOnFailure(shp)(new Patchable(s"$base.shx"))
+    private val dbf = closingOnFailure(shp, shx) {
+      shp.writeBytes(header(st))
+      shx.writeBytes(header(st))
+      new DbfWriter(s"$base.dbf", fieldNames)
+    }
     private val ext = Extent()
     private var recNo = 0
-    shp.writeBytes(header(st))
-    shx.writeBytes(header(st))
+
+    /** `open`, or, if it throws, close the files opened before it and drop
+      * the `.shp.tmp`: a triple that fails to open leaks nothing. */
+    private def closingOnFailure[A](opened: Patchable*)(open: => A): A =
+      try open catch {
+        case e: Throwable =>
+          opened.foreach(_.close())
+          Files.deleteIfExists(Paths.get(shpTmp))
+          throw e
+      }
 
     def add(shape: Array[Byte], dbfRec: Array[Byte]): Unit = {
       recNo += 1
@@ -270,10 +282,13 @@ object Shapefile {
       stateDir, encode, ext = "shpart", failAtPartition = failAtPartition)
     val dbfRecSize = 1 + nFields * dbfWidth
     Lineage.assembleParts(df.sparkSession, stateDir, "shpart") { c =>
-      val triples = Kinds.zip(shapeTypes).map { case (k, st) =>
-        new Triple(s"$dir/$prefix$k", st, attrCols)
-      }
+      // opened inside the try, so a kind that fails to open aborts the
+      // triples opened before it
+      val triples = scala.collection.mutable.ArrayBuffer.empty[Triple]
       try {
+        Kinds.zip(shapeTypes).foreach { case (k, st) =>
+          triples += new Triple(s"$dir/$prefix$k", st, attrCols)
+        }
         Lineage.frames(c.parts).foreach { rec =>
           triples(rec(0).toInt).add(rec.slice(1, rec.length - dbfRecSize),
             rec.takeRight(dbfRecSize))

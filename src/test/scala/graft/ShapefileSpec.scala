@@ -171,6 +171,28 @@ class ShapefileSpec extends SparkSpec {
     }
   }
 
+  test("shapefile: a kind that cannot open leaks no file and no .shp.tmp; a rerun completes") {
+    val d = Files.createTempDirectory("shp_open").toString
+    // a directory where the line .dbf goes: the second triple fails to open
+    // after the point triple and the line .shp.tmp/.shx are open
+    Files.createDirectories(Paths.get(s"$d/line.dbf"))
+    val parts = fixedParts(feats, 3)
+    intercept[Exception](Shapefile.write(parts, d))
+    def under(p: java.nio.file.Path) = p.toString.startsWith(d)
+    val left = Files.walk(Paths.get(d)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+    assert(!left.exists(_.toString.endsWith(".shp.tmp")), left.mkString(", "))
+    assert(!left.exists(_.toString.endsWith(".shp")), "no triple lands when one fails")
+    val fds = Paths.get("/proc/self/fd")
+    if (Files.isDirectory(fds)) {
+      val open = Files.list(fds).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .flatMap(f => scala.util.Try(Files.readSymbolicLink(f)).toOption)
+      assert(!open.exists(under), open.filter(under).mkString(", "))
+    }
+    Files.delete(Paths.get(s"$d/line.dbf"))
+    val byKind = feats.collect().groupBy(_.getString(1)).map { case (k, v) => k -> v.length }
+    assert(Shapefile.write(parts, d) == byKind)
+  }
+
   test("sinks accept build() outputs (osm_type instead of kind) with real geometry") {
     import graft.geo.MultiPolygon
     import graft.model.{SnapshotRequest, TypeFilters}
