@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.GeoCols
+import graft.functions.{GeoCols, Kernels}
 import graft.geo.{Fixtures, MultiPolygon}
 import graft.model.{GeomType, SnapshotRequest, TagFilter, TypeFilters}
 import graft.operators.{Dedup, Knn, Similarity, SpatialJoin, TextOps}
@@ -164,7 +164,7 @@ object SparkEntry {
     GeoCols.derivedFeatures(s, dir)
       .filter(col("kind") === "polygon")
       .select(col("image_id"),
-        round(GeoCols.areaRingsUdf(col("rings")), 6).as("area_deg2"))
+        round(Kernels.areaRings(col("rings")), 6).as("area_deg2"))
 
   /** Structural witness of the arbitrary-vertex generation: per-feature
     * ring/hole/part/vertex counts — certifies the engine-side geometry
@@ -194,7 +194,7 @@ object SparkEntry {
       .filter(PlanBuilder.geometryFilter(geom, col("kind"), col("lon"),
         col("lat"), col("cell"), col("rings")))
       .select(col("image_id"), size(col("rings")).as("n_rings"),
-        round(GeoCols.areaRingsUdf(col("rings")), 6).as("area_deg2"))
+        round(Kernels.areaRings(col("rings")), 6).as("area_deg2"))
   }
 
   /** The geometrytype(geom)='MULTILINESTRING' branch (builder.py:685):
@@ -205,14 +205,13 @@ object SparkEntry {
     GeoCols.derivedFeatures(s, dir)
       .filter(col("kind") === "line")
       // part count via roles (all 0 for lines, so count == ring count):
-      // the roles generation is a few small array ops, while size(rings)
-      // would inline the full vertex-generation lambda chain into the
-      // pushed-down predicate (measured 5x on this gate at sf0.1)
+      // the roles kernel draws only the structure selectors, the rings
+      // kernel every vertex
       .filter(size(filter(col("roles"), r => r === 0)) > 1)
       .filter(PlanBuilder.geometryFilter(geom, col("kind"), col("lon"),
         col("lat"), col("cell"), col("rings")))
       .select(col("image_id"), size(col("rings")).as("n_parts"),
-        round(GeoCols.lengthRingsUdf(col("rings")), 6).as("length_deg"))
+        round(Kernels.lengthRings(col("rings")), 6).as("length_deg"))
   }
 
   /** F16 freeform where-DSL through the full plan path (models.py:408-412,

@@ -175,9 +175,8 @@ object GeoCols {
   // `kind` routes semantics: point (no rings), line (open polylines,
   // multiple role-0 parts = MultiLineString), polygon (closed rings,
   // multiple role-0 rings = MultiPolygon parts; shells CCW, holes CW).
-  // All vertex offsets are bounded (|dlon| <= 1.7 < 2.8125, |dlat| <= 0.93
-  // < 1.40625 — under one res-7 cell per axis) so the coarse cell prefilter
-  // still needs only a 1-ring expansion of the request cover.
+  // Both derived feature tables take their shapes from the one kernel shape
+  // spec (`Kernels.pidRings`/`imageRings`); the SQL below is its oracle twin.
 
   /** 16 unit-circle directions (cos/sin of k*pi/8 as 4-dp literals — literal
     * parity with the SQL twin instead of cross-engine trig parity), CCW. */
@@ -188,8 +187,6 @@ object GeoCols {
     0.0, 0.3827, 0.7071, 0.9239, 1.0, 0.9239, 0.7071, 0.3827,
     0.0, -0.3827, -0.7071, -0.9239, -1.0, -0.9239, -0.7071, -0.3827)
 
-  private def dirXArr: Column = array(DirX.map(lit): _*)
-  private def dirYArr: Column = array(DirY.map(lit): _*)
   private def dirXList: String = DirX.mkString("(([", ", ", "])::DOUBLE[])")
   private def dirYList: String = DirY.mkString("(([", ", ", "])::DOUBLE[])")
 
@@ -198,36 +195,15 @@ object GeoCols {
   val UA = 67867967L
   val UB = 15485863L
 
-  /** Unit draw in [0,1) for (pid, k) — pure integer arithmetic, twin of
-    * [[uPidSql]]. */
-  def uPidCol(pid: Column)(k: Column): Column =
-    ((pid * lit(UA) + k.cast("long") * lit(UB)) % lit(1000000L))
-      .cast("double") / lit(1000000.0)
-
+  /** Unit draw in [0,1) for (pid, k) — pure integer arithmetic, the SQL
+    * twin of the kernels' pid draws (`Kernels.PidDraws`). */
   def uPidSql(kE: String): String =
     s"((pid * $UA + ($kE) * $UB) % 1000000)/1000000.0"
 
   /** Structure selector in [0, base) for (pid, salt). */
-  def mPidCol(pid: Column)(base: Int, salt: Int): Column =
-    ((pid + lit(37L * salt)) % lit(base.toLong)).cast("int")
-
   def mPidSql(base: Int, salt: Int): String = s"((pid + ${37L * salt}) % $base)"
 
-  /** One star-shaped flat ring around (cx, cy): n vertices, direction
-    * d_i = floor(i*16/n) through [[DirX]]/[[DirY]] (reversed when `dirRev`
-    * — holes wind CW against CCW shells), radius rBase + rSpan*u(uOff+i),
-    * lat squashed 0.7. Strictly increasing directions + positive radii =
-    * simple (non-self-intersecting) by construction. */
-  private def starRingCol(cx: Column, cy: Column, n: Column, dirRev: Boolean,
-      rBase: Double, rSpan: Double, uOff: Int, u: Column => Column): Column =
-    flatten(transform(sequence(lit(0), n - 1), i => {
-      val d0 = floor(i * lit(16) / n).cast("int")
-      val d = if (dirRev) lit(15) - d0 else d0
-      val r = lit(rBase) + lit(rSpan) * u(lit(uOff) + i)
-      array(cx + r * element_at(dirXArr, d + 1),
-        cy + lit(0.7) * r * element_at(dirYArr, d + 1))
-    }))
-
+  /** SQL twin of the kernels' star ring, vertex i from `i`. */
   private def starRingSql(cxE: String, cyE: String, nE: String, dirRev: Boolean,
       rBase: Double, rSpan: Double, uOff: Int): String = {
     val d0 = s"CAST(FLOOR((i * 16) / ($nE)) AS BIGINT)"
@@ -238,19 +214,7 @@ object GeoCols {
       s"$cyE + 0.7 * $r * $dirYList[$d + 1]]))"
   }
 
-  /** Open polyline: v0 = (cx,cy) when `anchored`; every other vertex an
-    * absolute draw cx +- ampX, cy +- ampY. */
-  private def zigzagLineCol(cx: Column, cy: Column, n: Column, anchored: Boolean,
-      ampX: Double, ampY: Double, uOffX: Int, uOffY: Int,
-      u: Column => Column): Column =
-    flatten(transform(sequence(lit(0), n - 1), i => {
-      val x = cx + lit(ampX) * (u(lit(uOffX) + i) * lit(2.0) - lit(1.0))
-      val y = cy + lit(ampY) * (u(lit(uOffY) + i) * lit(2.0) - lit(1.0))
-      if (anchored)
-        array(when(i === 0, cx).otherwise(x), when(i === 0, cy).otherwise(y))
-      else array(x, y)
-    }))
-
+  /** SQL twin of the kernels' zigzag line, vertex i from `i`. */
   private def zigzagLineSql(cxE: String, cyE: String, nE: String, anchored: Boolean,
       ampX: Double, ampY: Double, uOffX: Int, uOffY: Int): String = {
     val x = s"$cxE + $ampX * ((${uPidSql(s"$uOffX + i")}) * 2.0 - 1.0)"
@@ -258,58 +222,6 @@ object GeoCols {
     val xe = if (anchored) s"CASE WHEN i = 0 THEN $cxE ELSE $x END" else x
     val ye = if (anchored) s"CASE WHEN i = 0 THEN $cyE ELSE $y END" else y
     s"flatten(list_transform(range(0, $nE), i -> [$xe, $ye]))"
-  }
-
-  /** The rings/roles geometry columns from generic providers (`u`: unit draw
-    * by index column; `m`: structure selector by (base, salt)) — shared by
-    * the lineitem-derived features ([[derivedFeatures]], SQL twin
-    * [[featuresSql]]) and the images table (hash providers, ImageTable).
-    *
-    * Structure (all offsets bounded, see header):
-    *  - polygon: star shell of 5+m(8,0) vertices (5..12), r in [0.15,0.65);
-    *    + hole when m(3,1)=0: 4+m(4,2) vertices CW, r in [0.03,0.08)
-    *      (strictly inside the shell's ~0.103 inscribed squashed radius);
-    *    + second part when m(4,3)=0: shell of 4+m(7,4) vertices at
-    *      (+1.3,+0.65), r in [0.1,0.4) (disjoint from part 1: x-gap
-    *      1.3-0.65-0.4 = 0.25);
-    *  - line: anchored zigzag of 3+m(7,5) vertices (amp 1.0 lon, 0.5 lat);
-    *    + second part when m(3,6)=0: 2+m(3,7) vertices around (+0.6,+0.3)
-    *      (amp 0.8, 0.4) — a MultiLineString;
-    *  - point: empty arrays.
-    *
-    * Selector bases are chosen so every branch actually fires within each
-    * pid%10 kind class (a base-5 selector can never fire on the line class
-    * pid%10 IN (6,7), whose pids cover only {1,2} mod 5). */
-  def featureGeomCols(kind: Column, lon: Column, lat: Column,
-      u: Column => Column, m: (Int, Int) => Column): Seq[(String, Column)] = {
-    val emptyRings = array().cast("array<array<double>>")
-    val emptyRoles = array().cast("array<int>")
-    val shell = starRingCol(lon, lat, lit(5) + m(8, 0), dirRev = false, 0.15, 0.5, 100, u)
-    val hasHole = m(3, 1) === 0
-    val hole = starRingCol(lon, lat, lit(4) + m(4, 2), dirRev = true, 0.03, 0.05, 200, u)
-    val hasPart2 = m(4, 3) === 0
-    val part2 = starRingCol(lon + lit(1.3), lat + lit(0.65), lit(4) + m(7, 4),
-      dirRev = false, 0.1, 0.3, 300, u)
-    val polyRings = concat(array(shell),
-      when(hasHole, array(hole)).otherwise(emptyRings),
-      when(hasPart2, array(part2)).otherwise(emptyRings))
-    val polyRoles = concat(array(lit(0)),
-      when(hasHole, array(lit(1))).otherwise(emptyRoles),
-      when(hasPart2, array(lit(0))).otherwise(emptyRoles))
-    val lineMain = zigzagLineCol(lon, lat, lit(3) + m(7, 5), anchored = true,
-      1.0, 0.5, 400, 500, u)
-    val hasLine2 = m(3, 6) === 0
-    val line2 = zigzagLineCol(lon + lit(0.6), lat + lit(0.3), lit(2) + m(3, 7),
-      anchored = false, 0.8, 0.4, 600, 700, u)
-    val lineRings = concat(array(lineMain),
-      when(hasLine2, array(line2)).otherwise(emptyRings))
-    val lineRoles = concat(array(lit(0)),
-      when(hasLine2, array(lit(0))).otherwise(emptyRoles))
-    Seq(
-      "rings" -> when(kind === "polygon", polyRings)
-        .when(kind === "line", lineRings).otherwise(emptyRings),
-      "roles" -> when(kind === "polygon", polyRoles)
-        .when(kind === "line", lineRoles).otherwise(emptyRoles))
   }
 
   def kindPidCol(pid: Column): Column =
@@ -325,22 +237,12 @@ object GeoCols {
     * parity attribute so tag filters/projections have an oracle. */
   def derivedFeatures(spark: SparkSession, sfDir: String, cellRes: Int = 7): DataFrame = {
     val p = derivedPoints(spark, sfDir)
-    val kind = kindPidCol(col("pid"))
-    // rings via the kernel generator (Kernels.pidRings): the HOF Column
-    // tree cost ~0.3 s of planning per query and evaluated its lambdas
-    // interpreted; the kernel is one JIT'd call with identical arithmetic
-    // (the SQL twin featuresSql is the unchanged oracle). Null inputs give
-    // no rings, keeping the column non-null. roles stays the (small)
-    // Column tree from featureGeomCols.
-    val geomCols = featureGeomCols(kind, col("lon"), col("lat"),
-      uPidCol(col("pid")), mPidCol(col("pid")))
-    val roles = geomCols.collectFirst { case ("roles", c) => c }.get
-    val withG = p.withColumn("kind", kind)
-      .withColumn("rings", coalesce(
-        Kernels.pidRings(col("pid"), col("lon"), col("lat")),
-        array().cast("array<array<double>>")))
+    // the kernel shape spec; featuresSql is its oracle twin
+    val (rings, roles) =
+      Kernels.pidRings(col("pid"), col("kind"), col("lon"), col("lat"))
+    p.withColumn("kind", kindPidCol(col("pid")))
+      .withColumn("rings", rings)
       .withColumn("roles", roles)
-    withG
       .withColumn("tags", map(lit("parity"), (col("pid") % 7).cast("string")))
       .withColumn("cell", cellCol(cellRes, col("lon"), col("lat")))
       .withColumnRenamed("pid", "image_id")
@@ -348,8 +250,8 @@ object GeoCols {
 
   /** DuckDB CTE body for the derived feature table (columns: pid, lon, lat,
     * kind, rings, roles; tag values are emitted directly as expressions by
-    * gate SQL, maps are a Spark-side representation detail). Mirrors
-    * [[featureGeomCols]] with the pid providers, term for term. */
+    * gate SQL, maps are a Spark-side representation detail). Mirrors the
+    * shape spec of `Kernels.pidRings`, term for term. */
   def featuresSql: String = {
     val shell = starRingSql("lon", "lat", s"(5 + ${mPidSql(8, 0)})", dirRev = false, 0.15, 0.5, 100)
     val hole = starRingSql("lon", "lat", s"(4 + ${mPidSql(4, 2)})", dirRev = true, 0.03, 0.05, 200)
@@ -529,35 +431,14 @@ object GeoCols {
     s"(${foldSumSql(s"flatten(list_transform($ringsE, r -> list_transform(range(0, $n), i -> $cross)))")} / 2.0)"
   }
 
-  // ---- kernel-backed UDF twins (the HOT-path refine) ------------------------
-  // The full Column expression tree for an 18-edge x n-vertex intersect
-  // explodes past whole-stage-codegen limits (observed 40 MB task binaries +
-  // interpreted fallback — BENCH.md finding #2), while a compact UDF over
-  // the JIT-compiled graft.geo.Geo kernel evaluates each column exactly
-  // once. Arithmetic is operand-for-operand identical to the SQL twins
-  // above, so oracle parity is preserved (proven end-to-end by the
-  // correctness gates; GeometrySpec pins the kernel behaviors).
+  // ---- row-UDF reference: KernelParitySpec holds Kernels.featureIntersects
+  // to it (the twins above run as Kernels.centroidRings/areaRings/lengthRings)
 
   def featureIntersectsRingsUdf(geom: MultiPolygon): (Column, Column, Column, Column) => Column =
     udf((kind: String, lon: Double, lat: Double,
         rings: scala.collection.Seq[scala.collection.Seq[Double]]) =>
       graft.geo.Geo.featureIntersectsRings(geom.polys, kind, lon, lat, rings))
       .apply(_, _, _, _)
-
-  /** Kernel-backed centroid [clon, clat] — twin of [[centroidRingsSql]]. */
-  val centroidRingsUdf = udf((kind: String, lon: Double, lat: Double,
-      rings: scala.collection.Seq[scala.collection.Seq[Double]]) => {
-    val c = graft.geo.Geo.centroidRings(kind, lon, lat, rings)
-    Array(c._1, c._2)
-  })
-
-  /** Signed planar area (deg^2) — twin of [[areaRingsSql]]. */
-  val areaRingsUdf = udf((rings: scala.collection.Seq[scala.collection.Seq[Double]]) =>
-    graft.geo.Geo.areaRings(rings))
-
-  /** Planar polyline length (deg) — twin of [[lengthRingsSql]]. */
-  val lengthRingsUdf = udf((rings: scala.collection.Seq[scala.collection.Seq[Double]]) =>
-    graft.geo.Geo.lengthRings(rings))
 
   // ---- haversine ------------------------------------------------------------
 

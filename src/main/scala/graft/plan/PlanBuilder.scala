@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.functions._
 import graft.geo.{Cell, MultiPolygon}
-import graft.functions.{GeoCols, Kernels}
+import graft.functions.Kernels
 import graft.model._
 import graft.sources.ImageTable
 
@@ -113,8 +113,9 @@ object PlanBuilder {
     * parity, builder.py:237 vs :102).
     *
     * The cover is expanded by one cell ring: feature vertices sit within one
-    * res-7 cell of the anchor by construction (GeoCols.featureGeomCols
-    * bounds: |dlon| ≤ 1.7, |dlat| ≤ 0.93), so any intersecting feature has
+    * res-7 cell of the anchor by construction (the bounds of the kernel
+    * shape spec behind `Kernels.pidRings`/`imageRings`: |dlon| ≤ 1.7,
+    * |dlat| ≤ 0.93), so any intersecting feature has
     * its anchor in cover∪ring1. Anchors inside fully-interior cells skip the
     * refine: the anchor is a vertex of points/lines, and for polygons the
     * shell's inscribed (squashed) disc has radius ≥ 0.103 while any hole
@@ -147,11 +148,11 @@ object PlanBuilder {
     * P4 centroid (ST_Centroid(geom) AS geom when centroid=true,
     * builder.py:157, flag models.py:156-158; the csv path ALWAYS projects
     * centroid coordinates, ST_X(ST_Centroid(geom)), builder.py:152-155). */
-  /** The centroid UDF is projected ONCE into this intermediate column by
+  /** The centroid kernel is projected ONCE into this intermediate column by
     * [[build]] (a separate Project that CollapseProject keeps separate, since
     * a non-cheap expression referenced twice is never inlined) — referencing
-    * the UDF expression itself for both lon and lat would evaluate it twice
-    * per row unless codegen subexpression elimination happens to save us. */
+    * the call itself for both lon and lat would evaluate it twice per row
+    * unless codegen subexpression elimination happens to save us. */
   private val centroidTmp = "_graft_centroid"
 
   private def projection(
@@ -210,7 +211,7 @@ object PlanBuilder {
       f.tags.foreach(t => b = b.filter(compileTags(t)))
       req.where.foreach(w => b = b.filter(compileWhere(WhereParser.parse(w))))
       if (csv || req.centroid)
-        b = b.withColumn(centroidTmp, GeoCols.centroidRingsUdf(col("kind"),
+        b = b.withColumn(centroidTmp, Kernels.centroidRings(col("kind"),
           col("lon"), col("lat"), col("rings")))
       b.select(projection(f.attributes, csv, req.centroid): _*)
     }

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels
 import graft.plan.PlanBuilder
 import graft.lineage.Lineage
 
@@ -128,7 +129,7 @@ object Sinks {
 
   /** KML geometry per [[FeatureModel.Geom]] — Point / LineString / Polygon
     * with innerBoundaryIs holes / MultiGeometry for multi-part shapes. Pure
-    * and serializable (the body of the executor-side placemark UDF). */
+    * (the body of the `Kernels.kmlGeom` call in [[kmlPlacemarkCol]]). */
   def kmlGeom(g: FeatureModel.Geom): String = {
     def coords(pts: Seq[(Double, Double)]): String =
       pts.map { case (x, y) => s"$x,$y" }.mkString(" ")
@@ -172,10 +173,10 @@ object Sinks {
       concat(x.cast("string"), lit(","), y.cast("string"))
     val geom = kindCol match {
       case Some(k) if have("rings") =>
-        // variable-arity geometry serializes through the executor-side
-        // kernel UDF ([[kmlGeom]]); the XML envelope around it stays
-        // pure-Column
-        kmlGeomUdf(k, col("lon"), col("lat"), col("rings"),
+        // variable-arity geometry serializes through one kernel call
+        // (Kernels.kmlGeom over [[kmlGeom]]); the XML envelope around it
+        // stays pure-Column
+        Kernels.kmlGeom(k, col("lon"), col("lat"), col("rings"),
           if (have("roles")) col("roles") else array().cast("array<int>"))
       case _ => concat(lit("<Point><coordinates>"),
         pt(col("lon"), col("lat")), lit("</coordinates></Point>"))
@@ -183,14 +184,6 @@ object Sinks {
     concat(lit("<Placemark><name>"), name, lit("</name>"), geom,
       lit("</Placemark>"))
   }
-
-  /** Executor-side KML geometry UDF over the rings model — routes through
-    * [[kmlGeom]] and [[FeatureModel.groupParts]], the feature model every
-    * other sink reads. */
-  private val kmlGeomUdf = udf((kind: String, lon: Double, lat: Double,
-      rings: scala.collection.Seq[scala.collection.Seq[Double]],
-      roles: scala.collection.Seq[Int]) =>
-    kmlGeom(FeatureModel.fromRings(kind, lon, lat, rings, roles)))
 
   /** S5 — KML document `export.kml` (the reference's ogr2ogr -f KML,
     * app.py:565-602): one Placemark per feature with real Point /

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.GeoCols
+import graft.functions.{GeoCols, Kernels}
 
 /** The engine's one fact table (BASELINE.json input_hint):
   *   (image_id string, bytes binary, w int, h int, fmt string,
@@ -12,18 +12,23 @@ import graft.functions.GeoCols
   * 29-96), with `caption` playing `tags jsonb` and derived location playing
   * `geom`.
   *
-  * Derived columns (computed, never stored — the derivation IS the spec):
-  *  - u1/u2: two independent uniform [0,1) draws from xxhash64(image_id)
-  *    (codegen'd built-in, no UDF);
+  * Derived columns (computed at ingest and stored — the derivation IS the
+  * spec). Every one is a codegen'd built-in or one kernel call, so
+  * [[derive]]'s projection runs inside whole-stage codegen:
+  *  - u1/u2: two independent uniform [0,1) draws from xxhash64(image_id);
   *  - lon/lat: cubed-uniform transform — deliberately SKEWED toward (0,0)
   *    so dense cells are exercised, the way the reference's planet data
   *    piles up in cities;
-  *  - tags: k=v tokens of the caption as a map (reference tags jsonb,
-  *    builder.py:148);
+  *  - tags: the caption's k=v tokens as a map (reference tags jsonb,
+  *    builder.py:148), `Kernels.captionTags`: the value is everything after
+  *    the first `=`;
   *  - kind: point/line/polygon routing class (the reference routes features
   *    to nodes/ways_line/ways_poly by shape, backend/raw.lua:106-180);
   *  - cell: the res-`BucketRes` Z-order cell — write-time clustering key
-  *    (CLUSTER ... USING geom_idx analogue, backend/sql/post_indexes.sql:57).
+  *    (CLUSTER ... USING geom_idx analogue, backend/sql/post_indexes.sql:57);
+  *  - rings/roles: multi-part lines and polygons with holes (the reference
+  *    routes genuine OSM geometry, backend/raw.lua:128-180),
+  *    `Kernels.imageRings` over xxhash64(image_id, k) draws.
   */
 object ImageTable {
 
@@ -65,27 +70,11 @@ object ImageTable {
   def lonCol(imageId: Column): Column = cube(u1Col(imageId)) * lit(180.0)
   def latCol(imageId: Column): Column = cube(u2Col(imageId)) * lit(85.0)
 
-  /** caption "k=v k=v word word" → map of the k=v tokens. */
-  def tagsCol(caption: Column): Column = {
-    val kv = filter(split(caption, " "), t => t.contains("="))
-    map_from_entries(array_distinct(transform(kv, t =>
-      struct(substring_index(t, "=", 1), substring_index(t, "=", -1)))))
-  }
-
   /** geometry-type routing class from the id hash (reference raw.lua routing). */
   def kindCol(imageId: Column): Column = {
     val m = pmod(xxhash64(imageId, lit(2)), lit(10L))
     when(m < 6, lit("point")).when(m < 8, lit("line")).otherwise(lit("polygon"))
   }
-
-  /** Arbitrary-vertex geometry columns (rings/roles — real multi-part
-    * line/polygon shapes with holes, the reference routes genuine OSM
-    * geometry, backend/raw.lua:128-180): hash-based draw providers feeding
-    * the shared GeoCols.featureGeomCols shape spec. */
-  def geomCols(imageId: Column, kind: Column, lon: Column, lat: Column): Seq[(String, Column)] =
-    GeoCols.featureGeomCols(kind, lon, lat,
-      k => unit(xxhash64(imageId, k)),
-      (base, salt) => pmod(xxhash64(imageId, lit(1000 + salt)), lit(base.toLong)).cast("int"))
 
   def cellCol(imageId: Column): Column =
     GeoCols.cellCol(BucketRes, lonCol(imageId), latCol(imageId))
@@ -105,12 +94,14 @@ object ImageTable {
     var df = images
     if (!have("lon")) df = df.withColumn("lon", lonCol(col("image_id")))
     if (!have("lat")) df = df.withColumn("lat", latCol(col("image_id")))
-    if (!have("tags")) df = df.withColumn("tags", tagsCol(col("caption")))
+    if (!have("tags")) df = df.withColumn("tags", Kernels.captionTags(col("caption")))
     if (!have("kind")) df = df.withColumn("kind", kindCol(col("image_id")))
     if (!have("cell")) df = df.withColumn("cell", cellCol(col("image_id")))
-    if (!have("rings"))
-      geomCols(col("image_id"), col("kind"), col("lon"), col("lat"))
-        .foreach { case (n, c) => df = df.withColumn(n, c) }
+    if (!have("rings")) {
+      val (rings, roles) =
+        Kernels.imageRings(col("image_id"), col("kind"), col("lon"), col("lat"))
+      df = df.withColumn("rings", rings).withColumn("roles", roles)
+    }
     df
   }
 }

@@ -65,7 +65,7 @@ class FixtureSpec extends SparkSpec {
     }
   }
 
-  test("generate/derive in Spark matches local rows; tagsCol parses captions") {
+  test("generate/derive in Spark matches local rows; captionTags parses captions") {
     val df = ImageTable.derive(ImageFixture.generate(spark, N, 4))
     val got = df.select(col("image_id"), col("caption"), col("tags"),
         col("lon"), col("lat"), col("kind"))

@@ -14,7 +14,8 @@ import graft.geo.{Fixtures, MultiPolygon}
 import graft.model.{GeomType, SnapshotRequest}
 import graft.plan.PlanBuilder
 import graft.operators.SpatialJoin
-import graft.sources.ImageFixture
+import graft.sinks.Sinks
+import graft.sources.{ImageFixture, ImageTable}
 
 /** Physical-plan assertions: the shapes that matter at 100 TB must be in the
   * plan, not just intended — filter pushdown to the scan, broadcast joins for
@@ -135,20 +136,23 @@ class PlanQualitySpec extends SparkSpec {
       s"retired top-k slices must be executor-cached, not driver-collected:\n${plan.take(1500)}")
   }
 
-  test("centroid UDF is evaluated once per row, not once per coordinate") {
+  test("centroid kernel is evaluated once per row, not once per coordinate") {
     val images = ImageFixture.read(spark, tableDir)
     val req = SnapshotRequest(
       geometry = MultiPolygon(Seq(Fixtures.requestPolygon)),
       geometryTypes = GeomType.all,
       centroid = true)
     val df = PlanBuilder.build(images, req)
-    val plan = df.queryExecution.executedPlan.toString
-    // the plan carries exactly ONE scala UDF: the centroid kernel
-    // (Project, once) — the intersect refine is a native Catalyst
-    // expression now. Before the staged projection the centroid UDF
-    // appeared once per extracted coordinate.
-    val udfCount = "UDF\\(".r.findAllIn(plan).length
-    assert(udfCount <= 1, s"centroid UDF duplicated in the projection ($udfCount UDF calls):\n${plan.take(3000)}")
+    df.collect() // AQE: inspect the final executed plan
+    // exactly ONE centroid kernel call (one Project, once): before the
+    // staged projection the centroid call appeared once per extracted
+    // coordinate
+    val calls = physical(df.queryExecution.executedPlan)
+      .flatMap(_.expressions).flatMap(_.collect {
+        case s: StaticInvoke if s.functionName == "centroidRingsAt" => s
+      })
+    assert(calls.size == 1, s"${calls.size} centroid kernel calls:\n" +
+      df.queryExecution.executedPlan.toString.take(3000))
   }
 
   test("knn releases every per-round cache; only the caller-owned result persists") {
@@ -250,10 +254,14 @@ class PlanQualitySpec extends SparkSpec {
     val extract = graft.functions.GeoCols.derivedFeatures(spark, sfDir)
       .filter(PlanBuilder.geometryFilter(MultiPolygon(Seq(Fixtures.requestPolygon)),
         col("kind"), col("lon"), col("lat"), col("cell"), col("rings")))
+    val feats = ImageFixture.read(spark, tableDir).drop("bytes")
     for ((name, df) <- Seq("flagshipEntry" -> SparkEntry.flagshipEntry(spark, sfDir),
         "geometryFilter over derivedFeatures" -> extract,
         "Bench.flagship (payload decode)" ->
-          Bench.flagshipPlan(ImageFixture.read(spark, tableDir)))) {
+          Bench.flagshipPlan(ImageFixture.read(spark, tableDir)),
+        "ImageTable.derive (ingest)" ->
+          ImageTable.derive(ImageFixture.generate(spark, 200, 2)),
+        "KML placemarks" -> feats.select(Sinks.kmlPlacemarkCol(feats)))) {
       df.collect() // AQE: inspect the final executed plan
       val all = nodes(df.queryExecution.executedPlan, inWsc = false)
       val plan = df.queryExecution.executedPlan.toString
