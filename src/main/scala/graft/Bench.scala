@@ -66,7 +66,10 @@ object Bench {
     * attribute-sized. The country-sized cover pushes only its cell range,
     * which prunes no row group here (the 64,000-row perfbench table reads
     * all 64,000 rows); the cover membership itself is one kernel call after
-    * the scan. */
+    * the scan. Every step is per-row work in one whole-stage-codegen
+    * stage: scan → filter → project → generate, run as one Spark job, with
+    * no join, exchange or aggregate; the region index rides in the task
+    * binary. */
   def flagshipPlan(images: DataFrame): DataFrame = {
     val req = SnapshotRequest(
       geometry = graft.geo.MultiPolygon(Seq(benchPolygon)),
@@ -78,11 +81,10 @@ object Bench {
       .filter(PlanBuilder.geometryFilter(
         req.geometry, col("kind"), col("lon"), col("lat"), col("cell"),
         col("rings")))
-      .select(col("image_id"), col("lon"), col("lat"), col("cell"),
-        col("bytes"), col("phash"))
+      .select(col("image_id"), col("lon"), col("lat"), col("bytes"), col("phash"))
     val decoded = graft.operators.Multimodal.verifyPayloadLite(extracted)
       .filter(col("phash_hamming") <= 8)
-      .select(col("image_id").as("pid"), col("lon"), col("lat"), col("cell"))
+      .select(col("image_id").as("pid"), col("lon"), col("lat"))
     // single linear pipeline: the assignment passes lon/lat through, so the
     // tile explode runs on its output — one stage, no shuffle, one decode
     val assigned = SpatialJoin.assignRegionsKeep(

@@ -30,9 +30,10 @@ object SparkEntry {
 
   /** The fused flagship plan (Bench.flagship shape): extract → region
     * assignment passing lon/lat through → tile explode on the SAME
-    * pipeline. One scan; the broadcast assignment and the tile explode are
-    * narrow, so the only exchange is the derived point table's own DISTINCT
-    * on pid. */
+    * pipeline. One scan; the assignment is one kernel call per point over
+    * an index built once per catalog, and it and the tile explode are
+    * narrow, so the plan holds no join and its only exchange is the derived
+    * point table's own DISTINCT on pid. */
   def flagshipEntry(spark: SparkSession, dir: String): DataFrame = {
     // kernel PIP (Kernels.pointInMultiPolygon): the literal pipCol tree,
     // pushed below the derived-point projection, exploded into a ~40 KB
@@ -325,7 +326,7 @@ object SparkEntry {
 
   /** GET /countries/?q= analogue (API/raw_data.py:499-504: fuzzy search over
     * the country catalog): catalog-side ILIKE probe, the same driver-sized
-    * table the spatial join broadcasts. */
+    * catalog the spatial join indexes. */
   private def countriesQ(s: SparkSession, dir: String): DataFrame = {
     // range + literal-array lookup instead of a local/RDD row relation: the
     // first query that evaluates rows through the local-eval or Row-encoder

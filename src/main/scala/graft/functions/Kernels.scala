@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions.{array, coalesce, lit}
 import org.apache.spark.sql.graftbridge.ExprBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.geo.{Cell, Fixtures, Geo, MultiPolygon, Polygon}
+import graft.geo.{Cell, Geo, MultiPolygon, Polygon}
 import graft.operators.Multimodal
 import graft.sinks.{FeatureModel, Sinks}
 
@@ -40,10 +40,13 @@ import graft.sinks.{FeatureModel, Sinks}
   *    `false` for every row, null cell included, as `isin()` gives;
   *  - [[dot]]: null, and also null when an array is shorter than `dims` or
   *    holds a null element (element_at's null through the Column sum);
-  *  - [[regionCids]]: "0", the no-region default, through a `coalesce`
-  *    (a point whose cell has no cover row has null candidates);
+  *  - [[regionCids]]: "0", the no-region default, through a `coalesce`, so
+  *    a null lon or lat reads as a point in no region; the index itself
+  *    gives "0" for a point whose cell it does not list;
   *  - [[phash]]: null; `Multimodal.verifyPayloadLite`'s hamming is then
-  *    null and its `<= 8` filter drops the row;
+  *    null and its `<= 8` filter drops the row. A JPEG stream outside
+  *    `JpegCodec`'s subset goes to ImageIO, which throws on one it cannot
+  *    decode, as before;
   *  - [[pidRings]], [[imageRings]]: no rings and no roles, through a
   *    `coalesce`, so both columns stay non-null as the Column tree kept
   *    them. The tree gave the same for a null kind, drew from the bare seed
@@ -107,16 +110,12 @@ object Kernels {
     invoke(new Pip(geom), "contains", BooleanType, Seq(lon, lat),
       Seq(DoubleType, DoubleType))
 
-  /** Comma-joined ascending distinct cids of the candidate regions holding
-    * the point, "0" when none does. `catalog` is sorted by cid; each
-    * candidate is `pos * 2 + refine` for the region at catalog position
-    * `pos`, ascending, and only a candidate with `refine = 1` takes the
-    * exact point-in-polygon test. */
-  def regionCids(catalog: Seq[Fixtures.Region], cands: Column, lon: Column,
-      lat: Column): Column =
-    coalesce(invoke(new RegionCids(catalog.map(_.poly).toArray,
-      catalog.map(_.cid).toArray), "assign", StringType, Seq(cands, lon, lat),
-      Seq(ArrayType(IntegerType), DoubleType, DoubleType)), lit("0"))
+  /** Comma-joined ascending distinct cids of the regions holding the point,
+    * "0" when none does or the point's cell has no cover entry
+    * ([[RegionIndex.assign]]). */
+  def regionCids(index: RegionIndex, lon: Column, lat: Column): Column =
+    coalesce(invoke(index, "assign", StringType, Seq(lon, lat),
+      Seq(DoubleType, DoubleType)), lit("0"))
 
   /** 64-bit average hash of an image payload ([[Multimodal.payloadInfo]]). */
   def phash(bytes: Column): Column =
@@ -213,14 +212,26 @@ object Kernels {
     override def toString: String = s"Pip(${geom.polys.length} polygons)"
   }
 
-  final class RegionCids(polys: Array[Polygon], cids: Array[Int])
+  /** A region catalog's cover at `res`, indexed by cell: `cells` ascending,
+    * and the candidates of `cells(k)` are `cands(offsets(k))` until
+    * `cands(offsets(k + 1))`, each `pos * 2 + refine`, ascending, `pos` a
+    * position in `polys`/`cids` (the catalog sorted by cid). Built once per
+    * catalog (`SpatialJoin.regionIndex`); the arrays ride in the task
+    * binary. */
+  final class RegionIndex(res: Int, cells: Array[Long], offsets: Array[Int],
+      cands: Array[Int], polys: Array[Polygon], cids: Array[Int])
       extends Serializable {
-    def assign(cands: ArrayData, lonV: Double, latV: Double): UTF8String = {
+    /** The point's cell ([[Cell.cellAt]], as `cellId` computes it), then the
+      * cell's candidates: a `refine = 0` candidate names its region, a
+      * `refine = 1` one takes the exact point-in-polygon test. */
+    def assign(lonV: Double, latV: Double): UTF8String = {
+      val k = java.util.Arrays.binarySearch(cells, Cell.cellAt(res, lonV, latV))
+      if (k < 0) return Zero
       val sb = new java.lang.StringBuilder
       var last = 0
-      var i = 0
-      while (i < cands.numElements()) {
-        val c = cands.getInt(i)
+      var i = offsets(k)
+      while (i < offsets(k + 1)) {
+        val c = cands(i)
         val pos = c >> 1
         if ((c & 1) == 0 || Geo.pointInPolygon(lonV, latV, polys(pos))) {
           val cid = cids(pos)
@@ -232,7 +243,8 @@ object Kernels {
       }
       if (sb.length == 0) Zero else UTF8String.fromString(sb.toString)
     }
-    override def toString: String = s"RegionCids(${cids.length} regions)"
+    override def toString: String =
+      s"RegionIndex(${cids.length} regions, ${cells.length} cells at res $res)"
   }
 
   private val Zero = UTF8String.fromString("0")

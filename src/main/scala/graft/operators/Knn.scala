@@ -26,7 +26,8 @@ import graft.functions.GeoCols
   * The only driver-side decision per round is "are any queries unsatisfied"
   * (a boolean action on the query-state DataFrame); candidates, distances,
   * and results never leave the executors. At 10^12 rows the candidate join
-  * is the same broadcast shape as [[SpatialJoin]]; re-scanning the fact
+  * is a broadcast of the small side, the fact table never shuffled;
+  * re-scanning the fact
   * table per round beats caching it (you don't cache 100 TB), and in
   * practice round counts are 1-2 because the disk quadruples each round.
   */

@@ -89,8 +89,14 @@ object Multimodal {
 
   // ---- DataFrame-level plumbing ------------------------------------------------
 
-  /** (w, h, phash) of a payload: PNG takes the allocation-free lumaHash fast
-    * path; JPEG decodes via the cached reader and hashes the raster bytes. */
+  /** (w, h, phash) of a payload. Both codecs' fast paths allocate nothing
+    * per call and are bit-identical to avgHash64 of the full decode:
+    *  - PNG: 8-bit truecolor or gray with 8-divisible dims takes
+    *    [[PngCodec.lumaHash]], any other PNG the full PngCodec decode;
+    *  - JPEG: a baseline gray-content JFIF stream (the fixture's payloads)
+    *    takes [[JpegCodec.lumaHash]], which decodes only the luma plane;
+    *    any other stream, and anything that is not PNG, decodes via the
+    *    cached ImageIO reader and hashes the raster bytes. */
   def payloadInfo(bytes: Array[Byte]): (Int, Int, Long) =
     if (PngCodec.isPng(bytes)) {
       val hd = PngCodec.header(bytes)
@@ -102,8 +108,12 @@ object Multimodal {
         (img.getWidth, img.getHeight, ImageFixture.avgHash64(img))
       }
     } else {
-      val img = decode(bytes)
-      (img.getWidth, img.getHeight, rasterHash64(img))
+      val fast = JpegCodec.lumaHash(bytes)
+      if (fast != null) fast
+      else {
+        val img = decode(bytes)
+        (img.getWidth, img.getHeight, rasterHash64(img))
+      }
     }
 
   /** [[ImageFixture.avgHash64]] read straight from the interleaved bytes of

@@ -144,15 +144,20 @@ object PngCodec {
       System.arraycopy(cur, 0, prev, 0, stride)
       y += 1
     }
-    val n = (bw * bh).toDouble
+    (hd.width, hd.height, hashBits(s.blockSum, (bw * bh).toDouble))
+  }
+
+  /** The 64 hash bits from the 8×8 block sums of `n` pixels each, in
+    * avgHash64's order: each block's mean against the mean of the means. */
+  private[operators] def hashBits(blockSum: Array[Double], n: Double): Long = {
     var mean = 0.0
     var i = 0
-    while (i < 64) { mean += s.blockSum(i) / n; i += 1 }
+    while (i < 64) { mean += blockSum(i) / n; i += 1 }
     mean /= 64
     var bits = 0L
     i = 0
-    while (i < 64) { if (s.blockSum(i) / n >= mean) bits |= (1L << i); i += 1 }
-    (hd.width, hd.height, bits)
+    while (i < 64) { if (blockSum(i) / n >= mean) bits |= (1L << i); i += 1 }
+    bits
   }
 
   /** Decode to a TYPE_INT_RGB BufferedImage (grayscale expands to r=g=b). */

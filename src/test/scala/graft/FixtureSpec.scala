@@ -3,10 +3,11 @@ package graft
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.file.Files
-import javax.imageio.ImageIO
+import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
+import javax.imageio.stream.MemoryCacheImageOutputStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.operators.Multimodal
+import graft.operators.{JpegCodec, Multimodal}
 import graft.sources.{ImageFixture, ImageTable}
 
 /** Fixture invariants from BASELINE.json input_hint / FIXTURES.md: decoded
@@ -45,6 +46,38 @@ class FixtureSpec extends SparkSpec {
       assert(img.getType == BufferedImage.TYPE_3BYTE_BGR, r.image_id)
       assert(Multimodal.payloadInfo(r.bytes)._3 == hash, r.image_id)
     }
+    // every JPEG among the ids the benchmark ingests or appends takes the
+    // luma fast path and equals ImageIO: dims and hash
+    val parity = ImageFixture.generate(spark, 88000L, 8)
+      .filter(col("fmt") === "jpeg").select("bytes").rdd
+      .map(r => FixtureSpec.jpegParity(r.getAs[Array[Byte]](0)))
+      .countByValue()
+    assert(parity.keySet == Set((true, true)), s"(fast, equal) → count: $parity")
+    assert(parity((true, true)) > 20000, s"$parity")
+    // seeded gray and colour images, 8–64 px a side, quality 0.5–1.0: gray
+    // with 8-divisible sides is fast, everything else falls back; all equal
+    val rng = new scala.util.Random(4242L)
+    val seen = (0 until 2000).map { i =>
+      val gray = i % 2 == 0
+      def side = if (rng.nextInt(3) > 0) 8 * (1 + rng.nextInt(8)) else 8 + rng.nextInt(57)
+      val (w, h) = (side, side)
+      val noisy = rng.nextBoolean()
+      val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+      for (y <- 0 until h; x <- 0 until w) {
+        def level = if (noisy) rng.nextInt(256) else (x * 255 / w + y * 255 / h) / 2
+        val rgb = if (gray) { val v = level; (v << 16) | (v << 8) | v }
+          else (level << 16) | (rng.nextInt(256) << 8) | level
+        img.setRGB(x, y, rgb)
+      }
+      val bytes = if (i % 10 == 0) ImageFixture.encode(img, "jpeg")
+        else FixtureSpec.jpeg(img, 0.5f + 0.5f * rng.nextFloat(), progressive = false)
+      val fast = JpegCodec.lumaHash(bytes)
+      val expectFast = gray && w % 8 == 0 && h % 8 == 0
+      assert((fast != null) == expectFast, s"image $i: ${w}x$h gray=$gray")
+      assert(FixtureSpec.jpegParity(bytes) == ((expectFast, true)), s"image $i")
+      expectFast
+    }
+    assert(seen.count(identity) > 500 && seen.count(!_) > 1000)
     // a grayscale JPEG decodes to TYPE_BYTE_GRAY and takes avgHash64 itself
     val gray = new BufferedImage(24, 16, BufferedImage.TYPE_BYTE_GRAY)
     gray.getGraphics.drawImage(ImageFixture.pixels("gray", 24, 16), 0, 0, null)
@@ -53,6 +86,17 @@ class FixtureSpec extends SparkSpec {
     val (img, hash) = reference(out.toByteArray)
     assert(img.getType == BufferedImage.TYPE_BYTE_GRAY)
     assert(Multimodal.payloadInfo(out.toByteArray)._3 == hash)
+    // one component, a progressive frame, a cut stream: all fall back
+    val fixture = jpegs.head.bytes
+    val progressive = FixtureSpec.jpeg(ImageFixture.pixels("p", 32, 32), 0.9f,
+      progressive = true)
+    for ((name, bytes) <- Seq("gray" -> out.toByteArray, "progressive" -> progressive,
+        "cut in the scan" -> fixture.take(fixture.length / 2),
+        "cut before EOI" -> fixture.dropRight(2))) {
+      assert(JpegCodec.lumaHash(bytes) == null, name)
+    }
+    assert(FixtureSpec.jpegParity(progressive) == ((false, true)))
+    assert(JpegCodec.lumaHash(fixture) != null)
   }
 
   test("captions parse to non-empty tag maps with name key") {
@@ -200,5 +244,35 @@ class FixtureSpec extends SparkSpec {
     val log = spark.read.parquet(s"$dir/snapshot").orderBy("snapshot_id")
       .select("snapshot_id", "row_count").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(log.toSeq == Seq((1L, N), (2L, 50L)))
+  }
+}
+
+object FixtureSpec {
+
+  /** (the luma fast path took `bytes`, the payload's (w, h, phash) equals
+    * the ImageIO decode's dims and avgHash64). */
+  def jpegParity(bytes: Array[Byte]): (Boolean, Boolean) = {
+    val img = ImageIO.read(new ByteArrayInputStream(bytes))
+    val fast = JpegCodec.lumaHash(bytes)
+    (fast != null, (if (fast != null) fast else Multimodal.payloadInfo(bytes)) ==
+      ((img.getWidth, img.getHeight, ImageFixture.avgHash64(img))))
+  }
+
+  /** `img` as a JPEG at `quality`, written by ImageIO, progressive or
+    * baseline. */
+  def jpeg(img: BufferedImage, quality: Float, progressive: Boolean): Array[Byte] = {
+    val writer = ImageIO.getImageWritersByFormatName("jpeg").next()
+    val params = writer.getDefaultWriteParam
+    params.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
+    params.setCompressionQuality(quality)
+    if (progressive) params.setProgressiveMode(ImageWriteParam.MODE_DEFAULT)
+    val bos = new ByteArrayOutputStream
+    val ios = new MemoryCacheImageOutputStream(bos)
+    try {
+      writer.setOutput(ios)
+      writer.write(null, new IIOImage(img, null, null), params)
+      ios.flush()
+    } finally { writer.dispose(); ios.close() }
+    bos.toByteArray
   }
 }

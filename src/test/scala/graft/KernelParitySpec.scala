@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import graft.functions.{GeoCols, Kernels}
-import graft.geo.{Fixtures, Geo, MultiPolygon}
+import graft.geo.{Cell, Fixtures, Geo, MultiPolygon}
 import graft.operators.{Dedup, Similarity}
 import graft.plan.PlanBuilder
 import graft.sinks.{FeatureModel, Sinks}
@@ -271,27 +271,32 @@ class KernelParitySpec extends SparkSpec {
 
   test("region refine ≡ pipCol per catalog region") {
     // one candidate per catalog position: refine-flagged it is the exact
-    // test, unflagged (a full cover cell) it names the region unconditionally
+    // test, unflagged (a full cover cell) it names the region
+    // unconditionally. A res-0 index has one cell, the globe, so every point
+    // reaches the candidates it lists.
     val catalog = Fixtures.regions.sortBy(_.cid)
-    def cids(cands: Column) =
-      Kernels.regionCids(catalog, cands, col("lon"), col("lat"))
+    def index(cells: Array[Long], cands: Int*) = new Kernels.RegionIndex(0, cells,
+      Array(0, cands.size).take(cells.length + 1), cands.toArray,
+      catalog.map(_.poly).toArray, catalog.map(_.cid).toArray)
+    def cids(cands: Int*) = Kernels.regionCids(
+      index(Array(Cell.cellAt(0, 0.0, 0.0)), cands: _*), col("lon"), col("lat"))
     val pts = GeoCols.derivedPoints(spark, sfDir)
     catalog.zipWithIndex.foreach { case (r, pos) =>
       val cid = lit(r.cid.toString)
       val tree = when(GeoCols.pipCol(r.poly, col("lon"), col("lat")), cid)
         .otherwise(lit("0"))
-      assert(mismatches(pts, tree, cids(array(lit(pos * 2 + 1)))) == 0,
+      assert(mismatches(pts, tree, cids(pos * 2 + 1)) == 0,
         s"region at position $pos")
-      assert(mismatches(pts, cid, cids(array(lit(pos * 2)))) == 0,
+      assert(mismatches(pts, cid, cids(pos * 2)) == 0,
         s"full cell at position $pos")
     }
-    assert(pts.filter(not(cids(array(lit(1))) === "0")).count() > 0,
+    assert(pts.filter(not(cids(1) === "0")).count() > 0,
       "no point inside the first region")
-    // a null coordinate, or a point whose cell has no cover row, is "0"
+    // a null coordinate, or a point whose cell the index does not list, is "0"
     assert(nullPoints.filter((col("lon").isNull || col("lat").isNull) &&
-      not(cids(array(lit(1), lit(2))) === "0")).count() == 0)
-    assert(pts.filter(not(cids(lit(null).cast("array<int>")) === "0"))
-      .count() == 0)
+      not(cids(1, 2) === "0")).count() == 0)
+    val noCells = Kernels.regionCids(index(Array.empty[Long]), col("lon"), col("lat"))
+    assert(pts.filter(not(noCells === "0")).count() == 0)
   }
 
   test("feature intersect ≡ featureIntersectsRingsUdf") {

@@ -2,14 +2,17 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Expression, In, InSet, ScalaUDF}
+import org.apache.spark.serializer.JavaSerializer
+import org.apache.spark.sql.catalyst.expressions.{Expression, In, InSet, Literal, ScalaUDF}
 import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
-import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec,
-  SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter,
+  LocalTableScanExec, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import graft.functions.Kernels
 import graft.geo.{Fixtures, MultiPolygon}
 import graft.model.{GeomType, SnapshotRequest}
 import graft.plan.PlanBuilder
@@ -19,8 +22,8 @@ import graft.sources.{ImageFixture, ImageTable}
 
 /** Physical-plan assertions: the shapes that matter at 100 TB must be in the
   * plan, not just intended — filter pushdown to the scan, broadcast joins for
-  * catalog-sized sides, no exchange in the assignment pipeline, and
-  * whole-stage codegen over the hot path. */
+  * catalog-sized sides, region assignment as one kernel call with no join
+  * or exchange, and whole-stage codegen over the hot path. */
 class PlanQualitySpec extends SparkSpec {
 
   private lazy val tableDir = {
@@ -46,11 +49,19 @@ class PlanQualitySpec extends SparkSpec {
     case o => o +: o.children.flatMap(physical)
   }
 
-  /** The shuffles and aggregates of `df`'s physical plan, by node name. */
-  private def shufflesAndAggs(df: DataFrame): Seq[String] =
+  /** The joins, exchanges (shuffle or broadcast), aggregates and local
+    * relations of `df`'s physical plan, by node name. */
+  private def joinsExchangesAggs(df: DataFrame): Seq[String] =
     physical(df.queryExecution.executedPlan).collect {
-      case n @ (_: ShuffleExchangeExec | _: BaseAggregateExec) => n.nodeName
+      case n @ (_: BaseJoinExec | _: Exchange | _: BaseAggregateExec |
+          _: LocalTableScanExec) => n.nodeName
     }
+
+  /** The region index objects `df`'s plan carries. */
+  private def regionIndexes(df: DataFrame): Seq[Kernels.RegionIndex] =
+    df.queryExecution.analyzed.expressions.flatMap(_.collect {
+      case Literal(i: Kernels.RegionIndex, _) => i
+    })
 
   private def pushedFilters(df: DataFrame): String =
     df.queryExecution.executedPlan.toString.linesIterator
@@ -96,15 +107,14 @@ class PlanQualitySpec extends SparkSpec {
       s"projection must prune the payload column: $readSchema")
   }
 
-  test("region assignment join is broadcast (no fact-side shuffle)") {
+  test("region assignment is one kernel call: no join, no exchange, no aggregate") {
     val pts = extractPlan.select(col("image_id").as("pid"),
       col("lon"), col("lat"), col("cell"))
     val assigned = SpatialJoin.assignRegions(spark, pts)
     val plan = assigned.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), "cover join must broadcast")
-    // one row per cell on the build side: nothing to put back together
-    assert(shufflesAndAggs(assigned).isEmpty,
-      s"exchange or aggregate in the assignment:\n${plan.take(3000)}")
+    assert(joinsExchangesAggs(assigned).isEmpty,
+      s"join, exchange or aggregate in the assignment:\n${plan.take(3000)}")
+    assert(regionIndexes(assigned).size == 1, plan.take(3000))
   }
 
   test("whole-stage codegen spans the extract hot path") {
@@ -168,12 +178,12 @@ class PlanQualitySpec extends SparkSpec {
       s"knn leaked ${after - before} persisted RDDs (round slices must be unpersisted)")
   }
 
-  test("254 regions: broadcast cover, one row per cell, no exchange") {
-    // the reference's countries table holds 254 rows; assert the join shape
+  test("254 regions: one index entry per cell, no join, no exchange") {
+    // the reference's countries table holds 254 rows; assert the plan shape
     // that must hold at 10^12 fact rows
     val regions254 = TestCatalogs.regions254
-    // the cover stays dim-table-sized, one row per cell, each candidate list
-    // ascending by catalog position
+    // the cover stays dim-table-sized, one entry per cell, each candidate
+    // list ascending by catalog position
     val coverRows = SpatialJoin.coverRows(regions254, 7)
     assert(coverRows.size < 300000, s"cover blew up: ${coverRows.size} rows")
     assert(coverRows.map(_._1).distinct.size == coverRows.size)
@@ -182,9 +192,32 @@ class PlanQualitySpec extends SparkSpec {
     val pts = extractPlan.select(col("image_id").as("pid"), col("lon"), col("lat"))
     val assigned = SpatialJoin.assignRegions(spark, pts, regions254)
     val plan = assigned.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), "254-region cover must broadcast")
-    assert(shufflesAndAggs(assigned).isEmpty,
-      s"exchange or aggregate in the assignment:\n${plan.take(3000)}")
+    assert(joinsExchangesAggs(assigned).isEmpty,
+      s"join, exchange or aggregate in the assignment:\n${plan.take(3000)}")
+  }
+
+  test("region index: under 256 KB serialized, built once per catalog, memo bounded") {
+    // the index rides in every task binary of the assignment's stage
+    val ser = new JavaSerializer(spark.sparkContext.getConf).newInstance()
+    for ((name, regions) <- Seq("16 regions" -> Fixtures.regions,
+        "254 regions" -> TestCatalogs.regions254)) {
+      val bytes = ser.serialize(SpatialJoin.regionIndex(regions, 7)).remaining()
+      info(s"$name at res 7: ${SpatialJoin.regionIndex(regions, 7)}, $bytes bytes serialized")
+      assert(bytes <= 256 * 1024, s"$name: $bytes bytes")
+    }
+    // two plans over one catalog share one index object
+    val pts = extractPlan.select(col("image_id").as("pid"), col("lon"), col("lat"))
+    val Seq(a) = regionIndexes(SpatialJoin.assignRegions(spark, pts))
+    val Seq(b) = regionIndexes(SpatialJoin.assignRegions(spark, pts))
+    assert(a eq b)
+    assert(a eq SpatialJoin.regionIndex(Fixtures.regions, 7))
+    // an equal catalog hits; MaxIndexes other catalogs evict it
+    val first = SpatialJoin.regionIndex(TestCatalogs.regions254.take(1), 7)
+    assert(SpatialJoin.regionIndex(TestCatalogs.regions254.take(1), 7) eq first)
+    for (k <- 2 to SpatialJoin.MaxIndexes + 1)
+      SpatialJoin.regionIndex(TestCatalogs.regions254.take(k), 7)
+    assert(!(SpatialJoin.regionIndex(TestCatalogs.regions254.take(1), 7) eq first),
+      "the memo kept more than MaxIndexes catalogs")
   }
 
   test("fused flagship entry(): one exchange, no join-back of the tile explode") {
@@ -193,19 +226,29 @@ class PlanQualitySpec extends SparkSpec {
     // side; the fused plan passes lon/lat through the assignment and
     // explodes on its output. The one exchange and aggregate left are the
     // derived point table's own DISTINCT on pid; over a stored images table
-    // (Bench.flagship, perfbench) there are none.
+    // (Bench.flagship, perfbench) there are none, and the whole plan is one
+    // whole-stage-codegen stage: scan → filter → project → generate.
     val dir = "/root/testdata/sf0.001"
     val df = SparkEntry.flagshipEntry(spark, dir)
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), "cover join must broadcast")
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
-      s"tile explode must not be joined back on pid:\n${plan.take(3000)}")
-    assert(shufflesAndAggs(df) == shufflesAndAggs(graft.functions.GeoCols
-      .derivedPoints(spark, dir)), s"assignment adds a shuffle:\n${plan.take(3000)}")
+    assert(joinsExchangesAggs(df) == joinsExchangesAggs(graft.functions.GeoCols
+      .derivedPoints(spark, dir)), s"assignment adds a node:\n${plan.take(3000)}")
+    assert(!plan.contains("Join"), s"a join in the plan:\n${plan.take(3000)}")
     assert(df.limit(1).count() == 1)
     val bench = Bench.flagshipPlan(ImageFixture.read(spark, tableDir))
-    assert(shufflesAndAggs(bench).isEmpty,
-      s"exchange or aggregate in Bench.flagship:\n${bench.queryExecution.executedPlan}")
+    bench.collect() // AQE: inspect the final executed plan
+    val executed = bench.queryExecution.executedPlan
+    assert(joinsExchangesAggs(bench).isEmpty,
+      s"join, exchange or aggregate in Bench.flagship:\n$executed")
+    val nodes = physical(executed)
+    assert(nodes.count(_.isInstanceOf[WholeStageCodegenExec]) == 1 &&
+      nodes.exists(_.isInstanceOf[GenerateExec]), s"not one codegen stage:\n$executed")
+  }
+
+  test("Bench.flagship runs as one Spark job") {
+    val bench = Bench.flagshipPlan(ImageFixture.read(spark, tableDir))
+    val jobs = jobsOf(bench.write.format("noop").mode("overwrite").save())
+    assert(jobs == 1, s"$jobs jobs:\n${bench.queryExecution.executedPlan}")
   }
 
   test("mvt tile pipeline: no joins or windows, one exchange capped or not") {
